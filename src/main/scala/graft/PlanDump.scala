@@ -1,19 +1,43 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Round-15 measurement tool: dump `.explain("formatted")` plus cold/warm
   * timed counts for MANY queries in one session —
   * `runMain graft.PlanDump <outDir> <suffix> <sfDir> <q1,q2,...>` writes
-  * `<outDir>/<query>_<suffix>.txt` per query and prints one timing line
-  * each. One JVM for the whole batch instead of one Explain run per query.
+  * `<outDir>/<query>_<suffix>.txt` per query (`all` = every declared
+  * query) and prints one timing line each. One JVM for the whole batch
+  * instead of one Explain run per query. The timing line also gives the
+  * query's largest generated method, from its final plan, flagged `HUGE`
+  * above [[HugeMethodLimit]].
   */
 object PlanDump {
+
+  /** HotSpot's `HugeMethodLimit`: the JIT never compiles a method with more
+    * bytecode than this, so a whole-stage-codegen loop above it runs in the
+    * interpreter.
+    */
+  val HugeMethodLimit = 8000
+
+  /** Runs `df` (untimed, rows discarded) so its adaptive plan is final, then
+    * returns the bytecode size of the largest method the plan's
+    * whole-stage-codegen stages compile to: 0 without such a stage, -1 if
+    * one did not compile.
+    */
+  def maxMethodBytes(df: DataFrame): Int = {
+    df.queryExecution.toRdd.foreach(_ => ())
+    val stats = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(df.queryExecution.executedPlan).map(_._3.maxMethodCodeSize)
+    if (stats.exists(_ < 0)) -1 else (0 +: stats).max
+  }
+
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val sfDir  = args(2)
-    val names  = args(3).split(",").map(_.trim).filter(_.nonEmpty)
+    val names  =
+      if (args(3) == "all") SparkEntry.all.map(_.name).toArray
+      else args(3).split(",").map(_.trim).filter(_.nonEmpty)
     val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val b0 = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -87,13 +111,16 @@ object PlanDump {
       df.count()
       val warm = (System.nanoTime() - t2) / 1e9
       drainStats("warm")
+      val method = maxMethodBytes(df)
+      drainStats("final")
       // final (post-AQE) plan — the executed shape, not the initial one
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${name}_${suffix}_final.txt"),
         df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
+      val huge = if (method > HugeMethodLimit) " HUGE" else ""
       println(f"[plandump] $name: build $tBuild%.2f s, cold $cold%.2f s, " +
-        f"warm $warm%.2f s, $n rows")
+        f"warm $warm%.2f s, $n rows, max method $method B$huge")
     }
     spark.stop()
   }

@@ -19,6 +19,12 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracle. Both engines therefore evaluate the *identical* IEEE
   * double expression tree; the only cross-engine risk is libm ulp drift in
   * sin/cos/ln, absorbed by rounding declared outputs to 2 dp (meter scale).
+  *
+  * The `Column` form is an expression tree (five math-function calls per
+  * point), copied wherever it is used. Bind each result to a named column
+  * once, as `Segments.withProjected` does, and build on that column:
+  * inlined at every use, the trees made one generated method larger than
+  * HotSpot's 8000-byte `HugeMethodLimit`, which the JIT does not compile.
   */
 object Albers {
   // GRS80 ellipsoid + EPSG:3005 parameters (public EPSG registry values).

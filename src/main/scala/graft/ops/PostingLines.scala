@@ -19,6 +19,10 @@ import graft.geo.Albers
   *  - All geometry is closed-form scalar arithmetic over built-in codegen'd
   *    functions: the whole compute path is one narrow WholeStageCodegen
   *    stage with full column pruning into the parquet scan — zero shuffles.
+  *    Inside that stage the projection is its own Project
+  *    ([[Segments.withProjected]]), computed once per pending row: inlined
+  *    at every use, the stage's row loop grew past HotSpot's 8000-byte
+  *    `HugeMethodLimit` and ran in the bytecode interpreter.
   *  - [[merged]] (the flagship) computes conditionally in-row
   *    (`when(geom isNull, recompute)`) — the Spark-native form of the
   *    reference's UPDATE, with no join at all. [[mergedViaJoin]] keeps the
@@ -28,7 +32,7 @@ import graft.geo.Albers
   *    derive from the same row.
   */
 object PostingLines {
-  import Segments.{lengthM, sogKt, KnotsPerMps}
+  import Segments.{withProjected, projectedGeom, sogKt, KnotsPerMps, ProjectedCols}
 
   private def cleaned(spark: SparkSession, sfDir: String): DataFrame =
     Segments.df(spark, sfDir).filter(col("duration") =!= 0)
@@ -36,41 +40,30 @@ object PostingLines {
   private def pending(spark: SparkSession, sfDir: String): DataFrame =
     cleaned(spark, sfDir).filter(col("geom").isNull)
 
-  /** Projected endpoints from the lon/lat columns of a segments frame. */
-  private def projected: (Column, Column, Column, Column) = {
-    val (se, sn) = Albers.eastNorth(col("startlon"), col("startlat"))
-    val (ee, en) = Albers.eastNorth(col("endlon"), col("endlat"))
-    (se, sn, ee, en)
-  }
-
   /** Flagship: the full main table after one pipeline run — in-row form. */
   def merged(spark: SparkSession, sfDir: String): DataFrame =
     mergedFrom(Segments.df(spark, sfDir))
 
-  /** In-row merge over an arbitrary segments frame (scale probes, tests). */
-  def mergedFrom(seg: DataFrame): DataFrame = {
-    val (se, sn, ee, en) = projected
-    val lenm             = lengthM(se, sn, ee, en)
-    val newGeom = struct(
-      se.as("sx"), sn.as("sy"), ee.as("ex"), en.as("ey"), lit(3005).as("srid"))
-    seg.filter(col("duration") =!= 0)
-      .withColumn("geom", coalesce(col("geom"), newGeom))
-      .withColumn("lenm", coalesce(col("lenm"), lenm))
-      .withColumn("sogkt", coalesce(col("sogkt"), sogKt(lenm, col("duration"))))
-  }
+  /** In-row merge over an arbitrary segments frame (scale probes, tests).
+    * Only pending rows (`geom IS NULL`) are projected; the others keep their
+    * stored columns.
+    */
+  def mergedFrom(seg: DataFrame): DataFrame =
+    withProjected(seg.filter(col("duration") =!= 0), col("geom").isNull)
+      .withColumn("geom", coalesce(col("geom"), projectedGeom))
+      .withColumn("lenm", coalesce(col("lenm"), col("len")))
+      .withColumn("sogkt", coalesce(col("sogkt"), sogKt(col("len"), col("duration"))))
+      .drop(ProjectedCols: _*)
 
   /** Reference-shaped merge: stage pending rows, compute, equi-join back on
     * `segmentid` (sql_to_line.py:230-234), coalescing computed columns in.
     */
   def mergedViaJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val (se, sn, ee, en) = projected
-    val lenm             = lengthM(se, sn, ee, en)
-    val computed = pending(spark, sfDir).select(
+    val computed = withProjected(pending(spark, sfDir)).select(
       col("segmentid"),
-      struct(se.as("sx"), sn.as("sy"), ee.as("ex"), en.as("ey"),
-        lit(3005).as("srid")).as("geom_new"),
-      lenm.as("lenm_new"),
-      sogKt(lenm, col("duration")).as("sogkt_new"))
+      projectedGeom.as("geom_new"),
+      col("len").as("lenm_new"),
+      sogKt(col("len"), col("duration")).as("sogkt_new"))
     cleaned(spark, sfDir)
       .join(computed, Seq("segmentid"), "left_outer")
       .withColumn("geom", coalesce(col("geom"), col("geom_new")))
@@ -158,10 +151,9 @@ object PostingLines {
            |       round($eeSql, 2) AS ex, round($enSql, 2) AS ey, 3005 AS srid
            |FROM segments WHERE geom_srid IS NULL AND duration <> 0
            |ORDER BY segmentid""".stripMargin)) { (s, dir) =>
-      val (se, sn, ee, en) = projected
-      pending(s, dir).select(
-        col("segmentid"), round(se, 2).as("sx"), round(sn, 2).as("sy"),
-        round(ee, 2).as("ex"), round(en, 2).as("ey"), lit(3005).as("srid"))
+      withProjected(pending(s, dir)).select(
+        col("segmentid"), round(col("se"), 2).as("sx"), round(col("sn"), 2).as("sy"),
+        round(col("ee"), 2).as("ex"), round(col("en"), 2).as("ey"), lit(3005).as("srid"))
         .orderBy("segmentid")
     },
 
@@ -173,11 +165,9 @@ object PostingLines {
            |       round((($lenSql / duration) * $KnotsPerMps), 4) AS sogkt
            |FROM segments WHERE geom_srid IS NULL AND duration <> 0
            |ORDER BY segmentid""".stripMargin)) { (s, dir) =>
-      val (se, sn, ee, en) = projected
-      val lenm             = lengthM(se, sn, ee, en)
-      pending(s, dir).select(
-        col("segmentid"), round(lenm, 2).as("lenm"),
-        round(sogKt(lenm, col("duration")), 4).as("sogkt"))
+      withProjected(pending(s, dir)).select(
+        col("segmentid"), round(col("len"), 2).as("lenm"),
+        round(sogKt(col("len"), col("duration")), 4).as("sogkt"))
         .orderBy("segmentid")
     },
 

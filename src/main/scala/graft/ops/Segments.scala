@@ -39,10 +39,43 @@ object Segments {
   def lengthM(se: Column, sn: Column, ee: Column, en: Column): Column =
     sqrt((ee - se) * (ee - se) + (en - sn) * (en - sn))
 
-  /** m/s → knots; constant exactly as the reference (sql_to_line.py:223). */
+  /** m/s → knots; constant exactly as the reference (sql_to_line.py:223).
+    * NULL where `duration = 0`, as DuckDB's `x / 0` is in the oracle CTE.
+    */
   val KnotsPerMps = 1.94384
   def sogKt(lenm: Column, duration: Column): Column =
-    lenm / duration * lit(KnotsPerMps)
+    try_divide(lenm, duration) * lit(KnotsPerMps)
+
+  /** Columns appended by [[withProjected]]. */
+  val ProjectedCols: Seq[String] = Seq("se", "sn", "ee", "en", "len")
+
+  /** `df` plus the EPSG:3005 endpoints `se, sn, ee, en` of its
+    * (startlon, startlat) → (endlon, endlat) line in one `select`, then
+    * their planar length `len` in a second; NULL on rows where `only` does
+    * not hold, which skip the projection (the math functions do not
+    * evaluate a NULL argument). Callers build `geom`/`lenm`/`sogkt` from
+    * these columns and drop [[ProjectedCols]].
+    *
+    * Two named stages instead of one inlined formula per use: each endpoint
+    * is a non-cheap expression referenced several times above, so
+    * Catalyst's CollapseProject keeps the boundary, and every stage becomes
+    * its own small consume method in the generated code. Inlined at every
+    * use, the merged frame's loop is one 47 KB method — over HotSpot's
+    * 8000-byte `HugeMethodLimit`, so the JIT never compiles it
+    * (PlanShapeSpec guards the limit).
+    */
+  def withProjected(df: DataFrame, only: Column = lit(true)): DataFrame = {
+    def lonLat(c: String): Column = when(only, col(c))
+    val (se, sn) = Albers.eastNorth(lonLat("startlon"), lonLat("startlat"))
+    val (ee, en) = Albers.eastNorth(lonLat("endlon"), lonLat("endlat"))
+    df.select(col("*"), se.as("se"), sn.as("sn"), ee.as("ee"), en.as("en"))
+      .withColumn("len", lengthM(col("se"), col("sn"), col("ee"), col("en")))
+  }
+
+  /** The SRID-3005 `geom` struct of SURVEY §1.3 from [[withProjected]]'s columns. */
+  def projectedGeom: Column =
+    struct(col("se").as("sx"), col("sn").as("sy"), col("ee").as("ex"),
+      col("en").as("ey"), lit(3005).as("srid"))
 
   /** Full segments view: 18 columns of SURVEY §1.2 with `geom` as the §1.3
     * struct. Narrow map over `events` — no shuffle; Catalyst prunes unused
@@ -53,37 +86,29 @@ object Segments {
 
   /** Same synthesis over an arbitrary events frame (scale probes, tests). */
   def fromEvents(ev: DataFrame): DataFrame = {
-    val slon      = startLon(col("user_id"))
-    val slat      = startLat(col("event_id"))
-    val elon      = endLon(col("user_id"), col("value"))
-    val elat      = endLat(col("event_id"), col("value"))
-    val duration  = (floor(col("value")) % 600).cast("int")
-    val processed = col("event_id") % 5 === 0
-    val (se, sn)  = Albers.eastNorth(slon, slat)
-    val (ee, en)  = Albers.eastNorth(elon, elat)
-    val lenm      = lengthM(se, sn, ee, en)
-    ev.select(
+    val base = ev.select(
       col("event_id").as("segmentid"),
       col("user_id").as("uid"),
       (lit(316000000L) + col("user_id")).cast("int").as("mmsi"),
       col("ts").as("starttime"),
-      duration.as("duration"),
-      slat.as("startlat"),
-      slon.as("startlon"),
-      elat.as("endlat"),
-      elon.as("endlon"),
+      (floor(col("value")) % 600).cast("int").as("duration"),
+      startLat(col("event_id")).as("startlat"),
+      startLon(col("user_id")).as("startlon"),
+      endLat(col("event_id"), col("value")).as("endlat"),
+      endLon(col("user_id"), col("value")).as("endlon"),
       (col("event_type") === "purchase").as("isclassa"),
       (col("user_id") % 30).cast("smallint").as("classais"),
       (col("user_id") % 8).cast("smallint").as("classgen"),
       substring(col("event_type"), 1, 20).as("name"),
       (col("event_id") % 2 === 0).as("isunique"),
-      col("ts").as("lastchange"),
-      when(processed,
-        struct(se.as("sx"), sn.as("sy"), ee.as("ex"), en.as("ey"), lit(3005).as("srid"))
-      ).as("geom"),
-      when(processed, lenm).as("lenm"),
-      when(processed, sogKt(lenm, duration)).as("sogkt")
-    )
+      col("ts").as("lastchange"))
+    // geometry only on "already processed" rows; `len` is NULL elsewhere
+    val processed = col("segmentid") % 5 === 0
+    withProjected(base, processed)
+      .select(base.columns.map(col).toSeq ++ Seq(
+        when(processed, projectedGeom).as("geom"),
+        col("len").as("lenm"),
+        sogKt(col("len"), col("duration")).as("sogkt")): _*)
   }
 
   // ---- identical arithmetic as a DuckDB CTE -------------------------------

@@ -475,4 +475,21 @@ class PlanShapeSpec extends SparkSpec {
       assert(bad.isEmpty, s"${q.name} has a global (non-partitioned) window")
     }
   }
+
+  test("Segments/PostingLines frames keep every generated method JIT-compilable") {
+    // inlined at every use, the Albers formula makes the merged frame's loop
+    // a 47 KB method, which HotSpot never compiles (Segments.withProjected)
+    import ops.{PostingLines, Segments, Spatial}
+    val frames =
+      Seq(
+        "mergedFrom(fromEvents)" -> PostingLines.mergedFrom(
+          Segments.fromEvents(Tables.events(spark, sfDir))),
+        "Segments.df" -> Segments.df(spark, sfDir)) ++
+      (PostingLines.queries ++ Spatial.queries).map(q => q.name -> q.build(spark, sfDir))
+    frames.foreach { case (name, df) =>
+      val bytes = PlanDump.maxMethodBytes(df)
+      assert(bytes > 0 && bytes <= PlanDump.HugeMethodLimit,
+        s"$name: largest generated method $bytes B")
+    }
+  }
 }
