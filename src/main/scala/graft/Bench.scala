@@ -20,26 +20,22 @@ object Bench {
     // CC components) are then CLEARED so the timed pass still pays real
     // data compute where the query declares it — only compile-time state
     // stays warm.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    SparkEntry.all.foreach { q =>
-      try q.build(spark, sfDir).count() catch { case _: Throwable => }
-    }
-    ops.Dedup.clearCaches(spark)
-    ops.Corpus.clearCaches(spark)
-    ops.Tokenize.clearCaches(spark)
-    ops.Multimodal.clearCaches(spark)
+    def warm(name: String)(run: => Long): Unit =
+      try run catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup $name failed: $e")
+      }
+    warm("entry")(SparkEntry.entry(spark).count())
+    SparkEntry.all.foreach(q => warm(q.name)(q.build(spark, sfDir).count()))
+    Memo.clear(spark)
     // declaration order (SparkEntry.all), not Map hash order: shared
     // first-compute (cluster frame, qualifying pairs, CC components) then
     // lands deterministically on the query that declares it, and the
     // downstream consumers measure their own marginal cost
-    def cacheCount(): Int =
-      ops.Dedup.cacheCount(spark) + ops.Corpus.cacheCount(spark) +
-        ops.Tokenize.cacheCount(spark) + ops.Multimodal.cacheCount(spark)
     // queries that POPULATED a shared memo during the in-order timed pass,
     // in declaration order — the rerun replay list (see rerunOnce)
     val declarers = scala.collection.mutable.ArrayBuffer.empty[String]
     val results0 = SparkEntry.all.map { q =>
-      val c0 = cacheCount()
+      val c0 = Memo.count(spark)
       val t0 = System.nanoTime()
       val rows = try Metrics.observe(spark, q.name)(q.build(spark, sfDir).count())
       catch { case e: Throwable =>
@@ -47,7 +43,7 @@ object Bench {
       }
       // failures are reported as -1 so a broken query can never read as fast
       val secs = if (rows >= 0) (System.nanoTime() - t0) / 1e9 else -1.0
-      if (cacheCount() > c0) declarers += q.name
+      if (Memo.count(spark) > c0) declarers += q.name
       (q.name, secs, rows)
     }
     // CONTENTION RE-RUN GUARDS: a single driver-window run can catch
@@ -66,7 +62,9 @@ object Bench {
     // originally — a re-run can overstate a consumer, never understate
     // a declarer) and the BETTER timing is reported. Both timings land
     // in BENCH_FULL.json under "reruns" so the artifact shows exactly
-    // which queries were re-run and why.
+    // which queries were re-run and why; a third element
+    // "replay-incomplete:<declarers>" marks a rerun timed after a failed
+    // replay, i.e. against an incomplete memo state.
     //
     // The band file is parsed with a REAL JSON parser (Jackson, already
     // on Spark's classpath) instead of string slicing, and a band file
@@ -110,7 +108,8 @@ object Bench {
           "contention guards off")
         Map.empty
       }
-    val rerunLog = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
+    val rerunLog = scala.collection.mutable.LinkedHashMap
+      .empty[String, (Double, Double, Seq[String])]
     // A rerun must measure the SAME marginal cost as the in-order pass
     // (round-15 VERDICT "What's wrong" #1: clearing the memos and timing a
     // CONSUMER made its rerun re-pay the whole shared cluster/pair build
@@ -122,21 +121,21 @@ object Bench {
     // target that is itself a declarer re-pays its own build, as in-order.
     val declIdx = SparkEntry.all.map(_.name).zipWithIndex.toMap
     def rerunOnce(name: String, secs: Double, why: String): Double = {
-      ops.Dedup.clearCaches(spark)
-      ops.Corpus.clearCaches(spark)
-      ops.Tokenize.clearCaches(spark)
-      ops.Multimodal.clearCaches(spark)
+      Memo.clear(spark)
       val replay = declarers.filter(d => declIdx(d) < declIdx.getOrElse(name, 0))
-      replay.foreach { d =>
-        try SparkEntry.all.find(_.name == d).get.build(spark, sfDir).count()
-        catch { case _: Throwable => }
+      val replayFailed = replay.filterNot { d =>
+        try { SparkEntry.queries(d)(spark, sfDir).count(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] rerun $name: replay of $d failed: $e"); false
+        }
       }
       val t0 = System.nanoTime()
-      val ok = try {
-        SparkEntry.all.find(_.name == name).get.build(spark, sfDir).count(); true
-      } catch { case _: Throwable => false }
+      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] rerun $name failed: $e"); false
+      }
       val secs2 = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      rerunLog(name) = (secs, secs2)
+      rerunLog(name) = (secs, secs2, replayFailed.toSeq)
       System.err.println(f"[bench] rerun $name: $secs%.3f -> $secs2%.3f " +
         f"(replayed ${replay.size} declarers; $why)")
       if (secs2 > 0) math.min(secs, secs2) else secs
@@ -208,17 +207,16 @@ object Bench {
     // (2) the final line — the one guaranteed to survive the tail — carries
     // the timings SLOWEST-FIRST up to a fixed byte budget, with an explicit
     // count of omitted (fastest) entries and a pointer to the full file.
-    val rerunsJ = rerunLog.map { case (n, (a, b)) =>
-      "\"" + n + "\":[" + fmt(a) + "," + fmt(b) + "]" }.mkString("{", ",", "}")
+    val rerunsJ = rerunLog.map { case (n, (a, b, failed)) =>
+      val mark = if (failed.isEmpty) ""
+                 else failed.mkString(",\"replay-incomplete:", ",", "\"")
+      "\"" + n + "\":[" + fmt(a) + "," + fmt(b) + mark + "]" }.mkString("{", ",", "}")
     val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"rows":$rowsJ,"shuffle_bytes":$shufJ,"spilled_bytes":$spillJ,"peak_exec_mem":$peakJ,"cpu_ms":$cpuJ,"reruns":$rerunsJ,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       (fullJson + "\n").getBytes("UTF-8"))
     catch { case e: Exception => System.err.println(s"[bench] BENCH_FULL.json: $e") }
     println(fullJson)
-    ops.Dedup.clearCaches(spark)
-    ops.Corpus.clearCaches(spark)
-    ops.Tokenize.clearCaches(spark)
-    ops.Multimodal.clearCaches(spark)
+    Memo.clear(spark)
     spark.stop()
     // failures (-1) sort FIRST — a broken query must survive the byte
     // budget ahead of any timing; then slowest-first. Stop at the first

@@ -68,12 +68,10 @@ object CorpusBuild {
     val back = spark.read.parquet(outDir)
     back.groupBy("split").count().orderBy("split").collect()
       .foreach(r => println(s"[corpus] ${r.getString(0)}: ${r.getLong(1)} docs"))
-    // release the memoized cluster-pipeline frames before teardown: a
-    // long-lived session embedding this CLI should not retain sf-dir-keyed
-    // cached frames after the build completes
-    ops.Dedup.clearCaches(spark)
-    ops.Corpus.clearCaches(spark)
-    ops.Tokenize.clearCaches(spark)
+    // release this session's memo entries before teardown: a long-lived
+    // session embedding this CLI should not retain sf-dir-keyed cached
+    // frames after the build completes
+    Memo.clear(spark)
     spark.stop()
   }
 }

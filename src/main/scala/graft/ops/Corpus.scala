@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 
 /** The end of the dedup pipeline: collapse near-duplicate documents into
   * connected components and keep one representative per component, then
@@ -30,18 +30,10 @@ object Corpus {
     * Returns (doc_id, keeper) — keeper = min doc id of the component —
     * memoized per (session, dir) so downstream pipelines reuse it.
     */
-  private val componentCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame]
+  private val componentCache = new Memo[(String, Int), DataFrame]
 
-  /** Drop this session's memoized component frames (checkpoint blocks are
-    * released by the ContextCleaner once unreferenced). Pairs with
-    * [[Dedup.clearCaches]] — see `graft.ops` cache lifecycle note there.
-    */
-  def clearCaches(s: SparkSession): Unit =
-    componentCache.keys.filter(_._1 eq s).foreach(componentCache.remove)
-
-  /** Memoized-frame count for `s` — the Bench rerun-replay probe. */
-  def cacheCount(s: SparkSession): Int = componentCache.keys.count(_._1 eq s)
+  def clearCaches(s: SparkSession): Unit = componentCache.clear(s)
+  def cacheCount(s: SparkSession): Int = componentCache.count(s)
 
   /** Partition count for one CC round's frames: enough tasks to keep each
     * under ~64k edge rows, clamped to [1, 2×defaultParallelism]. A literal
@@ -56,7 +48,7 @@ object Corpus {
 
   def nearDupComponents(spark: SparkSession, dir: String,
       maxIters: Int = 15): DataFrame =
-    componentCache.getOrElseUpdate((spark, dir, maxIters),
+    componentCache(spark, (dir, maxIters))(
       componentsOf(spark, Dedup.clusterFrame(spark, dir),
         Dedup.qualifyingClusterPairs(spark, dir), maxIters)._1)
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import graft.functions.Hashing
 import graft.functions.exprs._
 
@@ -94,32 +94,20 @@ object Dedup {
       concat_ws(",", transform(slice(sig, b * BandRows + 1, lit(BandRows)),
         x => x.cast("string"))))
 
-  /** Memoized per-(session, dir) frames. The cluster table feeds 5 branches
-    * (members, sizes, bands, both join sides) and is tiny (≪ docs) — cache
-    * it instead of recomputing the groupBy+hash per branch (the reference's
-    * temp-table analog, sql_to_line.py:161-202). Memoization bounds storage
-    * memory to one cached frame per dataset even when the query is built
-    * repeatedly in one session. Assumes the parquet under `dir` is immutable
-    * for the session — call [[clearCaches]] after a rewrite or before
-    * discarding the session so its storage blocks can be freed.
+  /** Cached per-(session, dir) frames ([[graft.Memo]]). The cluster table
+    * feeds 5 branches (members, sizes, bands, both join sides) and is tiny
+    * (≪ docs) — cache it instead of recomputing the groupBy+hash per
+    * branch. Memoization bounds storage memory to one cached frame per
+    * dataset even when the query is built repeatedly in one session.
     */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private val memo = new Memo[(String, String), DataFrame]
 
   private def memoized(s: SparkSession, dir: String, key: String)
       (f: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, key), f.cache())
+    memo(s, (dir, key))(f.cache())
 
-  /** Unpersist and drop every frame memoized for `s` (all dirs). */
-  def clearCaches(s: SparkSession): Unit =
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(_.unpersist(false))
-    }
-
-  /** Number of frames currently memoized for `s` — the Bench rerun-replay
-    * probe (a query that grows this count is a shared-cache DECLARER).
-    */
-  def cacheCount(s: SparkSession): Int = memo.keys.count(_._1 eq s)
+  def clearCaches(s: SparkSession): Unit = memo.clear(s)
+  def cacheCount(s: SparkSession): Int = memo.count(s)
 
   private[graft] def clusterFrame(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "clusters")(clusterFrameOf(Tables.documents(s, dir)))

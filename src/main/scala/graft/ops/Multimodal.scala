@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import graft.functions.ByteHistogram16.byte_histogram16
 import graft.functions.exprs.poly_hash
 
@@ -391,8 +391,7 @@ object Multimodal {
   }
 
   // ---- memoized perceptual code frame (round 15) ------------------------
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val memo = new Memo[String, DataFrame]
 
   /** Both perceptual code families for the corpus, encoded+decoded ONCE
     * and cached: five declared queries (dhash codes / MIH pairs, ahash
@@ -400,22 +399,13 @@ object Multimodal {
     * codec round-trip per plan reference before (the agreement query's
     * plan alone held it 3×). dhashCodes/ahashCodes compute the identical
     * dhashOf/ahashOf values, so selecting the family's columns from this
-    * frame is value-identical (oracle-hash-checked). Same lifecycle as the
-    * Dedup memo — Bench clears it before the timed pass, so the first
-    * declared consumer pays the codec work inside its timed run.
+    * frame is value-identical (oracle-hash-checked).
     */
   private[graft] def percCodesFrame(s: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate((s, dir),
-      percCodes(encodePerc(s, dir)).toDF().cache())
+    memo(s, dir)(percCodes(encodePerc(s, dir)).toDF().cache())
 
-  /** Unpersist and drop every frame memoized for `s` (all dirs). */
-  def clearCaches(s: SparkSession): Unit =
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(_.unpersist(false))
-    }
-
-  /** Memoized-frame count for `s` — the Bench rerun-replay probe. */
-  def cacheCount(s: SparkSession): Int = memo.keys.count(_._1 eq s)
+  def clearCaches(s: SparkSession): Unit = memo.clear(s)
+  def cacheCount(s: SparkSession): Int = memo.count(s)
 
   /** Both perceptual codes from ONE decode pass — the agreement query
     * never decodes a payload twice.

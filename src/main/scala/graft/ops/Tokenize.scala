@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 
 /** Byte-pair-encoding tokenizer TRAINING as a distributed pipeline — the
   * corpus-side half of what SentencePiece/HF tokenizers do on one machine
@@ -38,9 +38,9 @@ import graft.{Q, Tables}
   * its codegen dominated the wall clock, the same unbounded-plan failure
   * the PQ encoder hit with unrolled per-centroid columns).
   *
-  * The trained merge list is memoized per (session, dir, nMerges) so the
-  * vocab and token-count queries share one training pass, mirroring
-  * [[Dedup]]'s cluster-frame memo.
+  * The trained merge list is memoized per (session, dir, nMerges)
+  * ([[graft.Memo]]) so the vocab and token-count queries share one
+  * training pass.
   *
   * Verification: `q_bpe_pairs` (iteration-0 weighted pair counts) is
   * cell-exact against DuckDB; the trainer is validated in TokenizeSpec
@@ -116,8 +116,7 @@ object Tokenize {
     out.result()
   }
 
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), Seq[(String, String)]]
+  private val memo = new Memo[(String, Int), Seq[(String, String)]]
 
   /** Train nMerges BPE merges; returns the ordered merge list. Ties on
     * pair count break lexicographically — deterministic across runs and
@@ -127,7 +126,7 @@ object Tokenize {
     * speed. Memoized so every query sharing (dir, nMerges) trains once.
     */
   def train(s: SparkSession, dir: String, nMerges: Int): Seq[(String, String)] =
-    memo.getOrElseUpdate((s, dir, nMerges), {
+    memo(s, (dir, nMerges)) {
       var vocab = wordFreq(s, dir)
         .orderBy(col("freq").desc, col("word")).limit(TrainVocabCap)
         .collect()
@@ -161,20 +160,11 @@ object Tokenize {
         }
       }
       merges.toSeq
-    })
+    }
 
-  /** Unpersist the merge lists and score tables memoized for `s`. */
-  def clearCaches(s: SparkSession): Unit = {
-    memo.keys.filter(_._1 eq s).foreach(memo.remove)
-    ugMemo.keys.filter(_._1 eq s).foreach(ugMemo.remove)
-    ugPrunedMemo.keys.filter(_._1 eq s).foreach(ugPrunedMemo.remove)
-    wpMemo.keys.filter(_._1 eq s).foreach(wpMemo.remove)
-  }
-
-  /** Memoized-entry count for `s` — the Bench rerun-replay probe. */
-  def cacheCount(s: SparkSession): Int =
-    memo.keys.count(_._1 eq s) + ugMemo.keys.count(_._1 eq s) +
-      ugPrunedMemo.keys.count(_._1 eq s) + wpMemo.keys.count(_._1 eq s)
+  private def memos = Seq(memo, ugMemo, ugPrunedMemo, wpMemo)
+  def clearCaches(s: SparkSession): Unit = memos.foreach(_.clear(s))
+  def cacheCount(s: SparkSession): Int = memos.map(_.count(s)).sum
 
   /** Encode one symbol array through an ordered merge list (column form —
     * used by the vocab query and the spec's encode equivalence test).
@@ -353,8 +343,7 @@ object Tokenize {
     best(w.length)._2
   }
 
-  private val ugMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Map[String, Long]]
+  private val ugMemo = new Memo[String, Map[String, Long]]
 
   /** The bounded training dictionary (top-[[UgSeedCap]] (word, freq) by
     * (freq DESC, word)) — one TakeOrdered Spark job, shared by the EM
@@ -387,7 +376,7 @@ object Tokenize {
     * per (session, dir) like [[train]].
     */
   def unigramTrain(s: SparkSession, dir: String): Map[String, Long] =
-    ugMemo.getOrElseUpdate((s, dir), {
+    ugMemo(s, dir) {
       val wf = ugDict(s, dir)
       val seed = scala.collection.mutable.Map
         .empty[String, Long].withDefaultValue(0L)
@@ -414,7 +403,7 @@ object Tokenize {
         sc = ugLaplace(cnt, vocab)
       }
       sc
-    })
+    }
 
   // ---- vocabulary pruning (SentencePiece's remove-lowest-likelihood) ----
 
@@ -445,8 +434,7 @@ object Tokenize {
     best(w.length)
   }
 
-  private val ugPrunedMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Map[String, Long]]
+  private val ugPrunedMemo = new Memo[String, Map[String, Long]]
 
   /** The PRUNED unigram score table — SentencePiece's
     * remove-lowest-likelihood SHRINKING LOOP (Kudo 2018 §3.2) made
@@ -478,7 +466,7 @@ object Tokenize {
     * pruning trajectory, not just the final surviving vocab.
     */
   def unigramTrainPruned(s: SparkSession, dir: String): Map[String, Long] =
-    ugPrunedMemo.getOrElseUpdate((s, dir), {
+    ugPrunedMemo(s, dir) {
       val wf = ugDict(s, dir)
       var sc = unigramTrain(s, dir) // scores in force for the next E-step
       var vocab = sc.keys.toSeq.sorted // the LIVE vocabulary
@@ -498,7 +486,7 @@ object Tokenize {
         sc = ugLaplace(cnt, vocab)
       }
       sc
-    })
+    }
 
   /** Viterbi segmentation of a word column under a trained score table —
     * the distributed application face. One Catalyst fold over positions
@@ -690,8 +678,7 @@ object Tokenize {
   private def wpStrip(sym: String): String =
     if (sym.startsWith("##")) sym.substring(2) else sym
 
-  private val wpMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Seq[(String, String)], Seq[String])]
+  private val wpMemo = new Memo[String, (Seq[(String, String)], Seq[String])]
 
   /** Train [[WpMerges]] WordPiece merges over the capped dictionary
     * ([[ugDict]] — same cap, length and empty-word guards, and therefore
@@ -709,7 +696,7 @@ object Tokenize {
     * remaining ties break (l, r)-lexicographic.
     */
   def wpTrain(s: SparkSession, dir: String): (Seq[(String, String)], Seq[String]) =
-    wpMemo.getOrElseUpdate((s, dir), {
+    wpMemo(s, dir) {
       val wf = ugDict(s, dir)
       var vocab = wf.map { case (w, f) => (wpInitSyms(w), f) }
       val alphabet = vocab.iterator.flatMap(_._1).toSet
@@ -741,7 +728,7 @@ object Tokenize {
       val pieces = (alphabet ++ merges.map { case (l, r) => l + wpStrip(r) })
         .toSeq.sorted
       (merges.toSeq, pieces)
-    })
+    }
 
   /** [[applySeq]] with an explicit fused symbol (WordPiece strips the
     * continuation prefix when fusing; BPE concatenates verbatim).

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.ops.Corpus
 
@@ -65,11 +66,32 @@ class CorpusSpec extends SparkSpec {
 
   test("clearCaches releases the memoized cluster-pipeline storage") {
     // materialize the memoized pipeline frames (idempotent if already run)
-    Corpus.nearDupComponents(spark, sfDir).count()
+    val comps = Corpus.nearDupComponents(spark, sfDir)
+    comps.count()
+    val ckptRdd = comps.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
     val before = spark.sparkContext.getPersistentRDDs.size
     assert(before > 0, "expected memoized frames to be persisted")
-    ops.Dedup.clearCaches(spark)
-    Corpus.clearCaches(spark)
+    assert(spark.sparkContext.getPersistentRDDs.contains(ckptRdd))
+    // one memo in each module, so the registry total covers all four
+    ops.Dedup.clusterFrame(spark, sfDir)
+    ops.Tokenize.train(spark, sfDir, 4)
+    ops.Multimodal.percCodesFrame(spark, sfDir)
+    def moduleCounts(): Seq[Int] = Seq(ops.Dedup.cacheCount(spark),
+      Corpus.cacheCount(spark), ops.Tokenize.cacheCount(spark),
+      ops.Multimodal.cacheCount(spark))
+    assert(moduleCounts().forall(_ > 0), s"unfilled module memo: ${moduleCounts()}")
+    assert(Memo.count(spark) === moduleCounts().sum)
+    // an entry of another session is not this session's to release
+    val other = spark.newSession()
+    ops.Tokenize.train(other, sfDir, 4)
+    Memo.clear(spark)
+    assert(Memo.count(spark) === 0)
+    assert(moduleCounts().sum === 0)
+    assert(Memo.count(other) === 1, "clear(spark) dropped another session's entry")
+    Memo.clear(other)
+    // the checkpoint is released at once, not left to the ContextCleaner
+    assert(!spark.sparkContext.getPersistentRDDs.contains(ckptRdd),
+      "the component frame's checkpoint RDD is still persisted")
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after < before, s"clearCaches released no storage ($before -> $after)")
     // the pipeline repopulates transparently after the release
