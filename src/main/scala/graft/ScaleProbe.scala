@@ -352,9 +352,9 @@ object ScaleProbe {
           .localCheckpoint()
         val nrm = w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("nsq"))
         val cand = graft.ops.Retrieval.tfidfPrefixCandidates(w, nrm).count()
-        val slim = w.select("fid", "doc_id")
+        val slim = w.select("f", "doc_id")
         val full = slim.as("a").hint("SHUFFLE_HASH").join(slim.as("b"),
-            col("a.fid") === col("b.fid") && col("a.doc_id") < col("b.doc_id"))
+            col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
         println(f"[probe] tfidf_prefix cand=$cand full=$full " +
           f"frac=${cand.toDouble / full}%.4f")

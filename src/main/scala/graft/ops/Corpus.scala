@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Memo, Q, Tables}
+import graft.{Memo, Observed, Q, Tables}
 
 /** The end of the dedup pipeline: collapse near-duplicate documents into
   * connected components and keep one representative per component, then
@@ -77,24 +77,23 @@ object Corpus {
       // 100 TB: right-size the iterative frames from the MEASURED edge
       // count so each CC round is a handful of full tasks, not
       // shuffle.partitions× empty ones (the checkpoint that sizes the loop
-      // materializes the edge list anyway, so the count is free)
-      val edges0 = cp.union(cp.select(col("cid2").as("cid"), col("cid").as("cid2")))
-        .select(col("cid"), col("cid2").as("src"))
-        .localCheckpoint()
-      val width = ccWidth(spark, edges0.count())
+      // observes the count, so it costs no job)
+      val (edges0, nEdges) = Observed.checkpoint(
+        cp.union(cp.select(col("cid2").as("cid"), col("cid").as("cid2")))
+          .select(col("cid"), col("cid2").as("src")), count(lit(1)))
+      val width = ccWidth(spark, nEdges)
       // edges pre-partitioned by the probe key: every round's big join then
       // matches labels' (cid-renamed-src) partitioning — ZERO edge shuffle
       // per round; only label rows (≤ one per cluster) move
       val edges = edges0.repartition(width, col("src")).localCheckpoint()
-      var labels = clusters.select(col("cid"), col("cid").as("keeper"))
-        .repartition(width, col("cid")).localCheckpoint()
       // labels only ever decrease, so sum(keeper) is a monotone convergence
-      // witness (one cheap action per round instead of a join)
-      // coalesce: sum over zero rows is NULL (empty corpus must not NPE)
-      def labelSum(): Long =
-        labels.agg(coalesce(sum(col("keeper")), lit(0L))).head().getLong(0)
+      // witness, observed by each labels checkpoint's own job (no join, no
+      // second action). Observed reads a sum over zero rows as 0 (empty
+      // corpus must not NPE).
+      var (labels, curSum) = Observed.checkpoint(
+        clusters.select(col("cid"), col("cid").as("keeper"))
+          .repartition(width, col("cid")), sum(col("keeper")))
       var prevSum = Long.MaxValue
-      var curSum  = labelSum()
       var iter    = 0
       while (curSum < prevSum && iter < maxIters) {
         // One fused round: a node probes the labels of (a) its neighbors
@@ -108,17 +107,17 @@ object Corpus {
         val nbr  = edges.join(holders, "src").select(col("cid"), col("lbl"))
         val jump = labels.select(col("cid"), col("keeper").as("src"))
           .join(holders, "src").select(col("cid"), col("lbl"))
-        labels = nbr.union(jump)
+        val (next, nextSum) = Observed.checkpoint(nbr.union(jump)
           // groupBy BEFORE re-narrowing: partial aggregation crushes the
           // per-edge messages map-side, so the round's shuffle moves ≤ one
           // row per (partition, cluster), not one per edge
           .groupBy(col("cid")).agg(min(col("lbl")).as("keeper"))
           // re-narrow every round: the agg widens to shuffle.partitions and
           // the checkpoint would freeze that width
-          .repartition(width, col("cid"))
-          .localCheckpoint(false) // lazy: the sum below is the round's one job
+          .repartition(width, col("cid")), sum(col("keeper")))
+        labels = next
         prevSum = curSum
-        curSum = labelSum()
+        curSum = nextSum
         iter += 1
       }
       require(curSum == prevSum,

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Observed, Q, Tables}
 
 /** Graph centrality over the near-duplicate graph: PageRank (Brin & Page
   * 1998) on the qualifying-pair edge list the MinHash pipeline already
@@ -52,6 +52,9 @@ object Graph {
     * label/contrib/support joins lose the runtime small-side broadcast
     * conversion and regress outright (kTruss 6.2 → 15.2 s, kCore
     * 5.3 → 9.4 s measured).
+    * kCore's rounds now stop at the fixpoint; re-measured on a 4-core
+    * host at sf0.1 (all [[KcIters]] rounds still needed), its lazy AQE-off
+    * chain took 8.5–9.4 s against ~5–7 s eager, so the decision stands.
     */
   private def lazyLoop(spark: org.apache.spark.sql.SparkSession)
       (body: => DataFrame): DataFrame = {
@@ -426,10 +429,10 @@ object Graph {
     // rounds reaches the true fixpoint at every shipped scale (probed
     // sf0.001/0.01/0.1 → rounds 2/5/8; GraphSpec asserts round
     // [[KcIters]] = round [[KcIters]]+1 so a corpus regen that breaks
-    // the bound fails loudly). Per round: one alive-semi-join per
-    // endpoint + one degree groupBy, all keyed on vertex ids; state is
-    // the O(V) alive set, checkpointed per round (the PageRank loop
-    // hygiene).
+    // the bound fails loudly; the engine stops early at the fixpoint). Per
+    // round: one alive-semi-join per endpoint + one degree groupBy, all
+    // keyed on vertex ids; state is the O(V) alive set, checkpointed per
+    // round (the PageRank loop hygiene).
     // DEGREE ASSORTATIVITY of the near-dup graph (Newman 2002, "Assortative
     // mixing in networks"; the networkx convention — Pearson correlation
     // of the degrees at either end of each directed edge): positive =
@@ -677,8 +680,8 @@ object Graph {
     out.select(col("v1").as("d1"), col("v2").as("d2"), col("sup"))
   }
 
-  /** Fixed k-core peel rounds (fixpoint by round 8 at every shipped scale;
-    * see q_kcore_neardup).
+  /** k-core peel rounds, at most (fixpoint by round 8 at every shipped
+    * scale; see q_kcore_neardup).
     */
   final val KcIters = 8
 
@@ -723,10 +726,13 @@ object Graph {
        |  JOIN $prev x ON x.v = e.v JOIN $prev y ON y.v = e.w
        |  GROUP BY e.v HAVING count(*) >= (SELECT k FROM kc_k);""".stripMargin
 
-  /** Fixed-round k-core peel over an undirected (d1, d2) pair list — the
-    * engine side of q_kcore_neardup. Same loop hygiene as [[pageRank]]:
+  /** k-core peel of at most `iters` rounds over an undirected (d1, d2)
+    * pair list — the engine side of q_kcore_neardup. Same loop hygiene as [[pageRank]]:
     * edges checkpoint once pre-partitioned on the join key; the alive set
-    * checkpoints per round.
+    * checkpoints per round, observing its own row count ([[Observed]]),
+    * so K and the convergence witness cost no job. alive₍ᵣ₊₁₎ ⊆ alive₍ᵣ₎,
+    * so equal counts mean equal sets and every later round is the
+    * identity: stopping there yields the oracle's [[KcIters]]-round table.
     */
   private[graft] def kCore(pairs: DataFrame, iters: Int = KcIters): DataFrame = {
     val p = pairs.select(col("d1"), col("d2")).localCheckpoint()
@@ -737,38 +743,36 @@ object Graph {
     // exchange-free per round (the groupBy(v) reuses the edge
     // partitioning) — there was nothing to save, and the reorder's
     // groupBy(v) over a w-partitioned copy ADDED an edge-sized exchange.
-    val edges = p.select(col("d1").as("v"), col("d2").as("w"))
-      .union(p.select(col("d2").as("v"), col("d1").as("w")))
-      .repartition(col("v")).localCheckpoint()
-    // greatest(..., 1): a degenerate empty pair graph must yield k = 0 in
-    // BOTH engines (DuckDB's // errors on zero; Spark's div nulls) — same
-    // empty-corpus convention as Corpus.componentsLoop's coalesced labelSum.
-    // Checkpointed ONCE (round 16): kf is a pure function of the
-    // checkpointed edge list, but inlining its plan in the loop re-ran the
-    // E-sized count(DISTINCT v) aggregation (two exchanges over 1.79M
-    // directed rows at sf0.1) inside EVERY peel round's checkpoint job and
-    // again in the final degree pass — KcIters+1 redundant passes. The
-    // single-row value is identical.
-    val kf = edges.agg(
-      expr("count(1) div (2 * greatest(count(DISTINCT v), 1))").as("k"))
-      .localCheckpoint()
-    var alive = edges.select("v").distinct().localCheckpoint()
-    for (_ <- 1 to iters) {
-      alive = edges
+    val (edges, nEdges) = Observed.checkpoint(
+      p.select(col("d1").as("v"), col("d2").as("w"))
+        .union(p.select(col("d2").as("v"), col("d1").as("w")))
+        .repartition(col("v")), count(lit(1)))
+    // alive₀ is every vertex of the symmetric edge list, so round 1 needs
+    // no semi-joins: its degrees are the full ones, counted in |V| groups
+    val (deg, nV) = Observed.checkpoint(
+      edges.groupBy("v").agg(count(lit(1)).as("d")), count(lit(1)))
+    // K = |E| div 2·max(|V|, 1): a degenerate empty pair graph must yield
+    // k = 0 in BOTH engines (DuckDB's // errors on zero; Spark's div
+    // nulls) — same empty-corpus convention as Corpus.componentsLoop.
+    val k = nEdges / (2L * math.max(nV, 1L))
+    var (alive, nAlive) = (deg.select("v"), nV)
+    var (prev, round) = (Long.MaxValue, 0)
+    while (round < iters && nAlive < prev) {
+      val d = if (round == 0) deg else edges
         .join(alive, Seq("v"), "left_semi")
         .join(alive.select(col("v").as("w")), Seq("w"), "left_semi")
         .groupBy("v").agg(count(lit(1)).as("d"))
-        .crossJoin(broadcast(kf)) // single-row scalar: allowlisted class
-        .filter(col("d") >= col("k"))
-        .select("v").localCheckpoint()
+      prev = nAlive
+      val (next, n) = Observed.checkpoint(
+        d.filter(col("d") >= k).select("v"), count(lit(1)))
+      alive = next; nAlive = n; round += 1
     }
     val aliveW = alive.select(col("v").as("w"))
     edges
       .join(alive, Seq("v"), "left_semi")
       .join(aliveW, Seq("w"), "left_semi")
       .groupBy("v").agg(count(lit(1)).as("core_deg"))
-      .crossJoin(broadcast(kf))
-      .select(col("v").as("doc_id"), col("core_deg"), col("k"))
+      .select(col("v").as("doc_id"), col("core_deg"), lit(k).as("k"))
   }
 
   /** Per-vertex triangle counts over an undirected (d1, d2) pair list via

@@ -120,7 +120,8 @@ object Profile {
         }
       }
     }
-    val out = futures.flatMap(f => Await.result(f, Duration.Inf))
+    // bounded: a stuck profile job fails loudly instead of hanging the caller
+    val out = futures.flatMap(f => Await.result(f, Duration(30, "min")))
     spark.createDataFrame(
       spark.sparkContext.parallelize(out, 1), outSchema)
   }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Observed, Q, Tables}
 
 /** Corpus retrieval operators: Okapi BM25 scoring (Robertson–Spärck Jones;
   * the k1/b form from Robertson & Zaragoza 2009) and the inverted-index
@@ -936,21 +936,15 @@ object Retrieval {
     * frame (the ScaleProbe entry point) — see q_tfidf_cosine_pairs.
     *
     * Hot-path engineering (profiled at sf0.1, 36.5M candidate partials /
-    * 10.3M distinct pairs): the postings self-join runs on an INTEGER
-    * feature id, not the bigram string, and as a shuffled hash join.
-    * Sort-merge on the dense string key paid a per-OUTPUT-row buffered
-    * re-scan across each equal-key run (df up to ~340 → ~df² buffered
-    * iterations per feature) and measured 3.5× slower end to end (27 s →
-    * 7.9 s). The fid comes from monotonically_increasing_id on the
-    * df-capped feature frame: partition-dependent values are safe because
-    * the id is an injective relabeling used ONLY as an equi-join key —
-    * never ordered, compared, or emitted — so no output cell depends on
-    * which fid a feature drew. Scale shape: both fid assignment and the
-    * hash join are shuffle-partitioned on the feature key; the build side
-    * per partition is Θ(postings/partitions) — sized by
-    * spark.sql.shuffle.partitions, no driver or broadcast state.
-    */
-  /** The declared plan: partial products from the FULL postings self-join
+    * 10.3M distinct pairs): the postings self-join on the bigram `f` runs
+    * as a SHUFFLED HASH join. Sort-merge on the dense key paid a
+    * per-OUTPUT-row buffered re-scan across each equal-key run (df up to
+    * ~340 → ~df² buffered iterations per feature) and measured 3.5× slower
+    * end to end (27 s → 7.9 s, round 8). The loss was the join strategy,
+    * not the string key, so no integer feature id is numbered. The build
+    * side per partition is Θ(postings/partitions): no driver state.
+    *
+    * The declared plan: partial products from the FULL postings self-join
     * reduce straight into per-pair dots. MEASURED DECISION (round 8,
     * sf0.1): this corpus is pathologically pair-dense — 10.3M of 12.5M
     * possible pairs share a df-capped feature — so Bayardo prefix
@@ -967,43 +961,38 @@ object Retrieval {
     */
   private[graft] def tfidfCosinePairsFrom(docs: DataFrame): DataFrame = {
     // One materialization of the postings pipeline (AQE's runtime stage
-    // reuse does not collapse the three consumers — measured round 15),
-    // now with two round-16 changes:
+    // reuse does not collapse the three consumers — measured round 15):
     //  - nsq (the doc's squared norm) is folded INTO the checkpointed
     //    frame, so each self-join side carries its norm along and the two
     //    post-aggregation norm joins vanish (they planned as SortMergeJoins
-    //    with a full exchange+sort of the Θ(pairs) dot frame EACH — the
-    //    measured r16 before-plan, Exchange(13)/(25) + Sort(14)/(22)).
-    //  - the checkpoint is pre-partitioned on the join key fid, so the
-    //    self-join reads both sides co-partitioned: the two W-sized fid
-    //    exchanges (before-plan Exchange(3)/(6)) vanish too.
-    // two-step materialization: the postings pipeline (explode + three
-    // aggregation passes) runs ONCE into w0; the norm join reads the
-    // cached blocks (folding nrm into a single checkpoint re-ran the whole
-    // pipeline for both join sides — measured build 3.97 → 7.15 s; a
-    // window-based nsq measured slower still)
-    val w0 = tfidfPostings(docs).select("doc_id", "fid", "w").localCheckpoint()
-    val nrm0 = w0.groupBy("doc_id").agg(sum(col("w") * col("w")).as("nsq"))
-    // the norm-carrying frame is checkpointed too: leaving it inline made
-    // BOTH self-join sides re-run the doc exchange + norm join from the
-    // w0 cache (measured: count CPU 41 → 69 s)
-    val w = w0.join(nrm0, "doc_id")
-      .select(col("doc_id"), col("fid"), col("w"), col("nsq"))
-      .repartition(col("fid"))
-      .localCheckpoint()
+    //    with a full exchange+sort of the Θ(pairs) dot frame EACH).
+    //  - the checkpoint is pre-partitioned on the join key f, so the
+    //    self-join reads both sides co-partitioned (no W-sized exchanges).
+    //  - two steps: the postings pipeline runs ONCE into w0 and the norm
+    //    join reads its blocks (one checkpoint re-ran the whole pipeline
+    //    for both join sides — build 3.97 → 7.15 s; a window nsq was
+    //    slower still).
     // Pair-keyed exchange width sized from the MEASURED candidate count
     // (guide §5 / the ccWidth precedent): the partial dot products of the
     // self-join reduce by pair, and per-task group counts near ~1M made
     // the hash aggregate fall back to sort-based aggregation
     // nondeterministically (round 15: 60 vs 152 executor-CPU-s on
-    // back-to-back runs). partials = Σ_f C(df,2) is exact, costs one
-    // cheap pass over the cached checkpoint, and bounds groups/task at
+    // back-to-back runs). partials = Σ_f C(df,2) = Σ_rows (df − 1) / 2
+    // (each feature has df posting rows) is exact, rides the w0
+    // checkpoint's own job as an observed sum, and bounds groups/task at
     // ~PairsPerAggTask regardless of core count or scale — the round-15
     // repartition onto spark.sql.shuffle.partitions put 1.3M groups per
     // task right back at 8 cores.
-    val partials = w0.groupBy("fid").agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(expr("c * (c - 1) div 2")), lit(0L)))
-      .head().getLong(0)
+    val (w0, dfMinus1) = Observed.checkpoint(tfidfPostings(docs), sum(col("df") - 1))
+    val partials = dfMinus1 / 2
+    val nrm0 = w0.groupBy("doc_id").agg(sum(col("w") * col("w")).as("nsq"))
+    // the norm-carrying frame is checkpointed too: leaving it inline made
+    // BOTH self-join sides re-run the doc exchange + norm join from the
+    // w0 cache (measured: count CPU 41 → 69 s)
+    val w = w0.join(nrm0, "doc_id")
+      .select(col("doc_id"), col("f"), col("w"), col("nsq"))
+      .repartition(col("f"))
+      .localCheckpoint()
     val cores = w.sparkSession.sparkContext.defaultParallelism.toLong
     val width = math.max(cores, partials / PairsPerAggTask + 1L)
       .min(65536L).toInt
@@ -1021,7 +1010,7 @@ object Retrieval {
     // inside the pair aggregation reads back exactly the values the old
     // norm joins attached — integer-identical, no join needed
     w.as("a").hint("SHUFFLE_HASH").join(w.as("b"),
-        col("a.fid") === col("b.fid") && col("a.doc_id") < col("b.doc_id"))
+        col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
         (col("a.w") * col("b.w")).as("p"),
         col("a.nsq").as("n1"), col("b.nsq").as("n2"))
@@ -1052,10 +1041,10 @@ object Retrieval {
     val nrm = w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("nsq"))
     val cand = tfidfPrefixCandidates(w, nrm)
     // per-candidate verification against the two FULL integer vectors,
-    // carried as fid → w maps (per-doc feature counts are corpus-bounded);
+    // carried as f → w maps (per-doc feature counts are corpus-bounded);
     // the dot is an in-memory map probe over d1's entries
     val vecs = w.groupBy("doc_id")
-      .agg(map_from_entries(collect_list(struct(col("fid"), col("w"))))
+      .agg(map_from_entries(collect_list(struct(col("f"), col("w"))))
         .as("m"))
       .join(nrm, "doc_id")
     cand
@@ -1071,7 +1060,7 @@ object Retrieval {
       .orderBy("d1", "d2")
   }
 
-  /** Integer tf-idf postings (doc_id, f, df, fid, w) over a documents
+  /** Integer tf-idf postings (doc_id, f, df, w) over a documents
     * frame — the shared head of the all-pairs pipeline.
     */
   private[graft] def tfidfPostings(docs: DataFrame): DataFrame = {
@@ -1090,49 +1079,17 @@ object Retrieval {
           .as("f"))
     val tf = bg.groupBy("doc_id", "f").agg(count(lit(1)).as("tf"))
     val nd = tf.select(countDistinct("doc_id").as("n")) // single-row total
-    // fid via a TWO-LEVEL distributed row_number (round 16), NOT a global
-    // window and NOT monotonically_increasing_id. mono_id is flagged
-    // non-deterministic, which blocks exchange reuse for EVERY subtree
-    // containing fid (round 15: 24 scans / 0 ReusedExchange); the round-15
-    // global row_number window fixed that but sorted the whole feature
-    // frame on ONE task ("WindowExec: No Partition Defined") — the feature
-    // frame is df-capped but still grows with the corpus bigram
-    // vocabulary, a serial stage at scale (r15 VERDICT "What's wrong" #2).
-    // Two-level form: level 1 buckets features by a deterministic hash,
-    // level 2 numbers rows inside each bucket (parallel windows), and
-    // fid = bucket base offset + in-bucket rank. Deterministic, injective,
-    // and every stage is distributed; the only global window left runs
-    // over the FidBuckets-row bucket-size frame. fid is only ever an
-    // equi-join key (never ordered, compared, or emitted), so the changed
-    // id VALUES cannot change any output cell.
-    val capped = tf.groupBy("f").agg(count(lit(1)).as("df"))
+    val df = tf.groupBy("f").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nd))
       .filter(col("df") <= expr("n div 4"))
-      .withColumn("b", pmod(xxhash64(col("f")), lit(FidBuckets)).cast("int"))
-    val bases = capped.groupBy("b").agg(count(lit(1)).as("cnt"))
-      .select(col("b"),
-        (coalesce(sum(col("cnt")).over(
-          Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L))).as("base"))
-    val df = capped
-      .withColumn("rn",
-        row_number().over(Window.partitionBy("b").orderBy("f")))
-      .join(broadcast(bases), "b")
-      .select(col("f"), col("df"), (col("base") + col("rn")).as("fid"),
+      .select(col("f"), col("df"),
         // milli-nat idf snap on the bounded feature frame
         round(log(col("n").cast("double") / col("df")) * 1000)
           .cast("long").as("idf_milli"))
     tf.join(df, "f")
       .select(col("doc_id"), col("f"), col("df"),
-        col("fid"), (col("tf") * col("idf_milli")).as("w"))
+        (col("tf") * col("idf_milli")).as("w"))
   }
-
-  /** Bucket count for the two-level fid assignment — far more distinct
-    * bucket values than any realistic task count (guide §2.5: synthetic
-    * keys need many more distinct values than partitions) while keeping
-    * the bucket-size offset frame a broadcast-trivial few thousand rows.
-    */
-  private val FidBuckets = 4096
 
   /** Prefix-filtered candidate pairs (Bayardo, Ma & Srikant 2007,
     * "Scaling Up All Pairs Similarity Search"): in a global feature order
@@ -1161,16 +1118,16 @@ object Retrieval {
     val tau = 4.0 / 5.0 // must match the verifier's 25/16 cross-multiply
     val wn = w.join(nrm, "doc_id")
       .withColumn("u", col("w") / sqrt(col("nsq").cast("double")))
-    val fmax = wn.groupBy("fid").agg(max(col("u")).as("maxw"))
+    val fmax = wn.groupBy("f").agg(max(col("u")).as("maxw"))
     val win = Window.partitionBy("doc_id").orderBy(col("df").desc, col("f"))
-    val indexed = wn.join(fmax, "fid")
+    val indexed = wn.join(fmax, "f")
       .withColumn("cum", sum(col("u") * col("maxw")).over(win))
       .filter(col("cum") >= lit(tau * (1 - 1e-9)))
-      .select("doc_id", "fid")
-    // SHUFFLE_HASH strategy hint: dense integer-keyed self-join — the
-    // q_tfidf_cosine_pairs SMJ-buffered-rescan rationale, unchanged
+      .select("doc_id", "f")
+    // SHUFFLE_HASH strategy hint: dense equal-key self-join on the
+    // feature — the q_tfidf_cosine_pairs SMJ-buffered-rescan rationale
     indexed.as("a").hint("SHUFFLE_HASH").join(indexed.as("b"),
-        col("a.fid") === col("b.fid") && col("a.doc_id") < col("b.doc_id"))
+        col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
   }

@@ -168,6 +168,37 @@ class GraphSpec extends SparkSpec {
       "fixed-round distributed peel diverged from the sequential k-core")
   }
 
+  test("k-core: a cascading peel (one vertex per round) matches the round-by-round peel") {
+    import ops.Graph.{KcIters, kCore}
+    import spark.implicits._
+    // an 8-clique (0..7) with a 5-vertex path 7-100-101-102-103-104:
+    // 33 edges over 13 vertices gives K = 66 div 26 = 2, so every round
+    // peels exactly the path's current end — rounds 1..5 each drop one
+    // vertex and round 6 changes nothing. (The corpus graph converges
+    // after one round at small scale, so it cannot catch a convergence
+    // witness that stops the loop too early.)
+    val clique = for (a <- 0L to 7L; b <- a + 1 to 7L) yield (a, b)
+    val path = Seq(7L, 100L, 101L, 102L, 103L, 104L).sliding(2).map(p => (p(0), p(1))).toSeq
+    val e = clique ++ path
+    val pairs = e.toDF("d1", "d2")
+    val adj = e.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2).map { case (v, ns) => v -> ns.toSet }
+    val k = e.length.toLong / adj.size
+    assert(k === 2L)
+    def peel(rounds: Int): Set[Long] =
+      (1 to rounds).foldLeft(adj.keySet) { (alive, _) =>
+        alive.filter(v => adj(v).count(alive) >= k)
+      }
+    for (r <- Seq(1, 3, KcIters)) {
+      val got = kCore(pairs, r).collect()
+        .map(row => (row.getLong(0), row.getLong(1), row.getLong(2))).toSet
+      val alive = peel(r)
+      assert(got === alive.map(v => (v, adj(v).count(alive).toLong, k)),
+        s"$r-round distributed peel diverged from the round-by-round peel")
+    }
+    assert(peel(KcIters) === (0L to 7L).toSet)
+  }
+
   test("k-truss: fixed-round peel reaches the fixpoint and matches a sequential truss") {
     import ops.Graph.{KtIters, KtK, kTruss}
     val pairs = ops.Dedup.simhash128PairsFrom(Tables.documents(spark, sfDir))

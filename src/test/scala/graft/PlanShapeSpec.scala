@@ -210,9 +210,6 @@ class PlanShapeSpec extends SparkSpec {
       // (band, key, tile); the hint steers SMJ→hash to avoid the
       // buffered equal-key re-scan on skewed de-thresholded buckets
       "q_minhash_calibration",
-      // the hinted side is the single-row K threshold (Σdeg div 2V) —
-      // the pagerank single-row-total class
-      "q_kcore_neardup",
       // both hinted sides are the single-row era-total aggregates over
       // the ≤(EdBuckets+overflow)-row bucket grids — the tfidf/unigram
       // single-row class (the grids themselves are bounded by the

@@ -138,9 +138,9 @@ class RetrievalSpec extends SparkSpec {
     val w = tfidfPostings(sparse).localCheckpoint()
     val nrm = w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("nsq"))
     val cand = tfidfPrefixCandidates(w, nrm).count()
-    val slim = w.select("fid", "doc_id")
+    val slim = w.select("f", "doc_id")
     val full = slim.as("a").join(slim.as("b"),
-        col("a.fid") === col("b.fid") && col("a.doc_id") < col("b.doc_id"))
+        col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
     assert(cand < full / 5,
       s"sparse-corpus candidate cut too weak: $cand of $full")
