@@ -57,13 +57,7 @@ object CorpusBuild {
     val sfDir  = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/corpus_out"
     val hrwShards = if (args.length > 2) Some(args(2).toInt) else None
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     build(spark, sfDir, outDir, hrwShards)
     val back = spark.read.parquet(outDir)
     back.groupBy("split").count().orderBy("split").collect()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot SQL runner over the testdata tables + the engine's function
   * pack: `runMain graft.SqlShell "<sql>" [sfDir]`. Registers every parquet
   * table, the synthesized `segments` view, and the custom functions
@@ -15,14 +13,7 @@ object SqlShell {
     }
     val sql   = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings")
       .foreach(t => Tables(spark, sfDir, t).createOrReplaceTempView(t))

@@ -75,7 +75,7 @@ object Clustering {
 
   /** The full trajectory over an explicit (vec_id, vm) frame: seed from
     * the k lowest ids, run `iters` Lloyd rounds, emit the final
-    * assignment — the ScaleProbe entry point.
+    * assignment; SCALING.md records its growth curve.
     */
   private[graft] def kmeansAssignFrom(vmIn: DataFrame,
       iters: Int = KmIters): DataFrame = {
@@ -712,7 +712,7 @@ object Clustering {
     * if the fan-out's row overhead ever dominates.
     *
     * WIDE-DIMENSION POSTURE (dim ≫ 64): the kernel is dim-parametric
-    * ([[pcaModelOf]]); ScaleProbe measures it at dim = 512 (the wire
+    * ([[pcaModelOf]]); SCALING.md records it at dim = 512 (the wire
     * stays O(partitions · dim²) via map-side collapse, the driver matrix
     * 512² longs = 2 MB — still bounded model state), and SCALING.md
     * records the row. For 768–4096-dim production embeddings the SHIPPED
@@ -724,8 +724,8 @@ object Clustering {
   private[graft] def pcaModel(vmIn: DataFrame): (Array[Long], Array[Array[Long]]) =
     pcaModelOf(vmIn, Dim)
 
-  /** [[pcaModel]] over an explicit width — identical arithmetic; the
-    * ScaleProbe wide-dimension entry point.
+  /** [[pcaModel]] over an explicit width — identical arithmetic (the
+    * wide-dimension measurement in SCALING.md).
     */
   private[graft] def pcaModelOf(vmIn: DataFrame,
       dim: Int): (Array[Long], Array[Array[Long]]) = {

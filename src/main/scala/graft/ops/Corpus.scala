@@ -54,8 +54,8 @@ object Corpus {
 
   /** The CC loop over an explicit cluster graph: `clusters` needs
     * (cid, ms); `pairs` needs (cid, cid2). Returns the (doc_id, keeper)
-    * frame and the number of rounds run — exposed so ScaleProbe can drive
-    * the loop on replicated graphs without re-running the MinHash pipeline.
+    * frame and the number of rounds run — the loop alone, without the
+    * MinHash pipeline.
     */
   private[graft] def componentsOf(spark: SparkSession, clusters: DataFrame,
       pairs: DataFrame, maxIters: Int = 15): (DataFrame, Int) = {

@@ -549,7 +549,7 @@ object Dedup {
   final val WinB = 1L << 20
 
   /** The banded SimHash pair pipeline over an explicit documents frame
-    * (needs doc_id + text) — the ScaleProbe entry point.
+    * (needs doc_id + text).
     */
   private[graft] def simhashPairsFrom(docs: DataFrame): DataFrame = {
     val sig = sim_hash30(transform(split(
@@ -967,7 +967,7 @@ object Dedup {
     // bucket²) candidate work, never corpus²; the verify is a codegen'd
     // xor/bit_count on two longs. Same-key mega-buckets (a corpus of
     // near-identical boilerplate) are the AQE-skew/salting case the
-    // MinHash banding already probes in ScaleProbe.
+    // MinHash banding already covers (SCALING.md).
     Q("q_simhash_pairs",
       s"""$simhashSgCtes, bands AS (
          |  SELECT doc_id, sig, b,
@@ -1200,8 +1200,8 @@ object Dedup {
     hashed
   }
 
-  /** Content-defined chunking dedup per doc (the ScaleProbe entry point) —
-    * see q_content_chunks for semantics.
+  /** Content-defined chunking dedup per doc — see q_content_chunks for
+    * semantics.
     */
   private[graft] def contentChunks(docs: DataFrame): DataFrame = {
     val hashed = chunkFrame(docs)

@@ -40,7 +40,7 @@ object Graph {
     * localCheckpoint runs its shuffles as separate driver-blocking jobs at
     * build time; with the toggle + `eager = false` the whole chain
     * executes inside the consumer's ONE action (stages still parallel;
-    * lineage still truncated — the 463 s vs 33 s ScaleProbe blow-up the
+    * lineage still truncated — the 463 s vs 33 s ×50 blow-up (SCALING.md) the
     * checkpoints exist for cannot return). The builder's output wraps
     * checkpoint RDDs, so the toggle cannot leak into the consumer's own
     * execution.
@@ -115,7 +115,7 @@ object Graph {
     * round's rank frame checkpoints to truncate lineage — without this the
     * upstream pair plan (the whole MinHash pipeline) re-executes per round
     * per lineage branch and the loop goes super-linear (measured 463 s at
-    * ScaleProbe x50 vs 33 s with the checkpoints).
+    * ×50 vs 33 s with the checkpoints, SCALING.md).
     */
   private[graft] def pageRank(pairs: DataFrame, iters: Int = PrIters): DataFrame = {
     val p = pairs.select(col("d1"), col("d2")).localCheckpoint()

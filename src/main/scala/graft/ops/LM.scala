@@ -23,7 +23,7 @@ import graft.{Q, Tables}
   * layout; at 100 TB the estimation pass's gram frame would persist
   * between the two. All shuffles key on high-cardinality grams/tokens;
   * the conditional-context counts come from the bigram table itself
-  * (Σ_w2 c2(w1,w2)), never a separate scan; ScaleProbe measures the whole
+  * (Σ_w2 c2(w1,w2)), never a separate scan; SCALING.md records the whole
   * pipeline sub-linear (7× wall for 50× corpus).
   */
 object LM {
@@ -44,9 +44,7 @@ object LM {
   final val PmiMinCount = 5
   final val PmiTopK = 100
 
-  /** The bigram-NLL pipeline over an explicit documents frame (ScaleProbe
-    * entry point).
-    */
+  /** The bigram-NLL pipeline over an explicit documents frame. */
   /** Kneser–Ney bigram table over an explicit documents frame — the
     * engine side of q_kneser_ney (see the query comment for the exact
     * rational formulation).
@@ -463,8 +461,8 @@ object LM {
         col("score").as("score_micro"))
   }
 
-  /** The NB train+score pipeline over an explicit documents frame (the
-    * ScaleProbe entry point). See q_naive_bayes_lang for the math.
+  /** The NB train+score pipeline over an explicit documents frame. See
+    * q_naive_bayes_lang for the math.
     */
   private[graft] def naiveBayesLang(docs: DataFrame): DataFrame = {
     // NOT spread (round 15, measured): parallelizing the scan stage here

@@ -90,7 +90,7 @@ object Lakehouse {
   /** Z-order key interleaving two 16-bit dimensions: a total order in
     * which points close in BOTH dimensions are close in the order, so
     * min/max row-group stats prune 2-dimensional range predicates — the
-    * multi-column analog of sorting by one column (ScaleProbe measures
+    * multi-column analog of sorting by one column (SCALING.md records
     * the actual rows-read reduction; Sinks.zorderWrite is the layout
     * writer).
     */
@@ -184,7 +184,7 @@ object Lakehouse {
     // subset prunes fact rows BEFORE the exact join's shuffle. The filter
     // admits false positives only, and the exact semi join removes them —
     // so the oracle is the PLAIN semi join: the sketch must be invisible
-    // in the result, visible only in shuffle volume (ScaleProbe measures
+    // in the result, visible only in shuffle volume (SCALING.md records
     // the reduction with broadcast disabled).
     Q("q_bloom_semi_join",
       """SELECT l_orderkey, l_linenumber, l_suppkey FROM lineitem

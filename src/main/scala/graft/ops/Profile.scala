@@ -70,13 +70,6 @@ object Profile {
     StructField("max_val", StringType, nullable = true),
     StructField("is_unique", BooleanType, nullable = false)))
 
-  /** One-pass profile of every column of `df`, reshaped to one row per
-    * column. The collected aggregate is a single row of width
-    * O(columns) — bounded model state, never data-proportional.
-    */
-  def profileTable(df: DataFrame, table: String): DataFrame =
-    profileTables(Seq(df -> table))
-
   /** Profile several tables with their one-pass aggregations submitted
     * CONCURRENTLY (one driver thread each): the per-table jobs are
     * independent, so the second table's tasks back-fill executors freed
@@ -342,7 +335,7 @@ object Profile {
 
   /** Two-snapshot drift frame over an events-shaped input (needs
     * event_id + the profiled columns) — q_profile_drift's engine, exposed
-    * for the spec and ScaleProbe. See the query scaladoc for the
+    * for the spec. See the query scaladoc for the
     * threshold algebra.
     */
   private[graft] def profileDrift(ev0: DataFrame): DataFrame = {

@@ -87,8 +87,8 @@ object Retrieval {
   private def termsSql = QueryTerms.mkString("('", "', '", "')")
 
   /** The full (tok, doc_id, tf) postings frame — the inverted-index build
-    * (at 100 TB written ONCE, term-partitioned; see the ScaleProbe
-    * postings-layout probe).
+    * (at 100 TB written ONCE, term-partitioned; see the postings-layout
+    * probe in SCALING.md).
     */
   private[graft] def postingsFrom(docs: DataFrame): DataFrame =
     // spread: token explode + map-side tf aggregation live in the scan
@@ -201,14 +201,14 @@ object Retrieval {
     * scoring join (postings ⋈ doc-lengths, the dl normalization) runs
     * over the candidate fraction only, and the postings read is an
     * index LOOKUP — term-partitioned storage prunes to |query| partitions
-    * (measured in ScaleProbe) instead of re-deriving tf from a full text
+    * (measured in SCALING.md) instead of re-deriving tf from a full text
     * scan per query.
     */
   private[graft] def bm25PrunedFrom(postings: DataFrame,
       dls: DataFrame): DataFrame = bm25PrunedWithCandidates(postings, dls)._1
 
-  /** [[bm25PrunedFrom]] plus the candidate frame it scored — exposed so
-    * ScaleProbe can measure the pruning fraction.
+  /** [[bm25PrunedFrom]] plus the candidate frame it scored, whose size is
+    * the pruning fraction.
     */
   private[graft] def bm25PrunedWithCandidates(postings: DataFrame,
       dls: DataFrame): (DataFrame, DataFrame) = {
@@ -265,8 +265,8 @@ object Retrieval {
       .select(col("e.id").as("id"), (col("p") + 1).cast("long").as(rankName))
 
   /** The batch serving pipeline over explicit documents/embeddings frames
-    * (q_retrieval_batch's engine; the ScaleProbe growth-probe entry
-    * point). See the declared query's comment for the stage walk.
+    * (q_retrieval_batch's engine). See the declared query's comment for
+    * the stage walk.
     */
   private[graft] def retrievalBatchFrom(docsIn: DataFrame,
       emb: DataFrame): DataFrame = {
@@ -362,7 +362,7 @@ object Retrieval {
     // The oracle is deliberately the UNPRUNED bm25Sql: oracle-green IS the
     // proof that two-phase upper-bound pruning changed nothing. The
     // declared form derives the index in-plan (the build cost a real
-    // deployment pays once, offline); ScaleProbe measures the query-time
+    // deployment pays once, offline); SCALING.md records the query-time
     // payoff against term-partitioned storage.
     Q("q_bm25_pruned", bm25Sql) { (s, dir) =>
       val docs = Tables.documents(s, dir)
@@ -933,7 +933,7 @@ object Retrieval {
 
 
   /** The sparse tf-idf cosine pair pipeline over an explicit documents
-    * frame (the ScaleProbe entry point) — see q_tfidf_cosine_pairs.
+    * frame — see q_tfidf_cosine_pairs.
     *
     * Hot-path engineering (profiled at sf0.1, 36.5M candidate partials /
     * 10.3M distinct pairs): the postings self-join on the bigram `f` runs

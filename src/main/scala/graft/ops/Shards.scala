@@ -157,7 +157,7 @@ object Shards {
     // old assignment is never recomputed, every surviving shard's files
     // stay byte-identical (ShardsSpec size+mtime snapshot), and the
     // payload (here `lang`; in the vector plane cells/codes/band keys)
-    // rides along untouched. ≈ 1/(N+1) of rows move — ScaleProbe measured
+    // rides along untouched. ≈ 1/(N+1) of rows move — SCALING.md records
     // the delta write at 1.3 s vs 2.75 s for a full re-shard at ×50.
     // Zero shuffle: a per-row argmax over N+1 weight literals + filter.
     Q("q_shard_scaleout_delta",
@@ -220,7 +220,7 @@ object Shards {
     * state) rides along untouched: no re-quantization, no re-hash, no
     * shuffle of the untouched shards. ShardsSpec gates the composed
     * theorem on a real IVF index — this filter row-for-row equals the
-    * explicit old≠new comparison — and ScaleProbe measures delta-write
+    * explicit old≠new comparison — and SCALING.md records delta-write
     * vs full-reshard-write walls.
     */
   def shardScaleOutArrivals(index: DataFrame, idCol: String,

@@ -97,7 +97,7 @@ object Similarity {
     * an explicit embeddings frame (see q_hamming_mih for the argument).
     * The chunk GEOMETRY is sized from the corpus count through the
     * engine's own cost model ([[mihChunksFor]]) rather than pinned at
-    * 4×16-bit: the x50 ScaleProbe measured the static geometry's slow
+    * 4×16-bit: the ×50 probe in SCALING.md measured the static geometry's slow
     * regime (153 s vs 20.3 s at 250k codes — bucket occupancy n/2¹⁶
     * multiplies candidate rows), and the sizer reproduces the measured
     * 3-chunk decision there while picking narrow-probe geometries at
@@ -144,7 +144,7 @@ object Similarity {
     // SHUFFLE_HASH strategy hint (not a broadcast): the probe side is a
     // 697-way explode whose size Catalyst underestimates — left to its
     // stats, the planner may pick a BROADCAST join and collect the
-    // exploded frame to the driver (observed at ScaleProbe x50:
+    // exploded frame to the driver (observed at ×50, SCALING.md:
     // maxResultSize abort at ~1 GB). Pinning a shuffled hash join keeps
     // both sides partitioned on (chunk, key) at any scale; the index
     // side builds Θ(rows/partitions) per task.
@@ -298,8 +298,8 @@ object Similarity {
     */
   private[graft] def mihPairsChunkedOrCandidates(codes: DataFrame,
       families: Seq[Seq[String]], tau: Int, nChunks: Int): DataFrame = {
-    require(families.map(_.length).distinct.size == 1,
-      "OR-families must share one code width")
+    require(families.nonEmpty && families.map(_.length).distinct.size == 1,
+      "OR-families must be non-empty and share one code width")
     val (maskArrays, keyExpr) = mihGeometry(families.head, tau, nChunks)
     val ch = families.zipWithIndex.map { case (words, t) =>
       chunkKeysOf(codes, words, nChunks, keyExpr)
@@ -1163,8 +1163,8 @@ object Similarity {
     * un-recomputed filter — so routing for untouched cells is unchanged
     * BY CONSTRUCTION (QueriesSpec gates row equality, and post-split
     * recall within 0.1 of a full retrain), and the split costs
-    * Θ(|hot cell|) where a retrain re-reads the corpus (ScaleProbe
-    * measures the gap). Serving continues on the returned (index,
+    * Θ(|hot cell|) where a retrain re-reads the corpus (SCALING.md
+    * records the gap). Serving continues on the returned (index,
     * centroids): [[probeCells]] sizes itself off the array, so probes
     * simply see one more candidate cell. Degenerate cells (< 2 sampled
     * members, or all members identical → one empty child) return

@@ -133,7 +133,7 @@ object Sinks {
     * BOTH original columns, and the stock pushed-down range predicates
     * prune row groups for EITHER dimension. A single-column sort prunes
     * only its own column's predicates; the z layout answers "sort by which
-    * column?" with "both" (ScaleProbe measures rows-read across the two
+    * column?" with "both" (SCALING.md records rows-read across the two
     * layouts and three predicate shapes). The z key is dropped before the
     * write: pruning rides ordinary (a, b) stats — readers need no
     * cooperation, and the layout survives any engine that reads parquet

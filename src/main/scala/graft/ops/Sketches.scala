@@ -99,9 +99,7 @@ object Sketches {
   private[graft] def hllRegisters(s: SparkSession, dir: String): DataFrame =
     hllRegistersFrom(Tables(s, dir, "events"))
 
-  /** The register build over an explicit events frame — the ScaleProbe
-    * entry point.
-    */
+  /** The register build over an explicit events frame. */
   private[graft] def hllRegistersFrom(events: DataFrame): DataFrame = {
     val ev = events
       .select(col("event_type"), poly_hash(col("user_id").cast("string")).as("h"))

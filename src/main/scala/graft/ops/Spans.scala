@@ -33,9 +33,7 @@ object Spans {
     */
   final val SpanLen = 8
 
-  /** The span pipeline over an explicit documents frame (ScaleProbe entry
-    * point).
-    */
+  /** The span pipeline over an explicit documents frame. */
   private[graft] def dupSpansFrom(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val toks = split(col("text"), " ")

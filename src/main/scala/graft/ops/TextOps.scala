@@ -78,8 +78,7 @@ object TextOps {
   private def cents(c: Column): Column = round(c * 100).cast("long")
 
   /** Core of q_decontaminate over an explicit documents frame (needs
-    * doc_id + text) — exposed so ScaleProbe can drive it on replicated
-    * corpora. Join BEFORE dedup: train grams meet the eval-gram set
+    * doc_id + text). Join BEFORE dedup: train grams meet the eval-gram set
     * directly, then countDistinct dedups only the survivors. No broadcast
     * hint on `te`: under the declared 90/10 split it is corpus-proportional,
     * so pinning a broadcast would OOM at 100 TB. Because `te` is distinct-ed

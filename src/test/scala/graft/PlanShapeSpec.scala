@@ -229,7 +229,7 @@ class PlanShapeSpec extends SparkSpec {
       // SHUFFLE_HASH strategy hint only (no broadcast): the 697-way
       // probe explode's size is underestimated by Catalyst stats, and a
       // stats-driven broadcast would collect the exploded frame to the
-      // driver (observed maxResultSize abort at ScaleProbe x50) — the
+      // driver (observed maxResultSize abort at ×50, SCALING.md) — the
       // hint pins the candidate join to shuffle-partitioned hash
       "q_hamming_mih", "q_hamming_mih128",
       // same engine, perceptual-image plane: the dHash pair search rides
@@ -484,8 +484,8 @@ class PlanShapeSpec extends SparkSpec {
         "Segments.df" -> Segments.df(spark, sfDir)) ++
       (PostingLines.queries ++ Spatial.queries).map(q => q.name -> q.build(spark, sfDir))
     frames.foreach { case (name, df) =>
-      val bytes = PlanDump.maxMethodBytes(df)
-      assert(bytes > 0 && bytes <= PlanDump.HugeMethodLimit,
+      val bytes = Diag.maxMethodBytes(df)
+      assert(bytes > 0 && bytes <= Diag.HugeMethodLimit,
         s"$name: largest generated method $bytes B")
     }
   }

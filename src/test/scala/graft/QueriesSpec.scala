@@ -1221,6 +1221,12 @@ class QueriesSpec extends SparkSpec {
       val m = ops.Similarity.mihChunksFor(n, 128, 8)
       assert(8 / m === 0, s"128-bit τ=8 at n=$n picked radius ${8 / m}")
     }
+    // the OR-of-families engine needs at least one family: an empty list
+    // fails its contract instead of families.head's NoSuchElementException
+    val noFamilies = intercept[IllegalArgumentException](
+      ops.Similarity.mihPairsChunkedOrCandidates(
+        codes, Nil, ops.Multimodal.DhashTau, 3))
+    assert(noFamilies.getMessage.contains("non-empty"), noFamilies.getMessage)
     // cross-engine algebra: the CROSS-FRAME join applied to (A, A) and
     // restricted above the diagonal must equal the self-join pair
     // engine — the identity that lets q_perc_ingest's oracle certify

@@ -5,17 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session across all suites (build.sbt forks one JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
   val sf0001 = "/root/testdata/sf0.001"
 }
 
