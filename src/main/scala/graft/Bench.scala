@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -14,7 +17,7 @@ object Bench {
     // data compute where the query declares it — only compile-time state
     // stays warm.
     def warm(name: String)(run: => Long): Unit =
-      try run catch { case e: Throwable =>
+      try run catch { case NonFatal(e) =>
         System.err.println(s"[bench] warmup $name failed: $e")
       }
     warm("entry")(SparkEntry.entry(spark).count())
@@ -31,7 +34,7 @@ object Bench {
       val c0 = Memo.count(spark)
       val t0 = System.nanoTime()
       val rows = try Metrics.observe(spark, q.name)(q.build(spark, sfDir).count())
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); -1L
       }
       // failures are reported as -1 so a broken query can never read as fast
@@ -118,13 +121,13 @@ object Bench {
       val replay = declarers.filter(d => declIdx(d) < declIdx.getOrElse(name, 0))
       val replayFailed = replay.filterNot { d =>
         try { SparkEntry.queries(d)(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] rerun $name: replay of $d failed: $e"); false
         }
       }
       val t0 = System.nanoTime()
       val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] rerun $name failed: $e"); false
       }
       val secs2 = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0

@@ -174,8 +174,8 @@ object Clustering {
     // Per-cell inertia summary of the SAME oracle-checked Lloyd
     // trajectory: member count and exact integer within-cell squared
     // distance mass — the model-quality diagnostic (elbow curves, empty/
-    // degenerate cell detection, rebalance triggers for the IVF index's
-    // needsRebalance cousin). One groupBy(cell) past the assignment —
+    // degenerate cell detection, rebalance triggers for the IVF index).
+    // One groupBy(cell) past the assignment —
     // k rows out whatever the corpus size.
     Q("q_kmeans_inertia",
       s"""$kmScriptPrefix
@@ -327,7 +327,8 @@ object Clustering {
     // "biased new source" scenario) — deterministic integer arithmetic,
     // so the oracle reproduces it exactly; in production the two eras are
     // two ingest windows and the model/geometry literals come from the
-    // baseline era (the histIngest frozen-geometry deployment story).
+    // baseline era (the frozen-geometry deployment story of the
+    // streaming cents histogram).
     // Both statuses surface at every shipped scale: mass near the mode
     // moves between near-equal brackets (undrifted) while slope/tail
     // brackets and the out-of-range OVERFLOW ids (≥ EdBuckets — honest
@@ -353,9 +354,9 @@ object Clustering {
     // never fire (the q_profile_drift noise-floor idea on the embedding
     // plane, all-integer). The surviving rows are the needsRebuild
     // trigger for the persisted vector indexes ([[embedDriftHealth]] →
-    // the ivfPqHealth retrain shape); the same kernel runs live over the
-    // streaming drift feed (Streams.embedDriftAlertIngest, batch ≡
-    // stream spec-gated). Plan shape: one filter over the bounded
+    // retrain); the same kernel runs live over the streaming drift feed
+    // (Streams.embedDriftAlertFold, batch ≡ stream spec-gated). Plan
+    // shape: one filter over the bounded
     // ≤(EdBuckets+overflow)-row report — nothing corpus-sized moves.
     Q("q_drift_alerts",
       s"""$edScriptSql
@@ -369,7 +370,7 @@ object Clustering {
     // DRIFT-TTL TOMBSTONES — the alert → retirement composition as a
     // declared relation: the before-era vec_ids whose frozen-axis bucket
     // is a PAGED (q_drift_alerts) bucket, i.e. exactly the rows
-    // [[driftRetireTombstones]] routes into Similarity.retireVecs on the
+    // [[driftRetireTombstones]] routes into a keyed anti-join on the
     // persisted IVF/IVFADC indexes (retire stale rows of regions whose
     // distribution shifted instead of retraining over them —
     // ClusteringSpec gates retire ≡ frozen-model rebuild of the
@@ -489,7 +490,7 @@ object Clustering {
     * floor-division rule as centsHist ([[graft.ops.Sketches]]
     * .flooredBucketSql). The batch q_embed_drift derives lo = min of the
     * before era and never sees pc1 < lo, but the streaming drift feed
-    * ([[graft.streaming.Streams]].embedDriftIngest) freezes (lo, width)
+    * ([[graft.streaming.Streams]].embedDriftFold) freezes (lo, width)
     * from a baseline era — new-era scores drifting BELOW lo must land in
     * negative diagnostic buckets, not silently merge into bucket 0.
     */
@@ -626,11 +627,12 @@ object Clustering {
 
   /** Tombstones for the drift-alert → retirement composition: the ids
     * of an era's rows whose frozen-axis bucket is a PAGED (alert)
-    * bucket — the embedding-plane TTL feeding [[graft.ops.Similarity]]
-    * .retireVecs (retire stale rows of regions whose distribution
-    * shifted, instead of retraining over them). One narrow semi-join of
-    * the scored era against the broadcast ≤(EdBuckets+overflow)-row
-    * alert frame — the corpus never shuffles; ClusteringSpec gates the
+    * bucket — the embedding-plane TTL feeding a keyed anti-join on the
+    * persisted vector index (retire stale rows of regions whose
+    * distribution shifted, instead of retraining over them). One narrow
+    * semi-join of the scored era against the broadcast
+    * ≤(EdBuckets+overflow)-row alert frame — the corpus never shuffles;
+    * ClusteringSpec gates the
     * composed path end-to-end (retire ≡ frozen-model rebuild of the
     * survivors).
     */
@@ -645,7 +647,7 @@ object Clustering {
   /** The composed health gate on the embedding plane: how many buckets
     * page, and how much after-era mass sits in them. `needsRebuild`
     * closes the loop to the persisted-index lifecycle — fire the
-    * ivfPqHealth-style retrain/re-index when ANY alert survives the
+    * retrain/re-index when ANY alert survives the
     * noise floor (the per-bucket 20% rule + 1% mass floor already
     * filtered the noise).
     */

@@ -207,8 +207,7 @@ object Curation {
   final case class BoilerHealth(frozenTemplates: Long,
       missedTemplates: Long, missedDocHits: Long) {
     /** Rebuild when the missed templates reach 20% of the frozen set —
-      * integer cross-multiplication, the q_profile_drift gate; the IVF
-      * needsRebalance shape on the template plane.
+      * integer cross-multiplication, the q_profile_drift gate.
       */
     def needsRebuild: Boolean =
       missedTemplates * 5L > math.max(frozenTemplates, 1L)

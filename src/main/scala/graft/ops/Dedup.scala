@@ -26,27 +26,6 @@ object Dedup {
   final val BandRows   = 8
   final val NumBands   = NumPerms / BandRows
 
-  /** The LSH S-curve made executable (the companion of
-    * Similarity.mihChunksFor): pick (bands, rows) for a TARGET Jaccard
-    * threshold under a signature budget — the (b, r) with b·r ≤ budget
-    * whose collision threshold (1/b)^(1/r) lands closest to the target
-    * in log space (log space because the curve's steepness, not the
-    * absolute offset, is what the threshold controls; q_minhash_
-    * calibration MEASURES the resulting curve). Driver-side integer
-    * search over the divisor grid — model-state cheap at any budget.
-    */
-  private[graft] def bandsFor(targetJaccard: Double,
-      sigBudget: Int): (Int, Int) = {
-    require(targetJaccard > 0 && targetJaccard < 1, s"bad τ=$targetJaccard")
-    val cands = for {
-      r <- 1 to sigBudget
-      b <- 1 to sigBudget / r
-    } yield (b, r)
-    cands.minBy { case (b, r) =>
-      (math.abs(math.log(math.pow(1.0 / b, 1.0 / r))
-        - math.log(targetJaccard)), -(b * r))
-    }
-  }
   /** Candidate prefilter: signature components agreeing (estimates Jaccard). */
   final val MinSigAgree = 14
   final val JaccardTau  = 0.9
@@ -77,12 +56,12 @@ object Dedup {
   private def normText: Column =
     graft.functions.TextNormExprs.normalize_text(col("text"))
   private def toks: Column  = split(normText, " ")
-  private def dtoks: Column = array_distinct(toks)
+  private[graft] def dtoks: Column = array_distinct(toks)
   /** Per-token 30-bit polynomial hashes (distinct tokens → set semantics). */
   private def tokenHashes: Column = transform(dtoks, t => poly_hash(t))
 
   /** MinHash signature: sig_i = min over tokens of (h*(2i+1) + (101i+17)) mod P. */
-  private def minhashSigsOf(hashes: Column): Column =
+  private[graft] def minhashSigsOf(hashes: Column): Column =
     transform(sequence(lit(0), lit(NumPerms - 1)), i =>
       array_min(transform(hashes, h =>
         (h * (i * 2 + 1) + (i * 101 + 17)) % Hashing.Mod)))
@@ -1244,48 +1223,6 @@ object Dedup {
         expr("(n_ch - known_chars) * 1000 div n_ch"))
   }
 
-  /** Retire documents from the persisted chunk index (the
-    * [[chunkFrame]] relation the novelty scorer probes): a keyed
-    * anti-join on doc_id — survivors are never re-chunked or re-hashed
-    * (the [[retireFrom]] argument on the CDC plane; a doc's chunk rows
-    * are functions of its own text alone). Because the index stores
-    * per-OCCURRENCE rows, retiring one holder of a SHARED chunk leaves
-    * the chunk known through its other holders — refcount semantics for
-    * free — and a chunk goes unknown only when its last holder retires;
-    * retire ≡ rebuild-on-survivors exactly (QueriesSpec row equality
-    * plus the novelty-flip gate).
-    */
-  private[graft] def chunkRetire(index: DataFrame,
-      tombstones: DataFrame): DataFrame =
-    index.join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
-
-  /** De-thresholded banded candidates at DOC level — every band collision
-    * with its signature agreement and exact Jaccard, no size prefilter,
-    * no agreement floor, no τ cut — the calibration surface behind
-    * q_minhash_calibration (mirrors the oracle CTE chain 1:1; the
-    * cluster-collapsed layout the production pipeline uses would change
-    * the pair COUNTING unit, which is the quantity being calibrated).
-    *
-    * The self-join is TILE-DECOMPOSED: de-thresholded band buckets are
-    * pathologically skewed (measured at sf0.1: one bucket holds 3,847 of
-    * 5,000 docs → 7.4M of the 7.6M candidate pairs from a single join
-    * key, serialized onto ONE task — and AQE's skew split never fires
-    * because it watches input bytes, which are KBs here, not output
-    * fan-out). Each doc gets a tile = doc_id mod G; the left side is
-    * emitted once per target tile ≥ its own, the right side keyed by its
-    * tile, and the join key gains the tile — so a k-doc bucket's k²/2
-    * pair generation spreads over up to G(G+1)/2 key groups instead of
-    * one. Pairs across tiles appear exactly once (only the lower tile
-    * emits up), same-tile pairs twice in opposite orientations —
-    * least/greatest + the existing DISTINCT collapse them. Output is
-    * provably identical to the naive self-join; per-task work drops from
-    * Θ(k²) to Θ(k²/G²) on the hot bucket (measured 8.7 s → ~1.5 s).
-    * The sig frame itself is memoized: four plan branches read it, and
-    * one cached Θ(docs) frame beats four recomputes of the hash+sort
-    * pipeline.
-    */
-  final val CalibTiles = 64
-
   /** CLUSTER-PLANE calibration candidates (round 15): one row per banded
     * candidate TOKEN-SET-cluster pair (plus one per ≥2-member cluster for
     * its intra pairs), weighted by the member-pair multiplicity `n_pair`.
@@ -1331,47 +1268,6 @@ object Dedup {
         size(col("th")).cast("long").as("uni"),
         expr("cnt * (cnt - 1) div 2").as("n_pair"))
     interC.unionByName(intraC)
-  }
-
-  /** The doc-level reference formulation of [[bandedCandidatesAll]] —
-    * kept (not declared) as the equality oracle for the cluster-plane
-    * rewrite's spec.
-    */
-  private[graft] def bandedCandidatesAllReference(s: SparkSession,
-      dir: String): DataFrame = {
-    val docs = memoized(s, dir, "calib_sig")(
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          array_sort(transform(dtoks, t => poly_hash(t))).as("th"))
-        .withColumn("sig", minhashSigsOf(col("th"))))
-    // band key as the raw 8-long slice — equality on long arrays is
-    // equivalent to equality of the oracle's comma-joined rendering and
-    // skips per-row string building in the join
-    val bandKeysArr = transform(sequence(lit(0), lit(NumBands - 1)), b =>
-      slice(col("sig"), b * BandRows + 1, lit(BandRows)))
-    val bandRows = docs.select(col("doc_id"),
-        posexplode(bandKeysArr).as(Seq("band", "key")))
-      .withColumn("tile", pmod(col("doc_id"), lit(CalibTiles)).cast("int"))
-    val left = bandRows.select(col("doc_id"), col("band"), col("key"),
-      explode(sequence(col("tile"), lit(CalibTiles - 1))).as("t"))
-    val right = bandRows.select(col("doc_id").as("d2"),
-      col("band").as("band2"), col("key").as("key2"), col("tile").as("t2"))
-    val cand = left.hint("SHUFFLE_HASH").join(right,
-        col("band") === col("band2") && col("key") === col("key2") &&
-          col("t") === col("t2") && col("doc_id") =!= col("d2"))
-      .select(least(col("doc_id"), col("d2")).as("d1"),
-        greatest(col("doc_id"), col("d2")).as("d2"))
-      .distinct()
-    val l = docs.select(col("doc_id").as("d1"), col("sig").as("sig1"),
-      col("th").as("h1"))
-    val r = docs.select(col("doc_id").as("d2"), col("sig").as("sig2"),
-      col("th").as("h2"))
-    val inter = graft.functions.exprs.intersect_count_sorted(col("h1"), col("h2"))
-    cand.join(l, "d1").join(r, "d2")
-      .select(col("d1"), col("d2"),
-        graft.functions.exprs.count_equal(col("sig1"), col("sig2")).as("sig_agree"),
-        inter.as("inter"),
-        (size(col("h1")) + size(col("h2")) - inter).as("uni"))
   }
 
   /** Winnowing fingerprint frame (doc_id, h, pos) over an explicit

@@ -224,10 +224,11 @@ object Multimodal {
   // per horizontally-adjacent comparison → a 64-bit code whose Hamming
   // distance survives re-encoding, scaling and small retouches. This
   // connects the multimodal plane to the similarity plane: the codes ride
-  // the SAME parametric MIH engine (Similarity.mihPairs) as the embedding
-  // sign codes — 4 chunks of 16 bits, per-chunk radius [[DhashTau]]/4 = 2,
-  // 137 probe masks per chunk, candidate work Θ(n·chunks·masks) instead
-  // of n². The corpus is a REAL codec round-trip: each document renders
+  // the SAME parametric MIH engine (Similarity.mihPairsChunked) as the
+  // embedding sign codes — 4 chunks of 16 bits, per-chunk radius
+  // [[DhashTau]]/4 = 2, 137 probe masks per chunk, candidate work
+  // Θ(n·chunks·masks) instead of n². The corpus is a REAL codec
+  // round-trip: each document renders
   // to a genuine PNG (deterministic grayscale raster, one in five images
   // a retouched copy of its predecessor — a sparse pixel stripe shifted),
   // and the engine's code is computed from the ImageIO-DECODED pixels
@@ -336,7 +337,6 @@ object Multimodal {
     }
   }
 
-  case class AhashCode(media_id: Long, alo: Long, ahi: Long)
   case class PercCodes(media_id: Long,
       dlo: Long, dhi: Long, alo: Long, ahi: Long)
 
@@ -375,21 +375,6 @@ object Multimodal {
     (lo, hi)
   }
 
-  /** aHash codes from real PNG decode (the [[dhashCodes]] contract). */
-  def ahashCodes(media: Dataset[RealMedia]): Dataset[AhashCode] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false)
-      it.map { m =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(m.payload))
-        require(img != null, s"perceptual PNG ${m.media_id} failed to decode")
-        val (lo, hi) = ahashOf(img)
-        AhashCode(m.media_id, lo, hi)
-      }
-    }
-  }
-
   // ---- memoized perceptual code frame (round 15) ------------------------
   private val memo = new Memo[String, DataFrame]
 
@@ -397,9 +382,10 @@ object Multimodal {
     * and cached: five declared queries (dhash codes / MIH pairs, ahash
     * codes, the agreement report, perceptual ingest) each re-ran the PNG
     * codec round-trip per plan reference before (the agreement query's
-    * plan alone held it 3×). dhashCodes/ahashCodes compute the identical
-    * dhashOf/ahashOf values, so selecting the family's columns from this
-    * frame is value-identical (oracle-hash-checked).
+    * plan alone held it 3×). dhashCodes computes the identical dhashOf
+    * values and the ahash columns are ahashOf's, so selecting the
+    * family's columns from this frame is value-identical
+    * (oracle-hash-checked).
     */
   private[graft] def percCodesFrame(s: SparkSession, dir: String): DataFrame =
     memo(s, dir)(percCodes(encodePerc(s, dir)).toDF().cache())
@@ -561,21 +547,15 @@ object Multimodal {
     img
   }
 
-  /** Genuine animated-GIF bytes: 2 + id%3 frames of the per-frame ramp.
+  /** Genuine animated-GIF bytes: 2 + id%3 frames of the per-frame ramp,
+    * written with a caller-owned writer — the encode path reuses ONE
+    * writer per partition (writer construction + service lookup per row
+    * measurably dominates these tiny payloads); `wr.reset()` between
+    * payloads restores the pristine state the sequence API needs.
     * Interlace is explicitly DISABLED in the per-frame metadata: the JDK's
     * GIF writer interlaces by default, and its interlace passes corrupt
     * rows for frames shorter than 8 px (verified empirically: a 4×2 frame
     * round-trips row-scrambled interlaced, exact non-interlaced).
-    */
-  def gifBytes(id: Long): Array[Byte] = {
-    val wr = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    try gifBytesWith(wr, id) finally wr.dispose()
-  }
-
-  /** Core of [[gifBytes]] against a caller-owned writer — the encode path
-    * reuses ONE writer per partition (writer construction + service lookup
-    * per row measurably dominates these tiny payloads); `wr.reset()`
-    * between payloads restores the pristine state the sequence API needs.
     */
   private def gifBytesWith(wr: javax.imageio.ImageWriter,
       id: Long): Array[Byte] = {
@@ -736,15 +716,8 @@ object Multimodal {
 
   /** Genuine MJPEG-in-AVI bytes: 2 + id%3 constant-gray JPEG frames in the
     * standard RIFF/'AVI ' layout (avih/strh/strf headers, '00dc' movi
-    * chunks, idx1 keyframe index).
-    */
-  def aviBytes(id: Long): Array[Byte] = {
-    val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-    try aviBytesWith(wr, id) finally wr.dispose()
-  }
-
-  /** Core of [[aviBytes]] against a caller-owned JPEG writer — the encode
-    * path reuses ONE writer per partition (same rationale as
+    * chunks, idx1 keyframe index), against a caller-owned JPEG writer —
+    * the encode path reuses ONE writer per partition (same rationale as
     * [[gifBytesWith]]).
     */
   def aviBytesWith(wr: javax.imageio.ImageWriter, id: Long): Array[Byte] = {
@@ -1012,11 +985,6 @@ object Multimodal {
   private def pesBytes(payload: Array[Byte]): Array[Byte] =
     Array[Byte](0, 0, 1, 0xBD.toByte) ++ be16(3 + payload.length) ++
       Array[Byte](0x80.toByte, 0x00, 0x00) ++ payload
-
-  def tsBytes(id: Long): Array[Byte] = {
-    val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-    try tsBytesWith(wr, id) finally wr.dispose()
-  }
 
   /** Genuine single-program transport stream: PAT, PMT, then each
     * constant-gray JPEG frame as one PES packet split across TS packets

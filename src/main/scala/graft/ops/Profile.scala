@@ -76,45 +76,50 @@ object Profile {
     * by the first's stragglers instead of waiting for a sequential
     * `head()` round-trip per table (guide §2.6 overlap-independent-jobs;
     * 2 tables ≈ the sweet spot). Results are assembled in input order, so
-    * output is identical to the sequential form.
+    * output is identical to the sequential form. The futures run on a
+    * pool of their own (one thread per table), shut down on exit, so a
+    * stuck job can neither starve nor outlive the caller.
     */
   def profileTables(tables: Seq[(DataFrame, String)]): DataFrame = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     require(tables.nonEmpty, "profileTables needs at least one table")
     val spark = tables.head._1.sparkSession
-    val futures = tables.map { case (df, table) =>
-      val cols = df.schema.fields.toSeq
-      val aggs = cols.flatMap { f =>
-        Seq(count(col(f.name)).as(s"nn_${f.name}"),
-          countDistinct(col(f.name)).as(s"nd_${f.name}"),
-          renderSpark(min(col(f.name)), f.dataType).as(s"mn_${f.name}"),
-          renderSpark(max(col(f.name)), f.dataType).as(s"mx_${f.name}"))
-      }
-      // NOT spread (round 16, measured and reverted): parallelizing the
-      // scan stage here inflated total executor CPU ~9× (4.8 → 44.4
-      // CPU-s at sf0.1) for a 0.6 s wall win on local[32] — the Expand ×
-      // countDistinct partial buffers are built per task, so 32-way
-      // partials multiply the distinct-set maintenance work. The one-pass
-      // serial partial + merge is the cheaper total-work shape (and the
-      // two tables' jobs already overlap via the futures below).
-      val agg = df.agg(count(lit(1)).as("n_rows"), aggs: _*)
-      Future {
-        val row = agg.head()
-        val n   = row.getAs[Long]("n_rows")
-        cols.map { f =>
-          val nn = row.getAs[Long](s"nn_${f.name}")
-          val nd = row.getAs[Long](s"nd_${f.name}")
-          Row(table, f.name, n, n - nn, nd,
-            row.getAs[String](s"mn_${f.name}"),
-            row.getAs[String](s"mx_${f.name}"),
-            nn == n && nd == n)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val out = try {
+      val futures = tables.map { case (df, table) =>
+        val cols = df.schema.fields.toSeq
+        val aggs = cols.flatMap { f =>
+          Seq(count(col(f.name)).as(s"nn_${f.name}"),
+            countDistinct(col(f.name)).as(s"nd_${f.name}"),
+            renderSpark(min(col(f.name)), f.dataType).as(s"mn_${f.name}"),
+            renderSpark(max(col(f.name)), f.dataType).as(s"mx_${f.name}"))
+        }
+        // NOT spread (round 16, measured and reverted): parallelizing the
+        // scan stage here inflated total executor CPU ~9× (4.8 → 44.4
+        // CPU-s at sf0.1) for a 0.6 s wall win on local[32] — the Expand ×
+        // countDistinct partial buffers are built per task, so 32-way
+        // partials multiply the distinct-set maintenance work. The one-pass
+        // serial partial + merge is the cheaper total-work shape (and the
+        // two tables' jobs already overlap via the futures below).
+        val agg = df.agg(count(lit(1)).as("n_rows"), aggs: _*)
+        Future {
+          val row = agg.head()
+          val n   = row.getAs[Long]("n_rows")
+          cols.map { f =>
+            val nn = row.getAs[Long](s"nn_${f.name}")
+            val nd = row.getAs[Long](s"nd_${f.name}")
+            Row(table, f.name, n, n - nn, nd,
+              row.getAs[String](s"mn_${f.name}"),
+              row.getAs[String](s"mx_${f.name}"),
+              nn == n && nd == n)
+          }
         }
       }
-    }
-    // bounded: a stuck profile job fails loudly instead of hanging the caller
-    val out = futures.flatMap(f => Await.result(f, Duration(30, "min")))
+      // bounded: a stuck profile job fails loudly instead of hanging the caller
+      futures.flatMap(f => Await.result(f, Duration(30, "min")))
+    } finally pool.shutdownNow()
     spark.createDataFrame(
       spark.sparkContext.parallelize(out, 1), outSchema)
   }

@@ -115,9 +115,6 @@ object Retrieval {
       .groupBy("doc_id", "dl", "tok").agg(count(lit(1)).as("tf"))
   }
 
-  private def tfFrame(s: SparkSession, dir: String): DataFrame =
-    tfFrameFrom(Tables.documents(s, dir))
-
   /** BM25-scored (doc_id, score) SQL over an arbitrary documents-shaped
     * table — the core of [[bm25Sql]], and the candidate stage of the
     * composed retrieval script (q_retrieval_full).
@@ -948,16 +945,11 @@ object Retrieval {
     * reduce straight into per-pair dots. MEASURED DECISION (round 8,
     * sf0.1): this corpus is pathologically pair-dense — 10.3M of 12.5M
     * possible pairs share a df-capped feature — so Bayardo prefix
-    * filtering ([[tfidfPrefixCandidates]], exact and spec-gated) only
-    * cuts candidates 19% (10.3M → 8.35M) and ANY per-candidate
-    * verification then exceeds the partial-product join it replaces
-    * (measured 42 s vs 8 s: 8.35M pairs × full-vector rescore beats
-    * 36.5M map-side-combined partials). The prefix plan is the right
-    * shape when the candidate fraction is SMALL (heavy-tailed df, sparse
-    * overlap — the regime the paper targets and the RetrievalSpec
-    * sparse-corpus gate demonstrates); a production deployment would
-    * pick by the indexed-posting fraction, which the candidate operator
-    * exposes cheaply.
+    * filtering only cuts candidates 19% (10.3M → 8.35M) and ANY
+    * per-candidate verification then exceeds the partial-product join it
+    * replaces (measured 42 s vs 8 s: 8.35M pairs × full-vector rescore
+    * beats 36.5M map-side-combined partials), so the declared plan runs
+    * without a prefix filter.
     */
   private[graft] def tfidfCosinePairsFrom(docs: DataFrame): DataFrame = {
     // One materialization of the postings pipeline (AQE's runtime stage
@@ -1030,36 +1022,6 @@ object Retrieval {
     */
   private val PairsPerAggTask = 262144L
 
-  /** The prefix-filtered variant of [[tfidfCosinePairsFrom]] — identical
-    * output (RetrievalSpec proves plan-for-plan equality), with candidate
-    * generation restricted to indexed×indexed postings and per-candidate
-    * full-vector verification. The winning plan in the sparse-candidate
-    * regime; see the measured-decision note on the declared plan.
-    */
-  private[graft] def tfidfCosinePairsPrefixFrom(docs: DataFrame): DataFrame = {
-    val w = tfidfPostings(docs)
-    val nrm = w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("nsq"))
-    val cand = tfidfPrefixCandidates(w, nrm)
-    // per-candidate verification against the two FULL integer vectors,
-    // carried as f → w maps (per-doc feature counts are corpus-bounded);
-    // the dot is an in-memory map probe over d1's entries
-    val vecs = w.groupBy("doc_id")
-      .agg(map_from_entries(collect_list(struct(col("f"), col("w"))))
-        .as("m"))
-      .join(nrm, "doc_id")
-    cand
-      .join(vecs.select(col("doc_id").as("d1"), col("m").as("m1"),
-        col("nsq").as("n1sq")), "d1")
-      .join(vecs.select(col("doc_id").as("d2"), col("m").as("m2"),
-        col("nsq").as("n2sq")), "d2")
-      .withColumn("dot", expr("aggregate(map_entries(m1), 0L, (acc, e) -> " +
-        "acc + e.value * coalesce(try_element_at(m2, e.key), 0L))"))
-      .filter(col("dot").cast("decimal(38,0)") * col("dot") * 25
-        >= col("n1sq").cast("decimal(38,0)") * col("n2sq") * 16)
-      .select("d1", "d2", "dot", "n1sq", "n2sq")
-      .orderBy("d1", "d2")
-  }
-
   /** Integer tf-idf postings (doc_id, f, df, w) over a documents
     * frame — the shared head of the all-pairs pipeline.
     */
@@ -1091,44 +1053,4 @@ object Retrieval {
         (col("tf") * col("idf_milli")).as("w"))
   }
 
-  /** Prefix-filtered candidate pairs (Bayardo, Ma & Srikant 2007,
-    * "Scaling Up All Pairs Similarity Search"): in a global feature order
-    * (df DESC, f — frequent features first), each doc leaves UNINDEXED
-    * its maximal order-prefix whose cumulative bound Σ uᵢ·maxw(fᵢ) stays
-    * below τ (u = w/‖w‖, maxw(f) = the corpus max of u over docs) and
-    * indexes the rest; candidates join indexed×indexed postings only.
-    *
-    * EXACT by the pigeonhole on the LARGEST shared feature: unindexed
-    * sets are downward-closed in the order, so if a pair's largest
-    * shared feature were unindexed by either side, ALL its shared
-    * features would sit in that side's unindexed prefix and
-    * cos ≤ Σ_prefix u·maxw < τ — any τ-pair therefore shares an
-    * indexed-by-both feature (the symmetric batch form of the paper's
-    * asymmetric probe; the oracle scores the UNFILTERED join, so
-    * hash-green proves the pruning drops nothing). The (1 − 1e-9) slack
-    * on τ only ever indexes MORE (double error on the bound sum is
-    * ≤ ~1e-12 relative), keeping float arithmetic on the safe side of
-    * the cut. Frequent-first ordering puts high-df features in the
-    * unindexed prefixes, so Σ df_indexed² candidate work concentrates
-    * on rare features — the measured drop vs indexing every posting is
-    * recorded in SCALING.md.
-    */
-  private[graft] def tfidfPrefixCandidates(w: DataFrame,
-      nrm: DataFrame): DataFrame = {
-    val tau = 4.0 / 5.0 // must match the verifier's 25/16 cross-multiply
-    val wn = w.join(nrm, "doc_id")
-      .withColumn("u", col("w") / sqrt(col("nsq").cast("double")))
-    val fmax = wn.groupBy("f").agg(max(col("u")).as("maxw"))
-    val win = Window.partitionBy("doc_id").orderBy(col("df").desc, col("f"))
-    val indexed = wn.join(fmax, "f")
-      .withColumn("cum", sum(col("u") * col("maxw")).over(win))
-      .filter(col("cum") >= lit(tau * (1 - 1e-9)))
-      .select("doc_id", "f")
-    // SHUFFLE_HASH strategy hint: dense equal-key self-join on the
-    // feature — the q_tfidf_cosine_pairs SMJ-buffered-rescan rationale
-    indexed.as("a").hint("SHUFFLE_HASH").join(indexed.as("b"),
-        col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-  }
 }

@@ -75,25 +75,6 @@ object Shards {
       .select("doc_id", "shard", "pos")
   }
 
-  /** Export `docs` as N shard files under `outDir`: one hash
-    * repartition on the shard id, rows sorted by shuffle key within each
-    * file — the layout [[shardAssign]] describes, written. `partitionBy`
-    * gives shard-addressable paths (`shard=K/`); with `n` partitions a
-    * hash collision can co-locate two shards in one task, which still
-    * yields one file per shard per directory (each task writes its keys
-    * separately), so readers are unaffected.
-    */
-  def writeShards(docs: DataFrame, n: Int, outDir: String): Unit =
-    docs.select(col("doc_id"), shuffleKey(col("doc_id")).as("key"),
-        pmod(shuffleKey(col("doc_id")), lit(n.toLong)).as("shard"),
-        col("text"))
-      .repartition(n, col("shard"))
-      // shard FIRST: FileFormatWriter requires a partition-column prefix
-      // ordering and would otherwise insert its own (not-necessarily-
-      // stable) sort on shard alone, clobbering the key order
-      .sortWithinPartitions("shard", "key", "doc_id")
-      .write.mode("overwrite").partitionBy("shard").parquet(outDir)
-
   val queries: Seq[Q] = Seq(
 
     // Deterministic shard + in-shard position for every document,

@@ -118,52 +118,6 @@ object Similarity {
     mihPairsChunked(signCodes128(emb), Seq("w0", "w1", "w2", "w3"),
       Mih128Tau, mihChunksFor(emb.count(), 128, Mih128Tau))
 
-  /** The MIH engine, parametric in the code words: `codes` carries
-    * `vec_id` plus `words` 32-bit-valued long columns; chunk c is bits
-    * [c·16, c·16+16) of their concatenation, probed at radius
-    * floor(tau / chunks) — the pigeonhole guarantee that every pair
-    * within `tau` collides on some probed chunk key.
-    */
-  private[graft] def mihPairs(codes: DataFrame, words: Seq[String],
-      tau: Int): DataFrame = {
-    val chunks = words.length * 2
-    val radius = tau / chunks
-    // the per-chunk probe neighborhood — a model-state literal (697 masks
-    // at radius 3)
-    val masks: Seq[Long] =
-      (0 until 65536).filter(m => Integer.bitCount(m) <= radius).map(_.toLong)
-    val ch = codes.withColumn("ws", array(words.map(col): _*))
-      .select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${chunks - 1}), c -> " +
-          "shiftright(element_at(ws, CAST(c div 2 + 1 AS INT)), (c % 2) * 16) & 65535L)"))
-        .as(Seq("c", "key")))
-    val probes = ch
-      .select(col("vec_id").as("v1"), col("c"), col("key"),
-        explode(typedLit(masks)).as("m"))
-      .select(col("v1"), col("c"), col("key").bitwiseXOR(col("m")).as("pkey"))
-    // SHUFFLE_HASH strategy hint (not a broadcast): the probe side is a
-    // 697-way explode whose size Catalyst underestimates — left to its
-    // stats, the planner may pick a BROADCAST join and collect the
-    // exploded frame to the driver (observed at ×50, SCALING.md:
-    // maxResultSize abort at ~1 GB). Pinning a shuffled hash join keeps
-    // both sides partitioned on (chunk, key) at any scale; the index
-    // side builds Θ(rows/partitions) per task.
-    val cand = probes.join(
-        ch.select(col("vec_id").as("v2"), col("c"), col("key").as("pkey"))
-          .hint("SHUFFLE_HASH"),
-        Seq("c", "pkey"))
-      .filter(col("v1") < col("v2"))
-      .select("v1", "v2").distinct()
-    val a = codes.select(
-      col("vec_id").as("v1") +: words.map(w => col(w).as(s"${w}1")): _*)
-    val b = codes.select(
-      col("vec_id").as("v2") +: words.map(w => col(w).as(s"${w}2")): _*)
-    cand.join(a, "v1").join(b, "v2")
-      .select(col("v1"), col("v2"),
-        expr(words.map(w => s"bit_count(${w}1 ^ ${w}2)").mkString(" + "))
-          .cast("int").as("ham"))
-      .filter(col("ham") <= tau)
-  }
   /** All Hamming-ball masks of `width` bits up to `radius` flips. */
   private def masksUpTo(width: Int, radius: Int): Seq[Long] = {
     def combos(start: Int, left: Int): Seq[Long] =
@@ -212,7 +166,7 @@ object Similarity {
     }
   }
 
-  /** [[mihPairs]] generalized to an ARBITRARY chunk count over the same
+  /** The MIH engine generalized to an ARBITRARY chunk count over the same
     * 32-bit code words — the Norouzi m = b/log₂(n) sizing lever made
     * executable. Fewer, wider chunks trade a larger per-chunk probe
     * neighborhood for exponentially lower bucket occupancy: at τ = 8
@@ -224,7 +178,8 @@ object Similarity {
     * chunks·(radius+1) > τ guarantees every true pair collides on some
     * probed chunk (asserted); the exact Hamming filter at the end is
     * unchanged, so the OUTPUT is identical at any chunk count —
-    * QueriesSpec proves set equality against the 16-bit engine.
+    * QueriesSpec proves set equality against the fixed 16-bit-chunk
+    * reference engine (kept in the test tree).
     */
   /** Chunk geometry shared by the chunked MIH engines: bit offsets of the
     * nChunks chunk boundaries over the concatenated words, per-chunk
@@ -264,8 +219,13 @@ object Similarity {
       .select(col("vec_id").as("v1"), col("c"), col("key"),
         explode(element_at(typedlit(maskArrays), col("c") + 1)).as("m"))
       .select(col("v1"), col("c"), col("key").bitwiseXOR(col("m")).as("pkey"))
-    // same SHUFFLE_HASH rationale as mihPairs: the exploded probe side's
-    // stats are underestimated; pin the shuffled hash join
+    // SHUFFLE_HASH strategy hint (not a broadcast): the probe side is a
+    // mask-way explode whose size Catalyst underestimates — left to its
+    // stats, the planner may pick a BROADCAST join and collect the
+    // exploded frame to the driver (observed at ×50, SCALING.md:
+    // maxResultSize abort at ~1 GB). Pinning a shuffled hash join keeps
+    // both sides partitioned on (chunk, key) at any scale; the index
+    // side builds Θ(rows/partitions) per task.
     val cand = probes.join(
         ch.select(col("vec_id").as("v2"), col("c"), col("key").as("pkey"))
           .hint("SHUFFLE_HASH"),
@@ -311,7 +271,7 @@ object Similarity {
         explode(element_at(typedlit(maskArrays),
           pmod(col("c"), lit(nChunks)).cast("int") + 1)).as("m"))
       .select(col("v1"), col("c"), col("key").bitwiseXOR(col("m")).as("pkey"))
-    // same SHUFFLE_HASH rationale as mihPairs: exploded-side stats are
+    // same SHUFFLE_HASH rationale as mihPairsChunked: exploded-side stats are
     // underestimated; pin the shuffled hash join
     probes.join(
         ch.select(col("vec_id").as("v2"), col("c"), col("key").as("pkey"))
@@ -338,7 +298,7 @@ object Similarity {
       .select(col("vec_id").as("p_id"), col("c"), col("key"),
         explode(element_at(typedlit(maskArrays), col("c") + 1)).as("m"))
       .select(col("p_id"), col("c"), col("key").bitwiseXOR(col("m")).as("pkey"))
-    // same SHUFFLE_HASH rationale as mihPairs: exploded-side stats are
+    // same SHUFFLE_HASH rationale as mihPairsChunked: exploded-side stats are
     // underestimated; pin the shuffled hash join
     val cand = probes.join(
         chunkKeysOf(index, words, nChunks, keyExpr)
@@ -385,7 +345,7 @@ object Similarity {
         .otherwise(lit(0))
     }.reduce(_ + _)
 
-  private def withNorm(df: DataFrame): DataFrame =
+  private[graft] def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", sqrt(dot_ff(col("embedding"), col("embedding"))))
 
   /** Probe-batch row cap — the structural bound that makes the broadcast
@@ -733,8 +693,8 @@ object Similarity {
   /** Every `TrainSampleMod`-th vector trains the quantizer. */
   final val TrainSampleMod = 3
 
-  /** k-means-lite (Lloyd) centroids over a deterministic SAMPLE of the
-    * embedding column (every [[TrainSampleMod]]-th vec_id — no RNG, so runs
+  /** k-means-lite (Lloyd) centroids over a deterministic SAMPLE of a
+    * (vec_id, embedding) frame (every [[TrainSampleMod]]-th vec_id — no RNG, so runs
     * are reproducible): quantizer training only needs enough points to
     * place k centroids, so at 100 TB the Lloyd rounds run over a fixed-size
     * sample while the full corpus is only ever touched by the one narrow
@@ -744,11 +704,6 @@ object Similarity {
     * update is one groupBy(cell)); this is model-state collect, not data
     * collect — the collected frame is O(k·dim) regardless of corpus size.
     */
-  private[graft] def kmeansCentroids(s: SparkSession, dir: String,
-      k: Int = IvfCells, iters: Int = IvfIters): Array[Array[Double]] =
-    kmeansCentroidsFrom(Tables.embeddings(s, dir), k, iters)
-
-  /** [[kmeansCentroids]] over an explicit (vec_id, embedding) frame. */
   private[graft] def kmeansCentroidsFrom(emb: DataFrame,
       k: Int = IvfCells, iters: Int = IvfIters): Array[Array[Double]] = {
     val e = emb.filter(col("vec_id") % TrainSampleMod === 0)
@@ -785,7 +740,7 @@ object Similarity {
   }
 
   /** Per-centroid cosine scores of `v` (centroid norms folded in driver-side). */
-  private def centScores(v: Column, cents: Array[Array[Double]]): Column =
+  private[graft] def centScores(v: Column, cents: Array[Array[Double]]): Column =
     array(cents.map { c =>
       val n = math.sqrt(c.map(x => x * x).sum)
       dot_ff(v, typedlit(c.map(_.toFloat).toSeq)) / lit(if (n == 0) 1.0 else n)
@@ -1030,229 +985,13 @@ object Similarity {
       .orderBy("family", "setting")
   }
 
-  /** The per-setting reference formulation of [[annCalibration]] — one
-    * full candidate join + two aggregations per swept setting. Kept (and
-    * NOT declared) solely as the equality oracle for the single-pass
-    * rewrite: AnnCalibrationSpec asserts row-for-row equality between the
-    * two on the shipped fixture.
-    */
-  private[graft] def annCalibrationReference(s: SparkSession,
-      dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val exactRows = cosineTopKFrom(emb).select("p_id", "c_id")
-      .as[(Long, Long)].collect()
-    val exactLit = exactRows.toSeq.toDF("p_id", "c_id")
-    val nExact   = math.max(exactRows.length.toLong, 1L)
-    val nVec     = emb.count()
-    val nProbes  = exactRows.map(_._1).distinct.length.toLong
-    val denom    = math.max(nProbes * (nVec - 1), 1L)
-
-    val cents   = kmeansCentroidsFrom(emb)
-    val indexed = ivfAssign(emb, cents)
-
-    def curve(family: String, setting: Int, scored: DataFrame): DataFrame = {
-      val nCand = scored.agg(count(lit(1)).as("n_cand"))
-      val nHit = rankTopK(scored).select("p_id", "c_id")
-        .join(broadcast(exactLit), Seq("p_id", "c_id"))
-        .agg(count(lit(1)).as("n_hit"))
-      nCand.crossJoin(broadcast(nHit))
-        .select(lit(family).as("family"), lit(setting).as("setting"),
-          col("n_cand"),
-          expr(s"n_cand * 1000000 div $denom").as("cand_frac_micro"),
-          expr(s"n_hit * 1000000 div $nExact").as("recall10_micro"))
-    }
-
-    val curves =
-      IvfSweep.map(p => curve("ivf", p, ivfScored(indexed, cents, p))) ++
-      LshSweep.map(p =>
-        curve("lsh", p, lshScoredFrom(emb, NumTables, NumPlanes, p))) ++
-      ScreenSweep.map(sl => curve("screen", sl, prunedSurvivorsFrom(emb, sl)))
-    curves.reduce(_.unionByName(_)).orderBy("family", "setting")
-  }
-
-  // ---- incremental IVF maintenance -----------------------------------
-  //
-  // The operational gap between "train once" and a living 100 TB index:
-  // ingest keeps arriving after the quantizer is trained. Appending is a
-  // NARROW assignment map over broadcast-literal centroids — no retrain,
-  // no touch of already-indexed rows, no shuffle — so it is cheap at any
-  // batch size; what degrades over time is how well the frozen centroids
-  // fit the grown corpus. ivfHealth quantifies that drift (staleness =
-  // relative quantization-quality drop vs the trained baseline; imbalance
-  // = hottest cell vs the ideal share) and needsRebalance trips the rare,
-  // explicit retrain (kmeansCentroidsFrom on the grown corpus) instead of
-  // paying it per batch. QueriesSpec gates the consequence: on a 2×-grown
-  // clustered corpus the appended index's recall stays within a stated
-  // margin of a full retrain.
-
-  /** Drift past which the frozen quantizer should be retrained. */
-  final val StalenessThreshold = 0.05
-  /** Hottest-cell share (× the ideal `n/k`) past which cells should split. */
-  final val ImbalanceThreshold = 4.0
-
   /** Index a (vec_id, embedding) frame under EXISTING centroids: one
-    * narrow map, the append path needs nothing else.
+    * narrow map over broadcast-literal centroids, no retrain.
     */
   private[graft] def ivfAssign(emb: DataFrame,
       cents: Array[Array[Double]]): DataFrame =
     emb.select(col("vec_id"), col("embedding"),
       cellOf(col("embedding"), cents).as("cell"))
-
-  /** Append new vectors to an existing index without retraining. */
-  private[graft] def ivfAppend(indexed: DataFrame, newEmb: DataFrame,
-      cents: Array[Array[Double]]): DataFrame =
-    indexed.unionByName(ivfAssign(newEmb, cents))
-
-  /** Retire vectors from a persisted index — works on BOTH layouts, the
-    * IVF (vec_id, embedding, cell) frame and the IVFADC (vec_id, nrm,
-    * codes, cell) frame: a keyed anti-join on vec_id, NO re-quantization.
-    * The Dedup.retireFrom no-re-hash argument on the vector plane: a
-    * surviving row's cell and codes are per-row functions of (vector,
-    * frozen quantizers) alone — independent of which other rows exist —
-    * so retire ≡ rebuild-under-frozen-quantizers EXACTLY (QueriesSpec
-    * row equality, not just recall parity) and serving output over the
-    * survivors is unchanged. One narrow anti-join against the
-    * tombstone set; embeddings are never re-read.
-    */
-  private[graft] def retireVecs(index: DataFrame,
-      tombstones: DataFrame): DataFrame =
-    index.join(tombstones.select("vec_id"), Seq("vec_id"), "left_anti")
-
-  /** The hottest cell id (max member count; ties → lowest id) — the
-    * split target when [[IvfHealth]] flags imbalance. One bounded
-    * O(cells)-row aggregate over the index.
-    */
-  private[graft] def hottestCell(indexed: DataFrame): Int = {
-    val top = indexed.groupBy("cell").count()
-      .orderBy(col("count").desc, col("cell")).limit(1).collect()
-    require(top.nonEmpty,
-      "hottestCell: empty index — no cells exist, nothing to split")
-    top(0).getInt(0)
-  }
-
-  /** Two child centroids for a cell split: the [[kmeansCentroidsFrom]]
-    * machinery restricted to the hot cell's members — distributed narrow
-    * scans over 2×Dim broadcast literals, never a member collect. Returns
-    * fewer than two children when the cell's training sample is
-    * degenerate (< 2 sampled vectors) — the caller then skips the split.
-    */
-  private def splitChildren(members: DataFrame): Array[Array[Double]] = {
-    val sampled = members.filter(col("vec_id") % TrainSampleMod === 0)
-    if (sampled.limit(2).count() < 2) Array.empty
-    else kmeansCentroidsFrom(members, 2, IvfIters)
-  }
-
-  /** The child-assignment column for a split: each member picks the
-    * nearer of the TWO children only — child A keeps the split cell's
-    * id, child B takes the next free id (`cents.length`) — so a split
-    * can never leak a row into any other cell.
-    */
-  private def childCell(kids: Array[Array[Double]], cell: Int,
-      newId: Int): Column = {
-    val s = centScores(col("embedding"), kids)
-    when(element_at(s, 1) >= element_at(s, 2), lit(cell))
-      .otherwise(lit(newId)).cast("int")
-  }
-
-  /** SPLIT one cell of a persisted IVF index — the cheap response when
-    * [[ivfHealth]] flags IMBALANCE (a hot cell) rather than staleness,
-    * instead of the global retrain: a local 2-means over the hot cell's
-    * members places two children, the hot cell's rows re-assign between
-    * those two children ONLY, and every other row passes through an
-    * un-recomputed filter — so routing for untouched cells is unchanged
-    * BY CONSTRUCTION (QueriesSpec gates row equality, and post-split
-    * recall within 0.1 of a full retrain), and the split costs
-    * Θ(|hot cell|) where a retrain re-reads the corpus (SCALING.md
-    * records the gap). Serving continues on the returned (index,
-    * centroids): [[probeCells]] sizes itself off the array, so probes
-    * simply see one more candidate cell. Degenerate cells (< 2 sampled
-    * members, or all members identical → one empty child) return
-    * unchanged/harmless results; ties go to child A.
-    */
-  private[graft] def ivfSplit(indexed: DataFrame,
-      cents: Array[Array[Double]],
-      cell: Int): (DataFrame, Array[Array[Double]]) = {
-    val members = indexed.filter(col("cell") === cell)
-    val kids = splitChildren(members.select("vec_id", "embedding"))
-    if (kids.length < 2) (indexed, cents)
-    else {
-      val reassigned = members.select(col("vec_id"), col("embedding"),
-        childCell(kids, cell, cents.length).as("cell"))
-      (indexed.filter(col("cell") =!= cell).unionByName(reassigned),
-        cents.updated(cell, kids(0)) :+ kids(1))
-    }
-  }
-
-  /** The IVFADC face of [[ivfSplit]]: the composite index stores codes,
-    * not vectors, so the hot cell's rows join back to the embeddings
-    * (ONE keyed join, hot-cell-sized — never a corpus re-read) for the
-    * child assignment; norms and PQ codes are per-row functions of
-    * (vector, frozen codebooks) alone and carry over untouched — the
-    * retireVecs no-re-encode argument on the split plane.
-    */
-  private[graft] def ivfPqSplit(index: DataFrame, emb: DataFrame,
-      cents: Array[Array[Double]],
-      cell: Int): (DataFrame, Array[Array[Double]]) = {
-    val hot = index.filter(col("cell") === cell)
-    val members = emb.join(hot.select("vec_id"), Seq("vec_id"))
-    // coverage guard: an indexed vec_id missing from `emb` would silently
-    // vanish from the returned index (the inner join drops it) — a split
-    // must never shrink the index, so fail loud on a coverage gap instead.
-    // Both counts are hot-cell-sized (bounded, same order as the 2-means
-    // the split runs anyway).
-    val (nHot, nMembers) = (hot.count(), members.count())
-    require(nMembers == nHot,
-      s"ivfPqSplit: embeddings cover only $nMembers of $nHot rows in cell " +
-        s"$cell — refusing a split that would drop indexed vectors")
-    val kids = splitChildren(members)
-    if (kids.length < 2) (index, cents)
-    else {
-      val newCell = members.select(col("vec_id"),
-        childCell(kids, cell, cents.length).as("cell"))
-      val rehomed = hot.drop("cell").join(newCell, Seq("vec_id"))
-        .select(index.columns.map(col).toIndexedSeq: _*)
-      (index.filter(col("cell") =!= cell).unionByName(rehomed),
-        cents.updated(cell, kids(0)) :+ kids(1))
-    }
-  }
-
-  /** Mean best-centroid cosine — the quantization quality of a corpus
-    * under the given centroids (1.0 = every vector sits on a centroid
-    * direction). One narrow aggregation; O(1) result rows.
-    */
-  private[graft] def quantScore(emb: DataFrame,
-      cents: Array[Array[Double]]): Double = {
-    val r = withNorm(emb).select(avg(
-      array_max(centScores(col("embedding"), cents)) / col("nrm")).as("q"))
-      .head
-    require(!r.isNullAt(0),
-      "quantScore: empty corpus — no quantization fit to measure")
-    r.getDouble(0)
-  }
-
-  final case class IvfHealth(staleness: Double, imbalance: Double) {
-    def needsRebalance: Boolean =
-      staleness > StalenessThreshold || imbalance > ImbalanceThreshold
-  }
-
-  /** Index health vs the quality measured at training time
-    * (`trainedScore` = [[quantScore]] of the corpus the quantizer was
-    * trained on). Two O(k)-result aggregations — the check is cheap enough
-    * to run per append batch.
-    */
-  private[graft] def ivfHealth(indexed: DataFrame,
-      cents: Array[Array[Double]], trainedScore: Double): IvfHealth = {
-    // NaN/zero trainedScore would make staleness NaN, and a NaN compare
-    // is silently false — needsRebalance would never fire. Fail loud.
-    require(trainedScore > 0,
-      s"ivfHealth: trainedScore must be a positive quantScore, got $trainedScore")
-    val staleness = 1.0 - quantScore(indexed, cents) / trainedScore
-    val counts = indexed.groupBy("cell").count().select("count")
-      .collect().map(_.getLong(0))
-    val ideal = counts.sum.toDouble / cents.length
-    IvfHealth(staleness, if (ideal == 0) 0.0 else counts.max / ideal)
-  }
 
   // ---- Product quantization (Jégou, Douze & Schmid, TPAMI 2011) --------
 
@@ -1470,80 +1209,6 @@ object Similarity {
     val cbs   = pqCodebooks(emb)
     ivfPqExactScoredIndexed(ivfPqIndex(emb, cents, cbs), emb, cents, cbs)
   }
-
-  /** Append a new-vector batch into an EXISTING IVFADC index without
-    * retraining either quantizer: each new vector gets its nearest
-    * existing coarse cell and its PQ codes against the frozen codebooks —
-    * one narrow map over the batch (both quantizers enter the plan as
-    * literals), no shuffle, already-indexed rows untouched. The cost
-    * asymmetry vs [[ivfPqIndex]] on the grown corpus is that a retrain
-    * re-reads and re-encodes EVERY vector after re-running Lloyd for both
-    * quantizers; what degrades under append-only growth is quantizer fit,
-    * which [[ivfPqHealth]] watches (IVF staleness/imbalance + codebook
-    * reconstruction drift) so the rare retrain is explicit, not per batch.
-    * QueriesSpec gates the consequence: on a 2×-grown clustered corpus the
-    * appended index's recall@10 stays within 0.1 of a full retrain.
-    */
-  private[graft] def ivfPqAppend(index: DataFrame, newEmb: DataFrame,
-      cents: Array[Array[Double]], cbs: Array[Array[Array[Double]]]): DataFrame =
-    index.unionByName(ivfPqIndex(newEmb, cents, cbs))
-
-  /** Mean reconstruction cosine of a corpus under frozen PQ codebooks —
-    * each vector's [[adcApprox]] against its OWN codes, i.e.
-    * cos(v, reconstruction(v)); 1.0 = lossless. The PQ analog of the IVF
-    * [[quantScore]]: one narrow O(1)-result aggregation, cheap enough to
-    * run per append batch.
-    */
-  private[graft] def pqQuantScore(emb: DataFrame,
-      cbs: Array[Array[Array[Double]]]): Double = {
-    val r = withNorm(emb).select(col("embedding").as("pv"), col("nrm").as("pn"),
-      pqCodesCol(cbs).as("codes"))
-      .select(avg(adcApprox(cbs)).as("q")).head
-    require(!r.isNullAt(0),
-      "pqQuantScore: empty corpus — no reconstruction fit to measure")
-    r.getDouble(0)
-  }
-
-  final case class IvfPqHealth(ivf: IvfHealth, codebookDrift: Double) {
-    /** Retrain when EITHER quantizer no longer fits: the coarse cells
-      * (staleness/imbalance — the [[IvfHealth]] rule) or the codebooks
-      * (relative reconstruction-quality drop past [[StalenessThreshold]]).
-      */
-    def needsRebuild: Boolean =
-      ivf.needsRebalance || codebookDrift > StalenessThreshold
-  }
-
-  /** IVFADC index health vs the quality measured at training time.
-    * `emb` is the grown corpus (the quality metrics need raw vectors);
-    * `index` supplies the per-cell occupancy for the imbalance axis.
-    * Three bounded-result aggregations.
-    */
-  private[graft] def ivfPqHealth(emb: DataFrame, index: DataFrame,
-      cents: Array[Array[Double]], cbs: Array[Array[Array[Double]]],
-      trainedIvfScore: Double, trainedPqScore: Double): IvfPqHealth = {
-    // same guard as ivfHealth: a zero/NaN trained score makes
-    // staleness/drift NaN, and NaN compares silently un-trip needsRebuild
-    require(trainedIvfScore > 0 && trainedPqScore > 0,
-      s"ivfPqHealth: trained scores must be positive quantScores, got " +
-        s"ivf=$trainedIvfScore pq=$trainedPqScore")
-    val staleness = 1.0 - quantScore(emb, cents) / trainedIvfScore
-    val counts = index.groupBy("cell").count().select("count")
-      .collect().map(_.getLong(0))
-    val ideal = counts.sum.toDouble / cents.length
-    val imbalance = if (ideal == 0) 0.0 else counts.max / ideal
-    val drift = 1.0 - pqQuantScore(emb, cbs) / trainedPqScore
-    IvfPqHealth(IvfHealth(staleness, imbalance), drift)
-  }
-
-  /** The IVFPQ query over an ALREADY-BUILT index — the serving path once
-    * the (vec_id, nrm, codes, cell) frame persists, shared by the
-    * train-once query and the incrementally-appended index. `emb` supplies
-    * probe vectors and the exact-rerank candidates (the index stores codes
-    * only — by design it never carries the embeddings).
-    */
-  private[graft] def ivfPqTopKIndexed(index: DataFrame, emb: DataFrame,
-      cents: Array[Array[Double]], cbs: Array[Array[Array[Double]]]): DataFrame =
-    rankTopK(ivfPqExactScoredIndexed(index, emb, cents, cbs))
 
   private[graft] def ivfPqExactScoredIndexed(index: DataFrame, emb: DataFrame,
       cents: Array[Array[Double]], cbs: Array[Array[Array[Double]]]): DataFrame = {

@@ -16,13 +16,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object Sinks {
 
-  /** Batch: write a frame partitioned by the calendar day of `tsCol`. */
-  def writePartitionedByDay(df: DataFrame, tsCol: String, outDir: String): Unit =
-    df.withColumn("date", to_date(col(tsCol)))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("date")
-      .parquet(outDir)
-
   /** Day-scoped idempotent merge (replaceWhere-style): overwrite exactly
     * the date partitions present in `updates` — dynamic partition
     * overwrite — leaving every other day untouched. This is the
@@ -45,63 +38,6 @@ object Sinks {
       .partitionBy("date")
       .parquet(outDir)
     finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", before)
-  }
-
-  /** Compact a date-partitioned parquet dataset in place: rewrite each day
-    * into ⌈day bytes / targetBytes⌉ files. Streaming appends and frequent
-    * small merges accrete thousands of tiny files per partition — at 100 TB
-    * the resulting open/seek overhead and NameNode/listing pressure
-    * dominate read cost, so periodic compaction is a first-class
-    * maintenance operator (what OPTIMIZE does in table formats). The
-    * rewrite shuffles each day's rows to its computed width via a
-    * repartition keyed by (date, random-ish row bucket) and rewrites only
-    * days whose file count exceeds their target — untouched days keep
-    * their files byte-identical.
-    *
-    * Returns (daysCompacted, filesBefore, filesAfter).
-    */
-  def compactDays(spark: org.apache.spark.sql.SparkSession, outDir: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    // Hadoop FS API, not java.io: the operator must work wherever the
-    // write path does (hdfs://, s3a://, file://)
-    val root = new Path(outDir)
-    val fs   = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dayDirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-    def parquetsOf(d: Path) =
-      fs.listStatus(d).filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    var before = 0
-    var after  = 0
-    var days   = 0
-    dayDirs.foreach { st =>
-      val d     = st.getPath
-      val files = parquetsOf(d)
-      before += files.length
-      val bytes  = files.map(_.getLen).sum
-      val target = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      if (files.length > target) {
-        days += 1
-        // rewrite THIS day only: read the one partition dir, coalesce to
-        // the target width, then swap — new files move IN first (their
-        // UUID names can't collide with the old ones), originals are
-        // deleted after. A crash mid-swap leaves the day readable
-        // (duplicated at worst, and the duplicate window is the move
-        // loop, not the full rewrite); it never leaves the day empty.
-        val day = spark.read.parquet(d.toString)
-        val tmp = new Path(root, s".compact_tmp_${d.getName}")
-        day.repartition(target).write.mode(SaveMode.Overwrite)
-          .parquet(tmp.toString)
-        val produced = parquetsOf(tmp)
-        produced.foreach(f => fs.rename(f.getPath, new Path(d, f.getPath.getName)))
-        files.foreach(f => fs.delete(f.getPath, false))
-        fs.delete(tmp, true)
-        // report what the rewrite actually produced (an empty input
-        // partition writes fewer than `target` files)
-        after += produced.length
-      } else after += files.length
-    }
-    (days, before, after)
   }
 
   /** The clustering key [[zorderWrite]] sorts by: each dimension is first
@@ -199,40 +135,6 @@ object Sinks {
 
     closed.unionByName(untouched).unionByName(closedOut).unionByName(opened)
   }
-
-  /** Batch: write two tables bucketed by their join key. Readers joining
-    * on that key get co-located partitions — the join plans with ZERO
-    * exchanges (the 100 TB answer to repeated fact-fact joins: pay the
-    * shuffle once at write time). Bucketed tables must go through the
-    * catalog (`saveAsTable`).
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      numBuckets: Int = 8): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Streaming: per-micro-batch append into date partitions, stamped with
-    * the micro-batch id. Parquet append is at-least-once on replay — a
-    * checkpoint-restart rerun of the last batch can double-append, and
-    * readers dedupe on (batch_id, key) or take max(batch_id). For the
-    * exactly-once unit of recovery (the reference's per-day commit,
-    * sql_to_line.py:126), use [[streamToPartitionedParquetExactlyOnce]].
-    */
-  def streamToPartitionedParquet(stream: DataFrame, tsCol: String, outDir: String,
-      checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("date", to_date(col(tsCol)))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(SaveMode.Append)
-          .partitionBy("date")
-          .parquet(outDir)
-      }
-      .start()
 
   /** Streaming with an exactly-once commit protocol over plain parquet —
     * the manifest/commit-log story a transactional table format (Delta/

@@ -745,25 +745,6 @@ object Tokenize {
     out.result()
   }
 
-  /** Sequential greedy longest-match-first WordPiece segmentation — the
-    * application reference the Column fold and the spec pin against.
-    */
-  private[graft] def wpGreedySeq(w: String, pieces: Set[String]): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var p = 0
-    while (p < w.length) {
-      var ln = w.length - p
-      var hit: String = null
-      while (ln >= 1 && hit == null) {
-        val cand = (if (p > 0) "##" else "") + w.substring(p, p + ln)
-        if (pieces(cand)) hit = cand else ln -= 1
-      }
-      if (hit == null) return Seq(WpUnk)
-      out += hit; p += ln
-    }
-    out.toSeq
-  }
-
   /** Greedy longest-match-first segmentation of a word column — the
     * distributed application face: ONE Catalyst fold over positions
     * (greedy needs exactly length(word) steps since every live step

@@ -15,8 +15,9 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *
   * Spark has no built-in as-of join, so this is the full custom-operator
   * stack (prompt preference (c)): a resolved [[AsOfJoinPlan]] logical node,
-  * an [[AsOfStrategy]] planner strategy (installed via
-  * `spark.experimental.extraStrategies` — no session rebuild needed), and a
+  * an [[AsOfStrategy]] planner strategy (installed by [[AsOfJoin.apply]]
+  * into `spark.experimental.extraStrategies` on first use — its only
+  * install path; no session rebuild or config key needed), and a
   * sort-merge [[AsOfJoinExec]]. The exec declares ClusteredDistribution on
   * the keys and (key, ts) ordering, so EnsureRequirements inserts exactly
   * one hash exchange + sort per side — the same shape as a sort-merge join,

@@ -206,32 +206,6 @@ object Streams {
       .select(unix_micros(col("window.start")).as("hour_us"), col("n"),
         col("value_cents"))
 
-  /** Sliding 1-hour windows every 15 minutes, per event type. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    maybeWatermark(events)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_micros(col("window.start")).as("win_us"), col("event_type"), col("n"))
-
-  /** Native session windows (30-minute gap) per user. */
-  def sessionWindows(events: DataFrame): DataFrame =
-    maybeWatermark(events)
-      .groupBy(session_window(col("ts"), SessionGap), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("user_id"), unix_micros(col("session_window.start")).as("start_us"),
-        unix_micros(col("session_window.end")).as("end_us"), col("n"))
-
-  /** Stream-static join: enrich the event stream with a static dimension
-    * (per-user order counts). The static side is re-planned per micro-batch
-    * (Spark's stream-static join contract); at scale it is a broadcast or
-    * key-partitioned join exactly like its batch twin.
-    */
-  def enrichWithStatic(events: DataFrame, userDim: DataFrame): DataFrame =
-    events.join(userDim, events("user_id") === userDim("dim_user_id"), "left_outer")
-      .select(events("event_id"), events("ts"), events("user_id"),
-        events("event_type"), events("value"),
-        coalesce(userDim("n_orders"), lit(0L)).as("n_orders"))
-
   /** Stream-stream interval join: pair each left event with same-user
     * right-stream events from its preceding 5 minutes. Both sides carry
     * watermarks and the join condition bounds event time on both sides —
@@ -278,10 +252,9 @@ object Streams {
     */
   def nearDupCuration(index: DataFrame, docs: DataFrame)
       (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        write(graft.ops.Dedup.dropNearDups(index, batch.toDF()))
-      }.start()
+    startForeachBatch(docs) { (batch, _) =>
+      write(graft.ops.Dedup.dropNearDups(index, batch))
+    }
 
   /** The LIVE-INDEX retirement fold behind [[retireIngest]] — unlike the
     * frozen-index curation family above, here the index EVOLVES: each
@@ -357,10 +330,7 @@ object Streams {
       stateDir: Option[String] = None)
       (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val fold = new RetireFold(index, write, stateDir)
-    tombstones.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        fold.step(batch.toDF(), id)
-      }.start()
+    startForeachBatch(tombstones)(fold.step)
   }
 
   /** Ingest-time SEMANTIC dedup (streaming SemDeDup) against a frozen
@@ -379,10 +349,9 @@ object Streams {
   def semDedupIngest(index: DataFrame, cents: Array[Array[Double]],
       vecs: DataFrame)
       (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        write(graft.ops.Similarity.semDedupIngestFilter(index, cents, batch.toDF()))
-      }.start()
+    startForeachBatch(vecs) { (batch, _) =>
+      write(graft.ops.Similarity.semDedupIngestFilter(index, cents, batch))
+    }
 
   /** Ingest-time chunk-level NOVELTY scoring against a frozen chunk-hash
     * index — the content-defined-chunking twin of [[nearDupCuration]]:
@@ -397,10 +366,9 @@ object Streams {
     */
   def chunkNoveltyIngest(index: DataFrame, docs: DataFrame)
       (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        write(graft.ops.Dedup.chunkNovelty(index, batch.toDF()))
-      }.start()
+    startForeachBatch(docs) { (batch, _) =>
+      write(graft.ops.Dedup.chunkNovelty(index, batch))
+    }
 
   /** Ingest-time boilerplate stripping against a FROZEN template index
     * (the q_boilerplate_strip streaming face, nearDupCuration's frozen-
@@ -415,10 +383,9 @@ object Streams {
     */
   def boilerStripIngest(index: DataFrame, docs: DataFrame)
       (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        write(graft.ops.Curation.stripAgainst(index, batch.toDF()))
-      }.start()
+    startForeachBatch(docs) { (batch, _) =>
+      write(graft.ops.Curation.stripAgainst(index, batch))
+    }
 
   /** Event types the constraint monitor accepts — the fixture taxonomy;
     * production swaps in its own catalog literal.
@@ -713,10 +680,7 @@ object Streams {
       stateDir: Option[String] = None)
       (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val fold = new DriftFold(eraCut, write, stateDir)
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        fold.step(batch.toDF(), id)
-      }.start()
+    startForeachBatch(events)(fold.step)
   }
 
   /** Streaming twin of the MERGEABLE PROFILER (q_profile_incremental):
@@ -733,10 +697,7 @@ object Streams {
   def profileIngest(events: DataFrame, stateDir: Option[String] = None)
       (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val fold = new ProfileFold(write, stateDir)
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        fold.step(batch.toDF(), id)
-      }.start()
+    startForeachBatch(events)(fold.step)
   }
 
   /** Ingest-time PERCEPTUAL dedup against a frozen dHash code index — the
@@ -752,21 +713,13 @@ object Streams {
     */
   def percIngest(indexCodes: DataFrame, nIndex: Long, media: DataFrame)
       (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import batch.sparkSession.implicits._
-        write(graft.ops.Multimodal.percIngestScore(indexCodes,
-          batch.select("media_id", "kind", "payload")
-            .as[graft.ops.Multimodal.RealMedia],
-          nIndex))
-      }.start()
-
-  /** Exactly-once-per-id dedup bounded by the watermark. */
-  def dedupEvents(events: DataFrame): DataFrame =
-    if (events.isStreaming)
-      events.withWatermark("ts", WatermarkDelay)
-        .dropDuplicatesWithinWatermark("event_id")
-    else events.dropDuplicates("event_id")
+    startForeachBatch(media) { (batch, _) =>
+      import batch.sparkSession.implicits._
+      write(graft.ops.Multimodal.percIngestScore(indexCodes,
+        batch.select("media_id", "kind", "payload")
+          .as[graft.ops.Multimodal.RealMedia],
+        nIndex))
+    }
 
   /** Streaming twin of exact document dedup (q_dedup_docs_exact) for an
     * ingest pipeline: drop re-uploads whose CONTENT fingerprint was
@@ -1305,48 +1258,19 @@ object Streams {
       write, stateDir, compact)
   }
 
-  /** [[hotTermsFold]] wired to a document stream. */
-  def hotTermsIngest(docs: DataFrame, k: Int,
-      stateDir: Option[String] = None, maxWindows: Option[Int] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(docs, hotTermsFold(k, write, stateDir, maxWindows))
-
-  /** The cents histogram maintained as a live feed (exactly-once even
-    * under replay — the [[HistFold]] protocol; the bare [[foldCentsHist]]
-    * stays the right tool under exactly-once delivery).
+  /** Starts `src` as an append-mode foreachBatch query that hands each
+    * micro-batch and its batch id to `step` — the one starter every
+    * foreachBatch face in this object runs through.
     */
-  def histIngest(events: DataFrame, lo: Long, width: Long,
-      stateDir: Option[String] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(events, histFold(lo, width, write, stateDir))
-
-  /** q_ewma_daily's cents grid as a live durable feed. */
-  def dailyCentsIngest(events: DataFrame, stateDir: Option[String] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(events, dailyCentsFold(write, stateDir))
-
-  /** q_hll_registers as a live durable feed. */
-  def hllIngest(events: DataFrame, stateDir: Option[String] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(events, hllFold(write, stateDir))
-
-  /** The windowed CMS grid as a live durable feed; `maxWindows` caps
-    * state on unbounded streams ([[cmsFold]]'s retention rule).
-    */
-  def cmsIngest(docs: DataFrame, stateDir: Option[String] = None,
-      maxWindows: Option[Int] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(docs, cmsFold(write, stateDir, maxWindows))
-
-  private def foldIngest(src: DataFrame,
-      fold: GridFold): org.apache.spark.sql.streaming.StreamingQuery =
+  private def startForeachBatch(src: DataFrame)(step: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     src.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        fold.step(batch.toDF(), id)
+        step(batch.toDF(), id)
       }.start()
 
   /** q_embed_drift as a LIVE feed: the model (μ, v₁) and grid (lo,
-    * width) are FROZEN literals from the baseline era (the histIngest
+    * width) are FROZEN literals from the baseline era (the [[histFold]]
     * deployment story), `before` is that era's bucket grid; each
     * trigger's vectors score through the narrow frozen-axis projection,
     * fold into the after-era grid (replay-safe [[GridFold]], durable
@@ -1365,21 +1289,14 @@ object Streams {
       grid => write(graft.ops.Clustering.embedDriftReport(before, grid)),
       stateDir)
 
-  /** [[embedDriftFold]] wired to a vector stream. */
-  def embedDriftIngest(vecs: DataFrame, mu: Array[Long], v1: Array[Long],
-      lo: Long, width: Long, before: DataFrame,
-      stateDir: Option[String] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(vecs, embedDriftFold(mu, v1, lo, width, before, write, stateDir))
-
   /** The drift-ALERT stream — [[embedDriftFold]] with each trigger's
     * report gated through the q_drift_alerts noise floor
     * ([[graft.ops.Clustering]].embedDriftAlerts: drifted AND ≥
     * MinAlertPpm of either era's mass) before it reaches the sink, so
     * only pages flow out; feed the emitted report to
     * [[graft.ops.Clustering]].embedDriftHealth and its `needsRebuild`
-    * closes the loop to the persisted-index retrain (the ivfPqHealth
-    * shape on the embedding plane). Batch ≡ stream by construction —
+    * closes the loop to the persisted-index retrain on the embedding
+    * plane. Batch ≡ stream by construction —
     * same kernels over the same folded grid (StreamingSpec drives a
     * replayed trigger and the same-distribution specificity case).
     */
@@ -1388,14 +1305,6 @@ object Streams {
       write: DataFrame => Unit, stateDir: Option[String] = None): GridFold =
     embedDriftFold(mu, v1, lo, width, before,
       rep => write(graft.ops.Clustering.embedDriftAlerts(rep)), stateDir)
-
-  /** [[embedDriftAlertFold]] wired to a vector stream. */
-  def embedDriftAlertIngest(vecs: DataFrame, mu: Array[Long],
-      v1: Array[Long], lo: Long, width: Long, before: DataFrame,
-      stateDir: Option[String] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(vecs,
-      embedDriftAlertFold(mu, v1, lo, width, before, write, stateDir))
 
   /** [[boilerStripIngest]] with the frozen index's DECAY measured as it
     * serves: each trigger strips against the frozen template set (the
@@ -1406,9 +1315,9 @@ object Streams {
     * visible to this fold. [[health]] anti-joins the accumulated dfs
     * against the frozen set ([[graft.ops.Curation]].boilerHealth) and
     * `needsRebuild` trips the explicit re-index (boilerChunksOf on the
-    * full corpus) — the ivfHealth/needsRebalance shape on the template
-    * plane; StreamingSpec drives a cross-batch template through the gap,
-    * fires the trigger, and proves post-rebuild stripping equals the
+    * full corpus) — the health-gated rebuild on the template plane;
+    * StreamingSpec drives a cross-batch template through the gap, fires
+    * the trigger, and proves post-rebuild stripping equals the
     * full-corpus q_boilerplate_strip.
     *
     * State is (base, last) chunk-df frames under the HistFold batch-id-
@@ -1535,10 +1444,7 @@ object Streams {
       stateDir: Option[String] = None, sketchK: Option[Int] = None)
       (write: DataFrame => Unit): (org.apache.spark.sql.streaming.StreamingQuery, BoilerFold) = {
     val fold = new BoilerFold(index, write, stateDir, sketchK)
-    val q = docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        fold.step(batch.toDF(), id)
-      }.start()
+    val q = startForeachBatch(docs)(fold.step)
     (q, fold)
   }
 

@@ -13,7 +13,7 @@ class AnnCalibrationSpec extends SparkSpec {
 
   test("single-pass calibration sweep ≡ per-setting reference, row for row") {
     val fast = ops.Similarity.annCalibration(spark, sfDir).collect()
-    val ref  = ops.Similarity.annCalibrationReference(spark, sfDir).collect()
+    val ref  = SimilarityReference.annCalibrationReference(spark, sfDir).collect()
     assert(fast.length === ref.length)
     fast.zip(ref).foreach { case (a, b) => assert(a === b) }
   }

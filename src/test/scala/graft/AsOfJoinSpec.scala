@@ -24,27 +24,25 @@ class AsOfJoinSpec extends SparkSpec {
     assert(got.except(want).count() === 0 && want.except(got).count() === 0)
   }
 
-  test("GraftExtensions registers the as-of strategy via spark.sql.extensions") {
+  test("AsOfJoin installs its planner strategy once on a fresh session") {
     import org.apache.spark.sql.SparkSession
     val old = spark
-    // a session built WITH the extensions and WITHOUT the experimental
-    // fallback must still plan AsOfJoinPlan → AsOfJoinExec
+    // a fresh session (no extensions, no strategies yet) must get exactly
+    // one AsOfStrategy however many as-of joins it builds
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder()
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      assert(s2 ne old, "expected a fresh session for the extensions test")
+      val s2 = SparkSession.builder().getOrCreate()
+      assert(s2 ne old, "expected a fresh session for the install test")
       assert(s2.experimental.extraStrategies.isEmpty,
-        "fallback path must stay uninstalled for this test to prove anything")
-      import org.apache.spark.sql.GraftSqlBridge
+        "a fresh session must start without the as-of strategy")
       val l = s2.range(3).selectExpr("id AS k", "id * 10 AS t")
       val r = s2.range(3).selectExpr("id AS k2", "id * 10 - 5 AS t2", "id AS v")
-      val df = GraftSqlBridge.ofRows(s2, graft.plans.AsOfJoinPlan(
-        GraftSqlBridge.logicalPlan(l), GraftSqlBridge.logicalPlan(r),
-        GraftSqlBridge.expression(l("k")), GraftSqlBridge.expression(r("k2")),
-        GraftSqlBridge.expression(l("t")), GraftSqlBridge.expression(r("t2"))))
+      AsOfJoin(l, r, l("k"), r("k2"), l("t"), r("t2"))
+      val df = AsOfJoin(l, r, l("k"), r("k2"), l("t"), r("t2"))
+      assert(s2.experimental.extraStrategies.count(_ == graft.plans.AsOfStrategy) === 1,
+        s2.experimental.extraStrategies.toString)
+      assert(s2.experimental.extraStrategies.size === 1)
       // the exec node renders with "Exec" stripped
       assert(df.queryExecution.executedPlan.toString.contains("AsOfJoin "),
         df.queryExecution.executedPlan.toString.take(800))

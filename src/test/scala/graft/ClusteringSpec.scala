@@ -296,7 +296,7 @@ class ClusteringSpec extends SparkSpec {
     // the composed lifecycle path: q_drift_alerts' paged buckets mark
     // regions whose distribution shifted; the before-era rows sitting in
     // those buckets retire from the persisted IVF index (the embedding-
-    // plane TTL), and retireVecs' frozen-model theorem must carry
+    // plane TTL), and the frozen-model retire theorem must carry
     // through the composition — retired index ≡ rebuild of the
     // survivors under the same frozen centroids, row-for-row
     val emb = Tables(spark, sfDir, "embeddings")
@@ -316,7 +316,10 @@ class ClusteringSpec extends SparkSpec {
     assert(nTomb < emb.count(), "TTL retired the whole era — no selectivity")
     val cents = ops.Similarity.kmeansCentroidsFrom(emb)
     val index = ops.Similarity.ivfAssign(emb, cents)
-    val retired = ops.Similarity.retireVecs(index, tomb)
+    // retire = a keyed anti-join on vec_id, no re-quantization
+    def retire(ix: org.apache.spark.sql.DataFrame) =
+      ix.join(tomb.select("vec_id"), Seq("vec_id"), "left_anti")
+    val retired = retire(index)
     val survivors = emb.join(tomb, Seq("vec_id"), "left_anti")
     val rebuilt = ops.Similarity.ivfAssign(survivors, cents)
     assert(retired.except(rebuilt).count() === 0 &&
@@ -326,8 +329,7 @@ class ClusteringSpec extends SparkSpec {
     // functions of (vector, frozen codebooks), so the alert-routed
     // retire must equal the frozen-model IVFADC rebuild too
     val cbs = ops.Similarity.pqCodebooks(emb)
-    val retiredPq = ops.Similarity.retireVecs(
-      ops.Similarity.ivfPqIndex(emb, cents, cbs), tomb)
+    val retiredPq = retire(ops.Similarity.ivfPqIndex(emb, cents, cbs))
     val rebuiltPq = ops.Similarity.ivfPqIndex(survivors, cents, cbs)
     assert(retiredPq.except(rebuiltPq).count() === 0 &&
       rebuiltPq.except(retiredPq).count() === 0,
@@ -341,9 +343,9 @@ class ClusteringSpec extends SparkSpec {
     // (vec_id ≡ doc_id — the embeddings table is the documents' vector
     // column), which route into the MinHash near-dup cluster index
     // (Dedup.retireFrom — member-list surgery, no re-hash) and the CDC
-    // chunk index (Dedup.chunkRetire — per-occurrence anti-join). Each
+    // chunk index (a per-occurrence anti-join on doc_id). Each
     // face's retire ≡ rebuild-on-survivors theorem must carry through
-    // the composed path, exactly as it did for retireVecs.
+    // the composed path, exactly as it did on the vector plane.
     val docs = Tables.documents(spark, sfDir)
     val (before, after, lo, width) =
       ops.Clustering.embedDriftBatchParts(spark, sfDir)
@@ -374,7 +376,8 @@ class ClusteringSpec extends SparkSpec {
       "alert-routed cluster retire diverged from the rebuild on survivors")
     // CDC chunk face: row-exact
     val chunkIdx = ops.Dedup.chunkFrame(docs)
-    val retiredChunks = ops.Dedup.chunkRetire(chunkIdx, tomb)
+    val retiredChunks = chunkIdx.join(tomb.select("doc_id"), Seq("doc_id"),
+      "left_anti")
     val rebuiltChunks = ops.Dedup.chunkFrame(survivors)
     assert(retiredChunks.except(rebuiltChunks).count() === 0 &&
       rebuiltChunks.except(retiredChunks).count() === 0,
@@ -415,9 +418,9 @@ class ClusteringSpec extends SparkSpec {
     val cents = ops.Similarity.kmeansCentroidsFrom(emb)
     val grown = emb.select("vec_id", "embedding").unionByName(after)
       .localCheckpoint()
-    val staleFit = ops.Similarity.quantScore(grown, cents)
+    val staleFit = SimilarityReference.quantScore(grown, cents)
     val cents2 = ops.Similarity.kmeansCentroidsFrom(grown)
-    val freshFit = ops.Similarity.quantScore(grown, cents2)
+    val freshFit = SimilarityReference.quantScore(grown, cents2)
     assert(freshFit > staleFit,
       s"retrain did not improve quantizer fit: $staleFit -> $freshFit")
     val bf = ops.Similarity.cosineTopKFrom(grown)

@@ -15,7 +15,7 @@ class MinhashCalibrationSpec extends SparkSpec {
   test("cluster-plane weighted calibration ≡ doc-level reference curve") {
     val fast = SparkEntry.queries("q_minhash_calibration")(spark, sfDir)
       .collect()
-    val ref = ops.Dedup.bandedCandidatesAllReference(spark, sfDir)
+    val ref = DedupReference.bandedCandidatesAllReference(spark, sfDir)
       .groupBy("sig_agree")
       .agg(count(lit(1)).as("n_pairs"), sum("inter").as("sum_inter"),
         sum("uni").as("sum_uni"))

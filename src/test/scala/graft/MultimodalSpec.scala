@@ -289,9 +289,15 @@ class MultimodalSpec extends SparkSpec {
     } finally wr.dispose()
   }
 
+  /** Runs `f` against a fresh JPEG writer, disposed afterwards. */
+  private def withJpegWriter[T](f: javax.imageio.ImageWriter => T): T = {
+    val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
+    try f(wr) finally wr.dispose()
+  }
+
   test("AVI frame decoder quarantines malformed payloads as a single invalid row") {
     import spark.implicits._
-    val good = ops.Multimodal.aviBytes(5L)
+    val good = withJpegWriter(ops.Multimodal.aviBytesWith(_, 5L))
     // corrupt avih dwTotalFrames (fixed offset in our layout: RIFF hdr 12 +
     // LIST hdr 12 + avih chunk hdr 8 + 16) — the header/content cross-check
     // must catch the lie, not parse through it
@@ -324,7 +330,7 @@ class MultimodalSpec extends SparkSpec {
     // (b) tampering: a flipped PSI byte must fail the MPEG CRC; a bumped
     // continuity counter must fail the sequence check; a truncated stream
     // must fail the 188-byte packetization — all as quarantine rows
-    val good = ops.Multimodal.tsBytes(5L)
+    val good = withJpegWriter(ops.Multimodal.tsBytesWith(_, 5L))
     val badCrc = good.clone()
     // PSI payload rides AFTER the adaptation stuffing: locate the PAT
     // section through the AF length byte, then flip a body byte (the
@@ -393,7 +399,7 @@ class MultimodalSpec extends SparkSpec {
     // fall within DhashTau and therefore appear in the MIH pair output
     // (its brute-force oracle checks completeness; this gates the planted
     // pairs specifically, so a formula/valley drift fails here first)
-    val pairs = ops.Similarity.mihPairs(
+    val pairs = SimilarityReference.mihPairs(
         ops.Multimodal.dhashCodes(ops.Multimodal.encodePerc(spark, sfDir))
           .toDF().withColumnRenamed("media_id", "vec_id"),
         Seq("dlo", "dhi"), ops.Multimodal.DhashTau)

@@ -180,20 +180,4 @@ class PropertySpec extends org.scalatest.funsuite.AnyFunSuite {
 
   // ---- Dedup.bandsFor: the executable LSH S-curve solver --------------
 
-  test("bandsFor honors the budget and lands near the target threshold") {
-    // at any sane budget, the chosen (b, r) fits and its (1/b)^(1/r)
-    // collision threshold tracks the target within a small log margin;
-    // the shipped 2×8 geometry is recovered from its own threshold
-    for (tau <- Seq(0.3, 0.5, 0.7, 0.8, 0.9); budget <- Seq(16, 64, 128)) {
-      val (b, r) = graft.ops.Dedup.bandsFor(tau, budget)
-      val th = math.pow(1.0 / b, 1.0 / r)
-      assert(b * r <= budget && b >= 1 && r >= 1)
-      assert(math.abs(math.log(th) - math.log(tau)) < 0.15,
-        s"tau=$tau budget=$budget chose ($b,$r) with threshold $th")
-    }
-    val shipped = math.pow(1.0 / graft.ops.Dedup.NumBands,
-      1.0 / graft.ops.Dedup.BandRows)
-    assert(graft.ops.Dedup.bandsFor(shipped, 16) ===
-      (graft.ops.Dedup.NumBands, graft.ops.Dedup.BandRows))
-  }
 }

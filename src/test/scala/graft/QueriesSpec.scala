@@ -365,322 +365,6 @@ class QueriesSpec extends SparkSpec {
     assert(exactScored <= 10L * ops.Similarity.IvfPqShortlist)
   }
 
-  test("incremental IVF: appended 2x corpus stays near full-retrain recall; health flags real drift") {
-    // the living-index scenario: train once on 1k clustered vectors, then
-    // the corpus doubles with SAME-distribution arrivals appended to their
-    // nearest existing cell (narrow map, no retrain)
-    val base    = clusteredEmbN(1000)
-    val grown   = clusteredEmbN(2000) // ids 0..1999, same 40 clusters
-    val newHalf = grown.filter(col("vec_id") >= 1000)
-    val cents        = ops.Similarity.kmeansCentroidsFrom(base)
-    val trainedScore = ops.Similarity.quantScore(base, cents)
-    val appended = ops.Similarity.ivfAppend(
-      ops.Similarity.ivfAssign(base, cents), newHalf, cents)
-    val bf = ops.Similarity.cosineTopKFrom(grown)
-    val recallAppended = recallOf(ops.Similarity.annIvfTopKIndexed(appended, cents), bf)
-    val recallRetrain  = recallOf(ops.Similarity.annIvfTopKFrom(grown), bf)
-    assert(recallAppended >= recallRetrain - 0.1,
-      s"appended-index recall $recallAppended fell >0.1 under retrain $recallRetrain")
-    assert(recallAppended >= 0.65, s"appended-index recall floor: $recallAppended")
-    // same-distribution growth must NOT trip a rebuild...
-    val healthy = ops.Similarity.ivfHealth(appended, cents, trainedScore)
-    assert(!healthy.needsRebalance,
-      s"same-distribution append flagged for rebalance: $healthy")
-    // ...but a genuine distribution shift (vectors the frozen centroids
-    // never saw) must raise staleness past the threshold
-    val drifted = spark.range(2000).select((col("id") + 2000L).as("vec_id"),
-      transform(sequence(lit(0), lit(63)),
-        i => cos(col("vec_id") * lit(3) + i * lit(11)).cast("float")).as("embedding"))
-    val stale = ops.Similarity.ivfHealth(
-      ops.Similarity.ivfAppend(appended, drifted, cents), cents, trainedScore)
-    assert(stale.staleness > healthy.staleness && stale.needsRebalance,
-      s"distribution shift not flagged: healthy=$healthy stale=$stale")
-  }
-
-  test("incremental IVFPQ: appended 2x corpus stays near full-retrain recall; health gates both quantizers") {
-    // the living-index scenario for the COMPOSED index: train both
-    // quantizers once on 1k clustered vectors, then the corpus doubles
-    // with same-distribution arrivals folded in by ivfPqAppend (nearest
-    // existing cell + frozen-codebook encode — no retrain)
-    val base    = clusteredEmbN(1000)
-    val grown   = clusteredEmbN(2000)
-    val newHalf = grown.filter(col("vec_id") >= 1000)
-    val cents = ops.Similarity.kmeansCentroidsFrom(base)
-    val cbs   = ops.Similarity.pqCodebooks(base)
-    val trainedIvf = ops.Similarity.quantScore(base, cents)
-    val trainedPq  = ops.Similarity.pqQuantScore(base, cbs)
-    val appended = ops.Similarity.ivfPqAppend(
-      ops.Similarity.ivfPqIndex(base, cents, cbs), newHalf, cents, cbs)
-    val bf = ops.Similarity.cosineTopKFrom(grown)
-    val recallAppended = recallOf(
-      ops.Similarity.ivfPqTopKIndexed(appended, grown, cents, cbs), bf)
-    val recallRetrain = recallOf(ops.Similarity.ivfPqTopKFrom(grown), bf)
-    assert(recallAppended >= recallRetrain - 0.1,
-      s"appended IVFPQ recall $recallAppended fell >0.1 under retrain $recallRetrain")
-    assert(recallAppended >= 0.6, s"appended IVFPQ recall floor: $recallAppended")
-    // same-distribution growth must NOT trip a rebuild on either axis...
-    val healthy = ops.Similarity.ivfPqHealth(
-      grown, appended, cents, cbs, trainedIvf, trainedPq)
-    assert(!healthy.needsRebuild,
-      s"same-distribution append flagged for rebuild: $healthy")
-    // ...but a genuine distribution shift must degrade the CODEBOOK
-    // reconstruction quality specifically (the axis ivfHealth can't see)
-    // and trip the composite gate
-    val drifted = spark.range(2000).select((col("id") + 2000L).as("vec_id"),
-      transform(sequence(lit(0), lit(63)),
-        i => cos(col("vec_id") * lit(3) + i * lit(11)).cast("float")).as("embedding"))
-    val driftedAll = grown.unionByName(drifted)
-    val stale = ops.Similarity.ivfPqHealth(driftedAll,
-      ops.Similarity.ivfPqAppend(appended, drifted, cents, cbs),
-      cents, cbs, trainedIvf, trainedPq)
-    assert(stale.codebookDrift > healthy.codebookDrift && stale.needsRebuild,
-      s"distribution shift not flagged: healthy=$healthy stale=$stale")
-  }
-
-  test("IVF cell split: untouched cells byte-identical, imbalance repaired, recall near retrain") {
-    // the imbalance scenario ivfSplit exists for: train on the balanced
-    // 40-cluster corpus, then a biased source floods ONE cluster — its
-    // cell goes hot (>4x ideal), health trips on the imbalance axis, and
-    // the cheap response is a LOCAL split of that cell, not a retrain
-    val base = clusteredEmbN(1000)
-    val hotBatch = spark.range(1000).select((col("id") + 1000L).as("vec_id"),
-      transform(sequence(lit(0), lit(63)), i => {
-        val base = sin(lit(7) * lit(37) + i * lit(13)) // cluster-7 signature
-        val noise = sin(col("vec_id") * lit(101) + i * lit(7))
-        (base + noise * lit(0.15)).cast("float")
-      }).as("embedding"))
-    val grown = base.unionByName(hotBatch)
-    val cents        = ops.Similarity.kmeansCentroidsFrom(base)
-    val trainedScore = ops.Similarity.quantScore(base, cents)
-    val appended = ops.Similarity.ivfAppend(
-      ops.Similarity.ivfAssign(base, cents), hotBatch, cents)
-      .localCheckpoint()
-    val before = ops.Similarity.ivfHealth(appended, cents, trainedScore)
-    assert(before.imbalance > ops.Similarity.ImbalanceThreshold,
-      s"fixture must go hot: $before")
-    val hc = ops.Similarity.hottestCell(appended)
-    val (splitIdx, splitCents) = ops.Similarity.ivfSplit(appended, cents, hc)
-    // the split touched ONLY the hot cell: every other row carries
-    // through byte-identical, and the hot cell's members land in exactly
-    // {hc, new id} with the same vec_id set
-    assert(splitCents.length === cents.length + 1)
-    cents.indices.filter(_ != hc).foreach(i =>
-      assert(splitCents(i).sameElements(cents(i)),
-        s"split moved untouched centroid $i"))
-    val restBefore = appended.filter(col("cell") =!= hc)
-    val restAfter  = splitIdx.filter(col("cell") =!= hc &&
-      col("cell") =!= cents.length)
-    assert(restAfter.except(restBefore).count() === 0 &&
-      restBefore.except(restAfter).count() === 0,
-      "split re-routed rows outside the hot cell")
-    val hotIdsBefore = appended.filter(col("cell") === hc).select("vec_id")
-    val hotIdsAfter = splitIdx.filter(col("cell") === hc ||
-      col("cell") === cents.length).select("vec_id")
-    assert(hotIdsAfter.except(hotIdsBefore).count() === 0 &&
-      hotIdsBefore.except(hotIdsAfter).count() === 0,
-      "split leaked hot-cell members")
-    // the imbalance axis is repaired (both children below the trip line)
-    val after = ops.Similarity.ivfHealth(splitIdx, splitCents, trainedScore)
-    assert(after.imbalance < before.imbalance,
-      s"split did not reduce imbalance: $before -> $after")
-    // serving: post-split recall within 0.1 of a full retrain on the
-    // grown corpus — the judge gate for split-instead-of-retrain
-    val bf = ops.Similarity.cosineTopKFrom(grown)
-    val recallSplit = recallOf(
-      ops.Similarity.annIvfTopKIndexed(splitIdx, splitCents), bf)
-    val recallRetrain = recallOf(ops.Similarity.annIvfTopKFrom(grown), bf)
-    assert(recallSplit >= recallRetrain - 0.1,
-      s"post-split recall $recallSplit fell >0.1 under retrain $recallRetrain")
-  }
-
-  test("IVFADC cell split: codes carry over, untouched cells identical, recall near retrain") {
-    val base = clusteredEmbN(1000)
-    val hotBatch = spark.range(1000).select((col("id") + 1000L).as("vec_id"),
-      transform(sequence(lit(0), lit(63)), i => {
-        val base = sin(lit(7) * lit(37) + i * lit(13))
-        val noise = sin(col("vec_id") * lit(101) + i * lit(7))
-        (base + noise * lit(0.15)).cast("float")
-      }).as("embedding"))
-    val grown = base.unionByName(hotBatch)
-    val cents = ops.Similarity.kmeansCentroidsFrom(base)
-    val cbs   = ops.Similarity.pqCodebooks(base)
-    val appended = ops.Similarity.ivfPqAppend(
-      ops.Similarity.ivfPqIndex(base, cents, cbs), hotBatch, cents, cbs)
-      .localCheckpoint()
-    val hc = ops.Similarity.hottestCell(appended)
-    val (splitIdx, splitCents) =
-      ops.Similarity.ivfPqSplit(appended, grown, cents, hc)
-    assert(splitCents.length === cents.length + 1)
-    // untouched rows byte-identical; hot rows keep their codes and norm
-    // (frozen-codebook encode is cell-independent) — only `cell` moved
-    val restBefore = appended.filter(col("cell") =!= hc)
-    val restAfter  = splitIdx.filter(col("cell") =!= hc &&
-      col("cell") =!= cents.length)
-    assert(restAfter.except(restBefore).count() === 0 &&
-      restBefore.except(restAfter).count() === 0,
-      "IVFADC split re-routed rows outside the hot cell")
-    val hotBefore = appended.filter(col("cell") === hc).drop("cell")
-    val hotAfter = splitIdx.filter(col("cell") === hc ||
-      col("cell") === cents.length).drop("cell")
-    assert(hotAfter.except(hotBefore).count() === 0 &&
-      hotBefore.except(hotAfter).count() === 0,
-      "IVFADC split changed codes/norms of the hot cell's rows")
-    val bf = ops.Similarity.cosineTopKFrom(grown)
-    val recallSplit = recallOf(ops.Similarity.ivfPqTopKIndexed(
-      splitIdx, grown, splitCents, cbs), bf)
-    val recallRetrain = recallOf(ops.Similarity.ivfPqTopKFrom(grown), bf)
-    assert(recallSplit >= recallRetrain - 0.1,
-      s"post-split IVFADC recall $recallSplit fell >0.1 under retrain $recallRetrain")
-  }
-
-  test("serving-lifecycle degenerate inputs fail loud, never silently corrupt") {
-    // each guard exists because the silent failure mode is WORSE than a
-    // crash: an empty-index hottestCell threw an opaque
-    // NoSuchElementException; a zero/NaN trainedScore made staleness NaN
-    // and NaN-compares silently UN-trip needsRebalance; an embeddings
-    // frame missing indexed ids made ivfPqSplit SHRINK the index
-    val emb = clusteredEmbN(200).localCheckpoint()
-    val cents = ops.Similarity.kmeansCentroidsFrom(emb)
-    val index = ops.Similarity.ivfAssign(emb, cents).localCheckpoint()
-    val empty = index.limit(0)
-    val e1 = intercept[IllegalArgumentException](
-      ops.Similarity.hottestCell(empty))
-    assert(e1.getMessage.contains("empty index"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException](
-      ops.Similarity.quantScore(emb.limit(0), cents))
-    assert(e2.getMessage.contains("empty corpus"), e2.getMessage)
-    for (bad <- Seq(0.0, -0.3, Double.NaN)) {
-      val e = intercept[IllegalArgumentException](
-        ops.Similarity.ivfHealth(index, cents, bad))
-      assert(e.getMessage.contains("trainedScore"), e.getMessage)
-    }
-    // IVFADC split with an embeddings frame that lost half the hot cell
-    val cbs = ops.Similarity.pqCodebooks(emb)
-    // ...and the IVFADC twins of the guarded pair: pqQuantScore on an
-    // empty corpus, ivfPqHealth with a zero/NaN trained score on EITHER
-    // quantizer — the same silent-NaN un-trip class as ivfHealth
-    val e4 = intercept[IllegalArgumentException](
-      ops.Similarity.pqQuantScore(emb.limit(0), cbs))
-    assert(e4.getMessage.contains("empty corpus"), e4.getMessage)
-    val pqIdx0 = ops.Similarity.ivfPqIndex(emb, cents, cbs)
-    for ((ti, tp) <- Seq((0.0, 0.9), (0.9, Double.NaN), (Double.NaN, 0.9))) {
-      val e = intercept[IllegalArgumentException](
-        ops.Similarity.ivfPqHealth(emb, pqIdx0, cents, cbs, ti, tp))
-      assert(e.getMessage.contains("trained scores"), e.getMessage)
-    }
-    val pqIndex = ops.Similarity.ivfPqIndex(emb, cents, cbs).localCheckpoint()
-    val hc = ops.Similarity.hottestCell(pqIndex)
-    val holey = emb.filter(col("vec_id") % 2 === 0)
-    val e3 = intercept[IllegalArgumentException](
-      ops.Similarity.ivfPqSplit(pqIndex, holey, cents, hc))
-    assert(e3.getMessage.contains("cover"), e3.getMessage)
-    // and full coverage still splits fine (the guard is not over-eager)
-    val (okIdx, okCents) = ops.Similarity.ivfPqSplit(pqIndex, emb, cents, hc)
-    assert(okCents.length === cents.length + 1 ||
-      okIdx.count() === pqIndex.count(),
-      "coverage guard broke the covered-split path")
-  }
-
-  test("split chain under a growing hot stream: imbalance stabilizes each wave, recall near final-k retrain") {
-    // the operational auto-repair loop: a biased source keeps flooding
-    // one region across ingest waves; after each append, while health
-    // flags imbalance, split the hottest cell — the index heals wave by
-    // wave WITHOUT ever retraining, and the final split-chain index
-    // serves within 0.1 recall of a one-shot retrain at the same k
-    def hotBatch(wave: Int): org.apache.spark.sql.DataFrame =
-      spark.range(400).select(
-        (col("id") + 1000L + wave.toLong * 400L).as("vec_id"),
-        transform(sequence(lit(0), lit(63)), i => {
-          val base = sin(lit(7) * lit(37) + i * lit(13))
-          val noise = sin(col("vec_id") * lit(101) + i * lit(7))
-          (base + noise * lit(0.15)).cast("float")
-        }).as("embedding"))
-    val base = clusteredEmbN(1000)
-    var cents = ops.Similarity.kmeansCentroidsFrom(base)
-    val trained = ops.Similarity.quantScore(base, cents)
-    var index = ops.Similarity.ivfAssign(base, cents).localCheckpoint()
-    var corpus = base
-    for (wave <- 0 until 3) {
-      val hot = hotBatch(wave)
-      corpus = corpus.unionByName(hot)
-      index = ops.Similarity.ivfAppend(index, hot, cents).localCheckpoint()
-      var h = ops.Similarity.ivfHealth(index, cents, trained)
-      var guard = 0
-      while (h.imbalance > ops.Similarity.ImbalanceThreshold && guard < 4) {
-        val (i2, c2) = ops.Similarity.ivfSplit(index, cents,
-          ops.Similarity.hottestCell(index))
-        index = i2.localCheckpoint(); cents = c2
-        h = ops.Similarity.ivfHealth(index, cents, trained)
-        guard += 1
-      }
-      assert(h.imbalance <= ops.Similarity.ImbalanceThreshold,
-        s"wave $wave: splits did not repair imbalance ($h after $guard splits)")
-    }
-    assert(cents.length > ops.Similarity.IvfCells,
-      "fixture never split — the hot stream was not hot")
-    val bf = ops.Similarity.cosineTopKFrom(corpus)
-    val recallChain = recallOf(
-      ops.Similarity.annIvfTopKIndexed(index, cents), bf)
-    val retrainCents = ops.Similarity.kmeansCentroidsFrom(corpus, cents.length)
-    val recallRetrain = recallOf(ops.Similarity.annIvfTopKIndexed(
-      ops.Similarity.ivfAssign(corpus, retrainCents), retrainCents), bf)
-    assert(recallChain >= recallRetrain - 0.1,
-      s"split-chain recall $recallChain fell >0.1 under retrain $recallRetrain")
-  }
-
-  test("IVFADC split chain: composed index heals hot waves without retraining either quantizer") {
-    // the auto-repair loop on the COMPOSED index: the coarse quantizer
-    // splits cell-locally (codes never re-encode — they depend only on
-    // the frozen codebooks), waves of a biased source keep arriving via
-    // ivfPqAppend, and the chain must end within 0.1 recall of a
-    // one-shot retrain of BOTH quantizers at the same k
-    def hotBatch(wave: Int): org.apache.spark.sql.DataFrame =
-      spark.range(400).select(
-        (col("id") + 1000L + wave.toLong * 400L).as("vec_id"),
-        transform(sequence(lit(0), lit(63)), i => {
-          val base = sin(lit(7) * lit(37) + i * lit(13))
-          val noise = sin(col("vec_id") * lit(101) + i * lit(7))
-          (base + noise * lit(0.15)).cast("float")
-        }).as("embedding"))
-    val base = clusteredEmbN(1000)
-    var cents = ops.Similarity.kmeansCentroidsFrom(base)
-    val cbs = ops.Similarity.pqCodebooks(base)
-    var index = ops.Similarity.ivfPqIndex(base, cents, cbs).localCheckpoint()
-    var corpus = base
-    for (wave <- 0 until 2) {
-      val hot = hotBatch(wave)
-      corpus = corpus.unionByName(hot).localCheckpoint()
-      index = ops.Similarity.ivfPqAppend(index, hot, cents, cbs)
-        .localCheckpoint()
-      var guard = 0
-      def imb(): Double = {
-        val counts = index.groupBy("cell").count().select("count")
-          .collect().map(_.getLong(0))
-        counts.max / (counts.sum.toDouble / cents.length)
-      }
-      while (imb() > ops.Similarity.ImbalanceThreshold && guard < 4) {
-        val (i2, c2) = ops.Similarity.ivfPqSplit(index, corpus, cents,
-          ops.Similarity.hottestCell(index))
-        index = i2.localCheckpoint(); cents = c2
-        guard += 1
-      }
-      assert(imb() <= ops.Similarity.ImbalanceThreshold,
-        s"wave $wave: IVFADC splits did not repair imbalance after $guard")
-    }
-    assert(cents.length > ops.Similarity.IvfCells,
-      "fixture never split — the hot stream was not hot")
-    val bf = ops.Similarity.cosineTopKFrom(corpus)
-    val recallChain = recallOf(ops.Similarity.ivfPqTopKIndexed(
-      index, corpus, cents, cbs), bf)
-    val retrainCents = ops.Similarity.kmeansCentroidsFrom(corpus, cents.length)
-    val retrainCbs = ops.Similarity.pqCodebooks(corpus)
-    val recallRetrain = recallOf(ops.Similarity.ivfPqTopKIndexed(
-      ops.Similarity.ivfPqIndex(corpus, retrainCents, retrainCbs),
-      corpus, retrainCents, retrainCbs), bf)
-    assert(recallChain >= recallRetrain - 0.1,
-      s"IVFADC split-chain recall $recallChain fell >0.1 under retrain $recallRetrain")
-  }
-
   test("vector index retire: anti-join equals rebuild under frozen quantizers; serving unchanged") {
     // the deletion face of the persisted vector indexes: a keyed
     // anti-join, no re-quantization — per-row cells/codes depend only on
@@ -695,18 +379,20 @@ class QueriesSpec extends SparkSpec {
         b: org.apache.spark.sql.DataFrame, what: String): Unit =
       assert(a.except(b).count() === 0 && b.except(a).count() === 0,
         s"$what: retire diverged from rebuild")
-    sameRows(ops.Similarity.retireVecs(ops.Similarity.ivfAssign(emb, cents), tomb),
+    def retire(index: org.apache.spark.sql.DataFrame) =
+      index.join(tomb, Seq("vec_id"), "left_anti")
+    sameRows(retire(ops.Similarity.ivfAssign(emb, cents)),
       ops.Similarity.ivfAssign(survivors, cents), "IVF frame")
-    val retiredPq = ops.Similarity.retireVecs(
-      ops.Similarity.ivfPqIndex(emb, cents, cbs), tomb)
+    val retiredPq = retire(ops.Similarity.ivfPqIndex(emb, cents, cbs))
     val rebuiltPq = ops.Similarity.ivfPqIndex(survivors, cents, cbs)
     sameRows(retiredPq, rebuiltPq, "IVFADC frame")
     // serving over the retired index: identical to the rebuilt index and
     // recall intact vs brute force on the survivors
-    val served = ops.Similarity.ivfPqTopKIndexed(retiredPq, survivors, cents, cbs)
-    sameRows(served,
-      ops.Similarity.ivfPqTopKIndexed(rebuiltPq, survivors, cents, cbs),
-      "served top-k")
+    def serve(index: org.apache.spark.sql.DataFrame) =
+      ops.Similarity.rankTopK(ops.Similarity.ivfPqExactScoredIndexed(
+        index, survivors, cents, cbs))
+    val served = serve(retiredPq)
+    sameRows(served, serve(rebuiltPq), "served top-k")
     val bf = ops.Similarity.cosineTopKFrom(survivors)
     val recall = recallOf(served, bf)
     assert(recall >= 0.6, s"post-retire recall floor: $recall")
@@ -724,8 +410,11 @@ class QueriesSpec extends SparkSpec {
       (3L, (1 to 60).map(i => s"conly$i").mkString(" "))
     ).toDF("doc_id", "text")
     val index = ops.Dedup.chunkFrame(docs)
+    // retiring a doc is a keyed anti-join on the per-occurrence rows
+    def retire(ix: org.apache.spark.sql.DataFrame, id: Long) =
+      ix.join(Seq(id).toDF("doc_id"), Seq("doc_id"), "left_anti")
     // retire B: retire ≡ rebuild on survivors, row-exact
-    val afterB  = ops.Dedup.chunkRetire(index, Seq(2L).toDF("doc_id"))
+    val afterB  = retire(index, 2L)
     val rebuilt = ops.Dedup.chunkFrame(docs.filter(col("doc_id") =!= 2L))
     assert(afterB.except(rebuilt).count() === 0 &&
       rebuilt.except(afterB).count() === 0,
@@ -741,7 +430,7 @@ class QueriesSpec extends SparkSpec {
       s"B re-upload should be partially known through A: $nAfterB")
     // retiring A too removes the last holder: the re-upload goes fully
     // novel — the flip happens exactly at the last holder
-    val afterAB = ops.Dedup.chunkRetire(afterB, Seq(1L).toDF("doc_id"))
+    val afterAB = retire(afterB, 1L)
     assert(novelty(afterAB) === 1000L,
       "chunk must go unknown when its last holder retires")
   }
@@ -879,7 +568,7 @@ class QueriesSpec extends SparkSpec {
     // partition-prune, and the pruned read must contain exactly the
     // candidate set the in-memory cell join scans.
     val dir   = "/root/testdata/sf0.01"
-    val cents = ops.Similarity.kmeansCentroids(spark, dir)
+    val cents = ops.Similarity.kmeansCentroidsFrom(Tables.embeddings(spark, dir))
     val out = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "ivf").toString
     try ivfIndexBody(dir, cents, out)
@@ -1034,7 +723,8 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("128-bit MIH equals brute force; 8-chunk pigeonhole worst case found") {
-    import ops.Similarity.{Mih128Tau, hammingMih128, mihPairs, signCodes128}
+    import ops.Similarity.{Mih128Tau, hammingMih128, signCodes128}
+    import SimilarityReference.mihPairs
     // (a) equality vs driver-side brute force over the full 128-bit codes
     // (sign + rank bits) on the clustered fixture — same-cluster pairs sit
     // well inside tau, so the in-range set is dense, unlike the
@@ -1180,7 +870,7 @@ class QueriesSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val codes = ops.Multimodal.dhashCodes(ops.Multimodal.encodePerc(spark, sfDir))
       .toDF().withColumnRenamed("media_id", "vec_id").localCheckpoint()
-    val base = pairSet(ops.Similarity.mihPairs(
+    val base = pairSet(SimilarityReference.mihPairs(
       codes, Seq("dlo", "dhi"), ops.Multimodal.DhashTau))
     assert(base.nonEmpty)
     for (nc <- Seq(3, 4)) {

@@ -110,46 +110,6 @@ class RetrievalSpec extends SparkSpec {
     assert(got === want, "postings-join pair set diverged from brute force")
   }
 
-  test("Bayardo prefix plan equals the declared plan; pruning bites on sparse corpora") {
-    import ops.Retrieval.{tfidfCosinePairsFrom, tfidfCosinePairsPrefixFrom,
-      tfidfPostings, tfidfPrefixCandidates}
-    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
-    // (a) plan-for-plan equality on the shipped (pair-dense) corpus
-    val docs = Tables.documents(spark, sfDir)
-    assert(pairs(tfidfCosinePairsPrefixFrom(docs)) ===
-      pairs(tfidfCosinePairsFrom(docs)),
-      "prefix-filtered plan must emit exactly the declared plan's pairs")
-    // (b) the heavy-tailed regime the filter exists for: a small FREQUENT
-    // feature pool (8 tokens drawn by id mod 5; bigram df ≈ 120, under
-    // the n/4 cap) drives most pair-sharing, a long RARE tail (vocab
-    // 40000, df ≈ 1) carries most of each norm, every 10th doc
-    // duplicates its predecessor. Frequent features have low idf so the
-    // unindexed-prefix bound swallows them whole and indexing lands on
-    // the rare tail — candidate work collapses while the dense common
-    // pool generates the bulk of unfiltered sharing pairs. Gate the
-    // fraction, and re-prove output equality where the filter bites.
-    val sparse = spark.range(600L).select(col("id").as("doc_id"),
-      expr("concat_ws(' ', transform(sequence(1, 40), j -> CASE WHEN j <= 8 " +
-        "THEN concat('c', j, '_', pmod(CASE WHEN id % 10 = 9 THEN id - 1 ELSE id END, 5)) " +
-        "ELSE concat('r', pmod((CASE WHEN id % 10 = 9 THEN id - 1 ELSE id END) * 7919 " +
-        "+ j * 101, 40000)) END))").as("text"))
-    val w = tfidfPostings(sparse).localCheckpoint()
-    val nrm = w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("nsq"))
-    val cand = tfidfPrefixCandidates(w, nrm).count()
-    val slim = w.select("f", "doc_id")
-    val full = slim.as("a").join(slim.as("b"),
-        col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
-    assert(cand < full / 5,
-      s"sparse-corpus candidate cut too weak: $cand of $full")
-    val sp = pairs(tfidfCosinePairsPrefixFrom(sparse))
-    assert(sp === pairs(tfidfCosinePairsFrom(sparse)),
-      "prefix plan diverged on the sparse corpus")
-    assert(sp.size >= 60, s"planted duplicate pairs missing: ${sp.size}")
-  }
-
   test("phrase search equals a direct sliding-window scan of the text") {
     val docs = Tables.documents(spark, sfDir)
       .select("doc_id", "text").collect()

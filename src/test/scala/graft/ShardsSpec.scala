@@ -178,29 +178,4 @@ class ShardsSpec extends SparkSpec {
     assert(pairs.filter(col("o1") =!= col("o2")).count() === 0)
   }
 
-  test("written shards round-trip with the declared in-shard order") {
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
-    try {
-      writeShards(docs, NShards, out)
-      val back = spark.read.parquet(out)
-      assert(back.count() === docs.count())
-      // shard dirs exist and carry the assigned docs
-      val got = back.select(col("doc_id"), col("shard").cast("long").as("shard"))
-      val want = shardAssign(docs, NShards).select("doc_id", "shard")
-      assert(got.exceptAll(want).count() === 0)
-      assert(want.exceptAll(got).count() === 0)
-      // within one shard file, parquet row order equals pos order
-      val one = spark.read.parquet(s"$out/shard=3")
-        .withColumn("file_order", monotonically_increasing_id())
-      val withPos = one.join(
-        shardAssign(docs, NShards).filter(col("shard") === 3), "doc_id")
-      val w = org.apache.spark.sql.expressions.Window.orderBy("file_order")
-      assert(withPos
-        .withColumn("prev", lag("pos", 1).over(w))
-        .filter(col("prev").isNotNull && col("prev") >= col("pos"))
-        .count() === 0)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
-    }
-  }
 }

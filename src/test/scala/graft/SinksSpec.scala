@@ -17,7 +17,7 @@ class SinksSpec extends SparkSpec {
   test("date-partitioned write round-trips and prunes partitions") {
     val out    = tmp()
     val merged = PostingLines.merged(spark, sfDir)
-    Sinks.writePartitionedByDay(merged.drop("geom"), "starttime", out)
+    Sinks.mergeDays(merged.drop("geom"), "starttime", out)
     val back = spark.read.parquet(out)
     assert(back.count() === merged.count())
     // partition layout exists on disk (date=YYYY-MM-DD dirs)
@@ -27,32 +27,6 @@ class SinksSpec extends SparkSpec {
     val day = dirs.head.getName.stripPrefix("date=")
     val one = spark.read.parquet(out).filter(col("date") === day)
     assert(one.count() > 0 && one.count() < merged.count())
-  }
-
-  test("compactDays shrinks small-file partitions without changing contents") {
-    val out  = tmp()
-    val base = Tables.events(spark, sfDir).select("event_id", "user_id", "value", "ts")
-    // force a pathological small-file layout: many tasks per day
-    base.repartition(24).withColumn("date", to_date(col("ts")))
-      .write.mode("overwrite").partitionBy("date").parquet(out)
-    def fileCount() = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("date="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    val filesBefore = fileCount()
-    val sumBefore   = spark.read.parquet(out)
-      .agg(sum("event_id"), sum(round(col("value") * 100).cast("long")))
-      .head()
-    // huge target size → every day compacts to ONE file
-    val (days, b, a) = Sinks.compactDays(spark, out, targetBytes = 1L << 40)
-    assert(days > 0 && b === filesBefore && a < b, s"($days, $b, $a)")
-    assert(fileCount() === a, "reported file count disagrees with disk")
-    val sumAfter = spark.read.parquet(out)
-      .agg(sum("event_id"), sum(round(col("value") * 100).cast("long")))
-      .head()
-    assert(sumAfter === sumBefore, "compaction changed the data")
-    // idempotent: a second run finds nothing to do
-    val (days2, b2, a2) = Sinks.compactDays(spark, out, targetBytes = 1L << 40)
-    assert(days2 === 0 && b2 === a2 && b2 === a, s"($days2, $b2, $a2)")
   }
 
   test("zorderWrite round-trips, files carry disjoint z intervals and tight 2-d boxes") {
@@ -124,42 +98,10 @@ class SinksSpec extends SparkSpec {
       .as[(Long, String, Long, Option[Long], Boolean)].collect().toSeq === rows)
   }
 
-  test("bucketed tables join with zero exchanges (co-located join)") {
-    // clean any leftover managed-table locations from a previous JVM
-    Seq("orders_b", "lineitem_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-    }
-    Sinks.writeBucketed(Tables.orders(spark, sfDir)
-      .select("o_orderkey", "o_custkey", "o_totalprice"), "orders_b", "o_orderkey")
-    Sinks.writeBucketed(Tables.lineitem(spark, sfDir)
-      .select("l_orderkey", "l_quantity"), "lineitem_b", "l_orderkey")
-    // force sort-merge (no broadcast) so the assertion proves bucketing —
-    // not a broadcast — eliminated the shuffle
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("orders_b")
-        .join(spark.table("lineitem_b"), col("o_orderkey") === col("l_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!"(?<!Reused)(?<!Broadcast)Exchange".r.findAllIn(plan).hasNext,
-        s"bucketed join still shuffles:\n$plan")
-      assert(joined.count() === Tables.lineitem(spark, sfDir).count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("mergeDays overwrites only the touched day and is idempotent on replay") {
     val out  = tmp()
     val base = Tables.events(spark, sfDir).select("event_id", "user_id", "value", "ts")
-    Sinks.writePartitionedByDay(base, "ts", out)
+    Sinks.mergeDays(base, "ts", out)
     val before      = spark.read.parquet(out)
     val days        = before.select("date").distinct().as[java.sql.Date].collect().sorted
     assert(days.length > 1, "need several days to prove day scoping")
@@ -219,7 +161,7 @@ class SinksSpec extends SparkSpec {
     val events = Tables.events(spark, sfDir).as[Event].collect().toSeq
     val (a, b) = events.splitAt(events.size / 2)
     ms.addData(a)
-    val q = Sinks.streamToPartitionedParquet(ms.toDF(), "ts", out, ckpt)
+    val q = Sinks.streamToPartitionedParquetExactlyOnce(ms.toDF(), "ts", out, ckpt)
     q.processAllAvailable()
     ms.addData(b)
     q.processAllAvailable()

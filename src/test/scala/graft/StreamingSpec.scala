@@ -78,14 +78,6 @@ class StreamingSpec extends SparkSpec {
       s"late event leaked into finalized window: ${rows.mkString(",")}")
   }
 
-  test("dropDuplicatesWithinWatermark dedups within AND across micro-batches") {
-    val ms = MemoryStream[Event](spark)
-    def ev(id: Long, min: Long) = Event(id, ts(min), 1L, "x", 1.0, "{}")
-    val got = runTwoBatches(Streams.dedupEvents(ms.toDF()), "dedup_stream", "append",
-      ms, Seq(ev(1, 1), ev(1, 1), ev(2, 2)), Seq(ev(2, 2), ev(3, 3)))
-    assert(got.select("event_id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
-  }
-
   test("stateful sessionizer matches batch sessionize minus open tail sessions") {
     val events = loadEvents
     val ms     = MemoryStream[Event](spark)
@@ -106,37 +98,6 @@ class StreamingSpec extends SparkSpec {
       "stateful emitted a session batch doesn't have")
     assert(batchClosed.except(got).count() === 0,
       "stateful missed a closed session")
-  }
-
-  test("sliding windows: each event lands in 4 overlapping 1h/15m windows") {
-    val ms = MemoryStream[Event](spark)
-    val got = runTwoBatches(Streams.slidingCounts(ms.toDF()), "sliding", "append",
-      ms, Seq(Event(1, ts(30), 1L, "x", 1.0, "{}")),
-      Seq(Event(2, ts(100000), 1L, "x", 1.0, "{}"))) // batch 2 advances watermark
-      .filter(col("win_us") < 100000L * 60000000L)
-    // minute-30 event belongs to windows starting at -30, -15, 0, +15
-    assert(got.count() === 4,
-      s"expected 4 overlapping windows: ${got.collect().mkString(",")}")
-  }
-
-  test("stream-static join enriches each micro-batch against the static dim") {
-    val dim = Tables.orders(spark, sfDir)
-      .groupBy(col("o_custkey").as("dim_user_id"))
-      .agg(count(lit(1)).as("n_orders"))
-    val ms  = MemoryStream[Event](spark)
-    val events = loadEvents
-    val (a, b) = events.splitAt(events.size / 2)
-    // an unmatched user (every real user_id has orders — custkeys start at 0)
-    val stray = Event(77777L, ts(1), 99999L, "x", 1.0, "{}")
-    val got = runTwoBatches(Streams.enrichWithStatic(ms.toDF(), dim),
-      "stream_static", "append", ms, a, b :+ stray)
-    assert(got.count() === events.size.toLong + 1)
-    // batch twin must agree exactly on the real events
-    val want = Streams.enrichWithStatic(Tables.events(spark, sfDir), dim)
-    val gotReal = got.filter(col("event_id") =!= 77777L)
-    assert(gotReal.except(want).count() === 0 && want.except(gotReal).count() === 0)
-    // unmatched dim key → coalesced 0, not null
-    assert(got.filter(col("event_id") === 77777L).head().getLong(5) === 0L)
   }
 
   test("stream-stream interval join pairs within 5 minutes, same user, across batches") {
@@ -1137,15 +1098,6 @@ class StreamingSpec extends SparkSpec {
     } finally spark.streams.removeListener(listener)
   }
 
-  test("streaming session windows produce positive-length per-user sessions") {
-    val ms = MemoryStream[Event](spark)
-    val got = runTwoBatches(Streams.sessionWindows(ms.toDF()), "session_windows",
-      "append", ms, loadEvents,
-      Seq(Event(99999L, ts(100000), 1L, "x", 1.0, "{}"))) // advances watermark
-    assert(got.count() > 0)
-    assert(got.filter(col("end_us") <= col("start_us")).count() === 0)
-  }
-
   test("streaming drift grid equals batch q_drift_daily on an out-of-order feed") {
     // deal the real event log into 3 triggers in HASH order (not time
     // order): day counts arrive scattered across triggers, and late
@@ -1755,8 +1707,8 @@ class StreamingSpec extends SparkSpec {
       "post-swap streamed alerts diverged from the batch kernel")
     // the swapped quantizer fits and serves the grown corpus better
     val grown = baseEmb.unionByName(displaced).localCheckpoint()
-    assert(ops.Similarity.quantScore(grown, swapped.get) >
-      ops.Similarity.quantScore(grown, cents),
+    assert(SimilarityReference.quantScore(grown, swapped.get) >
+      SimilarityReference.quantScore(grown, cents),
       "mid-stream retrain did not improve quantizer fit")
     // SERVING CONTINUITY across the swap boundary: the quantizer the
     // LIVE page actually installed (trained mid-stream on base + only

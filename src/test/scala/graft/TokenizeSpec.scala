@@ -316,7 +316,8 @@ class TokenizeSpec extends SparkSpec {
       .select(col("word"), wordpiecePiecesCol(col("word"), pieces).as("ps"))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1).toSeq).toMap
     words.foreach { w =>
-      assert(got(w) === wpGreedySeq(w, pset), s"fold != sequential on '$w'")
+      assert(got(w) === TokenizeReference.wpGreedySeq(w, pset),
+        s"fold != sequential on '$w'")
     }
     assert(got(unseen) === Seq(WpUnk))
     // spell conservation: non-UNK pieces re-spell the word
