@@ -1,13 +1,45 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{DecimalNode, ObjectNode}
+import org.apache.spark.sql.SparkSession
+
 object Bench {
+  /** One timed query run (wall = build + exec); -1 everywhere when it failed. */
+  final case class Run(name: String, secs: Double, rows: Long, buildS: Double, execS: Double)
+
+  /** Builds and counts `q` once, traced under `key`; a failure is named on
+    * stderr and reads -1, so a broken query can never read as fast.
+    */
+  private def timed(spark: SparkSession, sfDir: String, q: Q, key: String): Run =
+    try {
+      val (df, buildS) = Metrics.observe(spark, key, "build")(q.build(spark, sfDir))
+      val (rows, execS) = Metrics.observe(spark, key, "exec")(df.count())
+      Run(q.name, buildS + execS, rows, buildS, execS)
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $key failed: $e")
+      Run(q.name, -1.0, -1L, -1.0, -1.0)
+    }
+
+  /** Times every query of `qs` once, in order, with the queries that filled
+    * a shared memo — the rerun replay list (see `rerunOnce` in [[main]]).
+    */
+  def timedPass(spark: SparkSession, sfDir: String, qs: Seq[Q]): (Seq[Run], Seq[String]) = {
+    val runs = qs.map { q =>
+      val c0 = Memo.count(spark)
+      (timed(spark, sfDir, q, q.name), Memo.count(spark) > c0)
+    }
+    (runs.map(_._1), runs.collect { case (r, true) => r.name })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
-    val listener = new QueryMetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val trace = new Trace
+    spark.sparkContext.addSparkListener(trace)
     // warmup: a full untimed pass over EVERY query, not just the flagship —
     // otherwise the first query touching each un-warmed view absorbs its
     // codegen/JIT/parquet-footer cost (q_transform_3005 measured 2.0 s cold
@@ -16,32 +48,14 @@ object Bench {
     // CC components) are then CLEARED so the timed pass still pays real
     // data compute where the query declares it — only compile-time state
     // stays warm.
-    def warm(name: String)(run: => Long): Unit =
-      try run catch { case NonFatal(e) =>
-        System.err.println(s"[bench] warmup $name failed: $e")
-      }
-    warm("entry")(SparkEntry.entry(spark).count())
-    SparkEntry.all.foreach(q => warm(q.name)(q.build(spark, sfDir).count()))
+    (Q.noOracle("entry")((s, _) => SparkEntry.entry(s)) +: SparkEntry.all)
+      .foreach(q => timed(spark, sfDir, q, s"warmup ${q.name}"))
     Memo.clear(spark)
     // declaration order (SparkEntry.all), not Map hash order: shared
     // first-compute (cluster frame, qualifying pairs, CC components) then
     // lands deterministically on the query that declares it, and the
     // downstream consumers measure their own marginal cost
-    // queries that POPULATED a shared memo during the in-order timed pass,
-    // in declaration order — the rerun replay list (see rerunOnce)
-    val declarers = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results0 = SparkEntry.all.map { q =>
-      val c0 = Memo.count(spark)
-      val t0 = System.nanoTime()
-      val rows = try Metrics.observe(spark, q.name)(q.build(spark, sfDir).count())
-      catch { case NonFatal(e) =>
-        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); -1L
-      }
-      // failures are reported as -1 so a broken query can never read as fast
-      val secs = if (rows >= 0) (System.nanoTime() - t0) / 1e9 else -1.0
-      if (Memo.count(spark) > c0) declarers += q.name
-      (q.name, secs, rows)
-    }
+    val (results0, declarers) = timedPass(spark, sfDir, SparkEntry.all)
     // CONTENTION RE-RUN GUARDS: a single driver-window run can catch
     // transient machine contention (rounds 8 and 10: a handful of
     // unrelated queries ~2x their 7-run band medians; round 11: diffuse
@@ -68,6 +82,7 @@ object Bench {
     // is REPORTED on stderr — a silently-disabled guard looks exactly
     // like a contention-free run, which is how the round-11 ADVICE
     // found the old string-match version one formatting change from off.
+    val json = new ObjectMapper()
     val bandPath = java.nio.file.Paths.get("BENCH_BAND.json")
     var bandTotalMax = 0.0
     val bandMedians: Map[String, Double] =
@@ -75,15 +90,11 @@ object Bench {
         System.err.println("[bench] no BENCH_BAND.json — contention guards off")
         Map.empty
       } else try {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(java.nio.file.Files.readAllBytes(bandPath))
+        val root = json.readTree(java.nio.file.Files.readAllBytes(bandPath))
         val bandSf = Option(root.get("sf")).map(_.asText("")).getOrElse("")
         val meds = Option(root.get("queries_median")) match {
           case Some(qm) if qm.isObject =>
-            val it = qm.fields()
-            val b = Map.newBuilder[String, Double]
-            while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble(0.0) }
-            b.result()
+            qm.properties().asScala.map(e => e.getKey -> e.getValue.asDouble(0.0)).toMap
           case _ => Map.empty[String, Double]
         }
         if (bandSf != sfDir) {
@@ -115,32 +126,27 @@ object Bench {
     // that ran BEFORE the target in declaration order (restoring exactly
     // the cache state the target originally saw), then time the target. A
     // target that is itself a declarer re-pays its own build, as in-order.
-    val declIdx = SparkEntry.all.map(_.name).zipWithIndex.toMap
-    def rerunOnce(name: String, secs: Double, why: String): Double = {
+    // A rerun is traced under its own key, so the trace figures stay the
+    // in-order run's; the reported build/exec split follows the kept time.
+    val declared = SparkEntry.all
+    val declIdx = declared.map(_.name).zipWithIndex.toMap
+    def rerunOnce(run: Run, why: String): Run = {
       Memo.clear(spark)
-      val replay = declarers.filter(d => declIdx(d) < declIdx.getOrElse(name, 0))
-      val replayFailed = replay.filterNot { d =>
-        try { SparkEntry.queries(d)(spark, sfDir).count(); true }
-        catch { case NonFatal(e) =>
-          System.err.println(s"[bench] rerun $name: replay of $d failed: $e"); false
-        }
+      val replay = declarers.filter(d => declIdx(d) < declIdx.getOrElse(run.name, 0))
+      val replayFailed = replay.filter { d =>
+        timed(spark, sfDir, declared(declIdx(d)), s"rerun ${run.name}: replay of $d").rows < 0
       }
-      val t0 = System.nanoTime()
-      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-      catch { case NonFatal(e) =>
-        System.err.println(s"[bench] rerun $name failed: $e"); false
-      }
-      val secs2 = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      rerunLog(name) = (secs, secs2, replayFailed.toSeq)
-      System.err.println(f"[bench] rerun $name: $secs%.3f -> $secs2%.3f " +
+      val again = timed(spark, sfDir, declared(declIdx(run.name)), s"rerun ${run.name}")
+      rerunLog(run.name) = (run.secs, again.secs, replayFailed)
+      System.err.println(f"[bench] rerun ${run.name}: ${run.secs}%.3f -> ${again.secs}%.3f " +
         f"(replayed ${replay.size} declarers; $why)")
-      if (secs2 > 0) math.min(secs, secs2) else secs
+      if (again.secs > 0 && again.secs < run.secs) again.copy(rows = run.rows) else run
     }
-    val results1 = results0.map { case (name, secs, rows) =>
-      val med = bandMedians.getOrElse(name, 0.0)
-      if (secs > 0.5 && med > 0 && secs > med * 1.8)
-        (name, rerunOnce(name, secs, f"per-query guard, band median $med%.3f"), rows)
-      else (name, secs, rows)
+    val results1 = results0.map { r =>
+      val med = bandMedians.getOrElse(r.name, 0.0)
+      if (r.secs > 0.5 && med > 0 && r.secs > med * 1.8)
+        rerunOnce(r, f"per-query guard, band median $med%.3f")
+      else r
     }
     // total-level pass: diffuse contention — many queries a little over
     // their medians, none past 1.8x — still pushes the sum out of band
@@ -150,21 +156,20 @@ object Bench {
       // compare the band max against the sum over queries the band KNOWS
       // — a freshly added query has no median and must not read as
       // "contention" against a smaller-inventory band total
-      def totalOf(r: Seq[(String, Double, Long)]) =
-        r.filter(x => bandMedians.contains(x._1)).map(_._2).filter(_ >= 0).sum
+      def totalOf(r: Seq[Run]) =
+        r.filter(x => bandMedians.contains(x.name)).map(_.secs).filter(_ >= 0).sum
       if (bandTotalMax > 0 && totalOf(rs) > bandTotalMax) {
         val offenders = rs
-          .filter { case (n, s, _) => s > 0.5 && !rerunLog.contains(n) &&
-            bandMedians.getOrElse(n, 0.0) > 0 && s > bandMedians(n) }
-          .sortBy { case (n, s, _) => bandMedians(n) - s } // largest excess first
-          .map(_._1).take(TotalGuardCap)
+          .filter { r => r.secs > 0.5 && !rerunLog.contains(r.name) &&
+            bandMedians.getOrElse(r.name, 0.0) > 0 && r.secs > bandMedians(r.name) }
+          .sortBy(r => bandMedians(r.name) - r.secs) // largest excess first
+          .map(_.name).take(TotalGuardCap)
         val it = offenders.iterator
         while (it.hasNext && totalOf(rs) > bandTotalMax) {
           val name = it.next()
-          val cur = rs.find(_._1 == name).get
-          val better = rerunOnce(name, cur._2,
+          val better = rerunOnce(rs.find(_.name == name).get,
             f"total guard: sum ${totalOf(rs)}%.3f > band max $bandTotalMax%.3f")
-          rs = rs.map(r => if (r._1 == name) (r._1, better, r._3) else r)
+          rs = rs.map(r => if (r.name == name) better else r)
         }
         if (totalOf(rs) > bandTotalMax)
           System.err.println(f"[bench] total ${totalOf(rs)}%.3f still above " +
@@ -172,42 +177,53 @@ object Bench {
       }
       rs
     }
-    def jmap(f: ((String, Double, Long)) => String): String =
-      results.map { r => "\"" + r._1 + "\":" + f(r) }.mkString("{", ",", "}")
-    // Locale.ROOT: the f interpolator uses the default locale, and a
-    // comma-decimal locale would print 0,123 — invalid JSON downstream
-    def fmt(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // flush the async listener bus so the metric snapshot is complete
-    org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext, 10000)
-    val stats = listener.snapshot
-    def stat(name: String, f: QueryStats => Long): Long =
-      stats.get(name).map(f).getOrElse(0L)
     // 3 decimals keeps the timing line compact; -1 still marks failures
-    val qs      = jmap(r => fmt(r._2))
-    val rowsJ   = jmap(r => r._3.toString)
-    val shufJ   = jmap(r => (stat(r._1, _.shuffleWriteBytes.sum)
-                           + stat(r._1, _.shuffleReadBytes.sum)).toString)
-    val spillJ  = jmap(r => (stat(r._1, _.memorySpilled.sum)
-                           + stat(r._1, _.diskSpilled.sum)).toString)
-    val peakJ   = jmap(r => stat(r._1, _.peakExecutionMemory).toString)
-    // executor CPU per query (ms) — separates real compute from
-    // scheduling/latency floors when picking optimization targets
-    val cpuJ    = jmap(r => (stat(r._1, _.cpuTimeNs.sum) / 1000000L).toString)
+    def secs(d: Double) = DecimalNode.valueOf(
+      java.math.BigDecimal.valueOf(d).setScale(3, java.math.RoundingMode.HALF_UP))
+    val total = results.map(_.secs).filter(_ >= 0).sum
+    // flush the async listener bus so the trace is complete
+    org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext, 10000)
+    def header() = json.createObjectNode().put("metric", "total")
+      .set[ObjectNode]("value", secs(total)).put("unit", "sec")
     // The artifact collector keeps only the LAST 2000 chars of output, and a
     // full 89-query map (~2.4 KB with names) cannot fit — which is exactly
     // how the timing map vanished from BENCH_r02–r04. So: (1) the COMPLETE
-    // record (timings + rows + shuffle/spill/peak diagnostics) is written to
+    // record (timings + rows + trace diagnostics) is written to
     // BENCH_FULL.json in the working directory and echoed on an early line;
     // (2) the final line — the one guaranteed to survive the tail — carries
     // the timings SLOWEST-FIRST up to a fixed byte budget, with an explicit
     // count of omitted (fastest) entries and a pointer to the full file.
-    val rerunsJ = rerunLog.map { case (n, (a, b, failed)) =>
-      val mark = if (failed.isEmpty) ""
-                 else failed.mkString(",\"replay-incomplete:", ",", "\"")
-      "\"" + n + "\":[" + fmt(a) + "," + fmt(b) + mark + "]" }.mkString("{", ",", "}")
-    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"rows":$rowsJ,"shuffle_bytes":$shufJ,"spilled_bytes":$spillJ,"peak_exec_mem":$peakJ,"cpu_ms":$cpuJ,"reruns":$rerunsJ,"sf":"$sfDir"}"""
+    val full = header()
+    val traced = results.map(r => r.name -> trace.total(r.name)).toMap
+    def perQuery(field: String)(f: (Run, Trace.Stats) => JsonNode): Unit = {
+      val o = full.putObject(field)
+      results.foreach(r => o.set[ObjectNode](r.name, f(r, traced(r.name))))
+    }
+    def long(v: Long): JsonNode = json.getNodeFactory.numberNode(v)
+    perQuery("queries")((r, _) => secs(r.secs))
+    perQuery("rows")((r, _) => long(r.rows))
+    perQuery("shuffle_bytes")((_, t) => long(t.shuffleWriteBytes + t.shuffleReadBytes))
+    perQuery("spilled_bytes")((_, t) => long(t.spillBytes))
+    perQuery("peak_exec_mem")((_, t) => long(t.peakExecutionMemory))
+    // executor CPU per query (ms) — separates real compute from
+    // scheduling/latency floors when picking optimization targets
+    perQuery("cpu_ms")((_, t) => long(t.cpuNs / 1000000L))
+    // where the wall time went: build (which runs Spark jobs) vs count()
+    perQuery("build_s")((r, _) => secs(r.buildS))
+    perQuery("exec_s")((r, _) => secs(r.execS))
+    perQuery("jobs")((_, t) => long(t.jobs))
+    perQuery("stages")((_, t) => long(t.stages))
+    perQuery("tasks")((_, t) => long(t.tasks))
+    perQuery("worst_stage")((_, t) => json.createObjectNode().put("n", t.worst.fold(0)(_.n))
+      .set[ObjectNode]("max_s", secs(t.worst.fold(0.0)(_.maxMs / 1e3)))
+      .set[ObjectNode]("median_s", secs(t.worst.fold(0.0)(_.medianMs / 1e3))))
+    val reruns = full.putObject("reruns")
+    rerunLog.foreach { case (n, (a, b, failed)) =>
+      val e = reruns.putArray(n).add(secs(a)).add(secs(b))
+      if (failed.nonEmpty) e.add(failed.mkString("replay-incomplete:", ",", ""))
+    }
+    full.put("sf", sfDir)
+    val fullJson = json.writeValueAsString(full)
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       (fullJson + "\n").getBytes("UTF-8"))
     catch { case e: Exception => System.err.println(s"[bench] BENCH_FULL.json: $e") }
@@ -218,14 +234,18 @@ object Bench {
     // budget ahead of any timing; then slowest-first. Stop at the first
     // entry that doesn't fit so the order labels stay accurate (a greedy
     // fill would sneak shorter-named fast entries past omitted slow ones).
-    val sb = new StringBuilder
-    var omitted = 0
-    results.sortBy(r => if (r._2 < 0) Double.MinValue else -r._2).foreach { r =>
-      val e = "\"" + r._1 + "\":" + fmt(r._2)
-      if (omitted == 0 && sb.length + e.length < 1450) {
-        if (sb.nonEmpty) sb.append(','); sb.append(e)
+    val tail = header()
+    val kept = tail.putObject("queries")
+    var (bytes, omitted) = (0, 0)
+    results.sortBy(r => if (r.secs < 0) Double.MinValue else -r.secs).foreach { r =>
+      val e = "\"" + r.name + "\":" + secs(r.secs).asText
+      if (omitted == 0 && bytes + e.length < 1450) {
+        bytes += (if (bytes > 0) 1 else 0) + e.length
+        kept.set[ObjectNode](r.name, secs(r.secs))
       } else omitted += 1
     }
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{$sb},"queries_order":"failures_then_slowest_first","omitted_fastest":$omitted,"reruns":${rerunLog.size},"full":"BENCH_FULL.json","sf":"$sfDir"}""")
+    tail.put("queries_order", "failures_then_slowest_first").put("omitted_fastest", omitted)
+      .put("reruns", rerunLog.size).put("full", "BENCH_FULL.json").put("sf", sfDir)
+    println(json.writeValueAsString(tail))
   }
 }

@@ -1,14 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
 
-import scala.collection.concurrent.TrieMap
-import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import org.apache.spark.GraftSparkBridge.waitListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions.{col, lit, max, min}
@@ -58,51 +54,14 @@ object Diag {
     if (stats.exists(_ < 0)) -1 else (0 +: stats).max
   }
 
-  /** The median of a non-empty sample; the mean of the middle two for even n. */
-  def median(xs: Seq[Long]): Double = {
-    val s = xs.sorted
-    val n = s.length
-    if (n % 2 == 1) s(n / 2).toDouble else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
-
-  /** Job and task counters, reset before each query. */
-  private final class Probe extends SparkListener {
-    val jobs    = new AtomicLong
-    val tasks   = new AtomicLong
-    val runMs   = new AtomicLong
-    val cpuMs   = new AtomicLong
-    val gcMs    = new AtomicLong
-    val fetchMs = new AtomicLong
-    /** Task run times per stage, each buffer appended under its own lock. */
-    val stages  = TrieMap.empty[Int, ArrayBuffer[Long]]
-
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
-      tasks.incrementAndGet()
-      runMs.addAndGet(m.executorRunTime)
-      cpuMs.addAndGet(m.executorCpuTime / 1000000L)
-      gcMs.addAndGet(m.jvmGCTime)
-      fetchMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
-      val b = stages.getOrElseUpdate(e.stageId, ArrayBuffer.empty[Long])
-      b.synchronized { b += m.executorRunTime }
+  /** Tasks, stages and executor time, and the stage with the most task time. */
+  private def summary(s: Trace.Stats): String = {
+    val top = s.worst.fold("") { w =>
+      f", top stage ${w.stageId}: n=${w.n} max=${w.maxMs / 1e3}%.2f med=${w.medianMs / 1e3}%.2f s"
     }
-
-    def reset(): Unit = {
-      Seq(jobs, tasks, runMs, cpuMs, gcMs, fetchMs).foreach(_.set(0))
-      stages.clear()
-    }
-
-    /** Tasks, stages and times so far, and the stage with the most task time. */
-    def summary: String = {
-      val perStage = stages.toSeq.map { case (id, b) => id -> b.synchronized(b.toVector) }
-      val top = perStage.sortBy(-_._2.sum).headOption.fold("") { case (id, ts) =>
-        f", top stage $id: n=${ts.length} max=${ts.max / 1e3}%.2f med=${median(ts) / 1e3}%.2f s"
-      }
-      f"${tasks.get} tasks in ${perStage.size} stages, run ${runMs.get / 1e3}%.1f s, " +
-        f"cpu ${cpuMs.get / 1e3}%.1f s, gc ${gcMs.get / 1e3}%.1f s, " +
-        f"fetch wait ${fetchMs.get / 1e3}%.1f s$top"
-    }
+    f"${s.tasks} tasks in ${s.stages} stages, run ${s.runMs / 1e3}%.1f s, " +
+      f"cpu ${s.cpuNs / 1e9}%.1f s, gc ${s.gcMs / 1e3}%.1f s, " +
+      f"fetch wait ${s.fetchWaitMs / 1e3}%.1f s$top"
   }
 
   /** Runs each named query (build, cold count, warm count) over `sfDir`,
@@ -111,26 +70,17 @@ object Diag {
   def plan(spark: SparkSession, sfDir: String, names: Seq[String],
       outDir: Option[String], tag: String = ""): Seq[String] = {
     val declared = SparkEntry.queries
-    val probe = new Probe
+    val trace = new Trace
     val sc = spark.sparkContext
-    sc.addSparkListener(probe)
+    sc.addSparkListener(trace)
     outDir.foreach(d => Files.createDirectories(Paths.get(d)))
     def write(name: String, df: DataFrame): Unit = outDir.foreach { d =>
       Files.write(Paths.get(d, s"$name.txt"),
         df.queryExecution.explainString(FormattedMode).getBytes("UTF-8"))
     }
-    def phase[T](f: => T): (T, String) = {
-      val (j0, t0) = (probe.jobs.get, System.nanoTime())
-      val r = f
-      val s = (System.nanoTime() - t0) / 1e9
-      waitListenerBus(sc, 10000L)
-      (r, f"$s%.2f s/${probe.jobs.get - j0} jobs")
-    }
     try names.filter { name =>
       try {
-        waitListenerBus(sc, 10000L)
-        probe.reset()
-        val (df, build) = phase(declared(name)(spark, sfDir))
+        val (df, build) = Metrics.observe(spark, name, "build")(declared(name)(spark, sfDir))
         // ReusedExchange re-reads an existing shuffle — not a new exchange
         val initial = df.queryExecution.executedPlan.toString
         val xchg  = "(?<!Reused)(?<!Broadcast)Exchange".r.findAllIn(initial).length
@@ -139,20 +89,24 @@ object Diag {
         val flags = Seq("CartesianProduct" -> " CARTESIAN", "BroadcastNestedLoopJoin" -> " bnlj")
           .collect { case (op, flag) if initial.contains(op) => flag }.mkString
         write(name, df)
-        val (rows, cold) = phase(df.count())
-        val (_, warm) = phase(df.count())
-        val tasks = probe.summary
+        val (rows, cold) = Metrics.observe(spark, name, "cold")(df.count())
+        val (_, warm) = Metrics.observe(spark, name, "warm")(df.count())
+        waitListenerBus(sc, 10000L)
+        val traced = trace.snapshot
+        def jobs(p: String, s: Double): String =
+          f"$s%.2f s/${traced.get((name, p)).fold(0L)(_.jobs)} jobs"
         val method = maxMethodBytes(df)
         write(s"${name}_final", df)
         val huge = if (method > HugeMethodLimit) " HUGE" else ""
-        println(s"[diag] $tag$name: build $build, cold $cold, warm $warm, $rows rows; " +
-          s"$tasks; max method $method B$huge; xchg $xchg bcast $bcast sort $sort$flags")
+        println(s"[diag] $tag$name: build ${jobs("build", build)}, cold ${jobs("cold", cold)}, " +
+          s"warm ${jobs("warm", warm)}, $rows rows; ${summary(trace.total(name))}; " +
+          s"max method $method B$huge; xchg $xchg bcast $bcast sort $sort$flags")
         false
       } catch { case NonFatal(e) =>
         System.err.println(s"[diag] $tag$name failed: $e")
         true
       }
-    } finally sc.removeSparkListener(probe)
+    } finally sc.removeSparkListener(trace)
   }
 
   /** Key domains: a foreign key shifts with its primary key. */

@@ -1,94 +1,136 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Per-query engine observability (SURVEY §2 R23). The reference's one
   * operational virtue is structured per-batch logs (sql_to_line.py:30-36,
   * 113-131: rows touched, batch id, timings); this is the engine analog:
-  * a SparkListener that attributes executor task metrics — shuffle bytes,
-  * spill, peak execution memory, input records, CPU time — to the logical
-  * query that ran them, keyed by a job-local property so concurrent
-  * queries on one session don't cross-contaminate. Bench dumps the
-  * snapshot into its JSON line (per-query shuffle/spill bytes).
+  * the one SparkListener, which attributes executor task metrics to the
+  * (query, phase) named by the job-local properties [[Metrics.observe]]
+  * sets, so concurrent queries on one session don't cross-contaminate and
+  * a job outside any query is not counted. Bench and `Diag plan` read it.
+  *
+  * Each stage's task run times are kept only while it runs and fold into
+  * its key's worst stage when it completes, so memory stays bounded by the
+  * running stages plus one [[Trace.Stats]] per key. Callbacks arrive on
+  * the listener bus after the fact — flush it
+  * (GraftSparkBridge.waitListenerBus) before reading.
   */
-final class QueryStats {
-  val tasks             = new LongAdder
-  val inputRecords      = new LongAdder
-  val shuffleReadBytes  = new LongAdder
-  val shuffleWriteBytes = new LongAdder
-  val memorySpilled     = new LongAdder
-  val diskSpilled       = new LongAdder
-  val cpuTimeNs         = new LongAdder
-  @volatile var peakExecutionMemory = 0L
+final class Trace extends SparkListener {
+  import Trace._
 
-  private[graft] def bumpPeak(p: Long): Unit = synchronized {
-    if (p > peakExecutionMemory) peakExecutionMemory = p
+  private val stats     = mutable.HashMap.empty[Key, Stats]
+  private val stageKey  = mutable.HashMap.empty[Int, Key]
+  private val jobStages = mutable.HashMap.empty[Int, Seq[Int]]
+  /** Task run times (ms) of each running attributed stage. */
+  private val running   = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Long]]
+
+  private def add(k: Key, s: Stats): Unit = stats(k) = stats.getOrElse(k, Stats()) + s
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    Option(e.properties).filter(_.getProperty(Metrics.QueryKey) != null).foreach { p =>
+      val k = (p.getProperty(Metrics.QueryKey), p.getProperty(Metrics.PhaseKey))
+      add(k, Stats(jobs = 1))
+      e.stageIds.foreach(stageKey(_) = k)
+      jobStages(e.jobId) = e.stageIds
+    }
   }
+
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+    val id = e.stageInfo.stageId
+    if (stageKey.contains(id)) running.getOrElseUpdate(id, mutable.ArrayBuffer.empty)
+  }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    for (k <- stageKey.get(e.stageId); m <- Option(e.taskMetrics)) {
+      add(k, Stats(tasks = 1, inputRecords = m.inputMetrics.recordsRead,
+        shuffleReadBytes = m.shuffleReadMetrics.totalBytesRead,
+        shuffleWriteBytes = m.shuffleWriteMetrics.bytesWritten,
+        spillBytes = m.memoryBytesSpilled + m.diskBytesSpilled,
+        peakExecutionMemory = m.peakExecutionMemory, cpuNs = m.executorCpuTime,
+        runMs = m.executorRunTime, gcMs = m.jvmGCTime,
+        fetchWaitMs = m.shuffleReadMetrics.fetchWaitTime))
+      running.get(e.stageId).foreach(_ += m.executorRunTime)
+    }
+  }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    synchronized(fold(e.stageInfo.stageId))
+
+  // a job's end drops its stages' keys (their task ends precede it), so a
+  // long-lived session does not keep one entry per stage forever
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    jobStages.remove(e.jobId).foreach(_.foreach { id => fold(id); stageKey.remove(id) })
+  }
+
+  private def fold(id: Int): Unit =
+    for (ts <- running.remove(id) if ts.nonEmpty; k <- stageKey.get(id)) {
+      val s = ts.toVector.sorted
+      add(k, Stats(stages = 1, worst = Some(StageSpread(id, s.length, s.last, median(s), s.sum))))
+    }
+
+  /** Counters per (query, phase) so far. */
+  def snapshot: Map[Key, Stats] = synchronized(stats.toMap)
+
+  /** `query`'s counters summed over its phases. */
+  def total(query: String): Stats =
+    snapshot.collect { case ((`query`, _), s) => s }.foldLeft(Stats())(_ + _)
 }
 
-/** Attributes task metrics to queries via [[Metrics.QueryKey]]: the job's
-  * local properties carry the query name (set by [[Metrics.observe]]); job
-  * start maps its stages to that name; task end folds the task's metrics
-  * into the owning query's accumulators. Listener callbacks are
-  * asynchronous — flush the bus (GraftSparkBridge.waitListenerBus) before
-  * reading a snapshot.
-  */
-final class QueryMetricsListener extends SparkListener {
-  private val stageToQuery = TrieMap.empty[Int, String]
-  private val jobToStages  = TrieMap.empty[Int, Seq[Int]]
-  private val stats        = TrieMap.empty[String, QueryStats]
+object Trace {
+  /** (query, phase), from [[Metrics.QueryKey]] and [[Metrics.PhaseKey]]. */
+  type Key = (String, String)
 
-  override def onJobStart(js: SparkListenerJobStart): Unit = {
-    val q = Option(js.properties).map(_.getProperty(Metrics.QueryKey)).orNull
-    if (q != null) {
-      js.stageIds.foreach(sid => stageToQuery.put(sid, q))
-      jobToStages.put(js.jobId, js.stageIds)
-    }
+  /** One stage's task run times: count, max and median (ms), and their sum. */
+  final case class StageSpread(stageId: Int, n: Int, maxMs: Long, medianMs: Double, sumMs: Long)
+
+  /** Counters of one key; `worst` is its stage with the most task time. */
+  final case class Stats(jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
+      inputRecords: Long = 0, shuffleReadBytes: Long = 0, shuffleWriteBytes: Long = 0,
+      spillBytes: Long = 0, peakExecutionMemory: Long = 0, cpuNs: Long = 0,
+      runMs: Long = 0, gcMs: Long = 0, fetchWaitMs: Long = 0,
+      worst: Option[StageSpread] = None) {
+    def +(o: Stats): Stats = Stats(jobs + o.jobs, stages + o.stages, tasks + o.tasks,
+      inputRecords + o.inputRecords, shuffleReadBytes + o.shuffleReadBytes,
+      shuffleWriteBytes + o.shuffleWriteBytes, spillBytes + o.spillBytes,
+      peakExecutionMemory max o.peakExecutionMemory, cpuNs + o.cpuNs, runMs + o.runMs,
+      gcMs + o.gcMs, fetchWaitMs + o.fetchWaitMs, (worst ++ o.worst).maxByOption(_.sumMs))
   }
 
-  // prune the stage→query index when its job finishes (task-end events for
-  // a stage precede its job's end) — a long-lived session must not accrete
-  // one entry per stage forever
-  override def onJobEnd(je: SparkListenerJobEnd): Unit =
-    jobToStages.remove(je.jobId).foreach(_.foreach(stageToQuery.remove))
-
-  override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-    stageToQuery.get(te.stageId).foreach { q =>
-      val m = te.taskMetrics
-      if (m != null) {
-        val s = stats.getOrElseUpdate(q, new QueryStats)
-        s.tasks.increment()
-        s.inputRecords.add(m.inputMetrics.recordsRead)
-        s.shuffleReadBytes.add(m.shuffleReadMetrics.totalBytesRead)
-        s.shuffleWriteBytes.add(m.shuffleWriteMetrics.bytesWritten)
-        s.memorySpilled.add(m.memoryBytesSpilled)
-        s.diskSpilled.add(m.diskBytesSpilled)
-        s.cpuTimeNs.add(m.executorCpuTime)
-        s.bumpPeak(m.peakExecutionMemory)
-      }
-    }
-
-  /** Current per-query stats (live objects — read after a bus flush). */
-  def snapshot: Map[String, QueryStats] = stats.readOnlySnapshot().toMap
+  /** The median of a non-empty sample; the mean of the middle two for even n. */
+  def median(xs: Seq[Long]): Double = {
+    val s = xs.sorted
+    val n = s.length
+    if (n % 2 == 1) s(n / 2).toDouble else (s(n / 2 - 1) + s(n / 2)) / 2.0
+  }
 }
 
 object Metrics {
   /** Job-local property carrying the logical query name. */
   final val QueryKey = "graft.query.name"
 
-  /** Run `f` with all jobs it spawns attributed to `name`. */
-  def observe[T](spark: SparkSession, name: String)(f: => T): T = {
-    spark.sparkContext.setLocalProperty(QueryKey, name)
-    try f finally spark.sparkContext.setLocalProperty(QueryKey, null)
+  /** Job-local property carrying the query's phase (e.g. build, exec). */
+  final val PhaseKey = "graft.query.phase"
+
+  /** Runs `f` with every job it spawns attributed to (`name`, `phase`) in
+    * [[Trace]]; returns `f`'s value and its wall seconds.
+    */
+  def observe[T](spark: SparkSession, name: String, phase: String)(f: => T): (T, Double) = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(QueryKey, name)
+    sc.setLocalProperty(PhaseKey, phase)
+    val t0 = System.nanoTime()
+    try (f, (System.nanoTime() - t0) / 1e9)
+    finally Seq(QueryKey, PhaseKey).foreach(sc.setLocalProperty(_, null))
   }
 }
 
-/** Streaming twin of [[QueryMetricsListener]] (R23 for the streaming
+/** Streaming twin of [[Trace]] (R23 for the streaming
   * plane): per-micro-batch input rows, processed-rows/sec, state-store
   * rows and watermark, keyed by query name — what an operator watches to
   * know a stream is keeping up (input rate vs processing rate) and that

@@ -1,6 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -31,20 +32,8 @@ object Verify {
         rm(new java.io.File(s"$outDir/$name"))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => only(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(SparkEntry.oracleSql.filter(kv => only(kv._1)).asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

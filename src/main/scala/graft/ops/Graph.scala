@@ -66,6 +66,16 @@ object Graph {
   /** Fixed label-propagation rounds (q_labelprop). */
   final val LpIters = 4
 
+  /** Both directions of an undirected (d1, d2) pair list as (v, w) edges. */
+  private def bothWays(p: DataFrame): DataFrame =
+    p.select(col("d1").as("v"), col("d2").as("w"))
+      .union(p.select(col("d2").as("v"), col("d1").as("w")))
+
+  /** The round loops' edges, checkpointed once, partitioned on the join key v. */
+  private def loopEdges(pairs: DataFrame): DataFrame =
+    bothWays(pairs.select(col("d1"), col("d2")).localCheckpoint())
+      .repartition(col("v")).localCheckpoint()
+
   /** Bounded-hop min-label propagation over an undirected pair list:
     * label₀(v) = v; each round label(v) ← min(label(v), min over
     * neighbors). After R rounds label(v) = min vertex id within graph
@@ -78,10 +88,7 @@ object Graph {
     * labels checkpoint per round; per round one keyed join + one groupBy.
     */
   private[graft] def labelProp(pairs: DataFrame, iters: Int = LpIters): DataFrame = {
-    val p = pairs.select(col("d1"), col("d2")).localCheckpoint()
-    val edges = p.select(col("d1").as("v"), col("d2").as("w"))
-      .union(p.select(col("d2").as("v"), col("d1").as("w")))
-      .repartition(col("v")).localCheckpoint()
+    val edges = loopEdges(pairs)
     var lbl = edges.select(col("v")).distinct()
       .withColumn("lbl", col("v")).localCheckpoint()
     for (_ <- 1 to iters) {
@@ -118,37 +125,15 @@ object Graph {
     * ×50 vs 33 s with the checkpoints, SCALING.md).
     */
   private[graft] def pageRank(pairs: DataFrame, iters: Int = PrIters): DataFrame = {
-    val p = pairs.select(col("d1"), col("d2")).localCheckpoint()
-    val edges = p.select(col("d1").as("v"), col("d2").as("w"))
-      .union(p.select(col("d2").as("v"), col("d1").as("w")))
-      .repartition(col("v")).localCheckpoint()
-    // Loop-INVARIANT state materializes ONCE (round 16): deg and nn are
-    // pure functions of the checkpointed edge list, but referencing their
-    // PLANS inside the loop re-ran the E-sized degree aggregation and the
-    // nn broadcast chain in EVERY round's checkpoint job (measured at
-    // sf0.1: 1.79M directed edges × PrIters redundant agg passes). One
-    // V-sized checkpoint (still partitioned on v, so the per-round join
-    // with contrib stays exchange-free) removes them; the per-round values
-    // are bit-identical — same integers from the same aggregation.
+    val edges = loopEdges(pairs)
     val deg = edges.groupBy("v").agg(count(lit(1)).as("deg"))
-    val degN = deg
-      .crossJoin(broadcast(deg.agg(count(lit(1)).as("nn")))) // single-row
+    // every vertex a seed (ns = n): the seeded base term is 0.15·10⁶/n
+    val base = deg
+      .crossJoin(broadcast(deg.agg(count(lit(1)).as("ns")))) // single-row
+      .withColumn("is_seed", lit(true))
       .localCheckpoint()
-    var r = degN
-      .select(col("v"), col("deg"), col("nn"),
-        round(lit(1000000.0) / col("nn")).cast("long").as("pr"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contrib = edges.join(r.select(col("v"), expr("pr div deg").as("c")), "v")
-        .groupBy(col("w").as("v")).agg(sum("c").as("csum"))
-      r = degN
-        .join(contrib, Seq("v"), "left")
-        .select(col("v"), col("deg"), col("nn"),
-          round(lit(150000.0) / col("nn")
-            + lit(0.85) * coalesce(col("csum"), lit(0L))).cast("long").as("pr"))
-        .localCheckpoint()
-    }
-    r.select(col("v").as("doc_id"), col("deg"), col("pr").as("pr_micro"))
+    rankLoop(edges, base, iters)
+      .select(col("v").as("doc_id"), col("deg"), col("pr").as("pr_micro"))
   }
 
   /** Personalized PageRank (Page et al. 1999 §6; Jeh & Widom 2002): the
@@ -161,10 +146,7 @@ object Graph {
     */
   private[graft] def pprSeeded(pairs: DataFrame, docs: DataFrame,
       iters: Int = PrIters): DataFrame = {
-    val p = pairs.select(col("d1"), col("d2")).localCheckpoint()
-    val edges = p.select(col("d1").as("v"), col("d2").as("w"))
-      .union(p.select(col("d2").as("v"), col("d1").as("w")))
-      .repartition(col("v")).localCheckpoint()
+    val edges = loopEdges(pairs)
     val deg = edges.groupBy("v").agg(count(lit(1)).as("deg"))
     // one seed per source: max (deg, lowest id) — |sources|-bounded frame
     val seeds = deg.join(docs.select(col("doc_id").as("v"), col("source")), "v")
@@ -173,15 +155,25 @@ object Graph {
       .select((-col("m.nv")).as("v"))
     val ns = seeds.agg(count(lit(1)).as("ns")) // single-row: allowlisted class
     val sd = seeds.withColumn("is_seed", lit(true))
-    // loop-invariant base frame checkpointed ONCE (the pageRank rationale):
-    // deg/ns/sd are functions of the checkpointed edges+docs, and inlining
-    // their plans in the loop re-ran the E-sized degree agg, the seed
-    // derivation and both broadcasts every round. Values are identical.
     val base = deg.crossJoin(broadcast(ns))
       .join(broadcast(sd), Seq("v"), "left")
       .select(col("v"), col("deg"), col("ns"),
         coalesce(col("is_seed"), lit(false)).as("is_seed"))
       .localCheckpoint()
+    rankLoop(edges, base, iters)
+      .select(col("v").as("doc_id"), col("deg"), col("is_seed"), col("pr").as("ppr_micro"))
+  }
+
+  /** The integer-micro recurrence above from `base` (v, deg, ns, is_seed):
+    * only seeds start with and are paid the 0.15 teleport mass, split ns ways.
+    * `base` is loop-invariant and must be a V-sized checkpoint (round 16):
+    * referencing its plan inside the loop re-ran the E-sized degree
+    * aggregation, the seed derivation and the broadcasts in EVERY round's
+    * checkpoint job (sf0.1: 1.79M directed edges × PrIters redundant agg
+    * passes). Still partitioned on v, it keeps the per-round join with the
+    * contributions exchange-free; the values are bit-identical.
+    */
+  private def rankLoop(edges: DataFrame, base: DataFrame, iters: Int): DataFrame = {
     var r = base
       .select(col("v"), col("deg"), col("ns"), col("is_seed"),
         when(col("is_seed"),
@@ -199,8 +191,7 @@ object Graph {
             + lit(0.85) * coalesce(col("csum"), lit(0L))).cast("long").as("pr"))
         .localCheckpoint()
     }
-    r.select(col("v").as("doc_id"), col("deg"), col("is_seed"),
-      col("pr").as("ppr_micro"))
+    r
   }
 
   /** One unrolled personalized round: pp_r{k-1} → pp_r{k}. */
@@ -690,8 +681,7 @@ object Graph {
     * argument).
     */
   private[graft] def degreeAssortativity(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(col("d1").as("v"), col("d2").as("w"))
-      .union(pairs.select(col("d2").as("v"), col("d1").as("w")))
+    val e = bothWays(pairs)
     val deg = e.groupBy("v").agg(count(lit(1)).as("deg"))
     // Moment folding (round 15): the straightforward xy formulation joins
     // deg onto the E-sized directed edge list TWICE (x then y — two
@@ -744,9 +734,7 @@ object Graph {
     // partitioning) — there was nothing to save, and the reorder's
     // groupBy(v) over a w-partitioned copy ADDED an edge-sized exchange.
     val (edges, nEdges) = Observed.checkpoint(
-      p.select(col("d1").as("v"), col("d2").as("w"))
-        .union(p.select(col("d2").as("v"), col("d1").as("w")))
-        .repartition(col("v")), count(lit(1)))
+      bothWays(p).repartition(col("v")), count(lit(1)))
     // alive₀ is every vertex of the symmetric edge list, so round 1 needs
     // no semi-joins: its degrees are the full ones, counted in |V| groups
     val (deg, nV) = Observed.checkpoint(

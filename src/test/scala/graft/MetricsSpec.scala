@@ -3,28 +3,65 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** The observability listener (R23) attributes task metrics to the query
-  * named by the job-local property — the per-batch-log analog.
+  * and phase named by the job-local properties — the per-batch-log analog.
   */
 class MetricsSpec extends SparkSpec {
 
+  private def traced(body: Trace => Unit): Unit = {
+    val t = new Trace
+    spark.sparkContext.addSparkListener(t)
+    try body(t) finally spark.sparkContext.removeSparkListener(t)
+  }
+
+  private def flush(): Unit =
+    org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext, 10000)
+
   test("listener attributes shuffle bytes and input records to the observed query") {
-    val l = new QueryMetricsListener
-    spark.sparkContext.addSparkListener(l)
-    try {
-      Metrics.observe(spark, "probe_agg") {
+    traced { l =>
+      Metrics.observe(spark, "probe_agg", "exec") {
         Tables.orders(spark, sfDir).groupBy("o_orderstatus")
           .agg(count(lit(1))).collect()
       }
       Tables.orders(spark, sfDir).count() // unobserved: must NOT be attributed
-      org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext, 10000)
-      val s = l.snapshot("probe_agg")
-      assert(s.tasks.sum > 0, "no tasks attributed")
-      assert(s.inputRecords.sum > 0, "no input records attributed")
-      assert(s.shuffleWriteBytes.sum > 0, "groupBy must write shuffle bytes")
-      assert(s.shuffleReadBytes.sum > 0, "groupBy must read shuffle bytes")
-      assert(l.snapshot.keySet === Set("probe_agg"),
+      flush()
+      val s = l.snapshot(("probe_agg", "exec"))
+      assert(s.tasks > 0, "no tasks attributed")
+      assert(s.inputRecords > 0, "no input records attributed")
+      assert(s.shuffleWriteBytes > 0, "groupBy must write shuffle bytes")
+      assert(s.shuffleReadBytes > 0, "groupBy must read shuffle bytes")
+      assert(l.snapshot.keySet === Set(("probe_agg", "exec")),
         "unobserved job leaked into the metrics")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
+  test("a query's build and exec phases accumulate separately") {
+    traced { l =>
+      val (built, _) = Metrics.observe(spark, "m_phases", "build") {
+        Tables.orders(spark, sfDir).groupBy("o_custkey")
+          .agg(count(lit(1)).as("n")).localCheckpoint()
+      }
+      Metrics.observe(spark, "m_phases", "exec")(
+        built.groupBy("n").agg(count(lit(1))).collect())
+      flush()
+      val phases = l.snapshot
+      assert(phases.keySet === Set(("m_phases", "build"), ("m_phases", "exec")))
+      for ((key, s) <- phases) {
+        assert(s.jobs >= 1, s"$key ran no job")
+        assert(s.stages >= 2, s"$key: a shuffle runs a map and a reduce stage")
+        val w = s.worst.getOrElse(fail(s"$key has no worst stage"))
+        assert(w.n >= 1 && w.n <= s.tasks, s"$key: worst stage n=${w.n} of ${s.tasks} tasks")
+        assert(w.maxMs >= w.medianMs)
+      }
+      val total = l.total("m_phases")
+      assert(total.tasks === phases.values.map(_.tasks).sum)
+      assert(total.jobs === phases.values.map(_.jobs).sum)
+    }
+  }
+
+  test("stage median is the true median") {
+    assert(Trace.median(Seq(5L)) === 5.0)
+    assert(Trace.median(Seq(9L, 1L, 4L)) === 4.0)
+    assert(Trace.median(Seq(1L, 2L, 10L, 3L)) === 2.5)
   }
 
   test("Observed.checkpoint: the checkpoint's one job yields the aggregate; empty reads 0") {
@@ -40,8 +77,6 @@ class MetricsSpec extends SparkSpec {
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    def flush(): Unit =
-      org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext, 10000)
     spark.sparkContext.addSparkListener(l)
     try {
       flush()
@@ -58,20 +93,18 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("two observed queries accumulate independently") {
-    val l = new QueryMetricsListener
-    spark.sparkContext.addSparkListener(l)
-    try {
-      Metrics.observe(spark, "m_scan")(
+    traced { l =>
+      Metrics.observe(spark, "m_scan", "exec")(
         Tables.region(spark, sfDir).collect())
-      Metrics.observe(spark, "m_join") {
+      Metrics.observe(spark, "m_join", "exec") {
         val n = Tables.nation(spark, sfDir)
         n.join(Tables.region(spark, sfDir), n("n_regionkey") === col("r_regionkey"))
           .collect()
       }
-      org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext, 10000)
-      assert(l.snapshot.keySet === Set("m_scan", "m_join"))
-      assert(l.snapshot("m_scan").inputRecords.sum > 0)
-      assert(l.snapshot("m_join").inputRecords.sum > 0)
-    } finally spark.sparkContext.removeSparkListener(l)
+      flush()
+      assert(l.snapshot.keySet.map(_._1) === Set("m_scan", "m_join"))
+      assert(l.total("m_scan").inputRecords > 0)
+      assert(l.total("m_join").inputRecords > 0)
+    }
   }
 }

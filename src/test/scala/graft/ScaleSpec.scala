@@ -76,10 +76,4 @@ class ScaleSpec extends SparkSpec {
       assert(new File(s"$dir/q_daily_counts_final.txt").isFile)
     }
   }
-
-  test("stage median is the true median") {
-    assert(Diag.median(Seq(5L)) === 5.0)
-    assert(Diag.median(Seq(9L, 1L, 4L)) === 4.0)
-    assert(Diag.median(Seq(1L, 2L, 10L, 3L)) === 2.5)
-  }
 }

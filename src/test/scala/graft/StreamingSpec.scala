@@ -16,14 +16,6 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(minutes: Long): Timestamp = new Timestamp(minutes * 60000L)
 
-  private def runToMemory(df: DataFrame, name: String,
-      mode: String = "append"): DataFrame = {
-    val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
-  }
-
   /** Feed two genuinely separate micro-batches: start the query, drain
     * batch 1, then add batch 2 — so the watermark advances BETWEEN batches
     * (both addData calls before start() would coalesce into one batch).
