@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * suite build theirs here, so they run the same engine settings — `cpus`
   * cores and as many shuffle partitions, the UTC session zone the oracle
   * comparison assumes, no UI, WARN logging. Other settings come from
-  * `spark.*` JVM system properties (`-Dspark.sql.adaptive.enabled=false`).
+  * `spark.*` JVM system properties (`-Dspark.sql.autoBroadcastJoinThreshold=-1`).
   */
 object Session {
 

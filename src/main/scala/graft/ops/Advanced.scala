@@ -75,10 +75,10 @@ object Advanced {
           * 1000000).cast("long"))
     val a = lp.select(col("d"), col("event_type"), col("n0"), col("nd"),
       col("t"), col("lp_micro"))
-    val b = lp.select(col("event_type"), col("d").as("bd"),
+    val b = lp.select(col("event_type").as("b_type"), col("d").as("bd"),
       col("lp_micro").as("lp_prev"))
-    a.join(b, a("event_type") === b("event_type") &&
-        col("bd") === date_sub(a("d"), 1))
+    a.join(b, col("event_type") === col("b_type") &&
+        col("bd") === date_sub(col("d"), 1))
       .groupBy(a("d"))
       .agg(min("nd").as("n_events"),
         sum((col("n0") + 1) * (col("lp_micro") - col("lp_prev")))

@@ -50,84 +50,66 @@ object Corpus {
       maxIters: Int = 15): DataFrame =
     componentCache(spark, (dir, maxIters))(
       componentsOf(spark, Dedup.clusterFrame(spark, dir),
-        Dedup.qualifyingClusterPairs(spark, dir), maxIters)._1)
+        Dedup.qualifyingClusterPairs(spark, dir), maxIters))
 
   /** The CC loop over an explicit cluster graph: `clusters` needs
     * (cid, ms); `pairs` needs (cid, cid2). Returns the (doc_id, keeper)
-    * frame and the number of rounds run — the loop alone, without the
-    * MinHash pipeline.
+    * frame — the loop alone, without the MinHash pipeline. The rounds run
+    * with AQE off ([[Observed.withoutAqe]]): the frames are explicitly
+    * sized by [[ccWidth]], so re-planning every stage of every round is
+    * pure overhead, and all materialization happens inside the block.
     */
   private[graft] def componentsOf(spark: SparkSession, clusters: DataFrame,
-      pairs: DataFrame, maxIters: Int = 15): (DataFrame, Int) = {
-      // AQE re-plans every stage of every round — pure overhead on the
-      // loop's tiny pre-partitioned jobs (the frames are explicitly sized
-      // by ccWidth below, so there is nothing for AQE to fix). All
-      // materialization happens inside this block, so the toggle cannot
-      // leak into other queries' execution.
-      val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try componentsLoop(spark, clusters, pairs, maxIters)
-      finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-  }
-
-  private def componentsLoop(spark: SparkSession, clusters: DataFrame,
-      pairs: DataFrame, maxIters: Int): (DataFrame, Int) = {
-      val cp = pairs.select(col("cid"), col("cid2"))
-      // the cluster graph is usually ≪ docs but can itself be large at
-      // 100 TB: right-size the iterative frames from the MEASURED edge
-      // count so each CC round is a handful of full tasks, not
-      // shuffle.partitions× empty ones (the checkpoint that sizes the loop
-      // observes the count, so it costs no job)
-      val (edges0, nEdges) = Observed.checkpoint(
-        cp.union(cp.select(col("cid2").as("cid"), col("cid").as("cid2")))
-          .select(col("cid"), col("cid2").as("src")), count(lit(1)))
-      val width = ccWidth(spark, nEdges)
-      // edges pre-partitioned by the probe key: every round's big join then
-      // matches labels' (cid-renamed-src) partitioning — ZERO edge shuffle
-      // per round; only label rows (≤ one per cluster) move
-      val edges = edges0.repartition(width, col("src")).localCheckpoint()
-      // labels only ever decrease, so sum(keeper) is a monotone convergence
-      // witness, observed by each labels checkpoint's own job (no join, no
-      // second action). Observed reads a sum over zero rows as 0 (empty
-      // corpus must not NPE).
-      var (labels, curSum) = Observed.checkpoint(
-        clusters.select(col("cid"), col("cid").as("keeper"))
-          .repartition(width, col("cid")), sum(col("keeper")))
-      var prevSum = Long.MaxValue
-      var iter    = 0
-      while (curSum < prevSum && iter < maxIters) {
-        // One fused round: a node probes the labels of (a) its neighbors
-        // and (b) its own keeper — (b) is pointer jumping (keeper :=
-        // keeper-of-keeper), without which min-propagation needs
-        // O(diameter) rounds on chain graphs; with it, O(log n).
-        // label(keeper) ≤ keeper (labels are monotone), so the jump row
-        // both subsumes least(keeper, …) and guarantees every cid
-        // aggregates at least one row — no left-outer fallback needed.
-        val holders = labels.select(col("cid").as("src"), col("keeper").as("lbl"))
-        val nbr  = edges.join(holders, "src").select(col("cid"), col("lbl"))
-        val jump = labels.select(col("cid"), col("keeper").as("src"))
-          .join(holders, "src").select(col("cid"), col("lbl"))
-        val (next, nextSum) = Observed.checkpoint(nbr.union(jump)
-          // groupBy BEFORE re-narrowing: partial aggregation crushes the
-          // per-edge messages map-side, so the round's shuffle moves ≤ one
-          // row per (partition, cluster), not one per edge
-          .groupBy(col("cid")).agg(min(col("lbl")).as("keeper"))
-          // re-narrow every round: the agg widens to shuffle.partitions and
-          // the checkpoint would freeze that width
-          .repartition(width, col("cid")), sum(col("keeper")))
-        labels = next
-        prevSum = curSum
-        curSum = nextSum
-        iter += 1
-      }
-      require(curSum == prevSum,
-        s"connected components did not converge in $maxIters rounds")
-      // fan cluster labels out to members (cid = min member id, so the
-      // component keeper is automatically the min doc id)
-      (clusters.select(col("cid"), explode(col("ms")).as("doc_id"))
-        .join(labels, "cid")
-        .select(col("doc_id"), col("keeper"))
-        .localCheckpoint(), iter)
+      pairs: DataFrame, maxIters: Int = 15): DataFrame =
+      Observed.withoutAqe(spark) {
+    val cp = pairs.select(col("cid"), col("cid2"))
+    // the cluster graph is usually ≪ docs but can itself be large at
+    // 100 TB: right-size the iterative frames from the MEASURED edge
+    // count so each CC round is a handful of full tasks, not
+    // shuffle.partitions× empty ones (the checkpoint that sizes the loop
+    // observes the count, so it costs no job)
+    val (edges0, nEdges) = Observed.checkpoint(
+      cp.union(cp.select(col("cid2").as("cid"), col("cid").as("cid2")))
+        .select(col("cid"), col("cid2").as("src")), count(lit(1)))
+    val width = ccWidth(spark, nEdges)
+    // edges pre-partitioned by the probe key: every round's big join then
+    // matches labels' (cid-renamed-src) partitioning — ZERO edge shuffle
+    // per round; only label rows (≤ one per cluster) move
+    val edges = edges0.repartition(width, col("src")).localCheckpoint()
+    // labels only ever decrease, so sum(keeper) is a sound fixpoint
+    // witness; an empty corpus reads a sum of 0
+    val (labels0, sum0) = Observed.checkpoint(
+      clusters.select(col("cid"), col("cid").as("keeper"))
+        .repartition(width, col("cid")), sum(col("keeper")))
+    val (labels, converged) =
+        Observed.fixpoint(labels0, sum0, sum(col("keeper")), maxIters) { (labels, _) =>
+      // One fused round: a node probes the labels of (a) its neighbors
+      // and (b) its own keeper — (b) is pointer jumping (keeper :=
+      // keeper-of-keeper), without which min-propagation needs
+      // O(diameter) rounds on chain graphs; with it, O(log n).
+      // label(keeper) ≤ keeper (labels are monotone), so the jump row
+      // both subsumes least(keeper, …) and guarantees every cid
+      // aggregates at least one row — no left-outer fallback needed.
+      val holders = labels.select(col("cid").as("src"), col("keeper").as("lbl"))
+      val nbr  = edges.join(holders, "src").select(col("cid"), col("lbl"))
+      val jump = labels.select(col("cid"), col("keeper").as("src"))
+        .join(holders, "src").select(col("cid"), col("lbl"))
+      nbr.union(jump)
+        // groupBy BEFORE re-narrowing: partial aggregation crushes the
+        // per-edge messages map-side, so the round's shuffle moves ≤ one
+        // row per (partition, cluster), not one per edge
+        .groupBy(col("cid")).agg(min(col("lbl")).as("keeper"))
+        // re-narrow every round: the agg widens to shuffle.partitions and
+        // the checkpoint would freeze that width
+        .repartition(width, col("cid"))
+    }
+    require(converged, s"connected components did not converge in $maxIters rounds")
+    // fan cluster labels out to members (cid = min member id, so the
+    // component keeper is automatically the min doc id)
+    clusters.select(col("cid"), explode(col("ms")).as("doc_id"))
+      .join(labels, "cid")
+      .select(col("doc_id"), col("keeper"))
+      .localCheckpoint()
   }
 
   /** The composed corpus-preparation pipeline: quality/language filters

@@ -33,36 +33,6 @@ object Graph {
   /** Fixed PageRank rounds (unrolled in the oracle SQL). */
   final val PrIters = 3
 
-  /** Checkpoint-fusion hygiene (the CC loop's pattern,
-    * [[Corpus]].componentsOf): build a checkpoint chain with AQE DISABLED
-    * and the checkpoints LAZY. AdaptiveSparkPlan.doExecute materializes
-    * its query stages eagerly at `toRdd`, so under AQE even a lazy
-    * localCheckpoint runs its shuffles as separate driver-blocking jobs at
-    * build time; with the toggle + `eager = false` the whole chain
-    * executes inside the consumer's ONE action (stages still parallel;
-    * lineage still truncated — the 463 s vs 33 s ×50 blow-up (SCALING.md) the
-    * checkpoints exist for cannot return). The builder's output wraps
-    * checkpoint RDDs, so the toggle cannot leak into the consumer's own
-    * execution.
-    *
-    * MEASURED DECISION (round 15, sf0.1): applied to [[triangleCounts]]
-    * only (3.8 → 1.4 s; its joins are large self-joins AQE would not
-    * improve). The ROUND loops (labelProp/pageRank/ppr/kCore/kTruss) keep
-    * their eager per-round checkpoints: under AQE-off their per-round
-    * label/contrib/support joins lose the runtime small-side broadcast
-    * conversion and regress outright (kTruss 6.2 → 15.2 s, kCore
-    * 5.3 → 9.4 s measured).
-    * kCore's rounds now stop at the fixpoint; re-measured on a 4-core
-    * host at sf0.1 (all [[KcIters]] rounds still needed), its lazy AQE-off
-    * chain took 8.5–9.4 s against ~5–7 s eager, so the decision stands.
-    */
-  private def lazyLoop(spark: org.apache.spark.sql.SparkSession)
-      (body: => DataFrame): DataFrame = {
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally spark.conf.set("spark.sql.adaptive.enabled", before)
-  }
-
   /** Fixed label-propagation rounds (q_labelprop). */
   final val LpIters = 4
 
@@ -71,10 +41,14 @@ object Graph {
     p.select(col("d1").as("v"), col("d2").as("w"))
       .union(p.select(col("d2").as("v"), col("d1").as("w")))
 
-  /** The round loops' edges, checkpointed once, partitioned on the join key v. */
-  private def loopEdges(pairs: DataFrame): DataFrame =
-    bothWays(pairs.select(col("d1"), col("d2")).localCheckpoint())
-      .repartition(col("v")).localCheckpoint()
+  /** The round loops' directed edges, checkpointed once, partitioned on the
+    * join key v, with their observed count: each round's big join then
+    * reuses the edge partitioning and only the O(V) state rows move.
+    */
+  private def loopEdges(pairs: DataFrame): (DataFrame, Long) =
+    Observed.checkpoint(
+      bothWays(pairs.select(col("d1"), col("d2")).localCheckpoint())
+        .repartition(col("v")), count(lit(1)))
 
   /** Bounded-hop min-label propagation over an undirected pair list:
     * label₀(v) = v; each round label(v) ← min(label(v), min over
@@ -83,21 +57,20 @@ object Graph {
     * components (the pointer-jumping CC in [[Corpus]] converges fully but
     * is rows-only; this walks a FIXED integer trajectory both engines
     * reproduce cell-for-cell, and GraphSpec shows it converges to the CC
-    * labels once rounds reach the graph diameter). Same loop hygiene as
-    * [[pageRank]]: edges checkpoint once pre-partitioned on the join key,
-    * labels checkpoint per round; per round one keyed join + one groupBy.
+    * labels once rounds reach the graph diameter). At most `iters` rounds
+    * of [[Observed.fixpoint]], witnessed by the label sum (labels only
+    * fall); per round one keyed join + one groupBy.
     */
   private[graft] def labelProp(pairs: DataFrame, iters: Int = LpIters): DataFrame = {
-    val edges = loopEdges(pairs)
-    var lbl = edges.select(col("v")).distinct()
-      .withColumn("lbl", col("v")).localCheckpoint()
-    for (_ <- 1 to iters) {
+    val (edges, _) = loopEdges(pairs)
+    val (lbl0, sum0) = Observed.checkpoint(
+      edges.select(col("v")).distinct().withColumn("lbl", col("v")), sum(col("lbl")))
+    val (lbl, _) = Observed.fixpoint(lbl0, sum0, sum(col("lbl")), iters) { (lbl, _) =>
       val nb = edges.join(lbl, "v")
         .groupBy(col("w").as("v")).agg(min("lbl").as("nmin"))
-      lbl = lbl.join(nb, Seq("v"), "left")
+      lbl.join(nb, Seq("v"), "left")
         .select(col("v"),
           least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"))
-        .localCheckpoint()
     }
     lbl.select(col("v").as("doc_id"), col("lbl"))
   }
@@ -114,18 +87,9 @@ object Graph {
   /** PageRank over an undirected (d1, d2) pair list, as the integer-micro
     * recurrence documented above. Every node in the pair list has deg ≥ 1,
     * so there are no dangling nodes.
-    *
-    * Iterative-loop hygiene (same pattern as the CC loop,
-    * [[Corpus]]): the edge list materializes ONCE via localCheckpoint,
-    * pre-partitioned by the per-round join key (so each round's big join
-    * reuses the edge partitioning and only rank rows move), and each
-    * round's rank frame checkpoints to truncate lineage — without this the
-    * upstream pair plan (the whole MinHash pipeline) re-executes per round
-    * per lineage branch and the loop goes super-linear (measured 463 s at
-    * ×50 vs 33 s with the checkpoints, SCALING.md).
     */
   private[graft] def pageRank(pairs: DataFrame, iters: Int = PrIters): DataFrame = {
-    val edges = loopEdges(pairs)
+    val (edges, _) = loopEdges(pairs)
     val deg = edges.groupBy("v").agg(count(lit(1)).as("deg"))
     // every vertex a seed (ns = n): the seeded base term is 0.15·10⁶/n
     val base = deg
@@ -146,7 +110,7 @@ object Graph {
     */
   private[graft] def pprSeeded(pairs: DataFrame, docs: DataFrame,
       iters: Int = PrIters): DataFrame = {
-    val edges = loopEdges(pairs)
+    val (edges, _) = loopEdges(pairs)
     val deg = edges.groupBy("v").agg(count(lit(1)).as("deg"))
     // one seed per source: max (deg, lowest id) — |sources|-bounded frame
     val seeds = deg.join(docs.select(col("doc_id").as("v"), col("source")), "v")
@@ -171,7 +135,9 @@ object Graph {
     * aggregation, the seed derivation and the broadcasts in EVERY round's
     * checkpoint job (sf0.1: 1.79M directed edges × PrIters redundant agg
     * passes). Still partitioned on v, it keeps the per-round join with the
-    * contributions exchange-free; the values are bit-identical.
+    * contributions exchange-free; the values are bit-identical. Each round
+    * checkpoints its rank frame as an [[Observed.fixpoint]] round does, but
+    * all `iters` rounds run: no witness here is sound (see there).
     */
   private def rankLoop(edges: DataFrame, base: DataFrame, iters: Int): DataFrame = {
     var r = base
@@ -423,7 +389,7 @@ object Graph {
     // the bound fails loudly; the engine stops early at the fixpoint). Per
     // round: one alive-semi-join per endpoint + one degree groupBy, all
     // keyed on vertex ids; state is the O(V) alive set, checkpointed per
-    // round (the PageRank loop hygiene).
+    // round ([[Observed.fixpoint]]).
     // DEGREE ASSORTATIVITY of the near-dup graph (Newman 2002, "Assortative
     // mixing in networks"; the networkx convention — Pearson correlation
     // of the degrees at either end of each directed edge): positive =
@@ -552,10 +518,11 @@ object Graph {
     // set is a pure function of the previous round's edge SET), so the
     // engine enumerates triangles degree-ordered (Σ outdeg² wedge bound)
     // while the oracle walks the same rounds id-ordered — identical
-    // trajectories. Unrolled KtIters rounds; GraphSpec asserts fixpoint
-    // at the bound AND agreement with a sequential truss peel. Scale
-    // shape per round: one degree groupBy, one wedge join, one
-    // closing-edge join, one support groupBy — all vertex/edge-keyed.
+    // trajectories. The oracle unrolls KtIters rounds, the engine stops
+    // at the fixpoint; GraphSpec asserts fixpoint at the bound AND
+    // agreement with a sequential truss peel. Scale shape per round: two
+    // degree-lookup joins (the order is computed once), one wedge join,
+    // one closing-edge join, one support groupBy — all vertex/edge-keyed.
     Q("q_ktruss",
       s"""CREATE OR REPLACE TEMP TABLE kt_wd AS
          |${Dedup.simhash128WordsSql}
@@ -635,20 +602,19 @@ object Graph {
       .groupBy("v1", "v2").agg(count(lit(1)).as("sup"))
   }
 
-  /** Fixed-round truss peel over an undirected (d1, d2) pair list — the
-    * engine side of q_ktruss. Loop hygiene: the edge frame checkpoints
-    * per round, AQE is toggled off for the loop body (the componentsOf
-    * rationale — per-round re-planning of pre-sized tiny stages is pure
-    * overhead), and the support frame IS the next edge frame: an edge
-    * with zero triangles never appears in the support aggregation, so
-    * `sup >= K-2` (K ≥ 3) filters the inner-join semantics for free —
-    * no join back to the edge list.
+  /** Truss peel of at most `iters` rounds over an undirected (d1, d2) pair
+    * list — the engine side of q_ktruss, as [[Observed.fixpoint]] rounds
+    * witnessed by the edge count (the edge set only shrinks). AQE stays on
+    * (see [[Observed.withoutAqe]]). The support frame IS the next edge
+    * frame: an edge with zero triangles never appears in the support
+    * aggregation, so `sup >= K-2` (K ≥ 3) filters the inner-join
+    * semantics for free — no join back to the edge list.
     */
   private[graft] def kTruss(pairs: DataFrame, iters: Int = KtIters): DataFrame = {
-    var ec = pairs
+    val (ec, n0) = Observed.checkpoint(pairs
       .select(least(col("d1"), col("d2")).as("v1"),
         greatest(col("d1"), col("d2")).as("v2"))
-      .distinct().repartition(col("v1")).localCheckpoint()
+      .distinct().repartition(col("v1")), count(lit(1)))
     // INITIAL-degree vertex order, computed once (round 16). Orientation by
     // ANY fixed strict total order on vertices enumerates each triangle of
     // the current edge set exactly once at its unique minimal apex, and an
@@ -661,12 +627,9 @@ object Graph {
     // drop (out-neighborhoods shrink monotonically under a fixed order).
     val deg0 = ec.select(col("v1").as("v")).union(ec.select(col("v2").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg")).localCheckpoint()
-    var out = ec.withColumn("sup", lit(0L))
-    for (_ <- 1 to iters) {
-      out = edgeSupports(ec, deg0)
-        .filter(col("sup") >= KtK - 2)
-        .localCheckpoint()
-      ec = out.select("v1", "v2")
+    val (out, _) = Observed.fixpoint(ec.withColumn("sup", lit(0L)), n0,
+        count(lit(1)), iters) { (cur, _) =>
+      edgeSupports(cur.select("v1", "v2"), deg0).filter(col("sup") >= KtK - 2)
     }
     out.select(col("v1").as("d1"), col("v2").as("d2"), col("sup"))
   }
@@ -717,15 +680,12 @@ object Graph {
        |  GROUP BY e.v HAVING count(*) >= (SELECT k FROM kc_k);""".stripMargin
 
   /** k-core peel of at most `iters` rounds over an undirected (d1, d2)
-    * pair list — the engine side of q_kcore_neardup. Same loop hygiene as [[pageRank]]:
-    * edges checkpoint once pre-partitioned on the join key; the alive set
-    * checkpoints per round, observing its own row count ([[Observed]]),
-    * so K and the convergence witness cost no job. alive₍ᵣ₊₁₎ ⊆ alive₍ᵣ₎,
-    * so equal counts mean equal sets and every later round is the
-    * identity: stopping there yields the oracle's [[KcIters]]-round table.
+    * pair list — the engine side of q_kcore_neardup, as
+    * [[Observed.fixpoint]] rounds witnessed by the alive count
+    * (alive₍ᵣ₊₁₎ ⊆ alive₍ᵣ₎). The edge and degree checkpoints observe their
+    * own row counts, so K costs no job either.
     */
   private[graft] def kCore(pairs: DataFrame, iters: Int = KcIters): DataFrame = {
-    val p = pairs.select(col("d1"), col("d2")).localCheckpoint()
     // Round-15 note: an attempted "one edge exchange per round" reorder
     // (w-partitioned edge copy, w-semi first) MEASURED SLOWER (5.3 →
     // 7.1 s build): AQE already broadcasts the ≤|V|-row alive frame into
@@ -733,27 +693,22 @@ object Graph {
     // exchange-free per round (the groupBy(v) reuses the edge
     // partitioning) — there was nothing to save, and the reorder's
     // groupBy(v) over a w-partitioned copy ADDED an edge-sized exchange.
-    val (edges, nEdges) = Observed.checkpoint(
-      bothWays(p).repartition(col("v")), count(lit(1)))
+    val (edges, nEdges) = loopEdges(pairs)
     // alive₀ is every vertex of the symmetric edge list, so round 1 needs
     // no semi-joins: its degrees are the full ones, counted in |V| groups
     val (deg, nV) = Observed.checkpoint(
       edges.groupBy("v").agg(count(lit(1)).as("d")), count(lit(1)))
     // K = |E| div 2·max(|V|, 1): a degenerate empty pair graph must yield
     // k = 0 in BOTH engines (DuckDB's // errors on zero; Spark's div
-    // nulls) — same empty-corpus convention as Corpus.componentsLoop.
+    // nulls) — same empty-corpus convention as Corpus.componentsOf.
     val k = nEdges / (2L * math.max(nV, 1L))
-    var (alive, nAlive) = (deg.select("v"), nV)
-    var (prev, round) = (Long.MaxValue, 0)
-    while (round < iters && nAlive < prev) {
-      val d = if (round == 0) deg else edges
-        .join(alive, Seq("v"), "left_semi")
-        .join(alive.select(col("v").as("w")), Seq("w"), "left_semi")
-        .groupBy("v").agg(count(lit(1)).as("d"))
-      prev = nAlive
-      val (next, n) = Observed.checkpoint(
-        d.filter(col("d") >= k).select("v"), count(lit(1)))
-      alive = next; nAlive = n; round += 1
+    val (alive, _) = Observed.fixpoint(deg.select("v"), nV, count(lit(1)), iters) {
+      (alive, round) =>
+        val d = if (round == 1) deg else edges
+          .join(alive, Seq("v"), "left_semi")
+          .join(alive.select(col("v").as("w")), Seq("w"), "left_semi")
+          .groupBy("v").agg(count(lit(1)).as("d"))
+        d.filter(col("d") >= k).select("v")
     }
     val aliveW = alive.select(col("v").as("w"))
     edges
@@ -769,7 +724,7 @@ object Graph {
     * wedge join and the closing-edge join both key on vertex ids.
     */
   private[graft] def triangleCounts(pairs: DataFrame): DataFrame =
-      lazyLoop(pairs.sparkSession) {
+      Observed.withoutAqe(pairs.sparkSession) {
     val p = pairs.select(col("d1"), col("d2")).localCheckpoint(false)
     val deg = p.select(col("d1").as("v")).union(p.select(col("d2").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))

@@ -29,16 +29,14 @@ object Sinks {
     * Caller contract: `updates` must carry COMPLETE days — the merge
     * replaces each touched day wholesale.
     */
-  def mergeDays(updates: DataFrame, tsCol: String, outDir: String): Unit = {
-    val spark  = updates.sparkSession
-    val before = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try updates.withColumn("date", to_date(col(tsCol)))
+  def mergeDays(updates: DataFrame, tsCol: String, outDir: String): Unit =
+    // a write option, not the session conf: a concurrent query on the
+    // session never sees the dynamic mode
+    updates.withColumn("date", to_date(col(tsCol)))
       .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("date")
       .parquet(outDir)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", before)
-  }
 
   /** The clustering key [[zorderWrite]] sorts by: each dimension is first
     * scaled to the SAME 16-bit range over its observed [min, max], then

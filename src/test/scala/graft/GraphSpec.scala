@@ -199,6 +199,36 @@ class GraphSpec extends SparkSpec {
     assert(peel(KcIters) === (0L to 7L).toSet)
   }
 
+  test("label propagation and k-truss stop at their fixpoint, well under a 50-round cap") {
+    import ops.Graph.{KtIters, LpIters, kTruss, labelProp}
+    import spark.implicits._
+    // an 8-clique (0..7) with the path 7-100-101-102: 102 sits 4 hops from
+    // 0, so the labels settle in LpIters = 4 rounds and round 5 repeats
+    // them; the truss peel drops the triangle-free path in round 1 and
+    // round 2 repeats the clique
+    val clique = for (a <- 0L to 7L; b <- a + 1 to 7L) yield (a, b)
+    val path = Seq(7L, 100L, 101L, 102L).sliding(2).map(p => (p(0), p(1))).toSeq
+    val pairs = (clique ++ path).toDF("d1", "d2")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val cap = 50
+    for ((name, op, bound) <- Seq[(String, Int => org.apache.spark.sql.DataFrame, Int)](
+        ("labelProp", labelProp(pairs, _), LpIters), ("kTruss", kTruss(pairs, _), KtIters))) {
+      val t = new Trace
+      spark.sparkContext.addSparkListener(t)
+      val capped = try {
+        val (df, _) = Metrics.observe(spark, name, "build")(op(cap))
+        org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext, 10000)
+        df
+      } finally spark.sparkContext.removeSparkListener(t)
+      val jobs = t.snapshot((name, "build")).jobs
+      assert(jobs < cap, s"$name ran $jobs build jobs for a $cap-round cap")
+      assert(rows(capped) === rows(op(bound)),
+        s"$name at the fixpoint differs from its $bound-round answer")
+    }
+    assert(rows(labelProp(pairs, LpIters).select("lbl").distinct()) === Set(Seq(0L)))
+    assert(rows(kTruss(pairs, KtIters)).size === clique.size)
+  }
+
   test("k-truss: fixed-round peel reaches the fixpoint and matches a sequential truss") {
     import ops.Graph.{KtIters, KtK, kTruss}
     val pairs = ops.Dedup.simhash128PairsFrom(Tables.documents(spark, sfDir))

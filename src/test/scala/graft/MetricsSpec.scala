@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   */
 class MetricsSpec extends SparkSpec {
 
-  private def traced(body: Trace => Unit): Unit = {
+  private def traced[T](body: Trace => T): T = {
     val t = new Trace
     spark.sparkContext.addSparkListener(t)
     try body(t) finally spark.sparkContext.removeSparkListener(t)
@@ -90,6 +90,37 @@ class MetricsSpec extends SparkSpec {
     assert(Observed.checkpoint(shuffled, max(col("n")))._2 === wantShuffled)
     assert(Observed.checkpoint(orders.filter(lit(false)), sum(col("o_orderkey")))._2 === 0L,
       "a sum over zero rows must read as 0")
+  }
+
+  test("Observed.fixpoint: one job per round, stops at an unchanged witness or the cap") {
+    // counts 9, 8, 7, 6, 6, …: the witness first repeats in round 5
+    val start = spark.range(10).toDF("x").localCheckpoint()
+    def step(cur: org.apache.spark.sql.DataFrame, r: Int) =
+      cur.filter(col("x") < math.max(10 - r, 6))
+    def run(name: String, cap: Int) = traced { l =>
+      var rounds = 0
+      val ((out, fixed), _) = Metrics.observe(spark, name, "build")(
+        Observed.fixpoint(start, 10L, count(lit(1)), cap) { (cur, r) =>
+          rounds += 1
+          assert(r === rounds, "rounds are numbered from 1")
+          step(cur, r)
+        })
+      flush()
+      assert(l.snapshot((name, "build")).jobs === rounds,
+        s"$name: $rounds rounds must run $rounds jobs")
+      (out.count(), fixed, rounds)
+    }
+    assert(run("fx_converges", 50) === ((6L, true, 5)))
+    assert(run("fx_capped", 3) === ((7L, false, 3)),
+      "a cap reached while the witness still moves is not a fixpoint")
+    // an empty frame's sum is NULL and reads 0: one round, and it is a fixpoint
+    val (empty, sum0) = Observed.checkpoint(start.filter(lit(false)), sum(col("x")))
+    assert(sum0 === 0L)
+    var rounds = 0
+    val (out, fixed) = Observed.fixpoint(empty, sum0, sum(col("x")), 5) { (cur, r) =>
+      rounds += 1; step(cur, r)
+    }
+    assert(fixed && rounds === 1 && out.count() === 0L)
   }
 
   test("two observed queries accumulate independently") {
