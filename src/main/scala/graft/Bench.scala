@@ -212,6 +212,11 @@ object Bench {
     perQuery("build_s")((r, _) => secs(r.buildS))
     perQuery("exec_s")((r, _) => secs(r.execS))
     perQuery("jobs")((_, t) => long(t.jobs))
+    // codegen classes compiled per phase (Metrics.observe)
+    val phases = trace.snapshot
+    perQuery("compiles")((r, _) => json.createObjectNode()
+      .put("build", phases.get((r.name, "build")).fold(0L)(_.compiles))
+      .put("exec", phases.get((r.name, "exec")).fold(0L)(_.compiles)))
     perQuery("stages")((_, t) => long(t.stages))
     perQuery("tasks")((_, t) => long(t.tasks))
     perQuery("worst_stage")((_, t) => json.createObjectNode().put("n", t.worst.fold(0)(_.n))

@@ -18,12 +18,13 @@ import org.apache.spark.sql.functions.{col, lit, max, min}
   * }}}
   *
   * `plan` prints one line per query: build, cold-count and warm-count
-  * seconds with the Spark jobs each ran (the session warm-up lands in the
-  * first query's build); the tasks, stages and executor time of those three
-  * phases and the task spread of their heaviest stage; the largest
-  * generated method (`HUGE` above [[HugeMethodLimit]]); and the initial
-  * plan's exchanges, broadcasts and sorts, flagging cartesian products and
-  * nested-loop joins. With `outDir` it also writes each query's formatted
+  * seconds with the Spark jobs each ran and the codegen classes each
+  * compiled (the session warm-up lands in the first query's build); the
+  * tasks, stages and executor time of those three phases and the task
+  * spread of their heaviest stage; the largest generated method (`HUGE`
+  * above [[HugeMethodLimit]]); and the initial plan's exchanges,
+  * broadcasts and sorts, flagging cartesian products and nested-loop
+  * joins. With `outDir` it also writes each query's formatted
   * initial and final plans.
   *
   * `scale` writes every table ×m to `<scratchDir>/x<m>` ([[replicate]]) and
@@ -93,13 +94,15 @@ object Diag {
         val (_, warm) = Metrics.observe(spark, name, "warm")(df.count())
         waitListenerBus(sc, 10000L)
         val traced = trace.snapshot
-        def jobs(p: String, s: Double): String =
-          f"$s%.2f s/${traced.get((name, p)).fold(0L)(_.jobs)} jobs"
+        def phase(p: String, s: Double): String = {
+          val t = traced.getOrElse((name, p), Trace.Stats())
+          f"$s%.2f s/${t.jobs} jobs/${t.compiles} compiles"
+        }
         val method = maxMethodBytes(df)
         write(s"${name}_final", df)
         val huge = if (method > HugeMethodLimit) " HUGE" else ""
-        println(s"[diag] $tag$name: build ${jobs("build", build)}, cold ${jobs("cold", cold)}, " +
-          s"warm ${jobs("warm", warm)}, $rows rows; ${summary(trace.total(name))}; " +
+        println(s"[diag] $tag$name: build ${phase("build", build)}, cold ${phase("cold", cold)}, " +
+          s"warm ${phase("warm", warm)}, $rows rows; ${summary(trace.total(name))}; " +
           s"max method $method B$huge; xchg $xchg bcast $bcast sort $sort$flags")
         false
       } catch { case NonFatal(e) =>

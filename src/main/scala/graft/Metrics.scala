@@ -3,8 +3,10 @@ package graft
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Per-query engine observability (SURVEY §2 R23). The reference's one
@@ -62,6 +64,11 @@ final class Trace extends SparkListener {
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
     synchronized(fold(e.stageInfo.stageId))
 
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case Metrics.Compiled(query, phase, n) => synchronized(add((query, phase), Stats(compiles = n)))
+    case _ =>
+  }
+
   // a job's end drops its stages' keys (their task ends precede it), so a
   // long-lived session does not keep one entry per stage forever
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
@@ -89,17 +96,20 @@ object Trace {
   /** One stage's task run times: count, max and median (ms), and their sum. */
   final case class StageSpread(stageId: Int, n: Int, maxMs: Long, medianMs: Double, sumMs: Long)
 
-  /** Counters of one key; `worst` is its stage with the most task time. */
+  /** Counters of one key; `worst` is its stage with the most task time,
+    * `compiles` the codegen classes compiled in its observed blocks.
+    */
   final case class Stats(jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
       inputRecords: Long = 0, shuffleReadBytes: Long = 0, shuffleWriteBytes: Long = 0,
       spillBytes: Long = 0, peakExecutionMemory: Long = 0, cpuNs: Long = 0,
       runMs: Long = 0, gcMs: Long = 0, fetchWaitMs: Long = 0,
-      worst: Option[StageSpread] = None) {
+      worst: Option[StageSpread] = None, compiles: Long = 0) {
     def +(o: Stats): Stats = Stats(jobs + o.jobs, stages + o.stages, tasks + o.tasks,
       inputRecords + o.inputRecords, shuffleReadBytes + o.shuffleReadBytes,
       shuffleWriteBytes + o.shuffleWriteBytes, spillBytes + o.spillBytes,
       peakExecutionMemory max o.peakExecutionMemory, cpuNs + o.cpuNs, runMs + o.runMs,
-      gcMs + o.gcMs, fetchWaitMs + o.fetchWaitMs, (worst ++ o.worst).maxByOption(_.sumMs))
+      gcMs + o.gcMs, fetchWaitMs + o.fetchWaitMs, (worst ++ o.worst).maxByOption(_.sumMs),
+      compiles + o.compiles)
   }
 
   /** The median of a non-empty sample; the mean of the middle two for even n. */
@@ -117,17 +127,33 @@ object Metrics {
   /** Job-local property carrying the query's phase (e.g. build, exec). */
   final val PhaseKey = "graft.query.phase"
 
+  /** Listener-bus event: `n` codegen classes compiled in one observed block. */
+  final case class Compiled(query: String, phase: String, n: Long) extends SparkListenerEvent
+
   /** Runs `f` with every job it spawns attributed to (`name`, `phase`) in
-    * [[Trace]]; returns `f`'s value and its wall seconds.
+    * [[Trace]]; returns `f`'s value and its wall seconds. The codegen
+    * classes compiled meanwhile, if any, reach [[Trace]] as a [[Compiled]]
+    * event. Spark counts compiles per JVM, so a block on another thread (a
+    * concurrent query, a stream) adds to this block's count; and as its
+    * codegen cache is keyed on the source and the compiling thread's class
+    * loader, in local mode a new whole-stage class compiles twice, once on
+    * the planning thread and once on a task thread.
     */
   def observe[T](spark: SparkSession, name: String, phase: String)(f: => T): (T, Double) = {
     val sc = spark.sparkContext
     sc.setLocalProperty(QueryKey, name)
     sc.setLocalProperty(PhaseKey, phase)
+    val c0 = compiles
     val t0 = System.nanoTime()
     try (f, (System.nanoTime() - t0) / 1e9)
-    finally Seq(QueryKey, PhaseKey).foreach(sc.setLocalProperty(_, null))
+    finally {
+      Seq(QueryKey, PhaseKey).foreach(sc.setLocalProperty(_, null))
+      val n = compiles - c0
+      if (n > 0) org.apache.spark.GraftSparkBridge.post(sc, Compiled(name, phase, n))
+    }
   }
+
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }
 
 /** Streaming twin of [[Trace]] (R23 for the streaming

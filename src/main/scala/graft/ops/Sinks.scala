@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 /** Sinks (SURVEY §2.2): the reference's per-day batching + per-day commit
   * (sql_to_line.py:91,126) maps to date-partitioned parquet with per-task
@@ -13,6 +14,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * reader and bounds any reprocessing to one day — exactly the reference's
   * unit of recovery. (Delta/Iceberg MERGE is the production path; not
   * available offline.)
+  *
+  * Encoding: both day-partitioned writers ([[mergeDays]], [[commitBatch]])
+  * go through one writer that turns Parquet's dictionary off for every
+  * DOUBLE, FLOAT, TIMESTAMP and TIMESTAMP_NTZ leaf column (struct fields
+  * by their dotted path, e.g. `geom.sx`); every other column keeps it. A
+  * continuous value (a coordinate, `lenm`, `sogkt`) or a µs timestamp
+  * rarely repeats within a day file, so its dictionary is either thrown
+  * away when the file closes (the chunk falls back to PLAIN) or kept and
+  * larger than PLAIN, and building it costs a hash lookup per value on
+  * the executor. Strings, integers, booleans and dates repeat (ids,
+  * enums, days) and their dictionaries pay.
   */
 object Sinks {
 
@@ -30,13 +42,34 @@ object Sinks {
     * replaces each touched day wholesale.
     */
   def mergeDays(updates: DataFrame, tsCol: String, outDir: String): Unit =
-    // a write option, not the session conf: a concurrent query on the
-    // session never sees the dynamic mode
-    updates.withColumn("date", to_date(col(tsCol)))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
+    writeDays(updates, tsCol, outDir, dynamic = true)
+
+  /** Writes `df` as parquet partitioned by `date = to_date(tsCol)` into
+    * `dir`, overwriting it, with the per-column encoding rule of the
+    * [[Sinks]] scaladoc. `dynamic` overwrites only the days `df` carries,
+    * else all of `dir`. Both are write options, not session conf: a
+    * concurrent query on the session never sees them.
+    */
+  private def writeDays(df: DataFrame, tsCol: String, dir: String, dynamic: Boolean): Unit = {
+    val days = df.withColumn("date", to_date(col(tsCol)))
+    days.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
+      .options(plainLeaves(days.schema).map(p => s"parquet.enable.dictionary#$p" -> "false").toMap)
       .partitionBy("date")
-      .parquet(outDir)
+      .parquet(dir)
+  }
+
+  /** Dotted Parquet paths of the DOUBLE, FLOAT and timestamp leaves of
+    * `schema`, struct fields included.
+    */
+  private def plainLeaves(schema: StructType, prefix: String = ""): Seq[String] =
+    schema.fields.toSeq.flatMap { f =>
+      f.dataType match {
+        case s: StructType => plainLeaves(s, s"$prefix${f.name}.")
+        case DoubleType | FloatType | TimestampType | TimestampNTZType => Seq(prefix + f.name)
+        case _ => Nil
+      }
+    }
 
   /** The clustering key [[zorderWrite]] sorts by: each dimension is first
     * scaled to the SAME 16-bit range over its observed [min, max], then
@@ -192,11 +225,8 @@ object Sinks {
           .foreach(f => fs.delete(f.getPath, false))
       }
     val staging = new Path(root, s".staging-batch-$batchId")
-    batch.withColumn("date", to_date(col(tsCol)))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("date")
-      .parquet(staging.toString)
+    writeDays(batch.withColumn("batch_id", lit(batchId)), tsCol, staging.toString,
+      dynamic = false)
     // Hadoop FileSystem.rename/mkdirs report failure by RETURNING FALSE,
     // not throwing. Every publish step must be checked: a silently failed
     // rename followed by the staging delete + manifest commit below would

@@ -58,6 +58,21 @@ class MetricsSpec extends SparkSpec {
     }
   }
 
+  test("observe counts codegen compiles per phase: a new shape compiles cold, not warm") {
+    traced { l =>
+      // a literal no other query carries: a source the codegen cache has not seen
+      val salt = System.nanoTime()
+      val df = spark.range(1000).filter(col("id") * lit(salt) =!= lit(salt + 1))
+      Metrics.observe(spark, "m_codegen", "cold")(df.count())
+      Metrics.observe(spark, "m_codegen", "warm")(df.count())
+      flush()
+      val s = l.snapshot
+      assert(s(("m_codegen", "cold")).compiles >= 1, "a new query shape compiled no class")
+      assert(s(("m_codegen", "warm")).compiles === 0, "the warm count recompiled")
+      assert(l.total("m_codegen").compiles === s(("m_codegen", "cold")).compiles)
+    }
+  }
+
   test("stage median is the true median") {
     assert(Trace.median(Seq(5L)) === 5.0)
     assert(Trace.median(Seq(9L, 1L, 4L)) === 4.0)

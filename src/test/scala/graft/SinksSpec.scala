@@ -299,4 +299,63 @@ class SinksSpec extends SparkSpec {
     val manifests = new java.io.File(out, "_manifests").listFiles().map(_.getName)
     assert(manifests.count(_.startsWith("batch-")) === 2, manifests.mkString(","))
   }
+
+  /** Low-cardinality columns of every encoding case over three days: Parquet
+    * keeps a dictionary for each of them unless it is turned off.
+    */
+  private def encodingCases() = spark.range(3000).select(
+    (col("id") % 5).cast("int").as("k"),
+    concat(lit("s"), (col("id") % 4).cast("string")).as("tag"),
+    ((col("id") % 7) * 0.5).as("x"),
+    struct(((col("id") % 3) * 1.25).as("sx"), ((col("id") % 6) * 2.5).as("sy")).as("geom"),
+    timestamp_seconds(lit(1704067200L) + (col("id") % 3) * 86400 + (col("id") % 4) * 3600)
+      .as("ts"))
+
+  /** Whether each chunk of each column path has a dictionary page, over
+    * every parquet file under `dir`, read from the footers.
+    */
+  private def dictionaryPages(dir: String): Map[String, Seq[Boolean]] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(files.nonEmpty, s"no parquet files under $dir")
+    files.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+        .map(c => c.getPath.toDotString -> c.hasDictionaryPage)
+      finally r.close()
+    }.groupMap(_._1)(_._2)
+  }
+
+  /** Rows and the sum of an all-column row hash: order-free, overflow-free. */
+  private def digest(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+    df.agg(count(lit(1)), sum(pmod(xxhash64(cols.map(col): _*), lit(1L << 31)))).head()
+
+  private def assertPlainFloatsAndTimestamps(dir: String): Unit = {
+    val pages = dictionaryPages(dir)
+    for (p <- Seq("x", "ts", "geom.sx", "geom.sy"))
+      assert(pages(p).nonEmpty && !pages(p).exists(identity), s"$p has a dictionary page")
+    for (p <- Seq("k", "tag"))
+      assert(pages(p).nonEmpty && pages(p).forall(identity), s"$p lost its dictionary")
+  }
+
+  test("mergeDays writes floats and timestamps without a dictionary, the rest with one") {
+    val out  = tmp()
+    val rows = encodingCases()
+    Sinks.mergeDays(rows, "ts", out)
+    assertPlainFloatsAndTimestamps(out)
+    assert(digest(spark.read.parquet(out), rows.columns.toSeq) === digest(rows, rows.columns.toSeq))
+  }
+
+  test("commitBatch writes floats and timestamps without a dictionary, the rest with one") {
+    val out  = tmp()
+    val rows = encodingCases()
+    Sinks.commitBatch(rows, 0L, "ts", out)
+    assertPlainFloatsAndTimestamps(out)
+    assert(digest(spark.read.parquet(out), rows.columns.toSeq) === digest(rows, rows.columns.toSeq))
+  }
 }
