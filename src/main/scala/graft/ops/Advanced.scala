@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
@@ -12,7 +12,7 @@ import graft.{Q, Tables}
   */
 object Advanced {
 
-  private def cents(c: Column): Column = round(c * 100).cast("long")
+  import Relational.cents
 
   /** Typed UDAF: sum of squared integer values — exact integer arithmetic
     * end-to-end, so the oracle is plain SQL. Demonstrates
@@ -646,7 +646,7 @@ object Advanced {
     // type's ≤30-day series folds inside one task via a prefix
     // aggregate() per day (O(days²) on the bounded grid, nothing
     // corpus-sized). The 100 TB path keeps the grid as the maintained
-    // state (the foldDayTypeCounts class) and re-folds only the tail.
+    // state (Streams.dailyCentsFold) and re-folds only the tail.
     Q("q_ewma_daily",
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS d,
@@ -671,7 +671,7 @@ object Advanced {
         |ORDER BY event_type, d""".stripMargin) { (s, dir) =>
       ewmaFromDaily(Tables.events(s, dir)
         .groupBy(col("event_type"), col("ts").cast("date").as("d"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("cents")))
+        .agg(sum(cents(col("value"))).as("cents")))
         .orderBy("event_type", "d")
     },
 
@@ -783,7 +783,7 @@ object Advanced {
         |FROM med JOIN mad USING (event_type)
         |ORDER BY event_type""".stripMargin) { (s, dir) =>
       val v = Tables.events(s, dir)
-        .select(col("event_type"), round(col("value") * 100).cast("long").as("c"))
+        .select(col("event_type"), cents(col("value")).as("c"))
       val med = v.groupBy("event_type")
         .agg((expr("percentile(c, 0.5)") * 2).cast("long").as("med2"))
       val dev = v.join(med, "event_type")

@@ -234,7 +234,7 @@ object Curation {
     * delta the decay fold accumulates. Distinct doc count WITHIN the
     * batch; summing across batches equals the corpus df as long as each
     * document arrives in exactly one batch (the append-ingest contract —
-    * a redelivered batch needs the ProfileFold id-replacement wrapper,
+    * a redelivered batch needs the GridFold id-replacement wrapper,
     * which [[graft.streaming.Streams]].BoilerFold applies).
     */
   private[graft] def chunkDfOf(docs: DataFrame): DataFrame =

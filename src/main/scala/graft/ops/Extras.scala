@@ -12,7 +12,7 @@ import graft.functions.exprs.dot_ff
   */
 object Extras {
 
-  private def cents(c: Column): Column = round(c * 100).cast("long")
+  import Relational.cents
   private def usOf(c: Column): Column  = unix_micros(c.cast("timestamp"))
 
   val queries: Seq[Q] = Seq(

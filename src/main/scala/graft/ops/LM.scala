@@ -409,7 +409,7 @@ object LM {
     * (lang, f, dlp) sparse grid and the (lang, lp0, prior) class frame.
     * Both are bounded model state (observed class-feature pairs / the
     * label taxonomy); at serving time they are the FROZEN side a stream
-    * joins against ([[graft.streaming.Streams.nbClassifyBatch]]).
+    * joins against per trigger through [[nbScore]].
     */
   private[graft] def nbModel(docs: DataFrame): (DataFrame, DataFrame) = {
     val bg   = nbFeatures(docs, withLang = true)

@@ -22,7 +22,7 @@ import graft.functions.Bloom
   */
 object Lakehouse {
 
-  private def cents(c: Column): Column = round(c * 100).cast("long")
+  import Relational.cents
 
   /** The events table read as a CDC changelog on key `user_id`:
     * `error` events are delete tombstones, everything else upserts the

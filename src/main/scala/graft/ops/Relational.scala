@@ -18,8 +18,10 @@ import graft.{Q, Tables}
   */
 object Relational {
 
-  /** Snap a 2-decimal double to exact integer cents. */
-  private def cents(c: Column): Column = round(c * 100).cast("long")
+  /** Snap a 2-decimal double to exact integer cents — the one integer-cents
+    * rule of every Column site in the engine.
+    */
+  private[graft] def cents(c: Column): Column = round(c * 100).cast("long")
   private def centsSql(e: String): String = s"CAST(round(($e) * 100) AS BIGINT)"
   /** DuckDB sum(BIGINT) is HUGEINT — always cast back. */
   private def sumSql(e: String): String = s"CAST(sum($e) AS BIGINT)"

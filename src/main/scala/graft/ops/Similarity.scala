@@ -394,6 +394,26 @@ object Similarity {
       .orderBy("p_id", "rank")
   }
 
+  /** A probe's first `probes` flip masks in hash table `t`, in ascending
+    * |margin| order — no flip, single bits of the 1st/2nd-closest planes,
+    * their pair, then the 3rd-closest plane alone and with the closest
+    * (the query-directed multiprobe order of [[lshScoredFrom]]).
+    */
+  private def flipMasks(t: Int, numPlanes: Int, probes: Int): Column = {
+    val pow2 = typedlit((0 until numPlanes).map(1 << _))
+    val dots = array((0 until numPlanes).map(j =>
+      dot_ff(col("embedding"), typedlit(planes(t, numPlanes)(j).toSeq))): _*)
+    val byMargin = transform(
+      array_sort(transform(sequence(lit(0), lit(numPlanes - 1)), j =>
+        struct(abs(element_at(dots, j + 1)).as("m"), j.as("j")))),
+      x => x("j"))
+    val b1 = element_at(pow2, element_at(byMargin, 1) + 1)
+    val b2 = element_at(pow2, element_at(byMargin, 2) + 1)
+    val b3 = element_at(pow2, element_at(byMargin, 3) + 1)
+    array(Seq(lit(0), b1, b2, b1.bitwiseOR(b2), b3,
+      b1.bitwiseOR(b3)).take(probes): _*)
+  }
+
   /** LSH-bucketed scored candidates (p_id, cos_r, c_id) with QUERY-DIRECTED
     * multiprobe (Lv et al., "Multi-Probe LSH", VLDB 2007): per hash table a
     * probe searches `probesPerTable` buckets — its own, then the buckets
@@ -420,26 +440,10 @@ object Similarity {
         bucket(col("embedding"), t, numPlanes)): _*))
     val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
       col("nrm").as("cn"), posexplode(col("bkts")).as(Seq("tbl", "bkt")))
-    val pow2 = typedlit((0 until numPlanes).map(1 << _))
-    // per table: flip masks in ascending |margin| order — single bits of
-    // the 1st/2nd/3rd-closest planes, then the pair of the two closest
-    def flipMasks(t: Int): Column = {
-      val dots = array((0 until numPlanes).map(j =>
-        dot_ff(col("embedding"), typedlit(planes(t, numPlanes)(j).toSeq))): _*)
-      val byMargin = transform(
-        array_sort(transform(sequence(lit(0), lit(numPlanes - 1)), j =>
-          struct(abs(element_at(dots, j + 1)).as("m"), j.as("j")))),
-        x => x("j"))
-      val b1 = element_at(pow2, element_at(byMargin, 1) + 1)
-      val b2 = element_at(pow2, element_at(byMargin, 2) + 1)
-      val b3 = element_at(pow2, element_at(byMargin, 3) + 1)
-      array(Seq(lit(0), b1, b2, b1.bitwiseOR(b2), b3,
-        b1.bitwiseOR(b3)).take(probesPerTable): _*)
-    }
     val probeBuckets = flatten(array((0 until numTables).map { t =>
       val b = element_at(col("bkts"), t + 1)
-      transform(flipMasks(t), m => struct(lit(t).as("tbl"),
-        b.bitwiseXOR(m).as("bkt")))
+      transform(flipMasks(t, numPlanes, probesPerTable),
+        m => struct(lit(t).as("tbl"), b.bitwiseXOR(m).as("bkt")))
     }: _*))
     val probes = probeBatch(e)
       .select(col("vec_id").as("p_id"), col("embedding").as("pv"), col("nrm").as("pn"),
@@ -470,24 +474,10 @@ object Similarity {
         bucket(col("embedding"), t, numPlanes)): _*))
     val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
       col("nrm").as("cn"), posexplode(col("bkts")).as(Seq("tbl", "bkt")))
-    val pow2 = typedlit((0 until numPlanes).map(1 << _))
-    def flipMasks(t: Int): Column = {
-      val dots = array((0 until numPlanes).map(j =>
-        dot_ff(col("embedding"), typedlit(planes(t, numPlanes)(j).toSeq))): _*)
-      val byMargin = transform(
-        array_sort(transform(sequence(lit(0), lit(numPlanes - 1)), j =>
-          struct(abs(element_at(dots, j + 1)).as("m"), j.as("j")))),
-        x => x("j"))
-      val b1 = element_at(pow2, element_at(byMargin, 1) + 1)
-      val b2 = element_at(pow2, element_at(byMargin, 2) + 1)
-      val b3 = element_at(pow2, element_at(byMargin, 3) + 1)
-      array(Seq(lit(0), b1, b2, b1.bitwiseOR(b2), b3,
-        b1.bitwiseOR(b3)).take(maxProbes): _*)
-    }
     val probeBuckets = flatten(array((0 until numTables).map { t =>
       val b = element_at(col("bkts"), t + 1)
-      transform(flipMasks(t), (m, i) => struct(lit(t).as("tbl"),
-        b.bitwiseXOR(m).as("bkt"), i.as("mi")))
+      transform(flipMasks(t, numPlanes, maxProbes),
+        (m, i) => struct(lit(t).as("tbl"), b.bitwiseXOR(m).as("bkt"), i.as("mi")))
     }: _*))
     val probes = probeBatch(e)
       .select(col("vec_id").as("p_id"), col("embedding").as("pv"), col("nrm").as("pn"),

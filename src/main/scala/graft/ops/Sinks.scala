@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -179,7 +179,8 @@ object Sinks {
     *      so cleanup needs no undo log);
     *   3. stages the batch to a hidden dir, then moves each file into its
     *      final date partition under the `b<id>-` prefix;
-    *   4. commit point: atomically renames the manifest marker into place.
+    *   4. commit point: atomically renames the manifest marker into place
+    *      ([[Manifests]], the log the durable stream folds share).
     *
     * A checkpoint replay therefore converges to IDENTICAL partition
     * contents no matter where the previous attempt died — before the
@@ -206,55 +207,108 @@ object Sinks {
   def commitBatch(batch: DataFrame, batchId: Long, tsCol: String,
       outDir: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val spark     = batch.sparkSession
-    val root      = new Path(outDir)
-    val fs        = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifests = new Path(root, "_manifests")
-    // zero-padded so a lexical listing is also the commit order
-    val manifest  = new Path(manifests, f"batch-$batchId%020d")
-    if (fs.exists(manifest)) return
-    val prefix = s"b$batchId-"
-    // a previous attempt of THIS batch may have died mid-publish: its
-    // partial files all carry the b<id>- prefix, so they are removable
-    // without any record of how far it got
-    if (fs.exists(root)) fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-      .foreach { d =>
-        fs.listStatus(d.getPath)
-          .filter(f => f.isFile && f.getPath.getName.startsWith(prefix))
-          .foreach(f => fs.delete(f.getPath, false))
-      }
-    val staging = new Path(root, s".staging-batch-$batchId")
-    writeDays(batch.withColumn("batch_id", lit(batchId)), tsCol, staging.toString,
-      dynamic = false)
-    // Hadoop FileSystem.rename/mkdirs report failure by RETURNING FALSE,
-    // not throwing. Every publish step must be checked: a silently failed
-    // rename followed by the staging delete + manifest commit below would
-    // be permanent data loss under an exactly-once marker. On any failure
-    // we throw BEFORE touching staging or the manifest, so a replay of the
-    // batch finds no manifest, clears the b<id>- partials, and redoes the
-    // publish from intact staged files.
-    def must(ok: Boolean, what: => String): Unit =
-      if (!ok) throw new java.io.IOException(s"commitBatch($batchId): $what")
-    fs.listStatus(staging)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-      .foreach { d =>
-        val dest = new Path(root, d.getPath.getName)
-        must(fs.mkdirs(dest) || fs.getFileStatus(dest).isDirectory,
-          s"mkdirs failed: $dest")
-        fs.listStatus(d.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .foreach { f =>
-            val target = new Path(dest, prefix + f.getPath.getName)
-            must(fs.rename(f.getPath, target), s"rename ${f.getPath} -> $target")
-          }
-      }
-    fs.delete(staging, true)
-    must(fs.mkdirs(manifests) || fs.getFileStatus(manifests).isDirectory,
-      s"mkdirs failed: $manifests")
-    val tmp = new Path(manifests, s".tmp-$batchId")
-    fs.create(tmp, true).close()
-    must(fs.rename(tmp, manifest), s"manifest rename $tmp -> $manifest")
+    val spark = batch.sparkSession
+    val root  = new Path(outDir)
+    val fs    = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Manifests.commit(spark, outDir, batchId) {
+      val prefix = s"b$batchId-"
+      // a previous attempt of THIS batch may have died mid-publish: its
+      // partial files all carry the b<id>- prefix, so they are removable
+      // without any record of how far it got
+      if (fs.exists(root)) fs.listStatus(root)
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
+        .foreach { d =>
+          fs.listStatus(d.getPath)
+            .filter(f => f.isFile && f.getPath.getName.startsWith(prefix))
+            .foreach(f => fs.delete(f.getPath, false))
+        }
+      val staging = new Path(root, s".staging-batch-$batchId")
+      writeDays(batch.withColumn("batch_id", lit(batchId)), tsCol, staging.toString,
+        dynamic = false)
+      // Every publish step is checked: a silently failed rename followed by
+      // the staging delete + manifest commit would be permanent data loss
+      // under an exactly-once marker. A throw here comes BEFORE either, so
+      // a replay finds no manifest, clears the b<id>- partials, and redoes
+      // the publish from intact staged files.
+      def must(ok: Boolean, what: => String): Unit =
+        Manifests.must(ok, s"commitBatch($batchId): $what")
+      fs.listStatus(staging)
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
+        .foreach { d =>
+          val dest = new Path(root, d.getPath.getName)
+          must(fs.mkdirs(dest) || fs.getFileStatus(dest).isDirectory,
+            s"mkdirs failed: $dest")
+          fs.listStatus(d.getPath)
+            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+            .foreach { f =>
+              val target = new Path(dest, prefix + f.getPath.getName)
+              must(fs.rename(f.getPath, target), s"rename ${f.getPath} -> $target")
+            }
+        }
+      fs.delete(staging, true)
+    }
+  }
+
+  /** The one manifest log of the engine: the exactly-once sink
+    * ([[commitBatch]], [[readAsOf]]) and the durable stream folds
+    * (`Streams.FoldState`) commit and list through it. A committed id is
+    * one empty marker `dir/_manifests/batch-<id>`, zero-padded so a
+    * lexical listing is also the commit order. The marker is created as
+    * `.tmp-<id>` and renamed into place — the commit point — so a crash
+    * between the two leaves a dot-file that [[committed]] does not count,
+    * and the next commit of that id overwrites it. `_manifests` is
+    * underscore-prefixed, which parquet readers skip.
+    */
+  private[graft] object Manifests {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+
+    private def logOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
+      val log = new Path(dir, "_manifests")
+      (log.getFileSystem(spark.sparkContext.hadoopConfiguration), log)
+    }
+
+    private def marker(log: Path, id: Long): Path = new Path(log, f"batch-$id%020d")
+
+    /** Hadoop FileSystem.rename/mkdirs report failure by RETURNING FALSE,
+      * not throwing; every commit step is checked through this.
+      */
+    private[graft] def must(ok: Boolean, what: => String): Unit =
+      if (!ok) throw new java.io.IOException(what)
+
+    /** The committed ids of `dir`, ascending. */
+    def committed(spark: SparkSession, dir: String): Seq[Long] = {
+      val (fs, log) = logOf(spark, dir)
+      if (!fs.exists(log)) Nil
+      else fs.listStatus(log).toSeq.map(_.getPath.getName)
+        .collect { case n if n.startsWith("batch-") => n.stripPrefix("batch-").toLong }
+        .sorted
+    }
+
+    /** Commits `id` in `dir`: false, running nothing, when `id` is
+      * already committed — same id ⇒ same data under the Structured
+      * Streaming re-delivery contract, so the skip is what makes a replay
+      * idempotent. Otherwise runs `publish`, then creates `_manifests` and
+      * renames the `.tmp-<id>` marker into place, and returns true. A
+      * `publish` that throws leaves `id` uncommitted.
+      */
+    def commit(spark: SparkSession, dir: String, id: Long)(publish: => Unit): Boolean = {
+      val (fs, log) = logOf(spark, dir)
+      val done = marker(log, id)
+      if (fs.exists(done)) return false
+      publish
+      must(fs.mkdirs(log) || fs.getFileStatus(log).isDirectory,
+        s"Manifests.commit($dir, $id): mkdirs failed: $log")
+      val tmp = new Path(log, s".tmp-$id")
+      fs.create(tmp, true).close()
+      must(fs.rename(tmp, done), s"Manifests.commit($dir, $id): manifest rename $tmp -> $done")
+      true
+    }
+
+    /** Removes `id`'s marker (garbage collection of a superseded commit). */
+    def drop(spark: SparkSession, dir: String, id: Long): Unit = {
+      val (fs, log) = logOf(spark, dir)
+      fs.delete(marker(log, id), false)
+    }
   }
 
   /** Time-travel read of the exactly-once sink: the rows of every
@@ -280,18 +334,8 @@ object Sinks {
     * hole set is bounded by failed attempts — almost always empty, never
     * O(commits) — and when it is empty the plan is just the filtered scan.
     */
-  def readAsOf(spark: org.apache.spark.sql.SparkSession, outDir: String,
-      asOfBatch: Long): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root      = new Path(outDir)
-    val fs        = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifests = new Path(root, "_manifests")
-    val committed: Array[Long] =
-      if (!fs.exists(manifests)) Array.empty
-      else fs.listStatus(manifests).map(_.getPath.getName)
-        .collect { case n if n.startsWith("batch-") =>
-          n.stripPrefix("batch-").toLong }
-        .filter(_ <= asOfBatch)
+  def readAsOf(spark: SparkSession, outDir: String, asOfBatch: Long): DataFrame = {
+    val committed = Manifests.committed(spark, outDir).filter(_ <= asOfBatch)
     require(committed.nonEmpty,
       s"readAsOf($asOfBatch): no committed batch at or before that id in $outDir")
     val watermark    = committed.max

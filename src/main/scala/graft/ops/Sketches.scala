@@ -154,7 +154,7 @@ object Sketches {
     * (`div` truncates toward zero, which would fold values up to one
     * bucket width BELOW lo into bucket 0), so sub-lo values land in
     * honest negative diagnostic bucket ids — the frozen-geometry
-    * streaming path (foldCentsHist/HistFold) depends on this; the batch
+    * streaming path (Streams.histFold) depends on this; the batch
     * query derives lo = min(cents) and never exercises it.
     */
   private[graft] def centsHist(cents: DataFrame, lo: Long, width: Long): DataFrame =
@@ -444,7 +444,7 @@ object Sketches {
     // mergeability (q_hll_registers proves the algebra; this query uses
     // it): any time window's cardinality comes from stored daily
     // registers, never a re-scan of the raw stream. The merge runs on the
-    // (days × 64) register grid — bounded state, the foldDayTypeCounts
+    // (days × 64) register grid — bounded state, the Streams.dayTypeFold
     // class — via an interval join identical in both engines; raw events
     // are touched exactly once by the daily build.
     Q("q_hll_window_7d",
@@ -647,7 +647,7 @@ object Sketches {
          |ORDER BY pct""".stripMargin) { (s, dir) =>
       import s.implicits._
       val cents = Tables.lineitem(s, dir)
-        .select(round(col("l_extendedprice") * 100).cast("long").as("cents"))
+        .select(Relational.cents(col("l_extendedprice")).as("cents"))
       // (lo, hi, n): three scalars — bounded model state, one agg pass
       val r = cents.agg(min("cents"), max("cents"), count(lit(1))).head()
       val (lo, hi, n) = (r.getLong(0), r.getLong(1), r.getLong(2))

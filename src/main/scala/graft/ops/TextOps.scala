@@ -14,6 +14,8 @@ import graft.functions.exprs.poly_hash
   */
 object TextOps {
 
+  import Relational.cents
+
   /** Rank cap for the Zipf fit (q_zipf_slope) — also the int64 magnitude
     * budget for the micro-snapped regression sums.
     */
@@ -74,8 +76,6 @@ object TextOps {
   private[ops] def enHitsSql: String = hitsSql(EnStops)
   private def hitsSql(stops: Seq[String]): String =
     s"CAST(len(list_filter(string_split(text, ' '), t -> list_contains(${stopsSql(stops)}, t))) AS INTEGER)"
-
-  private def cents(c: Column): Column = round(c * 100).cast("long")
 
   /** Core of q_decontaminate over an explicit documents frame (needs
     * doc_id + text). Join BEFORE dedup: train grams meet the eval-gram set

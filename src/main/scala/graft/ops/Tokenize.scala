@@ -104,18 +104,6 @@ object Tokenize {
   def applyMerge(syms: Column, l: String, r: String): Column =
     applyMerge(syms, lit(l), lit(r))
 
-  /** Driver-side greedy replace — the merge-training inner loop. */
-  private def applySeq(syms: Array[String], l: String, r: String): Array[String] = {
-    val out = Array.newBuilder[String]
-    var i = 0
-    while (i < syms.length) {
-      if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-        out += (l + r); i += 2
-      } else { out += syms(i); i += 1 }
-    }
-    out.result()
-  }
-
   private val memo = new Memo[(String, Int), Seq[(String, String)]]
 
   /** Train nMerges BPE merges; returns the ordered merge list. Ties on
@@ -156,7 +144,8 @@ object Tokenize {
         else {
           val (l, r) = counts.toSeq.minBy { case ((l, r), c) => (-c, l, r) }._1
           merges += ((l, r))
-          vocab = vocab.map { case (syms, f) => (applySeq(syms, l, r), f) }
+          val fused = l + r
+          vocab = vocab.map { case (syms, f) => (applySeq(syms, l, r, fused), f) }
         }
       }
       merges.toSeq
@@ -730,7 +719,8 @@ object Tokenize {
       (merges.toSeq, pieces)
     }
 
-  /** [[applySeq]] with an explicit fused symbol (WordPiece strips the
+  /** Driver-side greedy replace of the pair (l, r) by the fused symbol
+    * `merged` — the merge-training inner loop (WordPiece strips the
     * continuation prefix when fusing; BPE concatenates verbatim).
     */
   private def applySeq(syms: Array[String], l: String, r: String,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -186,6 +186,12 @@ object Streams {
   private def maybeWatermarkOn(df: DataFrame, tsCol: String): DataFrame =
     if (df.isStreaming) df.withWatermark(tsCol, WatermarkDelay) else df
 
+  /** A timestamp in epoch µs at full precision (getTime is ms; the sub-ms
+    * part lives in the nanos) — the clock of the stateful operators below.
+    */
+  private def usOf(t: Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+
   /** Streaming geofence: grid-cell coarse filter + exact bbox over a
     * segment stream (endpoint coordinates) — the streaming face of the
     * R20 spatial index analog (ops.Spatial). Stateless per-row predicates:
@@ -202,7 +208,7 @@ object Streams {
     maybeWatermark(events)
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("value_cents"))
+        sum(graft.ops.Relational.cents(col("value"))).as("value_cents"))
       .select(unix_micros(col("window.start")).as("hour_us"), col("n"),
         col("value_cents"))
 
@@ -415,266 +421,143 @@ object Streams {
       .select(unix_micros(col("window.start")).as("window_us"),
         col("n_rows"), col("v_value_low"), col("v_unknown_type"))
 
-  /** The Sinks exactly-once manifest protocol reduced to FOLD STATE —
-    * shared by every durable streaming fold ([[ProfileFold]],
-    * [[DriftFold]], [[RetireFold]]): stage the state's parquet
-    * components under `.staging-<id>`, rename to `state-<id>`, then
-    * atomically commit the `_manifests/batch-<id>` marker;
-    * strictly-older committed states are garbage-collected AFTER the
-    * new commit, and restore takes the MAX committed id — so a crash at
-    * any point leaves either the previous committed state or the new
-    * one, never neither and never a half-written directory (an
-    * uncommitted leftover of the same id from a crashed attempt is
-    * cleared before re-staging).
+  /** The durable state of every stream fold ([[GridFold]] — and through
+    * it [[ProfileFold]] and [[DriftFold]] — and [[RetireFold]]) on the one
+    * manifest log ([[graft.ops.Sinks.Manifests]]): stage the state's
+    * parquet components under `.staging-<id>`, rename to `state-<id>`,
+    * then commit `<id>` in the log; strictly-older committed states are
+    * garbage-collected AFTER the new commit, and restore takes the MAX
+    * committed id — so a crash at any point leaves either the previous
+    * committed state or the new one, never neither and never a
+    * half-written directory (an uncommitted leftover of the same id from
+    * a crashed attempt is cleared before re-staging).
     */
   private[graft] object FoldState {
-    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.hadoop.fs.Path
+    import graft.ops.Sinks.Manifests
 
-    private def fsOf(s: SparkSession, dir: String): (FileSystem, Path) = {
-      val root = new Path(dir)
-      (root.getFileSystem(s.sparkContext.hadoopConfiguration), root)
-    }
+    private def stateOf(dir: String, id: Long): Path = new Path(dir, f"state-$id%020d")
 
     /** Commit state `id`: `stage(stagingPath)` writes the component
       * parquet dirs under the staging root. Returns false (and writes
-      * nothing) iff `id` is already committed — same id ⇒ same data
-      * under the Structured Streaming re-delivery contract, so the
-      * skip is what makes persist itself replay-idempotent.
+      * nothing) iff `id` is already committed, which makes persist
+      * itself replay-idempotent.
       */
     def commit(spark: SparkSession, dir: String, id: Long)
         (stage: Path => Unit): Boolean = {
-      val (fs, root) = fsOf(spark, dir)
-      val manifests = new Path(root, "_manifests")
-      val manifest  = new Path(manifests, f"batch-$id%020d")
-      if (fs.exists(manifest)) return false
-      val staging = new Path(root, s".staging-$id")
-      val dest    = new Path(root, f"state-$id%020d")
-      fs.delete(staging, true); fs.delete(dest, true) // crashed attempt
-      stage(staging)
-      def must(ok: Boolean, what: => String): Unit =
-        if (!ok) throw new java.io.IOException(s"FoldState.commit($dir, $id): $what")
-      must(fs.rename(staging, dest), s"rename $staging -> $dest")
-      must(fs.mkdirs(manifests) || fs.getFileStatus(manifests).isDirectory,
-        s"mkdirs $manifests")
-      val tmp = new Path(manifests, s".tmp-$id")
-      fs.create(tmp, true).close()
-      must(fs.rename(tmp, manifest), s"manifest rename $tmp -> $manifest")
+      val root = new Path(dir)
+      val fs   = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val done = Manifests.commit(spark, dir, id) {
+        val staging = new Path(root, s".staging-$id")
+        val dest    = stateOf(dir, id)
+        fs.delete(staging, true); fs.delete(dest, true) // crashed attempt
+        stage(staging)
+        Manifests.must(fs.rename(staging, dest),
+          s"FoldState.commit($dir, $id): rename $staging -> $dest")
+      }
       // GC strictly-older committed states (crash mid-GC is harmless:
       // restore takes the MAX committed id)
-      fs.listStatus(manifests)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("batch-") =>
-          n.stripPrefix("batch-").toLong }
-        .filter(_ < id)
-        .foreach { old =>
-          fs.delete(new Path(root, f"state-$old%020d"), true)
-          fs.delete(new Path(manifests, f"batch-$old%020d"), false)
-        }
-      true
+      if (done) Manifests.committed(spark, dir).filter(_ < id).foreach { old =>
+        fs.delete(stateOf(dir, old), true)
+        Manifests.drop(spark, dir, old)
+      }
+      done
     }
 
     /** The latest committed (id, state path), if any. */
-    def latest(spark: SparkSession, dir: String): Option[(Long, Path)] = {
-      val (fs, root) = fsOf(spark, dir)
-      val manifests = new Path(root, "_manifests")
-      if (!fs.exists(manifests)) return None
-      val ids = fs.listStatus(manifests).map(_.getPath.getName)
-        .collect { case n if n.startsWith("batch-") =>
-          n.stripPrefix("batch-").toLong }
-      if (ids.isEmpty) None
-      else Some((ids.max, new Path(root, f"state-${ids.max}%020d")))
-    }
+    def latest(spark: SparkSession, dir: String): Option[(Long, Path)] =
+      Manifests.committed(spark, dir).lastOption.map(id => (id, stateOf(dir, id)))
   }
+
+  /** State-dir suffixes of the component folds: [[ProfileFold]]'s
+    * register fold sits in `<stateDir>-regs` beside its count fold in
+    * `<stateDir>`; [[DriftFold]]'s era fold is a whole ProfileFold under
+    * `<stateDir>-era` beside its live fold.
+    */
+  private[graft] val RegsSuffix = "-regs"
+  private[graft] val EraSuffix  = "-era"
 
   /** Replay-safe running-state fold for [[profileIngest]] — the
     * foreachBatch face of the mergeable profiler whose algebra
     * q_profile_incremental proves batch-side (counts ADD, min/max FOLD,
-    * HLL registers MAX). Exactly-once under SAME-PROCESS micro-batch
-    * re-delivery: Structured Streaming can re-run the most recent
-    * micro-batch within a running query, and the count components are
-    * NOT idempotent under a double fold — so the fold keeps (committed
-    * base, last batch id, last batch state) and a re-delivered batch id
-    * REPLACES the last state instead of adding to it (the Sinks
-    * exactly-once-manifest rule applied to aggregation state). A batch
-    * with a NEW id first commits the previous state into the base
-    * (compacted: the base never exceeds O(columns · M) rows), then
-    * becomes the new last. State lives as two localCheckpoint'ed bounded
-    * frames in DRIVER memory.
+    * HLL registers MAX). It is two [[GridFold]]s over the two halves of
+    * the bounded profile state (Profile.incrementalStates): `counts`
+    * keyed on `cname`, `regs` keyed on `(cname, bucket)`. Each carries
+    * the GridFold rule — a re-delivered batch id REPLACES its delta, so
+    * the count components, which are NOT idempotent under a double fold,
+    * fold exactly once — and, under `stateDir`, its durable commit
+    * (`counts` in `stateDir`, `regs` in `stateDir` + [[RegsSuffix]]).
     *
-    * DURABLE RECOVERY (opt-in via `stateDir`): each trigger additionally
-    * persists the (base, last) pair through the [[graft.ops.Sinks]]
-    * manifest protocol reduced to fold state — stage the two bounded
-    * frames as parquet under `.staging-<id>`, rename to `state-<id>`,
-    * then atomically commit the `_manifests/batch-<id>` marker; older
-    * committed states are garbage-collected AFTER the new commit, so a
-    * crash at any point leaves either the previous committed state or
-    * the new one, never neither. A NEW fold over the same `stateDir`
-    * restores the latest committed (base, last, id) before its first
-    * batch, so the restarted query's re-delivery of batch `id` REPLACES
-    * the restored last exactly like a same-process replay — exactly-once
-    * now holds across process restarts, not just within one
-    * (StreamingSpec kills and recreates the fold mid-stream). Without a
-    * `stateDir` the fold is memory-only as before. The raw batches are
-    * never retained either way.
+    * The two commit one after the other, so a crash between them leaves
+    * `counts` at batch N and `regs` at N−1. The restarted query
+    * re-delivers N: `counts` replaces its restored N, `regs` seals N−1
+    * and adds N, and the two agree again (StreamingSpec simulates that
+    * window). The raw batches are never retained.
     */
-  private[graft] class ProfileFold(write: DataFrame => Unit,
+  private[graft] final class ProfileFold(write: DataFrame => Unit,
       stateDir: Option[String] = None) {
     import graft.ops.Profile
-    private var base: Option[(DataFrame, DataFrame)] = None
-    private var last: Option[(Long, (DataFrame, DataFrame))] = None
-    private var restored = stateDir.isEmpty
-
-    private def compact(c: DataFrame, r: DataFrame): (DataFrame, DataFrame) =
-      (c.groupBy("cname").agg(
-          sum("n").as("n"), sum("n_null").as("n_null"),
-          min("mn_num").as("mn_num"), max("mx_num").as("mx_num"),
-          min("mn_str").as("mn_str"), max("mx_str").as("mx_str"))
-        .localCheckpoint(),
-       r.groupBy("cname", "bucket").agg(max("register").as("register"))
-        .localCheckpoint())
+    private def states(b: DataFrame) =
+      Profile.incrementalStates(b.withColumn("half", lit(0L)))
+    private[graft] val counts = new GridFold(Seq("cname"),
+      Seq(sum("n").as("n"), sum("n_null").as("n_null"),
+        min("mn_num").as("mn_num"), max("mx_num").as("mx_num"),
+        min("mn_str").as("mn_str"), max("mx_str").as("mx_str")),
+      b => states(b)._1.drop("half"), _ => (), stateDir)
+    private[graft] val regs = new GridFold(Seq("cname", "bucket"),
+      Seq(max("register").as("register")),
+      b => states(b)._2.drop("half"), _ => (), stateDir.map(_ + RegsSuffix))
 
     def step(batch: DataFrame, batchId: Long): Unit = {
-      if (!restored) { restore(batch.sparkSession); restored = true }
-      val st0 = Profile.incrementalStates(batch.withColumn("half", lit(0L)))
-      val st  = (st0._1.drop("half").localCheckpoint(),
-                 st0._2.drop("half").localCheckpoint())
-      last match {
-        case Some((id, prev)) if id != batchId =>
-          base = Some(base match {
-            case Some((bc, br)) =>
-              compact(bc.unionByName(prev._1), br.unionByName(prev._2))
-            case None => prev
-          })
-        case _ => () // same id re-delivered: replace, never double-count
-      }
-      last = Some((batchId, st))
-      val (cAll, rAll) = base match {
-        case Some((bc, br)) =>
-          (bc.unionByName(st._1), br.unionByName(st._2))
-        case None => st
-      }
-      emit(batchId, (cAll, rAll))
-      // persist AFTER emit so subclass state the emit updates (the
-      // drift fold's era snapshot) rides the same committed state; a
-      // trigger that fails mid-emit commits nothing and re-delivers.
-      stateDir.foreach(persist(_, batchId, st))
+      counts.step(batch, batchId)
+      regs.step(batch, batchId)
+      current.foreach(st => write(Profile.finalizeProfile(st)))
     }
 
-    /** Durable components beyond the (base, last) pair — subclasses add
-      * their own bounded frames ([[DriftFold]] persists the era
-      * snapshot). Each is written as a parquet subdir of the staged
-      * state; a component absent at persist time is simply absent on
-      * restore.
-      */
-    protected def extraComponents: Seq[(String, DataFrame)] = Seq.empty
-
-    /** Restore hook for [[extraComponents]] — `read(name)` yields the
-      * component's frame iff it was persisted with the restored state.
-      */
-    protected def restoreExtra(read: String => Option[DataFrame]): Unit = ()
-
-    // ---- durable (base, last) persistence: [[FoldState]] with the
-    //      pair tagged into two component files ------------------------
-
-    /** Stage the tagged (base, last) pair (plus any subclass
-      * [[extraComponents]]) through [[FoldState.commit]]; a replayed id
-      * whose marker exists is a no-op.
-      */
-    private def persist(dir: String, id: Long,
-        st: (DataFrame, DataFrame)): Unit = {
-      import org.apache.hadoop.fs.Path
-      val spark = st._1.sparkSession
-      def tag(f: DataFrame, c: String) = f.withColumn("component", lit(c))
-      val empty = (st._1.limit(0), st._2.limit(0))
-      val (bc, br) = base.getOrElse(empty)
-      FoldState.commit(spark, dir, id) { staging =>
-        tag(bc, "base").unionByName(tag(st._1, "last"))
-          .coalesce(1).write.parquet(new Path(staging, "counts").toString)
-        tag(br, "base").unionByName(tag(st._2, "last"))
-          .coalesce(1).write.parquet(new Path(staging, "regs").toString)
-        extraComponents.foreach { case (nm, f) =>
-          f.coalesce(1).write.parquet(new Path(staging, nm).toString) }
-      }
-    }
-
-    /** Load the latest committed (base, last, id) — called lazily before
-      * the first batch of a fold constructed over an existing stateDir.
-      */
-    private def restore(spark: SparkSession): Unit = stateDir.foreach { dir =>
-      import org.apache.hadoop.fs.Path
-      FoldState.latest(spark, dir).foreach { case (id, st) =>
-        val fs = st.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val counts = spark.read.parquet(new Path(st, "counts").toString)
-        val regs   = spark.read.parquet(new Path(st, "regs").toString)
-        def part(f: DataFrame, c: String) =
-          f.filter(col("component") === c).drop("component").localCheckpoint()
-        base = Some((part(counts, "base"), part(regs, "base")))
-        last = Some((id, (part(counts, "last"), part(regs, "last"))))
-        restoreExtra { nm =>
-          val p = new Path(st, nm)
-          if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-        }
-      }
-    }
-
-    /** What a trigger emits given the running (un-merged) state union —
-      * the whole-stream profile by default; [[DriftFold]] overrides.
-      */
-    protected def emit(batchId: Long, states: (DataFrame, DataFrame)): Unit =
-      write(Profile.finalizeProfile(Profile.mergeProfileStates(states)))
+    /** The merged profile state of every batch so far. */
+    private[graft] def current: Option[(DataFrame, DataFrame)] =
+      for (c <- counts.current; r <- regs.current)
+        yield Profile.mergeProfileStates((c, r))
   }
 
-  /** The STREAMING DRIFT FEED's fold — [[ProfileFold]] with a two-era
-    * twist (q_profile_drift run live): batches up to `eraCut` (the
-    * trigger-boundary snapshot) accumulate the BASE era; each later
-    * trigger emits the drift rows of the live running state against
-    * that frozen base ([[graft.ops.Profile.driftStates]] — same
-    * integer-cross-multiplied gate as the batch query, HLL distinct
-    * because exact distincts do not merge). Both the snapshot and the
-    * live state are the fold's bounded compacted frames, so the feed
-    * costs O(columns · M) per trigger whatever the stream length; the
-    * base era emits nothing (no second era to diff yet). Replay safety
-    * is inherited: a re-delivered batch id replaces, never double-folds
-    * — on either side of the cut (StreamingSpec replays a post-cut
-    * trigger and asserts the drift rows are unchanged).
+  /** The STREAMING DRIFT FEED's fold (q_profile_drift run live): a live
+    * [[ProfileFold]] over every batch plus an era ProfileFold stepped only
+    * while `batchId <= eraCut`. Each later trigger emits the drift rows of
+    * the live state against the era fold's state
+    * ([[graft.ops.Profile.driftStates]] — same integer-cross-multiplied
+    * gate as the batch query, HLL distinct because exact distincts do not
+    * merge); the base era emits nothing (no second era to diff yet). Both
+    * sides are bounded fold state, so the feed costs O(columns · M) per
+    * trigger whatever the stream length.
     *
-    * DURABLE RECOVERY (opt-in `stateDir`, inherited from
-    * [[ProfileFold]]): the frozen era snapshot persists as an extra
-    * component of the same committed state as (base, last) — persist
-    * runs AFTER emit, so any committed state from a trigger ≥ the cut
-    * already carries the snapshot, and a restart needs NO re-delivery
-    * of the cut batch to resume diffing (StreamingSpec restarts the
-    * fold post-cut with and without a replayed trigger). A restart
-    * restored BEFORE the cut has no snapshot yet and rebuilds it from
-    * the restored running state when the cut trigger (re-)arrives.
+    * The frozen era is the era fold's state, so it is replay-safe and,
+    * under `stateDir` (live in `stateDir`, era in `stateDir` +
+    * [[EraSuffix]]), durable like any GridFold: a restart after the cut
+    * restores it without re-seeing the cut batch (StreamingSpec replays a
+    * post-cut trigger, restarts with and without a replay, and crashes
+    * between the era and live commits of the cut batch).
     */
   private[graft] final class DriftFold(eraCut: Long, write: DataFrame => Unit,
-      stateDir: Option[String] = None) extends ProfileFold(write, stateDir) {
-    import graft.ops.Profile
-    private var snap: Option[(DataFrame, DataFrame)] = None
-    override protected def extraComponents: Seq[(String, DataFrame)] =
-      snap.toSeq.flatMap { case (c, r) =>
-        Seq("snap_counts" -> c, "snap_regs" -> r) }
-    override protected def restoreExtra(
-        read: String => Option[DataFrame]): Unit =
-      for (c <- read("snap_counts"); r <- read("snap_regs"))
-        snap = Some((c.localCheckpoint(), r.localCheckpoint()))
-    override protected def emit(batchId: Long,
-        states: (DataFrame, DataFrame)): Unit = {
-      val merged = Profile.mergeProfileStates(states)
-      if (batchId <= eraCut)
-        snap = Some((merged._1.localCheckpoint(), merged._2.localCheckpoint()))
-      else snap.foreach(base => write(Profile.driftStates(base, merged)))
+      stateDir: Option[String] = None) {
+    private[graft] val era  = new ProfileFold(_ => (), stateDir.map(_ + EraSuffix))
+    private[graft] val live = new ProfileFold(_ => (), stateDir)
+
+    def step(batch: DataFrame, batchId: Long): Unit = {
+      if (batchId <= eraCut) era.step(batch, batchId)
+      live.step(batch, batchId)
+      if (batchId > eraCut)
+        for (before <- era.current; now <- live.current)
+          write(graft.ops.Profile.driftStates(before, now))
     }
   }
 
   /** Streaming twin of the PROFILE DRIFT report (q_profile_drift): the
-    * base era (batches ≤ eraCut) freezes into a snapshot at the trigger
-    * boundary; every later trigger emits (column, stat, before, after,
-    * drifted) rows of the live mergeable profile against it — the
-    * yesterday-vs-now monitor as a feed. foreachBatch for the family's
-    * shared reason; state is the two bounded fold frames (durable under
-    * `stateDir` — snapshot included; see [[DriftFold]]).
+    * base era (batches ≤ eraCut) folds into its own profile state; every
+    * later trigger emits (column, stat, before, after, drifted) rows of
+    * the live mergeable profile against it — the yesterday-vs-now monitor
+    * as a feed. foreachBatch for the family's shared reason; state is the
+    * two bounded profile folds (durable under `stateDir`, era included;
+    * see [[DriftFold]]).
     */
   def driftIngest(events: DataFrame, eraCut: Long,
       stateDir: Option[String] = None)
@@ -821,9 +704,6 @@ object Streams {
       .flatMapGroupsWithState[AsOfBuf, AsOfOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key: Long, it: Iterator[AsOfIn], state: GroupState[AsOfBuf]) =>
-          // full microsecond precision (getTime is ms; sub-ms lives in nanos)
-          def usOf(t: Timestamp): Long =
-            Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
           val st = state.getOption.getOrElse(AsOfBuf(Nil, Nil))
           val newL = scala.collection.mutable.ArrayBuffer.empty[TsId]
           val newR = scala.collection.mutable.ArrayBuffer.empty[TsId]
@@ -907,12 +787,9 @@ object Streams {
         (userId: Long, it: Iterator[Event], state: GroupState[SessionState]) =>
           val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
           var st  = state.getOption.orNull
-          // full microsecond precision: getTime is millis; sub-ms lives in nanos
-          def usOf(e: Event): Long =
-            Math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000
           // events within a micro-batch arrive unordered: sort by event time
-          it.toSeq.sortBy(e => (usOf(e), e.event_id)).foreach { e =>
-            val us = usOf(e)
+          it.toSeq.sortBy(e => (usOf(e.ts), e.event_id)).foreach { e =>
+            val us = usOf(e.ts)
             st match {
               case null =>
                 st = SessionState(us, us, 1)
@@ -933,122 +810,23 @@ object Streams {
   case class CdcUpdate(user_id: Long, ts_us: Long, event_id: Long,
       op: String, payload_type: String, value_cents: Long)
 
-  /** Streaming face of q_drift_daily: fold one micro-batch's (day, type)
-    * counts into the maintained count grid — the incremental-maintenance
-    * shape of the CDC/MV family (foreachBatch folds; the drift table is a
-    * VIEW over the grid via [[graft.ops.Advanced.driftFromCounts]], shared
-    * Column-for-Column with the oracle-checked batch query). Late and
-    * out-of-order events are merely additive — counts are order-free — so
-    * no watermark is needed and the grid converges to the batch grid
-    * whatever the trigger layout. State is the day×type grid: bounded by
-    * taxonomy × retention, not by stream volume.
-    */
-  def foldDayTypeCounts(grid: DataFrame, batch: DataFrame): DataFrame = {
-    val bc = batch
-      .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    grid.withColumnRenamed("n", "n_old")
-      .join(bc.withColumnRenamed("n", "n_new"), Seq("d", "event_type"), "full_outer")
-      .select(col("d"), col("event_type"),
-        (coalesce(col("n_old"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
-          .as("n"))
-  }
-
-  /** Streaming face of the EWMA baseline (q_ewma_daily): maintain the
-    * (event_type, day, cents) grid incrementally — additive fold, the
-    * [[foldDayTypeCounts]] shape — and derive the EWMA trajectory as a
-    * VIEW over the bounded grid via the shared batch kernel. Late or
-    * out-of-order cents are additive, so the grid converges to the batch
-    * grid whatever the trigger layout; the O(days²)-of-grid-rows re-fold
-    * per read is the price of a trunc-div recurrence with no closed form
-    * (q_ewma_daily's design note) and touches no corpus-sized state.
-    */
-  def foldDailyCents(grid: DataFrame, batch: DataFrame): DataFrame = {
-    val bc = batch
-      .groupBy(col("event_type"), col("ts").cast("date").as("d"))
-      .agg(sum(round(col("value") * 100).cast("long")).as("cents"))
-    grid.withColumnRenamed("cents", "c_old")
-      .join(bc.withColumnRenamed("cents", "c_new"),
-        Seq("event_type", "d"), "full_outer")
-      .select(col("event_type"), col("d"),
-        (coalesce(col("c_old"), lit(0L)) + coalesce(col("c_new"), lit(0L)))
-          .as("cents"))
-  }
-
-  /** Streaming face of the Naive Bayes classifier (q_naive_bayes_lang):
-    * classify one trigger's document batch against the FROZEN model
-    * frames (the nearDupCuration frozen-index shape — train offline,
-    * serve on ingest). Stateless per trigger: each batch pays one sparse
-    * feature join + the |classes|-bounded base, so out-of-order or
-    * re-dealt feeds trivially reproduce the batch predictions
-    * (StreamingSpec asserts stream ≡ batch doc-for-doc).
-    */
-  def nbClassifyBatch(grid: DataFrame, cls: DataFrame,
-      batch: DataFrame): DataFrame =
-    graft.ops.LM.nbScore(batch, grid, cls)
-
-  /** Streaming face of the HLL sketch (q_hll_registers): fold a trigger's
-    * batch registers into the maintained (group, bucket) register grid by
-    * MAX — the same order-free incremental-maintenance shape as
-    * [[foldDayTypeCounts]] (max is idempotent AND commutative, so late,
-    * out-of-order, and even REPLAYED events cannot corrupt the sketch —
-    * stronger than the count grid, which tolerates reordering but not
-    * replay). No watermark; state is groups × 64 registers, independent
-    * of stream volume. Batch ≡ stream asserted in StreamingSpec via the
-    * shared register builder [[graft.ops.Sketches.hllRegistersFrom]].
-    */
-  def foldHllRegisters(grid: DataFrame, batch: DataFrame): DataFrame = {
-    val bc = graft.ops.Sketches.hllRegistersFrom(batch)
-    grid.withColumnRenamed("register", "r_old")
-      .join(bc.withColumnRenamed("register", "r_new"),
-        Seq("event_type", "bucket"), "full_outer")
-      .select(col("event_type"), col("bucket"),
-        greatest(coalesce(col("r_old"), lit(0)), coalesce(col("r_new"), lit(0)))
-          .as("register"))
-  }
-
-  /** Streaming face of the histogram-quantile sketch (q_hist_quantiles):
-    * fold one trigger's event batch into the maintained equi-width cents
-    * histogram — additive merge over a FROZEN (lo, width) geometry (a
-    * deployment pins it from a calibration pass; the batch query derives
-    * it from the data, which a stream cannot). Out-of-range values are
-    * NOT clamped: they land in honest underflow/overflow bucket ids
-    * (< 0 / ≥ HqBuckets) that still merge additively and surface as
-    * diagnostics instead of silently fattening the edge brackets.
-    * Additive like [[foldDayTypeCounts]]: late and out-of-order arrivals
-    * converge to the batch grid, but a REPLAYED trigger double-counts —
-    * exactly-once delivery or the ProfileFold batch-id-replacement
-    * wrapper is required (the foldHllRegisters max-merge immunity does
-    * not transfer to counts). Quantile brackets are a VIEW over the
-    * ≤HqBuckets-row grid (the foldDailyCents pattern: maintain the
-    * sketch incrementally, derive the estimator per read).
-    */
-  def foldCentsHist(grid: DataFrame, batch: DataFrame,
-      lo: Long, width: Long): DataFrame = {
-    val bc = graft.ops.Sketches.centsHist(
-      batch.select(round(col("value") * 100).cast("long").as("cents")),
-      lo, width)
-    grid.withColumnRenamed("cnt", "c_old")
-      .join(bc.withColumnRenamed("cnt", "c_new"), Seq("bucket_idx"), "full_outer")
-      .select(col("bucket_idx"),
-        (coalesce(col("c_old"), lit(0L)) + coalesce(col("c_new"), lit(0L)))
-          .as("cnt"))
-  }
-
-  /** ONE replay-safe durable fold for every keyed-grid sketch — the
-    * (base, last) batch-id-replacement protocol (ProfileFold's rule: a
-    * re-delivered batch id REPLACES its per-batch delta, so values fold
-    * exactly once whatever the delivery order or replay) generalized
-    * over the grid key, the value column, and the merge (additive `sum`
-    * for count/cents grids; idempotent `max` for HLL registers — max
-    * needs no replay protection, but riding the same protocol costs
-    * nothing and keeps ONE durability story). `base` compacts every
-    * sealed batch into one bounded grid, `last` holds the open batch's
-    * delta; both are sketch-sized, never corpus-sized. DURABLE under
-    * `stateDir` via the shared [[FoldState]] manifest (marker makes a
-    * replayed persist a no-op); StreamingSpec replays a trigger,
-    * restarts each concrete fold mid-stream, and replays across the
-    * restart, then checks GC left exactly one committed state.
+  /** ONE replay-safe durable fold for every keyed-grid sketch, and the
+    * only (base, last) fold of the engine — the profile and drift folds
+    * compose it. A re-delivered batch id REPLACES its per-batch delta, so
+    * values fold exactly once whatever the delivery order or replay. The
+    * fold is generic over the grid key and the `merge` aggregates: `sum`
+    * for count/cents grids, `max` for HLL registers (max needs no replay
+    * protection, but riding the same protocol costs nothing and keeps ONE
+    * durability story), the six profile aggregates for
+    * [[ProfileFold]]'s counts. `base` compacts every sealed batch into
+    * one bounded grid, `last` holds the open batch's delta; both are
+    * sketch-sized, never corpus-sized. DURABLE under `stateDir` via the
+    * shared [[FoldState]] manifest (marker makes a replayed persist a
+    * no-op); StreamingSpec replays a trigger, restarts each concrete
+    * fold mid-stream, and replays across the restart, then checks GC
+    * left exactly one committed state. A fold over an existing
+    * `stateDir` restores before its first step or its first `current`,
+    * whichever comes first.
     *
     * DURABILITY COST CONTRACT: [[persist]] rewrites the ENTIRE
     * (base, last) grid — coalesce(1) — every trigger, an O(state)
@@ -1064,7 +842,7 @@ object Streams {
     * the upgrade path if an uncapped durable fold is ever needed.
     */
   private[graft] final class GridFold(
-      keyCols: Seq[String], valCol: String, maxMerge: Boolean,
+      keyCols: Seq[String], merge: Seq[Column],
       delta: DataFrame => DataFrame, write: DataFrame => Unit,
       stateDir: Option[String] = None,
       compact: DataFrame => DataFrame = identity) {
@@ -1073,13 +851,15 @@ object Streams {
     private var restored = stateDir.isEmpty
     private def add(a: DataFrame, b: DataFrame): DataFrame =
       compact(a.unionByName(b).groupBy(keyCols.map(col): _*)
-        .agg((if (maxMerge) max(col(valCol)) else sum(col(valCol)))
-          .as(valCol)))
+        .agg(merge.head, merge.tail: _*))
+
+    private def ensureRestored(spark: SparkSession): Unit =
+      if (!restored) { restore(spark); restored = true }
 
     def step(batch: DataFrame, batchId: Long): Unit = {
       require(batchId >= 0 || stateDir.isEmpty,
         "a durable GridFold needs real batch ids")
-      if (!restored) { restore(batch.sparkSession); restored = true }
+      ensureRestored(batch.sparkSession)
       val st = compact(delta(batch)).localCheckpoint()
       last match {
         case Some((id, prev)) if id != batchId =>
@@ -1093,9 +873,12 @@ object Streams {
     }
 
     /** The folded grid (sealed base + open batch). */
-    private[graft] def current: Option[DataFrame] = (base, last) match {
-      case (Some(b), Some((_, l))) => Some(add(b, l))
-      case (b, l)                  => l.map(_._2).orElse(b)
+    private[graft] def current: Option[DataFrame] = {
+      ensureRestored(SparkSession.active)
+      (base, last) match {
+        case (Some(b), Some((_, l))) => Some(add(b, l))
+        case (b, l)                  => l.map(_._2).orElse(b)
+      }
     }
 
     private def persist(dir: String, id: Long, st: DataFrame): Unit = {
@@ -1183,36 +966,71 @@ object Streams {
     g.join(broadcast(keep), Seq("window_us"))
   }
 
-  /** Replay-safe durable fold for the cents histogram (q_hist_quantiles
-    * live) — [[foldCentsHist]] is additive and therefore corrupted by
-    * at-least-once re-delivery; this is its [[GridFold]] face.
+  /** Streaming face of q_drift_daily: the (day, event_type) count grid
+    * folded per trigger — the incremental-maintenance shape of the CDC/MV
+    * family; the drift table is a VIEW over the grid via
+    * [[graft.ops.Advanced.driftFromCounts]], shared Column-for-Column with
+    * the oracle-checked batch query. Late and out-of-order events are
+    * merely additive — counts are order-free — so no watermark is needed
+    * and the grid converges to the batch grid whatever the trigger
+    * layout. State is the day×type grid: bounded by taxonomy × retention,
+    * not by stream volume.
+    */
+  private[graft] def dayTypeFold(write: DataFrame => Unit,
+      stateDir: Option[String] = None): GridFold =
+    new GridFold(Seq("d", "event_type"), Seq(sum("n").as("n")),
+      b => b.groupBy(to_date(col("ts")).as("d"), col("event_type"))
+        .agg(count(lit(1)).as("n")),
+      write, stateDir)
+
+  /** Streaming face of the histogram-quantile sketch (q_hist_quantiles):
+    * each trigger's events fold into the equi-width cents histogram —
+    * additive merge over a FROZEN (lo, width) geometry (a deployment pins
+    * it from a calibration pass; the batch query derives it from the
+    * data, which a stream cannot). Out-of-range values are NOT clamped:
+    * they land in honest underflow/overflow bucket ids (< 0 / ≥
+    * HqBuckets) that still merge additively and surface as diagnostics
+    * instead of silently fattening the edge brackets. Late and
+    * out-of-order arrivals converge to the batch grid; a replayed trigger
+    * replaces its delta instead of double-counting. Quantile brackets are
+    * a VIEW over the ≤HqBuckets-row grid.
     */
   private[graft] def histFold(lo: Long, width: Long,
       write: DataFrame => Unit, stateDir: Option[String] = None): GridFold =
-    new GridFold(Seq("bucket_idx"), "cnt", maxMerge = false,
+    new GridFold(Seq("bucket_idx"), Seq(sum("cnt").as("cnt")),
       b => graft.ops.Sketches.centsHist(
-        b.select(round(col("value") * 100).cast("long").as("cents")),
+        b.select(graft.ops.Relational.cents(col("value")).as("cents")),
         lo, width),
       write, stateDir)
 
-  /** Replay-safe durable fold for the (event_type, day, cents) grid
-    * behind q_ewma_daily — [[foldDailyCents]]' durable face; the EWMA
-    * trajectory stays a VIEW over the folded grid.
+  /** Streaming face of the EWMA baseline (q_ewma_daily): the (event_type,
+    * day, cents) grid folded additively, with the EWMA trajectory a VIEW
+    * over the bounded grid via the shared batch kernel
+    * ([[graft.ops.Advanced.ewmaFromDaily]]). Late or out-of-order cents
+    * are additive, so the grid converges to the batch grid whatever the
+    * trigger layout; the O(days²)-of-grid-rows re-fold per read is the
+    * price of a trunc-div recurrence with no closed form (q_ewma_daily's
+    * design note) and touches no corpus-sized state.
     */
   private[graft] def dailyCentsFold(write: DataFrame => Unit,
       stateDir: Option[String] = None): GridFold =
-    new GridFold(Seq("event_type", "d"), "cents", maxMerge = false,
+    new GridFold(Seq("event_type", "d"), Seq(sum("cents").as("cents")),
       b => b.groupBy(col("event_type"), col("ts").cast("date").as("d"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("cents")),
+        .agg(sum(graft.ops.Relational.cents(col("value"))).as("cents")),
       write, stateDir)
 
-  /** Durable fold for the HLL register matrix (q_hll_registers live) —
-    * [[foldHllRegisters]]' durable face. Max-merge is replay-immune on
-    * its own; what the GridFold adds is the committed restart story.
+  /** Streaming face of the HLL sketch (q_hll_registers): each trigger's
+    * registers fold into the (group, bucket) register grid by MAX — max
+    * is idempotent AND commutative, so late, out-of-order and even
+    * REPLAYED events cannot corrupt the sketch on their own; what the
+    * GridFold adds is the committed restart story. No watermark; state is
+    * groups × 64 registers, independent of stream volume. Batch ≡ stream
+    * via the shared register builder
+    * [[graft.ops.Sketches.hllRegistersFrom]].
     */
   private[graft] def hllFold(write: DataFrame => Unit,
       stateDir: Option[String] = None): GridFold =
-    new GridFold(Seq("event_type", "bucket"), "register", maxMerge = true,
+    new GridFold(Seq("event_type", "bucket"), Seq(max("register").as("register")),
       b => graft.ops.Sketches.hllRegistersFrom(b), write, stateDir)
 
   /** Durable fold for the windowed COUNT-MIN grid — [[cmsGridPerWindow]]
@@ -1226,7 +1044,7 @@ object Streams {
   private[graft] def cmsFold(write: DataFrame => Unit,
       stateDir: Option[String] = None,
       maxWindows: Option[Int] = None): GridFold =
-    new GridFold(Seq("window_us", "j", "b"), "cnt", maxMerge = false,
+    new GridFold(Seq("window_us", "j", "b"), Seq(sum("cnt").as("cnt")),
       b => cmsGridPerWindow(b), write, stateDir,
       maxWindows.fold(identity[DataFrame] _)(windowRetention))
 
@@ -1248,7 +1066,7 @@ object Streams {
     val mg = mgCompactBy(Seq("window_us"), Seq("tok"), "cnt", k) _
     val compact: DataFrame => DataFrame =
       maxWindows.fold(mg)(n => g => mg(windowRetention(n)(g)))
-    new GridFold(Seq("window_us", "tok"), "cnt", maxMerge = false,
+    new GridFold(Seq("window_us", "tok"), Seq(sum("cnt").as("cnt")),
       b => maybeWatermarkOn(b, "ingest_ts")
         .select(col("ingest_ts"), explode(split(col("text"), " ")).as("tok"))
         .groupBy(window(col("ingest_ts"), "1 hour"), col("tok"))
@@ -1282,7 +1100,7 @@ object Streams {
   private[graft] def embedDriftFold(mu: Array[Long], v1: Array[Long],
       lo: Long, width: Long, before: DataFrame,
       write: DataFrame => Unit, stateDir: Option[String] = None): GridFold =
-    new GridFold(Seq("bucket_idx"), "cnt", maxMerge = false,
+    new GridFold(Seq("bucket_idx"), Seq(sum("cnt").as("cnt")),
       b => graft.ops.Clustering.pcScoreHist(
         b.select(graft.ops.Clustering.pcScoreCol(mu, v1).as("pc1")),
         lo, width),
@@ -1320,7 +1138,7 @@ object Streams {
     * the trigger, and proves post-rebuild stripping equals the
     * full-corpus q_boilerplate_strip.
     *
-    * State is (base, last) chunk-df frames under the HistFold batch-id-
+    * State is (base, last) chunk-df frames under the GridFold batch-id-
     * replacement protocol (a re-delivered trigger REPLACES its delta, so
     * dfs accumulate exactly once), durable under `stateDir` via the
     * shared [[FoldState]] manifest. Scale: the EXACT state is
@@ -1360,16 +1178,16 @@ object Streams {
   private[graft] final class BoilerFold(index: DataFrame,
       write: DataFrame => Unit, stateDir: Option[String] = None,
       sketchK: Option[Int] = None) {
-    private val dfs = new GridFold(Seq("chunk"), "ndocs", maxMerge = false,
+    private val dfs = new GridFold(Seq("chunk"), Seq(sum("ndocs").as("ndocs")),
       b => graft.ops.Curation.chunkDfOf(b), _ => (), stateDir,
       sketchK.fold(identity[DataFrame] _)(
         k => mgCompact(Seq("chunk"), "ndocs", k)))
-    private val docSum = new GridFold(Seq("k"), "n", maxMerge = false,
+    private val docSum = new GridFold(Seq("k"), Seq(sum("n").as("n")),
       b => b.agg(countDistinct("doc_id").as("n"))
         .select(lit(0).as("k"), col("n")),
       _ => (), stateDir.map(_ + DocSumSuffix))
-    private val docHll = new GridFold(Seq("bucket"), "register",
-      maxMerge = true,
+    private val docHll = new GridFold(Seq("bucket"),
+      Seq(max("register").as("register")),
       b => graft.ops.Sketches.hllRegistersOf(b, "doc_id"), _ => (),
       stateDir.map(_ + DocHllSuffix))
 
@@ -1468,12 +1286,10 @@ object Streams {
       .flatMapGroupsWithState[CdcState, CdcUpdate](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, it: Iterator[Event], state: GroupState[CdcState]) =>
-          def usOf(e: Event): Long =
-            Math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000
           val prev = state.getOption.orNull
           var best = prev
           it.foreach { e =>
-            val us = usOf(e)
+            val us = usOf(e.ts)
             if (best == null || us > best.us ||
                 (us == best.us && e.event_id > best.eventId))
               best = CdcState(us, e.event_id, e.event_type == "error",

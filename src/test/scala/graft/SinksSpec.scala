@@ -280,6 +280,53 @@ class SinksSpec extends SparkSpec {
       "watermark predicate did not push down to the parquet scan")
   }
 
+  test("a leftover .tmp- manifest marker is not a commit, for the sink and the fold state") {
+    import org.apache.hadoop.fs.Path
+    import graft.streaming.Streams.FoldState
+    // the crash window between marker create and rename: `.tmp-<id>` is
+    // in `_manifests`, `batch-<id>` never landed
+    def crashAt(dir: String, id: Long): Unit = {
+      val manifests = new java.io.File(dir, "_manifests")
+      new java.io.File(manifests, f"batch-$id%020d").delete()
+      assert(new java.io.File(manifests, s".tmp-$id").createNewFile())
+    }
+    def noTmp(dir: String) =
+      !new java.io.File(dir, "_manifests").list().exists(_.startsWith(".tmp-"))
+
+    // the sink: batch 1's files are published but its marker is a .tmp-
+    val out    = tmp()
+    val events = Tables.events(spark, sfDir).select("event_id", "user_id", "value", "ts")
+    val b0 = events.filter(col("event_id") % 2 === 0)
+    val b1 = events.filter(col("event_id") % 2 === 1)
+    Sinks.commitBatch(b0, 0L, "ts", out)
+    Sinks.commitBatch(b1, 1L, "ts", out)
+    crashAt(out, 1L)
+    def idsAsOf(b: Long) = Sinks.readAsOf(spark, out, b)
+      .select("event_id").as[Long].collect().sorted.toSeq
+    assert(idsAsOf(Long.MaxValue) === b0.select("event_id").as[Long].collect().sorted.toSeq,
+      "a .tmp- marker counted as a committed batch")
+    Sinks.commitBatch(b1, 1L, "ts", out)
+    assert(idsAsOf(Long.MaxValue) === events.select("event_id").as[Long].collect().sorted.toSeq)
+    assert(noTmp(out))
+
+    // the fold state: state 1 was renamed into place, its marker is a .tmp-
+    val dir = tmp()
+    def frame(v: Long) = Seq(v).toDF("v")
+    def read(st: Path) = spark.read.parquet(new Path(st, "x").toString).as[Long].head()
+    assert(FoldState.commit(spark, dir, 0L) { st =>
+      frame(1L).write.parquet(new Path(st, "x").toString) })
+    frame(9L).write.parquet(new Path(new Path(dir, f"state-${1L}%020d"), "x").toString)
+    crashAt(dir, 1L)
+    val (id0, st0) = FoldState.latest(spark, dir).get
+    assert(id0 === 0L && read(st0) === 1L, "a .tmp- marker counted as a committed state")
+    assert(FoldState.commit(spark, dir, 1L) { st =>
+      frame(2L).write.parquet(new Path(st, "x").toString) },
+      "re-committing the crashed id must land")
+    val (id1, st1) = FoldState.latest(spark, dir).get
+    assert(id1 === 1L && read(st1) === 2L)
+    assert(noTmp(dir))
+  }
+
   test("exactly-once streaming sink lands batches once with one manifest per batch") {
     val out  = tmp()
     val ckpt = tmp()

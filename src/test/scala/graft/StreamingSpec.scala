@@ -644,6 +644,78 @@ class StreamingSpec extends SparkSpec {
     assert(states.size === 1, s"GC should keep exactly one state: $states")
   }
 
+  /** The `state-` entries of each state dir. */
+  private def statesIn(dirs: String*): Map[String, Seq[String]] =
+    dirs.map(d => d -> new java.io.File(d).listFiles().map(_.getName)
+      .filter(_.startsWith("state-")).toSeq).toMap
+
+  test("profile fold crash between its counts and regs commits: the replay re-aligns them") {
+    import org.apache.spark.sql.Row
+    def ev(id: Long, min: Long, u: Long, typ: String, v: Double) =
+      Event(id, ts(min), u, typ, v, "{}")
+    val feed1 = Seq(ev(10, 120, 3, "click", 7.25), ev(11, 150, 4, "view", 2.5))
+    val feed2 = Seq(ev(1, 5, 9, "purchase", 0.011111), ev(2, 10, 1, "error", 480.5))
+    val want = graft.ops.Profile.finalizeProfile(graft.ops.Profile.mergeProfileStates(
+      graft.ops.Profile.incrementalStates((feed1 ++ feed2).toDF()
+        .withColumn("half", col("event_id") % 2)))).collect().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("profile-crash").toString
+
+    // process 1: batch 0 whole; batch 1 commits its counts, then the
+    // process dies before the regs commit (counts at 1, regs at 0)
+    val f1 = new Streams.ProfileFold(_ => (), Some(dir))
+    f1.step(feed1.toDF(), 0L)
+    f1.counts.step(feed2.toDF(), 1L)
+
+    // process 2: a fresh fold over the same dirs; the restarted query
+    // re-delivers batch 1
+    val em = scala.collection.mutable.ArrayBuffer.empty[Seq[Row]]
+    val f2 = new Streams.ProfileFold(df => em += df.collect().toSeq, Some(dir))
+    f2.step(feed2.toDF(), 1L)
+    assert(em.last === want, s"post-crash replay diverged: ${em.last}")
+    val one = Seq(f"state-${1L}%020d")
+    assert(statesIn(dir, dir + Streams.RegsSuffix).values.forall(_ === one),
+      s"each component dir must hold exactly state 1: ${statesIn(dir, dir + Streams.RegsSuffix)}")
+  }
+
+  test("drift fold crash between its era and live commits of the cut batch: the replay re-aligns them") {
+    import org.apache.spark.sql.Row
+    def ev(id: Long, min: Long, u: Long, typ: String, v: Double) =
+      Event(id, ts(min), u, typ, v, "{}")
+    val era0  = Seq(ev(1, 5, 1, "click", 2.0), ev(2, 10, 1, "view", 2.5),
+      ev(3, 15, 2, "click", 2.25))
+    val feed2 = Seq(ev(10, 120, 7, "purchase", 40.0), ev(11, 125, 8, "error", 55.5))
+    def statesOf(rows: Seq[Event]) = graft.ops.Profile.mergeProfileStates(
+      graft.ops.Profile.incrementalStates(
+        rows.toDF().withColumn("half", col("event_id") % 2)))
+    val want = graft.ops.Profile.driftStates(statesOf(era0), statesOf(era0 ++ feed2))
+      .collect().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("drift-crash").toString
+
+    // process 1: the era spans batches 0 and 1 (eraCut = 1); at the cut
+    // batch the era fold commits, then the process dies before the live
+    // fold does (era at 1, live at 0)
+    val (cutA, cutB) = era0.splitAt(2)
+    val f1 = new Streams.DriftFold(1L, _ => (), Some(dir))
+    f1.step(cutA.toDF(), 0L)
+    f1.era.step(cutB.toDF(), 1L)
+
+    // process 2: restart, replay the cut batch, then one post-cut trigger
+    val em = scala.collection.mutable.ArrayBuffer.empty[Seq[Row]]
+    val f2 = new Streams.DriftFold(1L, df => em += df.collect().toSeq, Some(dir))
+    f2.step(cutB.toDF(), 1L)
+    assert(em.isEmpty, "the base era must not emit drift rows")
+    f2.step(feed2.toDF(), 2L)
+    assert(em.last === want, s"post-crash drift diverged: ${em.last}")
+    val era = dir + Streams.EraSuffix
+    val dirs = Seq(dir, dir + Streams.RegsSuffix, era, era + Streams.RegsSuffix)
+    val got = statesIn(dirs: _*)
+    assert(got(dir) === Seq(f"state-${2L}%020d") &&
+      got(dir + Streams.RegsSuffix) === Seq(f"state-${2L}%020d") &&
+      got(era) === Seq(f"state-${1L}%020d") &&
+      got(era + Streams.RegsSuffix) === Seq(f"state-${1L}%020d"),
+      s"each component dir must hold exactly one state: $got")
+  }
+
   test("streaming drift feed equals the batch two-era diff; a replayed trigger changes nothing") {
     import org.apache.spark.sql.Row
     def ev(id: Long, min: Long, u: Long, typ: String, v: Double) =
@@ -1098,15 +1170,11 @@ class StreamingSpec extends SparkSpec {
     val dealt  = events.sortBy(e => e.event_id * 2654435761L % 997)
     val thirds = dealt.grouped((dealt.size + 2) / 3).toSeq
     val ms = MemoryStream[Event](spark)
-    var grid = spark.emptyDataFrame
-      .sparkSession.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "d DATE, event_type STRING, n BIGINT"))
+    var grid: DataFrame = null
+    val fold = Streams.dayTypeFold(g => grid = g.localCheckpoint())
     val q = ms.toDF().writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        grid = Streams.foldDayTypeCounts(grid, batch).localCheckpoint()
-      }.start()
+      .foreachBatch { (batch: DataFrame, id: Long) => fold.step(batch, id) }
+      .start()
     thirds.foreach { t => ms.addData(t); q.processAllAvailable() }
     q.stop()
     val streamed = ops.Advanced.driftFromCounts(grid)
@@ -1131,7 +1199,7 @@ class StreamingSpec extends SparkSpec {
     val preds = scala.collection.mutable.Map.empty[Long, (String, Long)]
     val q = ms.toDF().writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val out = Streams.nbClassifyBatch(gridF, clsF, batch).collect()
+        val out = graft.ops.LM.nbScore(batch, gridF, clsF).collect()
         preds.synchronized {
           out.foreach(r => preds(r.getLong(0)) = (r.getString(1), r.getLong(2)))
         }
@@ -1151,14 +1219,11 @@ class StreamingSpec extends SparkSpec {
     val dealt  = events.sortBy(e => e.event_id * 2654435761L % 997)
     val thirds = dealt.grouped((dealt.size + 2) / 3).toSeq
     val ms = MemoryStream[Event](spark)
-    var grid = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "event_type STRING, d DATE, cents BIGINT"))
+    var grid: DataFrame = null
+    val fold = Streams.dailyCentsFold(g => grid = g.localCheckpoint())
     val q = ms.toDF().writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        grid = Streams.foldDailyCents(grid, batch).localCheckpoint()
-      }.start()
+      .foreachBatch { (batch: DataFrame, id: Long) => fold.step(batch, id) }
+      .start()
     thirds.foreach { t => ms.addData(t); q.processAllAvailable() }
     q.stop()
     val streamed = ops.Advanced.ewmaFromDaily(grid)
@@ -1789,14 +1854,11 @@ class StreamingSpec extends SparkSpec {
     val dealt  = events.sortBy(e => e.event_id * 2654435761L % 997)
     val thirds = dealt.grouped((dealt.size + 2) / 3).toSeq
     val ms = MemoryStream[Event](spark)
-    var grid = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "bucket_idx BIGINT, cnt BIGINT"))
+    var grid: DataFrame = null
+    val fold = Streams.histFold(lo, width, g => grid = g.localCheckpoint())
     val q = ms.toDF().writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        grid = Streams.foldCentsHist(grid, batch, lo, width).localCheckpoint()
-      }.start()
+      .foreachBatch { (batch: DataFrame, id: Long) => fold.step(batch, id) }
+      .start()
     thirds.foreach { t => ms.addData(t); q.processAllAvailable() }
     q.stop()
     val batch = ops.Sketches.centsHist(all, lo, width)
@@ -1807,7 +1869,7 @@ class StreamingSpec extends SparkSpec {
 
   test("cents histogram fold: replay-safe, restart-safe, replay across restart") {
     // the HistFold protocol: a re-delivered batch id replaces its
-    // per-batch histogram (the additive foldCentsHist would double-count),
+    // per-batch histogram (a plain additive merge would double-count),
     // and the committed (base, last) state survives a process restart
     val all = Tables.events(spark, sfDir)
       .select(round(col("value") * 100).cast("long").as("cents"))
@@ -1941,14 +2003,11 @@ class StreamingSpec extends SparkSpec {
     val thirds = dealt.grouped((dealt.size + 2) / 3).toSeq
     val feed   = thirds.take(2) ++ Seq(thirds(1)) ++ thirds.drop(2)
     val ms = MemoryStream[Event](spark)
-    var grid = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "event_type STRING, bucket INT, register INT"))
+    var grid: DataFrame = null
+    val fold = Streams.hllFold(g => grid = g.localCheckpoint())
     val q = ms.toDF().writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        grid = Streams.foldHllRegisters(grid, batch).localCheckpoint()
-      }.start()
+      .foreachBatch { (batch: DataFrame, id: Long) => fold.step(batch, id) }
+      .start()
     feed.foreach { t => ms.addData(t); q.processAllAvailable() }
     q.stop()
     val batch = ops.Sketches.hllRegistersFrom(
