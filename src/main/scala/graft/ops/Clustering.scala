@@ -53,9 +53,11 @@ object Clustering {
 
   /** Micro-snap an explicit (vec_id, embedding) frame. */
   private[graft] def vmOf(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS LONG))")
-        .as("vm"))
+    emb.select(col("vec_id"), expr(microSnap).as("vm"))
+
+  /** Each embedding coordinate snapped to integer micro units. */
+  private final val microSnap =
+    "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS LONG))"
 
   /** Final (vec_id, cell) assignment of the oracle-checked trajectory over
     * an explicit (vec_id, embedding) frame — the cluster source
@@ -302,14 +304,8 @@ object Clustering {
       val (mu, cov) = pcaModel(vmOf(emb))
       val v1 = pcaTrajectory(cov).last
       val v2 = pcaTrajectory(pcaDeflate(cov, v1)).last
-      def dot(v: Array[Long]): Column =
-        expr("aggregate(zip_with(zip_with(" +
-          "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS LONG)), " +
-          s"array(${mu.mkString(",")}L), (x, m) -> x - m), " +
-          s"array(${v.mkString(",")}L), (d, w) -> d * w), " +
-          "0L, (a, b) -> a + b)")
       emb.select(col("vec_id"), col("label"),
-        dot(v1).as("pc1"), dot(v2).as("pc2"))
+        pcScoreCol(mu, v1).as("pc1"), pcScoreCol(mu, v2).as("pc2"))
         .orderBy("vec_id")
     },
 
@@ -478,8 +474,7 @@ object Clustering {
     * and the streaming drift feed.
     */
   private[graft] def pcScoreCol(mu: Array[Long], v: Array[Long]): Column =
-    expr("aggregate(zip_with(zip_with(" +
-      "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS LONG)), " +
+    expr(s"aggregate(zip_with(zip_with($microSnap, " +
       s"array(${mu.mkString(",")}L), (x, m) -> x - m), " +
       s"array(${v.mkString(",")}L), (d, w) -> d * w), " +
       "0L, (a, b) -> a + b)")

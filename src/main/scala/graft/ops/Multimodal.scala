@@ -170,15 +170,40 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** documents → genuine PNG file bytes (every doc). */
-  def encodePng(spark: SparkSession, sfDir: String): Dataset[RealMedia] = {
+  /** documents → one `kind` payload per doc id. `encoder` runs once per
+    * partition (so a writer it opens serves the whole partition, with
+    * ImageIO's disk cache off: in-memory, no /tmp spill) and returns the
+    * per-id encode.
+    */
+  private def encodeDocs(spark: SparkSession, sfDir: String, kind: String)(
+      encoder: () => Long => Array[Byte]): Dataset[RealMedia] = {
     import spark.implicits._
     Tables.spread(Tables.documents(spark, sfDir).select("doc_id")).as[Long]
       .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false) // in-memory, no /tmp spill
-        it.map(id => RealMedia(id, "png", imageBytes(id, "png")))
+        javax.imageio.ImageIO.setUseCache(false)
+        val enc = encoder()
+        it.map(id => RealMedia(id, kind, enc(id)))
       }
   }
+
+  /** Σ(r+g+b) over a decoded raster. */
+  private def rgbSum(img: java.awt.image.BufferedImage): Long = {
+    var sum = 0L; var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val rgb = img.getRGB(x, y)
+        sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
+        x += 1
+      }
+      y += 1
+    }
+    sum
+  }
+
+  /** documents → genuine PNG file bytes (every doc). */
+  def encodePng(spark: SparkSession, sfDir: String): Dataset[RealMedia] =
+    encodeDocs(spark, sfDir, "png")(() => imageBytes(_, "png"))
 
   /** Decode arbitrary image bytes through the JDK's real ImageIO readers
     * (PNG/JPEG/BMP/GIF). Unrecognizable or truncated payloads quarantine as
@@ -197,20 +222,8 @@ object Multimodal {
         try {
           val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p))
           if (img == null) invalid
-          else {
-            var sum = 0L; var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                val rgb = img.getRGB(x, y)
-                sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-                x += 1
-              }
-              y += 1
-            }
-            RealDecoded(m.media_id, m.kind, Some(img.getWidth), Some(img.getHeight),
-              None, None, p.length, sum)
-          }
+          else RealDecoded(m.media_id, m.kind, Some(img.getWidth),
+            Some(img.getHeight), None, None, p.length, rgbSum(img))
         } catch { case _: java.io.IOException => invalid }
       }
     }
@@ -283,14 +296,8 @@ object Multimodal {
   }
 
   /** documents → genuine PNG bytes of the perceptual-family raster. */
-  def encodePerc(spark: SparkSession, sfDir: String): Dataset[RealMedia] = {
-    import spark.implicits._
-    Tables.spread(Tables.documents(spark, sfDir).select("doc_id")).as[Long]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map(id => RealMedia(id, "png", percPngBytes(id)))
-      }
-  }
+  def encodePerc(spark: SparkSession, sfDir: String): Dataset[RealMedia] =
+    encodeDocs(spark, sfDir, "png")(() => percPngBytes(_))
 
   /** 64-bit dHash of a DECODED raster: nearest-neighbor 9×8 luma grid
     * (sx = gx·w div 9, sy = gy·h div 8 — integer resample, so the code is
@@ -592,15 +599,11 @@ object Multimodal {
     * partition (see [[gifBytesWith]]); left to GC at partition end — the
     * JDK GIF plugin is pure Java, no native resources to release eagerly.
     */
-  def encodeGif(spark: SparkSession, sfDir: String): Dataset[RealMedia] = {
-    import spark.implicits._
-    Tables.spread(Tables.documents(spark, sfDir).select("doc_id")).as[Long]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        val wr = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-        it.map(id => RealMedia(id, "gif", gifBytesWith(wr, id)))
-      }
-  }
+  def encodeGif(spark: SparkSession, sfDir: String): Dataset[RealMedia] =
+    encodeDocs(spark, sfDir, "gif") { () =>
+      val wr = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
+      gifBytesWith(wr, _)
+    }
 
   /** Real per-frame decode out of the container: one output row per frame
     * with the frame's actual decoded pixel sum — the frame-sampling layout
@@ -623,17 +626,8 @@ object Multimodal {
           if (n <= 0) invalid
           else (0 until n).map { f =>
             val img = rd.read(f)
-            var sum = 0L; var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                val rgb = img.getRGB(x, y)
-                sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-                x += 1
-              }
-              y += 1
-            }
-            GifFrame(m.media_id, f, img.getWidth, img.getHeight, sum, valid = true)
+            GifFrame(m.media_id, f, img.getWidth, img.getHeight, rgbSum(img),
+              valid = true)
           }
         } catch {
           case e @ (_: java.io.IOException | _: IndexOutOfBoundsException |
@@ -797,15 +791,11 @@ object Multimodal {
   /** documents → genuine MJPEG-in-AVI payloads (every doc). One JPEG
     * writer per partition, as in [[encodeGif]].
     */
-  def encodeAvi(spark: SparkSession, sfDir: String): Dataset[RealMedia] = {
-    import spark.implicits._
-    Tables.spread(Tables.documents(spark, sfDir).select("doc_id")).as[Long]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-        it.map(id => RealMedia(id, "avi", aviBytesWith(wr, id)))
-      }
-  }
+  def encodeAvi(spark: SparkSession, sfDir: String): Dataset[RealMedia] =
+    encodeDocs(spark, sfDir, "avi") { () =>
+      val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
+      aviBytesWith(wr, _)
+    }
 
   /** Walk the RIFF/'AVI ' chunk tree and decode every '00dc' frame through
     * the real ImageIO JPEG reader. Header checks are genuine: RIFF + form
@@ -859,17 +849,7 @@ object Multimodal {
                     rd.setInput(javax.imageio.ImageIO.createImageInputStream(
                       new java.io.ByteArrayInputStream(p, mo + 8, csz)))
                     val img = rd.read(0)
-                    var sum = 0L; var y = 0
-                    while (y < img.getHeight) {
-                      var x = 0
-                      while (x < img.getWidth) {
-                        val rgb = img.getRGB(x, y)
-                        sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-                        x += 1
-                      }
-                      y += 1
-                    }
-                    frames += ((img.getWidth, img.getHeight, sum))
+                    frames += ((img.getWidth, img.getHeight, rgbSum(img)))
                   }
                   mo += 8 + csz + (csz & 1)
                 }
@@ -1021,15 +1001,11 @@ object Multimodal {
   /** documents → genuine transport-stream payloads (every doc). One JPEG
     * writer per partition, as in [[encodeAvi]].
     */
-  def encodeTs(spark: SparkSession, sfDir: String): Dataset[RealMedia] = {
-    import spark.implicits._
-    Tables.spread(Tables.documents(spark, sfDir).select("doc_id")).as[Long]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-        it.map(id => RealMedia(id, "ts", tsBytesWith(wr, id)))
-      }
-  }
+  def encodeTs(spark: SparkSession, sfDir: String): Dataset[RealMedia] =
+    encodeDocs(spark, sfDir, "ts") { () =>
+      val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
+      tsBytesWith(wr, _)
+    }
 
   /** Demultiplex the transport stream and decode every PES-carried JPEG
     * frame. The checks are genuine: per-packet sync bytes, PAT and PMT
@@ -1116,17 +1092,7 @@ object Multimodal {
             rd.setInput(javax.imageio.ImageIO.createImageInputStream(
               new java.io.ByteArrayInputStream(pes, jo, pes.length - jo)))
             val img = rd.read(0)
-            var sum = 0L; var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                val rgb = img.getRGB(x, y)
-                sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-                x += 1
-              }
-              y += 1
-            }
-            (img.getWidth, img.getHeight, sum)
+            (img.getWidth, img.getHeight, rgbSum(img))
           }
           require(frames.nonEmpty &&
             frames.forall { case (w, h, _) =>

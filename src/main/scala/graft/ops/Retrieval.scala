@@ -261,13 +261,18 @@ object Retrieval {
       .select(posexplode(col("l")).as(Seq("p", "e")))
       .select(col("e.id").as("id"), (col("p") + 1).cast("long").as(rankName))
 
+  /** The re-ranks' cosine of an embeddings row (embedding, nrm), from
+    * [[Similarity.withNorm]], against a probe (pemb, pn).
+    */
+  private val cosR: Column =
+    Similarity.cosine(col("embedding"), col("nrm"), col("pemb"), col("pn"))
+
   /** The batch serving pipeline over explicit documents/embeddings frames
     * (q_retrieval_batch's engine). See the declared query's comment for
     * the stage walk.
     */
   private[graft] def retrievalBatchFrom(docsIn: DataFrame,
       emb: DataFrame): DataFrame = {
-    import graft.functions.exprs.dot_ff
     import graft.functions.TextNormExprs.normalize_text
     val docsN = docsIn
       .select(col("doc_id"), normalize_text(col("text")).as("text"))
@@ -320,8 +325,7 @@ object Retrieval {
       .localCheckpoint() // barrier: ≤ RbProbes·CandK rows feed two branches
     // per-probe exact-cosine re-rank: the candidate list broadcasts INTO
     // the embeddings scan; probe vectors are a ≤ RbProbes-row broadcast
-    val nv = emb
-      .withColumn("nrm", sqrt(dot_ff(col("embedding"), col("embedding"))))
+    val nv = Similarity.withNorm(emb)
     val pv = nv.join(broadcast(probes.select("p_id")),
         col("vec_id") === col("p_id"))
       .select(col("p_id").as("pp"), col("embedding").as("pemb"),
@@ -329,9 +333,7 @@ object Retrieval {
     val cos = nv.join(broadcast(cand.select("p_id", "id")),
         col("vec_id") === col("id"))
       .join(broadcast(pv), col("p_id") === col("pp"))
-      .select(col("p_id"), col("id"),
-        round(dot_ff(col("embedding"), col("pemb")) / (col("nrm") * col("pn")), 6)
-          .as("cos_r"))
+      .select(col("p_id"), col("id"), cosR.as("cos_r"))
       .localCheckpoint() // ≤ RbProbes·CandK rows feed rank + value branches
     val cosRank = cos.withColumn("rank_cos", row_number().over(
         Window.partitionBy("p_id").orderBy(col("cos_r").desc, col("id")))
@@ -401,16 +403,12 @@ object Retrieval {
          |         + coalesce(1.0::DOUBLE / ($RrfK + rank_vec), 0) AS rrf
          |FROM lex FULL OUTER JOIN vec ON lex.id = vec.id
          |ORDER BY rrf DESC, id""".stripMargin) { (s, dir) =>
-      import graft.functions.exprs.dot_ff
-      val nv = Tables.embeddings(s, dir)
-        .withColumn("nrm", sqrt(dot_ff(col("embedding"), col("embedding"))))
+      val nv = Similarity.withNorm(Tables.embeddings(s, dir))
       val pv = nv.filter(col("vec_id") === ProbeId)
         .select(col("embedding").as("pemb"), col("nrm").as("pn"))
       val cand = nv.filter(col("vec_id") =!= ProbeId)
         .crossJoin(broadcast(pv))
-        .select(col("vec_id").as("id"),
-          round(dot_ff(col("embedding"), col("pemb")) / (col("nrm") * col("pn")), 6)
-            .as("cos_r"))
+        .select(col("vec_id").as("id"), cosR.as("cos_r"))
       val vtop = cand.orderBy(col("cos_r").desc, col("id")).limit(TopK)
       val vec = rankOf(vtop, col("cos_r"), col("id"), "rank_vec")
       val lex = rankOf(bm25TopK(s, dir), col("score"), col("doc_id"), "rank_lex")
@@ -472,7 +470,6 @@ object Retrieval {
          |         + coalesce(1.0::DOUBLE / ($RrfK + c.rank_cos), 0) AS rrf
          |FROM rf_lex l LEFT JOIN rf_cos c ON c.id = l.id
          |ORDER BY rrf DESC, id""".stripMargin) { (s, dir) =>
-      import graft.functions.exprs.dot_ff
       import graft.functions.TextNormExprs.normalize_text
       // stages 1–2: canonical text; tokenization happens inside the
       // candidate stage's split (whitespace terms over canonical text)
@@ -483,8 +480,7 @@ object Retrieval {
       val cand = bm25TopKFrom(docsN, CandK).localCheckpoint()
       val lex = rankOf(cand, col("score"), col("doc_id"), "rank_lex")
       // stage 4: exact-cosine re-rank against the probe embedding
-      val nv = Tables.embeddings(s, dir)
-        .withColumn("nrm", sqrt(dot_ff(col("embedding"), col("embedding"))))
+      val nv = Similarity.withNorm(Tables.embeddings(s, dir))
       val pv = nv.filter(col("vec_id") === ProbeId)
         .select(col("embedding").as("pemb"), col("nrm").as("pn"))
       // the candidate list (≤ CandK rows by LIMIT construction, the
@@ -494,9 +490,7 @@ object Retrieval {
       // branch — without the barrier each branch re-scans embeddings
       val cos = nv.join(broadcast(lex), col("vec_id") === col("id"))
         .crossJoin(broadcast(pv))
-        .select(col("id"),
-          round(dot_ff(col("embedding"), col("pemb")) / (col("nrm") * col("pn")), 6)
-            .as("cos_r"))
+        .select(col("id"), cosR.as("cos_r"))
         .localCheckpoint()
       val cosRank = rankOf(cos, col("cos_r"), col("id"), "rank_cos")
         .join(broadcast(cos), "id")
@@ -670,16 +664,13 @@ object Retrieval {
          |FROM tm a JOIN tm b ON b.d <= a.d
          |GROUP BY a.d, a.x_d ORDER BY d""".stripMargin
     }) { (s, dir) =>
-      import graft.functions.exprs.{dot_ff, dot_ll}
-      val nv = Tables.embeddings(s, dir)
-        .withColumn("nrm", sqrt(dot_ff(col("embedding"), col("embedding"))))
+      import graft.functions.exprs.dot_ll
+      val nv = Similarity.withNorm(Tables.embeddings(s, dir))
       val pv = nv.filter(col("vec_id") === ProbeId)
         .select(col("embedding").as("pemb"), col("nrm").as("pn"))
       val ctop = rankOf(
         nv.filter(col("vec_id") =!= ProbeId).crossJoin(broadcast(pv))
-          .select(col("vec_id").as("id"),
-            round(dot_ff(col("embedding"), col("pemb"))
-              / (col("nrm") * col("pn")), 6).as("cos_r"))
+          .select(col("vec_id").as("id"), cosR.as("cos_r"))
           .orderBy(col("cos_r").desc, col("id")).limit(RboDepth),
         col("cos_r"), col("id"), "rank_cos")
       val qv = Similarity.sqQuantized(Tables.embeddings(s, dir))

@@ -32,6 +32,14 @@ import graft.functions.exprs._
   *
   * Cosine values are rounded to 6 dp before ranking (ties broken by
   * candidate id) so rank order is engine-independent.
+  *
+  * Each rule of the plane is written once. [[probeSide]] and [[candSide]]
+  * are the two sides of a [[withNorm]] frame, (p_id, pv, pn) and
+  * (c_id, cv, cn); [[cosine]] is the rounded cosine (Retrieval's re-ranks
+  * call it too) and [[cosR]] scores a joined pair with it; [[rerank]] is
+  * the shortlist → exact re-rank. Each ANN family has one candidate join,
+  * called by its production scorer and by [[annCalibration]]'s sweep at
+  * their own probe counts: [[lshJoin]], [[ivfJoin]] and [[screenPairs]].
   */
 object Similarity {
 
@@ -364,6 +372,31 @@ object Similarity {
   private def probeBatch(e: DataFrame): DataFrame =
     e.filter(col("vec_id") % 100 === 0).orderBy("vec_id").limit(MaxProbeBatch)
 
+  /** The 6-dp rounded cosine of vectors `a`, `b` with norms `an`, `bn`. */
+  private[graft] def cosine(a: Column, an: Column, b: Column, bn: Column): Column =
+    round(dot_ff(a, b) / (an * bn), 6)
+
+  /** The probe side of a [[withNorm]] frame: (p_id, pv, pn, extra*). */
+  private def probeSide(e: DataFrame, extra: Column*): DataFrame =
+    probeBatch(e).select(Seq(col("vec_id").as("p_id"), col("embedding").as("pv"),
+      col("nrm").as("pn")) ++ extra: _*)
+
+  /** The candidate side of a [[withNorm]] frame: (c_id, cv, cn, extra*). */
+  private def candSide(e: DataFrame, extra: Column*): DataFrame =
+    e.select(Seq(col("vec_id").as("c_id"), col("embedding").as("cv"),
+      col("nrm").as("cn")) ++ extra: _*)
+
+  /** [[cosine]] of a joined probe/candidate pair. */
+  private val cosR: Column = cosine(col("pv"), col("pn"), col("cv"), col("cn"))
+
+  /** Exact re-rank of a (p_id, c_id, keep*) shortlist: each pair meets its
+    * candidate and (broadcast) probe side of `e` and is scored with [[cosR]]
+    * into (p_id, keep*, cos_r, c_id).
+    */
+  private def rerank(shortlist: DataFrame, e: DataFrame, keep: String*): DataFrame =
+    shortlist.join(candSide(e), "c_id").join(broadcast(probeSide(e)), "p_id")
+      .select(col("p_id") +: keep.map(col) :+ cosR.as("cos_r") :+ col("c_id"): _*)
+
   /** Exact cosine top-k (k=10) for probes vec_id % 100 = 0.
     *
     * Exact top-k over unindexed vectors is inherently a full scan of the
@@ -434,28 +467,10 @@ object Similarity {
     * clustered-fixture recall gate (QueriesSpec) drive the same operator.
     */
   private[graft] def lshScoredFrom(emb: DataFrame,
-      numTables: Int, numPlanes: Int, probesPerTable: Int): DataFrame = {
-    val e = withNorm(emb)
-      .withColumn("bkts", array((0 until numTables).map(t =>
-        bucket(col("embedding"), t, numPlanes)): _*))
-    val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      col("nrm").as("cn"), posexplode(col("bkts")).as(Seq("tbl", "bkt")))
-    val probeBuckets = flatten(array((0 until numTables).map { t =>
-      val b = element_at(col("bkts"), t + 1)
-      transform(flipMasks(t, numPlanes, probesPerTable),
-        m => struct(lit(t).as("tbl"), b.bitwiseXOR(m).as("bkt")))
-    }: _*))
-    val probes = probeBatch(e)
-      .select(col("vec_id").as("p_id"), col("embedding").as("pv"), col("nrm").as("pn"),
-        explode(probeBuckets).as("tb"))
-      .select(col("p_id"), col("pv"), col("pn"),
-        col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt"))
-    val cosR = round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
-    cands.join(probes, Seq("tbl", "bkt"))
-      .filter(col("p_id") =!= col("c_id"))
-      .select(col("p_id"), cosR.as("cos_r"), col("c_id"))
+      numTables: Int, numPlanes: Int, probesPerTable: Int): DataFrame =
+    lshJoin(emb, numTables, numPlanes, probesPerTable)
+      .select("p_id", "cos_r", "c_id")
       .distinct() // a pair can match via several probed buckets/tables
-  }
 
   /** [[lshScoredFrom]] at the calibration's MAX probe budget, each distinct
     * candidate pair tagged with the smallest 0-based flip-mask index `mi`
@@ -468,28 +483,33 @@ object Similarity {
     * per-setting `.distinct()` kept.
     */
   private[graft] def lshTaggedFrom(emb: DataFrame, numTables: Int,
-      numPlanes: Int, maxProbes: Int): DataFrame = {
+      numPlanes: Int, maxProbes: Int): DataFrame =
+    lshJoin(emb, numTables, numPlanes, maxProbes)
+      .groupBy("p_id", "c_id")
+      .agg(min("mi").as("mi"), max("cos_r").as("cos_r"))
+
+  /** The one LSH bucket join: each probe meets the candidates of the
+    * buckets its first `probes` flip masks reach in every table, one
+    * (p_id, c_id, mi, cos_r) row per matching (table, bucket), tagged with
+    * the 0-based flip-mask index `mi`.
+    */
+  private def lshJoin(emb: DataFrame, numTables: Int, numPlanes: Int,
+      probes: Int): DataFrame = {
     val e = withNorm(emb)
       .withColumn("bkts", array((0 until numTables).map(t =>
         bucket(col("embedding"), t, numPlanes)): _*))
-    val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      col("nrm").as("cn"), posexplode(col("bkts")).as(Seq("tbl", "bkt")))
     val probeBuckets = flatten(array((0 until numTables).map { t =>
       val b = element_at(col("bkts"), t + 1)
-      transform(flipMasks(t, numPlanes, maxProbes),
+      transform(flipMasks(t, numPlanes, probes),
         (m, i) => struct(lit(t).as("tbl"), b.bitwiseXOR(m).as("bkt"), i.as("mi")))
     }: _*))
-    val probes = probeBatch(e)
-      .select(col("vec_id").as("p_id"), col("embedding").as("pv"), col("nrm").as("pn"),
-        explode(probeBuckets).as("tb"))
-      .select(col("p_id"), col("pv"), col("pn"),
-        col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt"), col("tb.mi").as("mi"))
-    val cosR = round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
-    cands.join(probes, Seq("tbl", "bkt"))
+    candSide(e, posexplode(col("bkts")).as(Seq("tbl", "bkt")))
+      .join(probeSide(e, explode(probeBuckets).as("tb"))
+        .select(col("p_id"), col("pv"), col("pn"),
+          col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt"), col("tb.mi").as("mi")),
+        Seq("tbl", "bkt"))
       .filter(col("p_id") =!= col("c_id"))
       .select(col("p_id"), col("c_id"), col("mi"), cosR.as("cos_r"))
-      .groupBy("p_id", "c_id")
-      .agg(min("mi").as("mi"), max("cos_r").as("cos_r"))
   }
 
   /** ANN top-k: same contract as [[cosineTopK]], approximate recall.
@@ -520,23 +540,14 @@ object Similarity {
     // shortlist size from the table's row count (parquet metadata read)
     val n = Tables.embeddings(s, dir).count()
     val m = math.max(10L, (n - 1 + ScreenDen - 1) / ScreenDen).toInt
-    val probes = probeBatch(e)
-      .select(col("vec_id").as("p_id"), col("embedding").as("pv"), col("nrm").as("pn"))
-    val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      col("nrm").as("cn"))
     val pdot = dot_ff(slice(col("cv"), 1, ScreenDims), slice(col("pv"), 1, ScreenDims))
     val screen = udaf(new graft.functions.TopKAgg(m))
-    val shortlist = cands
-      .join(broadcast(probes.select("p_id", "pv")), col("p_id") =!= col("c_id"))
+    val shortlist = candSide(e)
+      .join(broadcast(probeSide(e).select("p_id", "pv")), col("p_id") =!= col("c_id"))
       .select(col("p_id"), pdot.as("pd"), col("c_id"))
       .groupBy("p_id").agg(screen(col("pd"), col("c_id")).as("tk"))
       .select(col("p_id"), explode(col("tk.ids")).as("c_id"))
-    val cosR = round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
-    val scored = shortlist
-      .join(cands, "c_id")
-      .join(broadcast(probes), "p_id")
-      .select(col("p_id"), cosR.as("cos_r"), col("c_id"))
-    rankTopK(scored)
+    rankTopK(rerank(shortlist, e))
   }
 
   /** Shortlist size per probe for the exact-pruned path's bound stage. */
@@ -630,47 +641,52 @@ object Similarity {
     */
   private[graft] def cosineTopKFrom(emb: DataFrame): DataFrame = {
     val e = withNorm(emb)
-    val probes = probeBatch(e)
-      .select(col("vec_id").as("p_id"), col("embedding").as("pv"), col("nrm").as("pn"))
-    val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      col("nrm").as("cn"))
-    val cosR = round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
-    rankTopK(cands.join(broadcast(probes), col("p_id") =!= col("c_id"))
+    rankTopK(candSide(e).join(broadcast(probeSide(e)), col("p_id") =!= col("c_id"))
       .select(col("p_id"), cosR.as("cos_r"), col("c_id")))
   }
 
-  private[graft] def prunedSurvivorsFrom(emb: DataFrame,
-      shortlist: Int = BoundShortlist): DataFrame = {
+  /** The screen family's pair space: `emb`'s [[withNorm]] frame with each
+    * vector's head `hv` (first [[ScreenDims]] dims) and tail norm `tn`, and
+    * every (probe, candidate) pair of it with the probe's as `phv`/`ptn` —
+    * the columns [[headDot]] and [[upper]] read.
+    */
+  private def screenPairs(emb: DataFrame): (DataFrame, DataFrame) = {
+    val tail = slice(col("embedding"), ScreenDims + 1, Dim - ScreenDims)
     val e = withNorm(emb)
       .withColumn("hv", slice(col("embedding"), 1, ScreenDims))
-      .withColumn("tn", sqrt(dot_ff(
-        slice(col("embedding"), ScreenDims + 1, Dim - ScreenDims),
-        slice(col("embedding"), ScreenDims + 1, Dim - ScreenDims))))
-    val probes = probeBatch(e)
-      .select(col("vec_id").as("p_id"), col("embedding").as("pv"),
-        col("nrm").as("pn"), col("hv").as("phv"), col("tn").as("ptn"))
-    val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      col("nrm").as("cn"), col("hv"), col("tn"))
-    val pairs = cands.join(broadcast(probes), col("p_id") =!= col("c_id"))
-    val headDot = dot_ff(col("phv"), col("hv"))
-    val cosR    = round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
+      .withColumn("tn", sqrt(dot_ff(tail, tail)))
+    (e, candSide(e, col("hv"), col("tn"))
+      .join(broadcast(probeSide(e, col("hv").as("phv"), col("tn").as("ptn"))),
+        col("p_id") =!= col("c_id")))
+  }
 
+  /** A screen pair's partial dot over the head dims. */
+  private val headDot: Column = dot_ff(col("phv"), col("hv"))
+
+  /** Cauchy–Schwarz upper bound of a screen pair's full cosine. */
+  private val upper: Column =
+    (headDot + col("ptn") * col("tn")) / (col("pn") * col("cn"))
+
+  /** The 10th-best cosine of a `tk` top-k buffer — the lower bound `lb` of a
+    * probe's true 10th — or -2.0 (keep everything) when it holds fewer.
+    */
+  private val kthOrKeepAll: Column = when(size(col("tk.cs")) >= 10,
+    element_at(col("tk.cs"), size(col("tk.cs")))).otherwise(-2.0)
+
+  private[graft] def prunedSurvivorsFrom(emb: DataFrame,
+      shortlist: Int = BoundShortlist): DataFrame = {
+    val (e, pairs) = screenPairs(emb)
     // 1. lower bound: kth exact cosine among the partial-dot shortlist
     val short = udaf(new graft.functions.TopKAgg(shortlist))
     val exact10 = udaf(new graft.functions.TopKAgg(10))
-    val bound = pairs
-      .select(col("p_id"), headDot.as("pd"), col("c_id"))
-      .groupBy("p_id").agg(short(col("pd"), col("c_id")).as("tk"))
-      .select(col("p_id"), explode(col("tk.ids")).as("c_id"))
-      .join(cands, "c_id").join(broadcast(probes), "p_id")
-      .select(col("p_id"), cosR.as("cos_r"), col("c_id"))
+    val bound = rerank(pairs
+        .select(col("p_id"), headDot.as("pd"), col("c_id"))
+        .groupBy("p_id").agg(short(col("pd"), col("c_id")).as("tk"))
+        .select(col("p_id"), explode(col("tk.ids")).as("c_id")), e)
       .groupBy("p_id").agg(exact10(col("cos_r"), col("c_id")).as("tk"))
-      // fewer than 10 shortlisted → no usable bound → keep everything
-      .select(col("p_id"), when(size(col("tk.cs")) >= 10,
-        element_at(col("tk.cs"), size(col("tk.cs")))).otherwise(-2.0).as("lb"))
+      .select(col("p_id"), kthOrKeepAll.as("lb"))
 
     // 2 + 3. prune by the tail bound, then exact-score survivors only
-    val upper = (headDot + col("ptn") * col("tn")) / (col("pn") * col("cn"))
     pairs.join(broadcast(bound), "p_id")
       .filter(upper >= col("lb") - 1e-6)
       .select(col("p_id"), cosR.as("cos_r"), col("c_id"))
@@ -782,18 +798,22 @@ object Similarity {
     * knob of the calibration curve.
     */
   private[graft] def ivfScored(indexed: DataFrame,
+      cents: Array[Array[Double]], nprobe: Int): DataFrame =
+    ivfJoin(indexed, cents, nprobe).select("p_id", "cos_r", "c_id")
+
+  /** The one IVF cell join: each probe meets the candidates of its `nprobe`
+    * best cells, one (p_id, pr, cos_r, c_id) row per pair, tagged with the
+    * 0-based rank `pr` of the cell it was found in. Each candidate lives in
+    * exactly ONE cell, so no pair repeats.
+    */
+  private[graft] def ivfJoin(indexed: DataFrame,
       cents: Array[Array[Double]], nprobe: Int): DataFrame = {
     val e = withNorm(indexed)
-    val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      col("nrm").as("cn"), col("cell"))
-    val probes = probeBatch(e)
-      .select(col("vec_id").as("p_id"), col("embedding").as("pv"), col("nrm").as("pn"),
-        explode(probeCells(col("embedding"), cents, nprobe)).as("cell"))
-    val cosR = round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
-    // each candidate lives in exactly ONE cell → no pair dedup needed
-    cands.join(probes, Seq("cell"))
+    candSide(e, col("cell"))
+      .join(probeSide(e, posexplode(probeCells(col("embedding"), cents, nprobe))
+        .as(Seq("pr", "cell"))), Seq("cell"))
       .filter(col("p_id") =!= col("c_id"))
-      .select(col("p_id"), cosR.as("cos_r"), col("c_id"))
+      .select(col("p_id"), col("pr"), cosR.as("cos_r"), col("c_id"))
   }
 
   // ---- ANN calibration sweep ------------------------------------------
@@ -820,8 +840,9 @@ object Similarity {
     * row at nprobe = IvfCells scans every cell — its recall is exactly
     * 10⁶ by construction, a built-in self-check; the screen family is
     * exact at every shortlist (recall ≡ 10⁶), its knob trades CANDIDATE
-    * work instead. Scale shape: each setting is one cell/bucket join +
-    * two O(1)-row aggregates; nothing corpus-sized leaves the executors.
+    * work instead. Scale shape: each family is one candidate join at its
+    * largest setting + per-setting aggregates over (probe, tag) top-10s;
+    * nothing corpus-sized leaves the executors.
     */
   def annCalibration(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -883,35 +904,21 @@ object Similarity {
           expr(s"n_hit * 1000000 div $nExact").as("recall10_micro"))
     }
 
-    // IVF: probe cells rank-tagged at nprobe = max; setting p's scored
-    // multiset = rows with probe rank < p (probeCells slices ONE
-    // best-first cell order).
-    val ivfPerBucket = {
-      val e = withNorm(indexed)
-      val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-        col("nrm").as("cn"), col("cell"))
-      val probes = probeBatch(e)
-        .select(col("vec_id").as("p_id"), col("embedding").as("pv"),
-          col("nrm").as("pn"),
-          posexplode(probeCells(col("embedding"), cents, IvfSweep.max))
-            .as(Seq("pr", "cell")))
-      val cosR = round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
-      cands.join(probes, Seq("cell"))
-        .filter(col("p_id") =!= col("c_id"))
-        .select(col("p_id"), col("pr"), cosR.as("cos_r"), col("c_id"))
-        .groupBy("p_id", "pr")
+    // (p_id, tag) partial top-10s and counts of a tagged join, each with
+    // the settings that include its tag (setting p holds tags < p)
+    def perTag(tagged: DataFrame, tag: String, sweep: Seq[Int]): DataFrame =
+      tagged.groupBy("p_id", tag)
         .agg(topk10(col("cos_r"), col("c_id")).as("tk"), count(lit(1)).as("cnt"))
-        .withColumn("sets",
-          filter(typedlit(IvfSweep), p => p >= col("pr") + 1))
-    }
+        .withColumn("sets", filter(typedlit(sweep), p => p >= col(tag) + 1))
+
+    // IVF: one cell join at nprobe = max, rows tagged with the probe rank
+    // (probeCells slices ONE best-first cell order).
+    val ivfPerBucket = perTag(ivfJoin(indexed, cents, IvfSweep.max), "pr", IvfSweep)
 
     // LSH: one bucket join at probesPerTable = max, pairs tagged with the
     // smallest reaching flip-mask index (lshTaggedFrom).
-    val lshPerBucket = lshTaggedFrom(emb, NumTables, NumPlanes, LshSweep.max)
-      .groupBy("p_id", "mi")
-      .agg(topk10(col("cos_r"), col("c_id")).as("tk"), count(lit(1)).as("cnt"))
-      .withColumn("sets",
-        filter(typedlit(LshSweep), p => p >= col("mi") + 1))
+    val lshPerBucket = perTag(
+      lshTaggedFrom(emb, NumTables, NumPlanes, LshSweep.max), "mi", LshSweep)
 
     // Screen: ONE shortlist ranking at the max shortlist (TopKAgg's
     // deterministic order makes every smaller shortlist its prefix), one
@@ -919,28 +926,14 @@ object Similarity {
     // the pair space computing each row's qualifying settings directly
     // (upper-bound filter per setting) — vs 3×(bound pass + filter pass).
     val scrPerBucket = {
-      val e = withNorm(emb)
-        .withColumn("hv", slice(col("embedding"), 1, ScreenDims))
-        .withColumn("tn", sqrt(dot_ff(
-          slice(col("embedding"), ScreenDims + 1, Dim - ScreenDims),
-          slice(col("embedding"), ScreenDims + 1, Dim - ScreenDims))))
-      val probes = probeBatch(e)
-        .select(col("vec_id").as("p_id"), col("embedding").as("pv"),
-          col("nrm").as("pn"), col("hv").as("phv"), col("tn").as("ptn"))
-      val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-        col("nrm").as("cn"), col("hv"), col("tn"))
-      val pairs = cands.join(broadcast(probes), col("p_id") =!= col("c_id"))
-      val headDot = dot_ff(col("phv"), col("hv"))
-      val cosR = round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
+      val (e, pairs) = screenPairs(emb)
       val shortMax = udaf(new graft.functions.TopKAgg(ScreenSweep.max))
-      val shortScored = pairs
+      val shortScored = rerank(pairs
         .select(col("p_id"), headDot.as("pd"), col("c_id"))
         .groupBy("p_id").agg(shortMax(col("pd"), col("c_id")).as("tk"))
-        .select(col("p_id"), posexplode(col("tk.ids")).as(Seq("pos0", "c_id")))
-        .join(cands, "c_id").join(broadcast(probes), "p_id")
-        .select(col("p_id"), col("pos0"), cosR.as("cos_r"), col("c_id"))
-      // lb(sl) = 10th-best exact cosine among the top-sl shortlist
-      // (-2.0 when fewer than 10 — keeps everything, as before)
+        .select(col("p_id"), posexplode(col("tk.ids")).as(Seq("pos0", "c_id"))),
+        e, "pos0")
+      // lb(sl) = the lower bound off the top-sl shortlist
       val lbMap = shortScored
         .select(col("p_id"),
           explode(filter(typedlit(ScreenSweep), sl => sl > col("pos0")))
@@ -948,14 +941,10 @@ object Similarity {
           col("cos_r"), col("c_id"))
         .groupBy("p_id", "sl")
         .agg(topk10(col("cos_r"), col("c_id")).as("tk"))
-        .select(col("p_id"), col("sl"),
-          when(size(col("tk.cs")) >= 10,
-            element_at(col("tk.cs"), size(col("tk.cs"))))
-            .otherwise(-2.0).as("lb"))
+        .select(col("p_id"), col("sl"), kthOrKeepAll.as("lb"))
         .groupBy("p_id")
         .agg(map_from_entries(collect_list(struct(col("sl"), col("lb"))))
           .as("lbm"))
-      val upper = (headDot + col("ptn") * col("tn")) / (col("pn") * col("cn"))
       pairs.join(broadcast(lbMap), "p_id")
         .select(col("p_id"),
           filter(typedlit(ScreenSweep),
@@ -1134,23 +1123,14 @@ object Similarity {
   /** [[pqTopK]] over an explicit (vec_id, embedding) frame. */
   private[graft] def pqTopKFrom(emb: DataFrame): DataFrame = {
     val cbs = pqCodebooks(emb)
-    val codes = pqEncode(emb, cbs)
     val e = withNorm(emb)
-    val probes = probeBatch(e)
-      .select(col("vec_id").as("p_id"), col("embedding").as("pv"),
-        col("nrm").as("pn"))
     val shortAgg = udaf(new graft.functions.TopKAgg(PqShortlist))
-    val shortlist = codes.join(broadcast(probes), col("p_id") =!= col("vec_id"))
+    val shortlist = pqEncode(emb, cbs)
+      .join(broadcast(probeSide(e)), col("p_id") =!= col("vec_id"))
       .select(col("p_id"), adcApprox(cbs).as("a"), col("vec_id").as("c_id"))
       .groupBy("p_id").agg(shortAgg(col("a"), col("c_id")).as("tk"))
       .select(col("p_id"), explode(col("tk.ids")).as("c_id"))
-    val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      col("nrm").as("cn"))
-    rankTopK(shortlist.join(cands, "c_id").join(broadcast(probes), "p_id")
-      .select(col("p_id"),
-        round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
-          .as("cos_r"),
-        col("c_id")))
+    rankTopK(rerank(shortlist, e))
   }
 
   // ---- IVFPQ: coarse quantizer + in-cell ADC scan (FAISS IVFPQ shape) --
@@ -1203,25 +1183,15 @@ object Similarity {
   private[graft] def ivfPqExactScoredIndexed(index: DataFrame, emb: DataFrame,
       cents: Array[Array[Double]], cbs: Array[Array[Array[Double]]]): DataFrame = {
     val e = withNorm(emb)
-    val probes = probeBatch(e)
-      .select(col("vec_id").as("p_id"), col("embedding").as("pv"),
-        col("nrm").as("pn"),
-        explode(probeCells(col("embedding"), cents, IvfProbes)).as("cell"))
+    val probes = probeSide(e,
+      explode(probeCells(col("embedding"), cents, IvfProbes)).as("cell"))
     val shortAgg = udaf(new graft.functions.TopKAgg(IvfPqShortlist))
     val shortlist = index.join(broadcast(probes), Seq("cell"))
       .filter(col("p_id") =!= col("vec_id"))
       .select(col("p_id"), adcApprox(cbs).as("a"), col("vec_id").as("c_id"))
       .groupBy("p_id").agg(shortAgg(col("a"), col("c_id")).as("tk"))
       .select(col("p_id"), explode(col("tk.ids")).as("c_id"))
-    val pv = probeBatch(e).select(col("vec_id").as("p_id"),
-      col("embedding").as("pv"), col("nrm").as("pn"))
-    val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-      col("nrm").as("cn"))
-    shortlist.join(cands, "c_id").join(broadcast(pv), "p_id")
-      .select(col("p_id"),
-        round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
-          .as("cos_r"),
-        col("c_id"))
+    rerank(shortlist, e)
   }
 
   // ---- SemDeDup: semantic dedup in embedding space ----------------------
@@ -1521,13 +1491,8 @@ object Similarity {
         |  FROM d)
         |WHERE rank <= 10 ORDER BY p_id, rank""".stripMargin) { (s, dir) =>
       val e = withNorm(Tables.embeddings(s, dir))
-      val probes = probeBatch(e).select(col("vec_id").as("p_id"),
-        col("embedding").as("pv"), col("nrm").as("pn"),
-        col("label").as("p_label"))
-      val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"),
-        col("nrm").as("cn"), col("label").as("c_label"))
-      val cosR = round(dot_ff(col("pv"), col("cv")) / (col("pn") * col("cn")), 6)
-      rankTopK(cands.join(broadcast(probes),
+      rankTopK(candSide(e, col("label").as("c_label"))
+        .join(broadcast(probeSide(e, col("label").as("p_label"))),
           col("p_id") =!= col("c_id") && col("p_label") =!= col("c_label"))
           .select(col("p_id"), cosR.as("cos_r"), col("c_id")))
         .join(Tables.embeddings(s, dir)
@@ -1552,7 +1517,7 @@ object Similarity {
       val b = e.select(col("vec_id").as("v2"), col("embedding").as("bv"), col("nrm").as("bn"))
       a.join(b, col("v2") === col("v1") + 1)
         .select(col("v1"), col("v2"),
-          round(dot_ff(col("av"), col("bv")) / (col("an") * col("bn")), 6).as("cos_r"))
+          cosine(col("av"), col("an"), col("bv"), col("bn")).as("cos_r"))
         .orderBy("v1")
     },
 

@@ -428,9 +428,7 @@ object Sketches {
          |       $cols
          |FROM v ORDER BY vec_id""".stripMargin
     }) { (s, dir) =>
-      val vm = Tables(s, dir, "embeddings").select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) " +
-          "* 1000000) AS LONG))").as("vm"))
+      val vm = Clustering.vmOf(Tables(s, dir, "embeddings"))
       val cols = (0 until ProjDim).map { j =>
         val lits = (0 until EmbDim).map(i => s"${projSign(i, j)}L").mkString(", ")
         expr(s"aggregate(zip_with(vm, array($lits), (x, c) -> x * c), " +
