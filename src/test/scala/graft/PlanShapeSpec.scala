@@ -473,7 +473,7 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("Segments/PostingLines/Similarity frames keep every generated method JIT-compilable") {
+  test("Segments/PostingLines frames keep every generated method JIT-compilable") {
     // inlined at every use, the Albers formula makes the merged frame's loop
     // a 47 KB method, which HotSpot never compiles (Segments.withProjected);
     // the vector plane's shared cosine and candidate joins are inlined the
