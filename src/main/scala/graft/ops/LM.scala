@@ -44,21 +44,35 @@ object LM {
   final val PmiMinCount = 5
   final val PmiTopK = 100
 
-  /** The bigram-NLL pipeline over an explicit documents frame. */
+  /** (keep…, p STRUCT(w1, w2)): one row per adjacent token pair of each
+    * document. Callers group on `col("p.w1").as("w1")` directly — a
+    * separate select of w1/w2 here grows the generated methods.
+    */
+  private def bigrams(docs: DataFrame, keep: String*): DataFrame =
+    docs.select(keep.map(col) :+ split(col("text"), " ").as("toks"): _*)
+      .filter(size(col("toks")) >= 2)
+      .select(keep.map(col) :+ explode(expr(
+        "transform(sequence(1, size(toks) - 1), " +
+          "i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
+        .as("p"): _*)
+
+  /** (w1, w2, c2): corpus-wide adjacent-pair counts. */
+  private def bigramCounts(docs: DataFrame): DataFrame =
+    bigrams(docs)
+      .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
+      .agg(count(lit(1)).as("c2"))
+
+  /** (tok, c1): corpus-wide token counts. */
+  private def unigramCounts(docs: DataFrame): DataFrame =
+    docs.select(explode(split(col("text"), " ")).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("c1"))
+
   /** Kneser–Ney bigram table over an explicit documents frame — the
     * engine side of q_kneser_ney (see the query comment for the exact
     * rational formulation).
     */
   private[graft] def kneserNeyFrom(docs: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
-    val c2 = docs
-      .select(toks.as("toks")).filter(size(col("toks")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(toks) - 1), " +
-          "i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
-        .as("p"))
-      .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .agg(count(lit(1)).as("c2"))
+    val c2  = bigramCounts(docs)
     val c1  = c2.groupBy("w1").agg(sum("c2").as("c1c"), count(lit(1)).as("n1p"))
     val nc  = c2.groupBy("w2").agg(count(lit(1)).as("nc"))
     val tot = c2.agg(count(lit(1)).as("nt"))
@@ -69,8 +83,8 @@ object LM {
         expr("(3 * n1p * 1000000) div (4 * c1c)").as("lambda_micro"))
   }
 
+  /** The bigram-NLL pipeline over an explicit documents frame. */
   private[graft] def bigramNllFrom(docs: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
     // Round 16, measured and REVERTED (kept as-was): both spread and a
     // localCheckpoint of the shared bigram subtree regressed this query.
     // spread inflated cold-count CPU 2.8 → 17.9 s (the naiveBayesLang
@@ -79,20 +93,12 @@ object LM {
     // three plan branches) measured a wash standalone but 2.0 → 3.9 s
     // in-bench, rerun-confirmed — the ~4M-row materialization costs more
     // than the duplicated serial explode saves at this scale.
-    val bg = docs
-      .select(col("doc_id"), toks.as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(toks) - 1), " +
-        "i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
-        .as("p"))
+    val bg = bigrams(docs, "doc_id")
       .groupBy(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
       .agg(count(lit(1)).as("n"))
     val c2 = bg.groupBy("w1", "w2").agg(sum("n").as("c2"))
     val c1ctx = c2.groupBy("w1").agg(sum("c2").as("c1c"))
-    val uni = docs
-      .select(explode(toks).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("c1"))
+    val uni = unigramCounts(docs)
     val tot = uni.agg(sum("c1").as("nt"))
     // model frame: one row per distinct OBSERVED bigram; all joins below
     // key on grams/tokens (no hints — AQE broadcasts while vocab is small)
@@ -297,20 +303,8 @@ object LM {
          |ORDER BY pmi_micro DESC, w1, w2 LIMIT $PmiTopK""".stripMargin) {
       (s, dir) =>
         val docs = Tables.documents(s, dir)
-        val toks = split(col("text"), " ")
-        val c2 = docs
-          .select(toks.as("toks"))
-          .filter(size(col("toks")) >= 2)
-          .select(explode(expr(
-            "transform(sequence(1, size(toks) - 1), " +
-            "i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
-            .as("p"))
-          .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-          .agg(count(lit(1)).as("c2"))
-          .filter(col("c2") >= PmiMinCount)
-        val uni = docs
-          .select(explode(toks).as("tok"))
-          .groupBy("tok").agg(count(lit(1)).as("c1"))
+        val c2 = bigramCounts(docs).filter(col("c2") >= PmiMinCount)
+        val uni = unigramCounts(docs)
         val tot = uni.agg(sum("c1").as("nt"))
         c2.join(uni.select(col("tok").as("w1"), col("c1").as("c1_w1")), "w1")
           .join(uni.select(col("tok").as("w2"), col("c1").as("c1_w2")), "w2")

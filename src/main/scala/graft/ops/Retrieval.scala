@@ -115,6 +115,40 @@ object Retrieval {
       .groupBy("doc_id", "dl", "tok").agg(count(lit(1)).as("tf"))
   }
 
+  /** The one-row (n, sumdl, avgdl) statistics of a (doc_id, dl) frame. */
+  private def corpusStats(dls: DataFrame): DataFrame =
+    dls.agg(count(lit(1)).as("n"), sum("dl").cast("double").as("sumdl"))
+      .withColumn("avgdl", col("sumdl") / col("n"))
+
+  /** idf over (n, df) and one (doc, term)'s score part over
+    * (idf, tf, dl, avgdl) — the two halves of the BM25 formula.
+    */
+  private val idf: Column =
+    log(lit(1) + (col("n") - col("df") + 0.5) / (col("df") + 0.5))
+  private val bm25Part: Column =
+    col("idf") * col("tf") * (lit(K1) + 1) /
+      (col("tf") + lit(K1) * (lit(1) - lit(B)
+        + lit(B) * col("dl") / col("avgdl")))
+
+  /** (doc_id, dl, tok, tf) rows scored against their term's df over `tf`
+    * and the corpus `stats`, both bounded broadcasts (a row per scored
+    * term, one row): adds idf and part.
+    */
+  private def bm25Parts(tf: DataFrame, stats: DataFrame): DataFrame =
+    tf.join(broadcast(tf.groupBy("tok").agg(count(lit(1)).as("df"))), "tok")
+      .crossJoin(broadcast(stats))
+      .withColumn("idf", idf).withColumn("part", bm25Part)
+
+  /** Reciprocal-rank fusion of two rank columns; a missing rank adds 0. */
+  private def rrf(a: String, b: String): Column =
+    Seq(a, b).map(r => coalesce(lit(1.0) / (lit(RrfK) + col(r)), lit(0.0)))
+      .reduce(_ + _)
+
+  /** The pinned probe's (pemb, pn) row of a [[Similarity.withNorm]] frame. */
+  private def pinnedProbe(nv: DataFrame): DataFrame =
+    nv.filter(col("vec_id") === ProbeId)
+      .select(col("embedding").as("pemb"), col("nrm").as("pn"))
+
   /** BM25-scored (doc_id, score) SQL over an arbitrary documents-shaped
     * table — the core of [[bm25Sql]], and the candidate stage of the
     * composed retrieval script (q_retrieval_full).
@@ -149,24 +183,8 @@ object Retrieval {
     * shared by the declared query, the RRF fusion, and the composed
     * retrieval pipeline's candidate stage.
     */
-  private[graft] def bm25TopKFrom(docsIn: DataFrame, k: Int): DataFrame = {
-    val docs = docsIn
-      .select(col("doc_id"), size(split(col("text"), " ")).as("dl"))
-    // single-row corpus stats + |query|-row df: the allowlisted bounded
-    // broadcast classes (PlanShapeSpec)
-    val stats = docs.agg(count(lit(1)).as("n"),
-      sum("dl").cast("double").as("sumdl"))
-      .withColumn("avgdl", col("sumdl") / col("n"))
-    val tf = tfFrameFrom(docsIn)
-    val dfT = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfT), "tok")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("part",
-        col("idf") * col("tf") * (lit(K1) + 1)
-          / (col("tf") + lit(K1) * (lit(1) - lit(B)
-            + lit(B) * col("dl") / col("avgdl"))))
+  private[graft] def bm25TopKFrom(docs: DataFrame, k: Int): DataFrame = {
+    bm25Parts(tfFrameFrom(docs), corpusStats(docLengths(docs)))
       .groupBy("doc_id").agg(round(sum("part"), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
@@ -214,14 +232,11 @@ object Retrieval {
     // its four downstream uses
     val qp = postings.filter(col("tok").isInCollection(QueryTerms))
       .localCheckpoint()
-    val stats = dls.agg(count(lit(1)).as("n"),
-      sum("dl").cast("double").as("sumdl"))
-      .withColumn("avgdl", col("sumdl") / col("n"))
+    val stats = corpusStats(dls)
     // |query| rows: df → idf → WAND upper bound
     val ub = qp.groupBy("tok").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)))
+      .withColumn("idf", idf)
       .withColumn("ub", col("idf") * (lit(K1) + 1))
     val ubsums = qp.join(broadcast(ub.select("tok", "ub")), "tok")
       .groupBy("doc_id").agg(sum("ub").as("ubsum"))
@@ -231,10 +246,7 @@ object Retrieval {
         .join(broadcast(ub.select("tok", "idf")), "tok")
         .join(dls, "doc_id")
         .crossJoin(broadcast(stats))
-        .withColumn("part",
-          col("idf") * col("tf") * (lit(K1) + 1)
-            / (col("tf") + lit(K1) * (lit(1) - lit(B)
-              + lit(B) * col("dl") / col("avgdl"))))
+        .withColumn("part", bm25Part)
         .groupBy("doc_id").agg(round(sum("part"), 6).as("score"))
     val seed = ubsums.orderBy(col("ubsum").desc, col("doc_id")).limit(TopK)
     val seedScores = exactScores(seed.select("doc_id"))
@@ -299,18 +311,7 @@ object Retrieval {
       .select(col("doc_id"), size(toksC).as("dl"), explode(toksC).as("tok"))
       .join(broadcast(termSet), "tok")
       .groupBy("doc_id", "dl", "tok").agg(count(lit(1)).as("tf"))
-    val dfT = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-    val stats = docsN.select(size(split(col("text"), " ")).as("dl"))
-      .agg(count(lit(1)).as("n"), sum("dl").cast("double").as("sumdl"))
-      .withColumn("avgdl", col("sumdl") / col("n"))
-    val parts = tf.join(broadcast(dfT), "tok")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("part",
-        col("idf") * col("tf") * (lit(K1) + 1)
-          / (col("tf") + lit(K1) * (lit(1) - lit(B)
-            + lit(B) * col("dl") / col("avgdl"))))
+    val parts = bm25Parts(tf, corpusStats(docLengths(docsN)))
     // per-probe top-CandK via the partial TopKAgg (map-side k-buffers),
     // NOT a per-probe window sort over the corpus
     val topk = udaf(new graft.functions.TopKAgg(CandK))
@@ -343,10 +344,7 @@ object Retrieval {
     cand.join(broadcast(cosRank),
         col("p_id") === col("cp") && col("id") === col("ci"), "left")
       .select(col("p_id"), col("id"), col("rank_lex"), col("rank_cos"),
-        col("cos_r"),
-        (coalesce(lit(1.0) / (lit(RrfK) + col("rank_lex")), lit(0.0))
-          + coalesce(lit(1.0) / (lit(RrfK) + col("rank_cos")), lit(0.0)))
-          .as("rrf"))
+        col("cos_r"), rrf("rank_lex", "rank_cos").as("rrf"))
       .orderBy(col("p_id"), col("rrf").desc, col("id"))
   }
 
@@ -404,19 +402,15 @@ object Retrieval {
          |FROM lex FULL OUTER JOIN vec ON lex.id = vec.id
          |ORDER BY rrf DESC, id""".stripMargin) { (s, dir) =>
       val nv = Similarity.withNorm(Tables.embeddings(s, dir))
-      val pv = nv.filter(col("vec_id") === ProbeId)
-        .select(col("embedding").as("pemb"), col("nrm").as("pn"))
       val cand = nv.filter(col("vec_id") =!= ProbeId)
-        .crossJoin(broadcast(pv))
+        .crossJoin(broadcast(pinnedProbe(nv)))
         .select(col("vec_id").as("id"), cosR.as("cos_r"))
       val vtop = cand.orderBy(col("cos_r").desc, col("id")).limit(TopK)
       val vec = rankOf(vtop, col("cos_r"), col("id"), "rank_vec")
       val lex = rankOf(bm25TopK(s, dir), col("score"), col("doc_id"), "rank_lex")
       lex.join(vec, Seq("id"), "full_outer")
         .select(col("id"), col("rank_lex"), col("rank_vec"),
-          (coalesce(lit(1.0) / (lit(RrfK) + col("rank_lex")), lit(0.0))
-            + coalesce(lit(1.0) / (lit(RrfK) + col("rank_vec")), lit(0.0)))
-            .as("rrf"))
+          rrf("rank_lex", "rank_vec").as("rrf"))
         .orderBy(col("rrf").desc, col("id"))
     },
 
@@ -481,15 +475,13 @@ object Retrieval {
       val lex = rankOf(cand, col("score"), col("doc_id"), "rank_lex")
       // stage 4: exact-cosine re-rank against the probe embedding
       val nv = Similarity.withNorm(Tables.embeddings(s, dir))
-      val pv = nv.filter(col("vec_id") === ProbeId)
-        .select(col("embedding").as("pemb"), col("nrm").as("pn"))
       // the candidate list (≤ CandK rows by LIMIT construction, the
       // allowlisted class) broadcasts INTO the embeddings scan — the
       // corpus-proportional side never shuffles for the re-rank
       // localCheckpoint: cos (≤ CandK rows) feeds the rank AND the value
       // branch — without the barrier each branch re-scans embeddings
       val cos = nv.join(broadcast(lex), col("vec_id") === col("id"))
-        .crossJoin(broadcast(pv))
+        .crossJoin(broadcast(pinnedProbe(nv)))
         .select(col("id"), cosR.as("cos_r"))
         .localCheckpoint()
       val cosRank = rankOf(cos, col("cos_r"), col("id"), "rank_cos")
@@ -497,9 +489,7 @@ object Retrieval {
       // stage 5: RRF over the fused candidate orderings
       lex.join(broadcast(cosRank), Seq("id"), "left")
         .select(col("id"), col("rank_lex"), col("rank_cos"), col("cos_r"),
-          (coalesce(lit(1.0) / (lit(RrfK) + col("rank_lex")), lit(0.0))
-            + coalesce(lit(1.0) / (lit(RrfK) + col("rank_cos")), lit(0.0)))
-            .as("rrf"))
+          rrf("rank_lex", "rank_cos").as("rrf"))
         .orderBy(col("rrf").desc, col("id"))
     },
 
@@ -666,10 +656,8 @@ object Retrieval {
     }) { (s, dir) =>
       import graft.functions.exprs.dot_ll
       val nv = Similarity.withNorm(Tables.embeddings(s, dir))
-      val pv = nv.filter(col("vec_id") === ProbeId)
-        .select(col("embedding").as("pemb"), col("nrm").as("pn"))
       val ctop = rankOf(
-        nv.filter(col("vec_id") =!= ProbeId).crossJoin(broadcast(pv))
+        nv.filter(col("vec_id") =!= ProbeId).crossJoin(broadcast(pinnedProbe(nv)))
           .select(col("vec_id").as("id"), cosR.as("cos_r"))
           .orderBy(col("cos_r").desc, col("id")).limit(RboDepth),
         col("cos_r"), col("id"), "rank_cos")

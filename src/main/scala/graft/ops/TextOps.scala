@@ -140,6 +140,37 @@ object TextOps {
        |SELECT tok, n_exact, n_cms, n_cms - n_exact AS overcount
        |FROM est ORDER BY tok""".stripMargin
 
+  /** Gaps-and-islands sessionization of events (30-minute gap):
+    * (user_id, us, sess), sess counting session starts in (us, event_id)
+    * order.
+    */
+  private def sessions(events: DataFrame): DataFrame = {
+    val us   = unix_micros(col("ts").cast("timestamp"))
+    val w    = Window.partitionBy(col("user_id")).orderBy(us, col("event_id"))
+    val gap  = us - lag(us, 1).over(w)
+    val isNew = when(gap.isNull || gap > 1800000000L, 1).otherwise(0)
+    val sess = sum(isNew).over(
+      w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    events.select(col("user_id"), us.as("us"), sess.as("sess"))
+  }
+
+  /** The oracle's [[sessions]]: CTEs x, y and z, z = (user_id, us, sess). */
+  private val sessionCtes: String =
+    """WITH x AS (
+       |  SELECT user_id, event_id, epoch_us(ts) AS us,
+       |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev
+       |  FROM events
+       |), y AS (
+       |  SELECT user_id, event_id, us,
+       |         CASE WHEN prev IS NULL OR us - prev > 1800000000 THEN 1 ELSE 0 END AS isnew
+       |  FROM x
+       |), z AS (
+       |  SELECT user_id, us,
+       |         CAST(sum(isnew) OVER (PARTITION BY user_id ORDER BY us, event_id
+       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess
+       |  FROM y
+       |)""".stripMargin
+
   val queries: Seq[Q] = Seq(
 
     // Tokenize + explode + count: the canonical wordcount, top-100.
@@ -697,32 +728,12 @@ object TextOps {
     // Gaps-and-islands sessionization over events (30-minute gap), the
     // batch analogue of streaming session windows.
     Q("q_sessionize",
-      """WITH x AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us,
-        |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev
-        |  FROM events
-        |), y AS (
-        |  SELECT user_id, event_id, us,
-        |         CASE WHEN prev IS NULL OR us - prev > 1800000000 THEN 1 ELSE 0 END AS isnew
-        |  FROM x
-        |), z AS (
-        |  SELECT user_id, us,
-        |         CAST(sum(isnew) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess
-        |  FROM y
-        |)
+      s"""$sessionCtes
         |SELECT user_id, sess, count(*) AS n,
         |       CAST(min(us) AS BIGINT) AS start_us, CAST(max(us) AS BIGINT) AS end_us
         |FROM z GROUP BY user_id, sess ORDER BY user_id, sess""".stripMargin) {
       (s, dir) =>
-        val us   = unix_micros(col("ts").cast("timestamp"))
-        val w    = Window.partitionBy(col("user_id")).orderBy(us, col("event_id"))
-        val gap  = us - lag(us, 1).over(w)
-        val isNew = when(gap.isNull || gap > 1800000000L, 1).otherwise(0)
-        val sess = sum(isNew).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        Tables.events(s, dir)
-          .select(col("user_id"), us.as("us"), sess.as("sess"))
+        sessions(Tables.events(s, dir))
           .groupBy("user_id", "sess")
           .agg(count(lit(1)).as("n"), min("us").as("start_us"), max("us").as("end_us"))
           .orderBy("user_id", "sess")
@@ -736,20 +747,7 @@ object TextOps {
     // integer differences, the mean is an exact trunc-div. All shuffles
     // key on user_id.
     Q("q_session_stats",
-      """WITH x AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us,
-        |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev
-        |  FROM events
-        |), y AS (
-        |  SELECT user_id, event_id, us,
-        |         CASE WHEN prev IS NULL OR us - prev > 1800000000 THEN 1 ELSE 0 END AS isnew
-        |  FROM x
-        |), z AS (
-        |  SELECT user_id, us,
-        |         CAST(sum(isnew) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess
-        |  FROM y
-        |), s AS (
+      s"""$sessionCtes, s AS (
         |  SELECT user_id, sess, CAST(count(*) AS BIGINT) AS n,
         |         CAST(max(us) - min(us) AS BIGINT) AS dur_us
         |  FROM z GROUP BY user_id, sess)
@@ -761,14 +759,7 @@ object TextOps {
         |       CAST(max(dur_us) AS BIGINT) AS max_dur_us,
         |       CAST(max(n) AS BIGINT) AS max_session_events
         |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
-      val us   = unix_micros(col("ts").cast("timestamp"))
-      val w    = Window.partitionBy(col("user_id")).orderBy(us, col("event_id"))
-      val gap  = us - lag(us, 1).over(w)
-      val isNew = when(gap.isNull || gap > 1800000000L, 1).otherwise(0)
-      val sess = sum(isNew).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-      Tables.events(s, dir)
-        .select(col("user_id"), us.as("us"), sess.as("sess"))
+      sessions(Tables.events(s, dir))
         .groupBy("user_id", "sess")
         .agg(count(lit(1)).as("n"), (max("us") - min("us")).as("dur_us"))
         .groupBy("user_id")

@@ -42,6 +42,19 @@ import graft.{Memo, Q, Tables}
   * ([[graft.Memo]]) so the vocab and token-count queries share one
   * training pass.
   *
+  * The three families (BPE, unigram LM, WordPiece) share each rule once:
+  *  - [[topWords]]: the capped (freq DESC, word) training dictionary and
+  *    its loud cap guard; [[topWordsSql]] is the oracle's copy.
+  *  - [[mergeTrain]]: the pair-merge loop of BPE and WordPiece, which
+  *    differ only in the pair score and the fused spelling;
+  *    [[mergeRoundSql]] is its unrolled oracle round.
+  *  - [[viterbi]]: the unigram DP, with or without the full-span piece;
+  *    [[segmentCounts]] is the E-step every EM and pruning round runs.
+  *  - [[usage]] and [[perDoc]]: the two application layouts, a piece's
+  *    freq-weighted usage over the distinct-word frame and the
+  *    per-document join of word → segmentation. Both apply the trained
+  *    encoder once per DISTINCT word, never per corpus occurrence.
+  *
   * Verification: `q_bpe_pairs` (iteration-0 weighted pair counts) is
   * cell-exact against DuckDB; the trainer is validated in TokenizeSpec
   * against a from-scratch sequential BPE implementation (exact merge-list
@@ -101,54 +114,83 @@ object Tokenize {
           concat(slice(acc, lit(1), size(acc) - 1), array(concat(l, r))))
         .otherwise(concat(acc, array(x))))
 
-  def applyMerge(syms: Column, l: String, r: String): Column =
-    applyMerge(syms, lit(l), lit(r))
+  /** The training dictionary: the top-`cap` (word, freq) rows by
+    * (freq DESC, word), one TakeOrdered Spark job. Fails LOUDLY if it fills
+    * the cap (the cheapest exact sign that the corpus MAY exceed it): past
+    * the cap the oracle scripts train on capped words while the engine
+    * encodes the full word frame, so oracle-green would silently stop
+    * meaning trajectory equality.
+    */
+  private[graft] def topWords(s: SparkSession, dir: String,
+      cap: Int): Array[(String, Long)] = {
+    val wf = wordFreq(s, dir)
+      .orderBy(col("freq").desc, col("word")).limit(cap)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    require(wf.length < cap,
+      s"tokenizer training dictionary hit its cap of $cap words: the " +
+      "capped-oracle contract no longer holds for this corpus; raise the " +
+      "cap or drop the oracle")
+    wf
+  }
+
+  /** The pair-merge trainer of BPE and WordPiece, at driver speed over a
+    * (symbols, freq) dictionary. Each round counts freq-weighted symbols
+    * and adjacent pairs, merges the pair with the highest
+    * `score(pairCount, leftCount, rightCount)` (ties to the smaller
+    * (l, r)), and re-segments every word with `fuse(l, r)` in place of
+    * each greedy non-overlapping (l, r) match. Stops after `rounds`
+    * merges or when no word has two symbols left; returns the merges in
+    * order.
+    */
+  private def mergeTrain(dict: Array[(Array[String], Long)], rounds: Int,
+      fuse: (String, String) => String)(
+      score: (Long, Long, Long) => Double): Seq[(String, String)] = {
+    var vocab = dict
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    while (merges.length < rounds && vocab.exists(_._1.length >= 2)) {
+      val sc = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+      val pc = scala.collection.mutable.Map.empty[(String, String), Long]
+        .withDefaultValue(0L)
+      for ((syms, f) <- vocab; i <- syms.indices) {
+        sc(syms(i)) += f
+        if (i + 1 < syms.length) pc((syms(i), syms(i + 1))) += f
+      }
+      val (l, r) = pc.minBy { case ((l, r), c) => (-score(c, sc(l), sc(r)), l, r) }._1
+      merges += ((l, r))
+      val fused = fuse(l, r)
+      vocab = vocab.map { case (syms, f) => (applySeq(syms, l, r, fused), f) }
+    }
+    merges.toSeq
+  }
+
+  /** Greedy left-to-right replace of each non-overlapping (l, r) in
+    * `syms` by `merged` — [[mergeTrain]]'s re-segmentation.
+    */
+  private def applySeq(syms: Array[String], l: String, r: String,
+      merged: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
+        out += merged; i += 2
+      } else { out += syms(i); i += 1 }
+    }
+    out.result()
+  }
 
   private val memo = new Memo[(String, Int), Seq[(String, String)]]
 
-  /** Train nMerges BPE merges; returns the ordered merge list. Ties on
-    * pair count break lexicographically — deterministic across runs and
-    * engines. ONE Spark job (the bounded top-[[TrainVocabCap]] word-freq
-    * collect, totally ordered by (freq desc, word) so the cap cut is
-    * deterministic); the merge rounds iterate that dictionary at driver
-    * speed. Memoized so every query sharing (dir, nMerges) trains once.
+  /** Train nMerges BPE merges over the top-[[TrainVocabCap]] dictionary;
+    * returns the ordered merge list. The score is the raw pair count (an
+    * exact double below 2^53), ties break lexicographically —
+    * deterministic across runs and engines. Memoized so every query
+    * sharing (dir, nMerges) trains once.
     */
   def train(s: SparkSession, dir: String, nMerges: Int): Seq[(String, String)] =
     memo(s, (dir, nMerges)) {
-      var vocab = wordFreq(s, dir)
-        .orderBy(col("freq").desc, col("word")).limit(TrainVocabCap)
-        .collect()
-        .map(r => (r.getString(0).split(""), r.getLong(1)))
-      // Fail LOUDLY (not as a confusing oracle hash-red) if the corpus
-      // dictionary saturates the cap: past it the oracle script trains on
-      // the capped dictionary while the engine encodes the full word
-      // frame, so oracle-green would silently stop meaning trajectory
-      // equality. A full collect (== cap rows) is the cheapest exact
-      // signal that the corpus MAY exceed the cap.
-      require(vocab.length < TrainVocabCap,
-        s"BPE training dictionary hit TrainVocabCap=$TrainVocabCap: the " +
-        "capped-oracle contract (Tokenize.bpeScriptPrefix) no longer " +
-        "holds for this corpus; raise the cap or drop the oracle")
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      var stop = false
-      while (merges.length < nMerges && !stop) {
-        val counts = scala.collection.mutable.Map
-          .empty[(String, String), Long].withDefaultValue(0L)
-        vocab.foreach { case (syms, f) =>
-          var i = 0
-          while (i + 1 < syms.length) {
-            counts((syms(i), syms(i + 1))) += f; i += 1
-          }
-        }
-        if (counts.isEmpty) stop = true
-        else {
-          val (l, r) = counts.toSeq.minBy { case ((l, r), c) => (-c, l, r) }._1
-          merges += ((l, r))
-          val fused = l + r
-          vocab = vocab.map { case (syms, f) => (applySeq(syms, l, r, fused), f) }
-        }
-      }
-      merges.toSeq
+      val dict = topWords(s, dir, TrainVocabCap)
+        .map { case (w, f) => (w.split(""), f) }
+      mergeTrain(dict, nMerges, _ + _)((c, _, _) => c.toDouble)
     }
 
   private def memos = Seq(memo, ugMemo, ugPrunedMemo, wpMemo)
@@ -168,10 +210,11 @@ object Tokenize {
     else aggregate(typedlit(merges), syms,
       (acc, m) => applyMerge(acc, m.getField("_1"), m.getField("_2")))
 
-  /** The unrolled BPE training trajectory as a DuckDB temp-table script
-    * (the km_/kc_ mechanism): bpe_v0 is the capped (word, freq, syms)
-    * dictionary; each round materializes the argmax pair (bpe_m{r}) and
-    * the re-segmented dictionary (bpe_v{r}).
+  /** One re-segmentation round of the unrolled BPE and WordPiece training
+    * scripts (DuckDB temp tables, the km_/kc_ mechanism): `<t>_v<r>` is
+    * the (word, freq, syms) dictionary `<t>_v<r-1>` with the round's
+    * argmax pair `<t>_m<r>` (l, r) merged into `fused`, an expression
+    * over `<t>_m<r>`'s columns.
     *
     * Greedy left-to-right NON-OVERLAPPING merge application — the part a
     * fold-state encoding got wrong on the first probe — is expressed
@@ -185,30 +228,23 @@ object Tokenize {
     * [[Spans]] machinery). A taken match emits l||r at i and suppresses
     * position i+1 (the lag(sel) skip).
     *
-    * The script re-derives the whole trajectory, so oracle-green proves
-    * training, not just application. Assumes the corpus dictionary fits
-    * [[TrainVocabCap]] (2^18 — the shipped corpora have ~31 distinct
-    * words): past the cap the engine still encodes the FULL word frame
-    * while this script only carries capped words.
+    * The scripts re-derive the whole trajectory, so oracle-green proves
+    * training, not just application. They assume the corpus dictionary
+    * fits its cap (the shipped corpora have ~31 distinct words): past it
+    * the engine still encodes the FULL word frame while the script only
+    * carries capped words, which is why [[topWords]] fails at the cap.
     */
-  private def bpeRoundSql(r: Int): String =
-    s"""CREATE OR REPLACE TEMP TABLE bpe_m$r AS
-       |  SELECT p.l AS l, p.r AS r FROM (
-       |    SELECT unnest([{'l': syms[i], 'r': syms[i+1]}
-       |                   for i in range(1, len(syms))]) AS p,
-       |           freq
-       |    FROM bpe_v${r - 1} WHERE len(syms) >= 2)
-       |  GROUP BY 1, 2 ORDER BY CAST(sum(freq) AS BIGINT) DESC, l, r LIMIT 1;
-       |CREATE OR REPLACE TEMP TABLE bpe_v$r AS
+  private def mergeRoundSql(t: String, r: Int, fused: String): String =
+    s"""CREATE OR REPLACE TEMP TABLE ${t}_v$r AS
        |  WITH x AS (
        |    SELECT word, freq, unnest(syms) AS s,
        |           unnest(range(1, len(syms) + 1)) AS i
-       |    FROM bpe_v${r - 1}),
+       |    FROM ${t}_v${r - 1}),
        |  y AS (
        |    SELECT word, freq, s, i,
-       |           coalesce(s = (SELECT l FROM bpe_m$r)
+       |           coalesce(s = (SELECT l FROM ${t}_m$r)
        |                    AND lead(s) OVER (PARTITION BY word ORDER BY i)
-       |                        = (SELECT r FROM bpe_m$r), FALSE) AS mt
+       |                        = (SELECT r FROM ${t}_m$r), FALSE) AS mt
        |    FROM x),
        |  z AS (
        |    SELECT word, freq, s, i, mt,
@@ -221,20 +257,41 @@ object Tokenize {
        |    FROM z),
        |  keep AS (
        |    SELECT word, freq, i,
-       |           CASE WHEN sel THEN (SELECT l || r FROM bpe_m$r) ELSE s END AS s,
+       |           CASE WHEN sel THEN (SELECT $fused FROM ${t}_m$r) ELSE s END AS s,
        |           coalesce(lag(sel) OVER (PARTITION BY word ORDER BY i), FALSE) AS skip
        |    FROM sel)
        |  SELECT word, freq, list(s ORDER BY i) AS syms
        |  FROM keep WHERE NOT skip GROUP BY word, freq;""".stripMargin
 
-  /** Dictionary seed + all [[NMerges]] unrolled rounds. */
-  private def bpeScriptPrefix: String =
+  /** The (p STRUCT(l, r), freq) adjacent pairs of dictionary `<t>_v<r>`. */
+  private def pairsSql(t: String, r: Int): String =
+    s"""SELECT unnest([{'l': syms[i], 'r': syms[i+1]}
+       |                   for i in range(1, len(syms))]) AS p,
+       |           freq
+       |    FROM ${t}_v$r WHERE len(syms) >= 2""".stripMargin
+
+  /** The oracle's [[topWords]]: the capped (word, freq) dictionary. */
+  private def topWordsSql(cap: Int): String =
+    s"""SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq
+       |  FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
+       |  GROUP BY tok ORDER BY freq DESC, word LIMIT $cap""".stripMargin
+
+  /** Dictionary seed + all [[NMerges]] unrolled rounds: bpe_m{r} is the
+    * round's argmax pair, bpe_v{r} the re-segmented dictionary.
+    */
+  private def bpeScriptPrefix: String = {
+    val rounds = (1 to NMerges).map { r =>
+      s"""CREATE OR REPLACE TEMP TABLE bpe_m$r AS
+         |  SELECT p.l AS l, p.r AS r FROM (
+         |    ${pairsSql("bpe", r - 1)})
+         |  GROUP BY 1, 2 ORDER BY CAST(sum(freq) AS BIGINT) DESC, l, r LIMIT 1;
+         |${mergeRoundSql("bpe", r, "l || r")}""".stripMargin
+    }
     s"""CREATE OR REPLACE TEMP TABLE bpe_v0 AS
        |  SELECT word, freq, string_split(word, '') AS syms FROM (
-       |    SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq
-       |    FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-       |    GROUP BY tok ORDER BY freq DESC, word LIMIT $TrainVocabCap);
-       |${(1 to NMerges).map(bpeRoundSql).mkString("\n")}""".stripMargin
+       |    ${topWordsSql(TrainVocabCap)});
+       |${rounds.mkString("\n")}""".stripMargin
+  }
 
   // ---- Unigram-LM (SentencePiece-style) tokenizer --------------------------
   //
@@ -311,42 +368,43 @@ object Tokenize {
       p -> ugScore(counts.getOrElse(p, 0L), t, vocab.length)).toMap
   }
 
-  /** Driver-side Viterbi segmentation (the trainer's inner loop): exact
-    * integer DP, ties to the smallest piece start.
+  /** Driver-side Viterbi segmentation of `w` under `sc`, the exact integer
+    * DP of every unigram trainer step: best (score, pieces) per prefix,
+    * ties to the smallest piece start. With `split` the single full-span
+    * piece is excluded, so the result is the best segmentation into AT
+    * LEAST TWO pieces (the pruning criterion's alternative cost).
     */
-  private[graft] def unigramViterbiSeq(w: String,
-      sc: Map[String, Long]): Vector[String] = {
+  private def viterbi(w: String, sc: Map[String, Long],
+      split: Boolean): (Long, Vector[String]) = {
     val best = Array.fill(w.length + 1)((Long.MinValue / 4, Vector.empty[String]))
     best(0) = (0L, Vector.empty)
-    var i = 1
-    while (i <= w.length) {
-      var st = math.max(1, i - UgMaxPiece + 1)
-      while (st <= i) {
-        val piece = w.substring(st - 1, i)
-        val cand  = best(st - 1)._1 + sc.getOrElse(piece, UgPenalty)
-        if (cand > best(i)._1) best(i) = (cand, best(st - 1)._2 :+ piece)
-        st += 1
-      }
-      i += 1
+    for (i <- 1 to w.length; st <- math.max(1, i - UgMaxPiece + 1) to i
+         if !(split && st == 1 && i == w.length)) {
+      val piece = w.substring(st - 1, i)
+      val cand  = best(st - 1)._1 + sc.getOrElse(piece, UgPenalty)
+      if (cand > best(i)._1) best(i) = (cand, best(st - 1)._2 :+ piece)
     }
-    best(w.length)._2
+    best(w.length)
+  }
+
+  /** Freq-weighted piece counts of the dictionary's segmentation under
+    * `sc`: the E-step of every EM and pruning round.
+    */
+  private def segmentCounts(wf: Array[(String, Long)],
+      sc: Map[String, Long]): collection.Map[String, Long] = {
+    val cnt = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    wf.foreach { case (w, f) => viterbi(w, sc, split = false)._2.foreach(cnt(_) += f) }
+    cnt
   }
 
   private val ugMemo = new Memo[String, Map[String, Long]]
 
-  /** The bounded training dictionary (top-[[UgSeedCap]] (word, freq) by
-    * (freq DESC, word)) — one TakeOrdered Spark job, shared by the EM
-    * trainer and the pruning round. Fails loudly (the capped-oracle
-    * contract, same as BPE's) if the dictionary saturates [[UgSeedCap]]
-    * or any word outruns the oracle's [[UgMaxWordLen]]-position unroll.
+  /** The top-[[UgSeedCap]] training dictionary ([[topWords]]), shared by
+    * the EM trainer, the pruning round and WordPiece. Also fails loudly
+    * if any word outruns the oracle's [[UgMaxWordLen]]-position unroll.
     */
   private def ugDict(s: SparkSession, dir: String): Array[(String, Long)] = {
-    val wf = wordFreq(s, dir)
-      .orderBy(col("freq").desc, col("word")).limit(UgSeedCap)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    require(wf.length < UgSeedCap,
-      s"unigram dictionary hit UgSeedCap=$UgSeedCap: the capped-oracle " +
-      "contract no longer holds; raise the cap or drop the oracle")
+    val wf = topWords(s, dir, UgSeedCap)
     require(wf.forall(_._1.length <= UgMaxWordLen),
       s"a word exceeds UgMaxWordLen=$UgMaxWordLen: the oracle's DP " +
       "unroll cannot segment it; raise the bound")
@@ -382,46 +440,12 @@ object Tokenize {
       require(seed.size < UgSeedCap,
         s"seed vocabulary hit UgSeedCap=$UgSeedCap")
       val vocab = seed.keys.toSeq.sorted
-      var sc = ugLaplace(seed, vocab)
-      (1 until UgEmRounds).foreach { _ =>
-        val cnt = scala.collection.mutable.Map
-          .empty[String, Long].withDefaultValue(0L)
-        wf.foreach { case (w, f) =>
-          unigramViterbiSeq(w, sc).foreach(p => cnt(p) += f)
-        }
-        sc = ugLaplace(cnt, vocab)
+      (1 until UgEmRounds).foldLeft(ugLaplace(seed, vocab)) { (sc, _) =>
+        ugLaplace(segmentCounts(wf, sc), vocab)
       }
-      sc
     }
 
   // ---- vocabulary pruning (SentencePiece's remove-lowest-likelihood) ----
-
-  /** Best segmentation score of `w` into AT LEAST TWO pieces under `sc` —
-    * the alternative cost the pruning criterion charges a piece: the same
-    * exact-integer DP as [[unigramViterbiSeq]] with the single full-span
-    * candidate (st = 1 at i = |w|, i.e. the piece itself) excluded. Every
-    * strict substring of a vocab piece is itself in the seed vocabulary
-    * (seeds are all substrings ≤ [[UgMaxPiece]] of dictionary words), so
-    * the result is always finite.
-    */
-  private[graft] def unigramAltBest(w: String, sc: Map[String, Long]): Long = {
-    val best = Array.fill(w.length + 1)(Long.MinValue / 4)
-    best(0) = 0L
-    var i = 1
-    while (i <= w.length) {
-      var st = math.max(1, i - UgMaxPiece + 1)
-      while (st <= i) {
-        if (!(st == 1 && i == w.length)) {
-          val cand = best(st - 1) +
-            sc.getOrElse(w.substring(st - 1, i), UgPenalty)
-          if (cand > best(i)) best(i) = cand
-        }
-        st += 1
-      }
-      i += 1
-    }
-    best(w.length)
-  }
 
   private val ugPrunedMemo = new Memo[String, Map[String, Long]]
 
@@ -435,10 +459,11 @@ object Tokenize {
     *     counts;
     *  3. charge each surviving multi-character piece its likelihood
     *     LOSS if removed, loss(p) = c(p) · (sc(p) − alt(p)) with
-    *     alt(p) = [[unigramAltBest]] — the exact cost of re-segmenting
-    *     p's occurrences into ≥ 2 still-alive pieces (the paper's
-    *     approximation: other pieces' scores held fixed). All integer
-    *     micro-nats × integer counts;
+    *     alt(p) the [[viterbi]] score of p split into ≥ 2 still-alive
+    *     pieces — the exact cost of re-segmenting p's occurrences (the
+    *     paper's approximation: other pieces' scores held fixed; always
+    *     finite, since every strict substring of a vocab piece is a seed).
+    *     All integer micro-nats × integer counts;
     *  4. drop the bottom [[UgPrunePct]]% of multi-char pieces — keep
     *     the top by (loss DESC, piece ASC), the cross-engine tie rule;
     *     single characters are never pruned (coverage guarantee);
@@ -460,15 +485,11 @@ object Tokenize {
       var sc = unigramTrain(s, dir) // scores in force for the next E-step
       var vocab = sc.keys.toSeq.sorted // the LIVE vocabulary
       for (_ <- 1 to UgPruneRounds) {
-        val cnt = scala.collection.mutable.Map
-          .empty[String, Long].withDefaultValue(0L)
-        wf.foreach { case (w, f) =>
-          unigramViterbiSeq(w, sc).foreach(p => cnt(p) += f)
-        }
+        val cnt = segmentCounts(wf, sc)
         val scFull = ugLaplace(cnt, vocab)
         val multi = vocab.filter(_.length >= 2)
-        val loss = multi.map(p =>
-          p -> cnt(p) * (scFull(p) - unigramAltBest(p, scFull))).toMap
+        val loss = multi.map(p => p -> cnt.getOrElse(p, 0L) *
+          (scFull(p) - viterbi(p, scFull, split = true)._1)).toMap
         val keepN = multi.length - multi.length * UgPrunePct / 100
         val kept = multi.sortBy(p => (-loss(p), p)).take(keepN)
         vocab = (vocab.filter(_.length == 1) ++ kept).sorted
@@ -562,9 +583,7 @@ object Tokenize {
       s"${ugDpRoundSql(r, sct)}$m"
     }.mkString("\n")
     s"""CREATE OR REPLACE TEMP TABLE ug_w AS
-       |  SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-       |  GROUP BY tok ORDER BY freq DESC, word LIMIT $UgSeedCap;
+       |  ${topWordsSql(UgSeedCap)};
        |CREATE OR REPLACE TEMP TABLE ug_vocab AS
        |  SELECT piece, CAST(sum(freq) AS BIGINT) AS c FROM (
        |    SELECT freq, substr(word, u.st, u.ln) AS piece FROM (
@@ -686,54 +705,13 @@ object Tokenize {
     */
   def wpTrain(s: SparkSession, dir: String): (Seq[(String, String)], Seq[String]) =
     wpMemo(s, dir) {
-      val wf = ugDict(s, dir)
-      var vocab = wf.map { case (w, f) => (wpInitSyms(w), f) }
-      val alphabet = vocab.iterator.flatMap(_._1).toSet
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      var stop = false
-      while (merges.length < WpMerges && !stop) {
-        val sc = scala.collection.mutable.Map
-          .empty[String, Long].withDefaultValue(0L)
-        val pc = scala.collection.mutable.Map
-          .empty[(String, String), Long].withDefaultValue(0L)
-        vocab.foreach { case (syms, f) =>
-          var i = 0
-          while (i < syms.length) {
-            sc(syms(i)) += f
-            if (i + 1 < syms.length) pc((syms(i), syms(i + 1))) += f
-            i += 1
-          }
-        }
-        if (pc.isEmpty) stop = true
-        else {
-          val (l, r) = pc.toSeq.minBy { case ((l, r), c) =>
-            (-(c.toDouble / (sc(l) * sc(r)).toDouble), l, r) }._1
-          merges += ((l, r))
-          vocab = vocab.map { case (syms, f) =>
-            (applySeq(syms, l, r, merged = l + wpStrip(r)), f)
-          }
-        }
-      }
-      val pieces = (alphabet ++ merges.map { case (l, r) => l + wpStrip(r) })
-        .toSeq.sorted
-      (merges.toSeq, pieces)
+      val dict = ugDict(s, dir).map { case (w, f) => (wpInitSyms(w), f) }
+      val fuse = (l: String, r: String) => l + wpStrip(r)
+      val merges = mergeTrain(dict, WpMerges, fuse)(
+        (c, cl, cr) => c.toDouble / (cl * cr).toDouble)
+      val alphabet = dict.iterator.flatMap(_._1).toSet
+      (merges, (alphabet ++ merges.map(fuse.tupled)).toSeq.sorted)
     }
-
-  /** Driver-side greedy replace of the pair (l, r) by the fused symbol
-    * `merged` — the merge-training inner loop (WordPiece strips the
-    * continuation prefix when fusing; BPE concatenates verbatim).
-    */
-  private def applySeq(syms: Array[String], l: String, r: String,
-      merged: String): Array[String] = {
-    val out = Array.newBuilder[String]
-    var i = 0
-    while (i < syms.length) {
-      if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-        out += merged; i += 2
-      } else { out += syms(i); i += 1 }
-    }
-    out.result()
-  }
 
   /** Greedy longest-match-first segmentation of a word column — the
     * distributed application face: ONE Catalyst fold over positions
@@ -792,43 +770,14 @@ object Tokenize {
        |  SELECT p.l AS l, p.r AS r,
        |         p.l || CASE WHEN p.r LIKE '##%' THEN p.r[3:] ELSE p.r END AS merged
        |  FROM (
-       |    SELECT unnest([{'l': syms[i], 'r': syms[i+1]}
-       |                   for i in range(1, len(syms))]) AS p,
-       |           freq
-       |    FROM wp_v${r - 1} WHERE len(syms) >= 2) x
+       |    ${pairsSql("wp", r - 1)}) x
        |  JOIN wp_s$r sl ON sl.s = x.p.l
        |  JOIN wp_s$r sr ON sr.s = x.p.r
        |  GROUP BY p.l, p.r, sl.c, sr.c
        |  ORDER BY CAST(CAST(sum(freq) AS BIGINT) AS DOUBLE)
        |           / CAST(sl.c * sr.c AS DOUBLE) DESC, p.l, p.r
        |  LIMIT 1;
-       |CREATE OR REPLACE TEMP TABLE wp_v$r AS
-       |  WITH x AS (
-       |    SELECT word, freq, unnest(syms) AS s,
-       |           unnest(range(1, len(syms) + 1)) AS i
-       |    FROM wp_v${r - 1}),
-       |  y AS (
-       |    SELECT word, freq, s, i,
-       |           coalesce(s = (SELECT l FROM wp_m$r)
-       |                    AND lead(s) OVER (PARTITION BY word ORDER BY i)
-       |                        = (SELECT r FROM wp_m$r), FALSE) AS mt
-       |    FROM x),
-       |  z AS (
-       |    SELECT word, freq, s, i, mt,
-       |           CASE WHEN mt THEN i - row_number()
-       |                OVER (PARTITION BY word, mt ORDER BY i) END AS grp
-       |    FROM y),
-       |  sel AS (
-       |    SELECT word, freq, s, i,
-       |           mt AND ((i - min(i) OVER (PARTITION BY word, grp)) % 2 = 0) AS sel
-       |    FROM z),
-       |  keep AS (
-       |    SELECT word, freq, i,
-       |           CASE WHEN sel THEN (SELECT merged FROM wp_m$r) ELSE s END AS s,
-       |           coalesce(lag(sel) OVER (PARTITION BY word ORDER BY i), FALSE) AS skip
-       |    FROM sel)
-       |  SELECT word, freq, list(s ORDER BY i) AS syms
-       |  FROM keep WHERE NOT skip GROUP BY word, freq;""".stripMargin
+       |${mergeRoundSql("wp", r, "merged")}""".stripMargin
 
   /** Dictionary seed (the [[ugDict]] cap and ordering), all [[WpMerges]]
     * unrolled rounds, the grown piece inventory, the per-(word, pos)
@@ -859,9 +808,7 @@ object Tokenize {
        |         [CASE WHEN i = 1 THEN word[i] ELSE '##' || word[i] END
        |          for i in range(1, len(word) + 1)] AS syms
        |  FROM (
-       |    SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq
-       |    FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-       |    GROUP BY tok ORDER BY freq DESC, word LIMIT $UgSeedCap);
+       |    ${topWordsSql(UgSeedCap)});
        |${(1 to WpMerges).map(wpRoundSql).mkString("\n")}
        |CREATE OR REPLACE TEMP TABLE wp_vocab AS
        |  SELECT DISTINCT s AS piece FROM (SELECT unnest(syms) AS s FROM wp_v0)
@@ -891,6 +838,36 @@ object Tokenize {
        |  SELECT word, CASE WHEN dead THEN ['$WpUnk'] ELSE ps END AS ps
        |  FROM wp_seg$UgMaxWordLen;""".stripMargin
   }
+
+  /** (piece, n_tokens): each piece's freq-weighted usage when `pieces`,
+    * a segmentation of the `word` column, is applied to a (word, freq)
+    * frame.
+    *
+    * explode_OUTER, deliberately: plain explode lets
+    * InferFiltersFromGenerate synthesize `size(ps)>0 AND isnotnull(ps)`
+    * and PushDownPredicates sinks that below the word-frequency aggregate
+    * — the segmentation fold then runs per corpus OCCURRENCE instead of
+    * once per distinct word (measured on the BPE fold: 19.5 s vs 0.9 s at
+    * sf0.1). The rule skips outer generates, and outer ≡ inner here: every
+    * family segments a non-empty word into a non-empty array of non-null
+    * pieces.
+    */
+  private def usage(words: DataFrame, pieces: Column): DataFrame =
+    words.select(col("freq"), pieces.as("ps"))
+      .select(explode_outer(col("ps")).as("piece"), col("freq"))
+      .groupBy("piece").agg(sum("freq").as("n_tokens"))
+
+  /** Per-document aggregates `aggs` over the corpus joined word → `seg`,
+    * a segmentation frame keyed by `word` over the distinct words, so the
+    * corpus-sized stage is one explode and one equi-join.
+    */
+  private def perDoc(s: SparkSession, dir: String, seg: DataFrame)(
+      aggs: Column*): DataFrame =
+    Tables.documents(s, dir)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+      .join(seg, "word")
+      .groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+      .orderBy("doc_id")
 
   val queries: Seq[Q] = Seq(
 
@@ -929,30 +906,17 @@ object Tokenize {
          |GROUP BY subword ORDER BY n_tokens DESC, subword""".stripMargin) {
       (s, dir) =>
       val merges = train(s, dir, NMerges)
-      wordFreq(s, dir)
-        .select(col("freq"),
-          encodeCol(split(col("word"), ""), merges).as("syms"))
-        // explode_OUTER, deliberately: plain explode lets
-        // InferFiltersFromGenerate synthesize `size(enc)>0 AND
-        // isnotnull(enc)` and PushDownPredicates sinks that below the
-        // word-frequency aggregate — the merge fold then runs (twice) per
-        // corpus OCCURRENCE instead of once per distinct word (measured:
-        // 19.5 s vs 0.9 s at sf0.1). The rule skips outer generates, and
-        // outer ≡ inner here: split of any word is a non-empty array and
-        // merges never produce null/empty symbols.
-        .select(explode_outer(col("syms")).as("subword"), col("freq"))
-        .groupBy("subword").agg(sum("freq").as("n_tokens"))
+      usage(wordFreq(s, dir), encodeCol(split(col("word"), ""), merges))
+        .select(col("piece").as("subword"), col("n_tokens"))
         .orderBy(col("n_tokens").desc, col("subword"))
     },
 
-    // Corpus-wide tokenizer application: per-document BPE token counts.
-    // The trained encoder applies to the DISTINCT-WORD frame once
-    // (vocab-sized); the corpus then just joins word → subword count — the
-    // narrow layout that tokenizes 100 TB without running the merge fold
-    // per occurrence. Oracle: the same unrolled trajectory; bpe_v16's
-    // segment count joins back to the corpus exactly like the engine's
-    // word → n_sub join. TokenizeSpec recounts documents against the
-    // sequential reference encoder.
+    // Corpus-wide tokenizer application: per-document BPE token counts
+    // (perDoc: the narrow layout that tokenizes 100 TB without running
+    // the merge fold per occurrence). Oracle: the same unrolled
+    // trajectory; bpe_v16's segment count joins back to the corpus
+    // exactly like the engine's word → n_sub join. TokenizeSpec recounts
+    // documents against the sequential reference encoder.
     Q("q_bpe_token_count",
       s"""$bpeScriptPrefix
          |WITH wl AS (SELECT word, CAST(len(syms) AS INTEGER) AS n_sub
@@ -964,15 +928,9 @@ object Tokenize {
          |JOIN wl USING (word)
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val merges = train(s, dir, NMerges)
-      val wordLen = wordFreq(s, dir)
-        .select(col("word"),
-          size(encodeCol(split(col("word"), ""), merges)).as("n_sub"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .join(wordLen, "word")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_words"), sum("n_sub").as("n_bpe_tokens"))
-        .orderBy("doc_id")
+      perDoc(s, dir, wordFreq(s, dir).select(col("word"),
+          size(encodeCol(split(col("word"), ""), merges)).as("n_sub")))(
+        count(lit(1)).as("n_words"), sum("n_sub").as("n_bpe_tokens"))
     },
 
     // Unigram-LM subword vocabulary: each piece's freq-weighted usage in
@@ -981,25 +939,18 @@ object Tokenize {
     // final segmentation), so green proves the EM training round for
     // round; TokenizeSpec separately pins the trained score table and
     // per-word segmentation against a from-scratch sequential reference.
-    // explode_outer for q_bpe_vocab's measured reason: keep the fold on
-    // the distinct-word frame, never per corpus occurrence.
     Q("q_unigram_vocab",
       s"""$ugScriptPrefix
          |SELECT piece, CAST(sum(freq) AS BIGINT) AS n_tokens FROM (
          |  SELECT freq, unnest(ps) AS piece FROM ug_seg$UgEmRounds)
          |GROUP BY piece ORDER BY n_tokens DESC, piece""".stripMargin) {
       (s, dir) =>
-      val sc = unigramTrain(s, dir)
-      wordFreq(s, dir)
-        .select(col("freq"), unigramPiecesCol(col("word"), sc).as("ps"))
-        .select(explode_outer(col("ps")).as("piece"), col("freq"))
-        .groupBy("piece").agg(sum("freq").as("n_tokens"))
+      usage(wordFreq(s, dir), unigramPiecesCol(col("word"), unigramTrain(s, dir)))
         .orderBy(col("n_tokens").desc, col("piece"))
     },
 
     // Corpus-wide unigram tokenizer application: per-document Viterbi
-    // token counts — the q_bpe_token_count layout (fold once per DISTINCT
-    // word, corpus joins word → piece count).
+    // token counts.
     Q("q_unigram_token_count",
       s"""$ugScriptPrefix
          |WITH wl AS (SELECT word, CAST(len(ps) AS INTEGER) AS n_sub
@@ -1011,15 +962,9 @@ object Tokenize {
          |JOIN wl USING (word)
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val sc = unigramTrain(s, dir)
-      val wordLen = wordFreq(s, dir)
-        .select(col("word"),
-          size(unigramPiecesCol(col("word"), sc)).as("n_sub"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .join(wordLen, "word")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_words"), sum("n_sub").as("n_ug_tokens"))
-        .orderBy("doc_id")
+      perDoc(s, dir, wordFreq(s, dir).select(col("word"),
+          size(unigramPiecesCol(col("word"), sc)).as("n_sub")))(
+        count(lit(1)).as("n_words"), sum("n_sub").as("n_ug_tokens"))
     },
 
     // PRUNED unigram vocabulary — the remove-lowest-likelihood rounds
@@ -1055,10 +1000,7 @@ object Tokenize {
          |ORDER BY piece""".stripMargin) { (s, dir) =>
       import s.implicits._
       val sc = unigramTrainPruned(s, dir)
-      val used = wordFreq(s, dir)
-        .select(col("freq"), unigramPiecesCol(col("word"), sc).as("ps"))
-        .select(explode_outer(col("ps")).as("piece"), col("freq"))
-        .groupBy("piece").agg(sum("freq").as("n_tokens"))
+      val used = usage(wordFreq(s, dir), unigramPiecesCol(col("word"), sc))
       sc.toSeq.sortBy(_._1).toDF("piece", "sc_micro")
         .join(used, Seq("piece"), "left")
         .select(col("piece"), col("sc_micro"),
@@ -1091,25 +1033,21 @@ object Tokenize {
          |ORDER BY piece""".stripMargin) { (s, dir) =>
       import s.implicits._
       val (_, pieces) = wpTrain(s, dir)
-      val used = wordFreq(s, dir).filter(length(col("word")) >= 1)
-        .select(col("freq"),
-          explode(wordpiecePiecesCol(col("word"), pieces)).as("piece"))
-        .groupBy("piece").agg(sum("freq").as("n"))
+      val used = usage(wordFreq(s, dir).filter(length(col("word")) >= 1),
+        wordpiecePiecesCol(col("word"), pieces))
       pieces.toDF("piece")
         .join(used, Seq("piece"), "left")
         .select(col("piece"),
           (!col("piece").startsWith("##")).as("is_word_start"),
-          coalesce(col("n"), lit(0L)).as("n_tokens"))
+          coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
         .orderBy("piece")
     },
 
     // Per-document WordPiece token count (+ UNK-word count) under the
-    // trained inventory — the family's corpus-application query: the
-    // greedy fold runs once per DISTINCT word; documents join word →
-    // piece count, so the corpus-sized stage is one explode + one
-    // equi-join however large the corpus. A document's [UNK] words
-    // count 1 token each and are surfaced separately (the quality
-    // signal a tokenizer-coverage monitor watches).
+    // trained inventory — the family's corpus-application query. A
+    // document's [UNK] words count 1 token each and are surfaced
+    // separately (the quality signal a tokenizer-coverage monitor
+    // watches).
     Q("q_wordpiece_token_count",
       s"""$wpScriptPrefix
          |SELECT d.doc_id AS doc_id,
@@ -1121,17 +1059,11 @@ object Tokenize {
          |JOIN wp_seg s USING (word)
          |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       val (_, pieces) = wpTrain(s, dir)
-      val seg = wordFreq(s, dir).filter(length(col("word")) >= 1)
-        .select(col("word"),
-          wordpiecePiecesCol(col("word"), pieces).as("ps"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .join(seg, Seq("word"))
-        .groupBy("doc_id").agg(
-          sum(size(col("ps"))).as("n_tokens"),
-          sum(when(col("ps") === typedlit(Seq(WpUnk)), 1L).otherwise(0L))
-            .as("n_unk"))
-        .orderBy("doc_id")
+      perDoc(s, dir, wordFreq(s, dir).filter(length(col("word")) >= 1)
+          .select(col("word"), wordpiecePiecesCol(col("word"), pieces).as("ps")))(
+        sum(size(col("ps"))).as("n_tokens"),
+        sum(when(col("ps") === typedlit(Seq(WpUnk)), 1L).otherwise(0L))
+          .as("n_unk"))
     }
   )
 }

@@ -476,18 +476,26 @@ class PlanShapeSpec extends SparkSpec {
   test("Segments/PostingLines frames keep every generated method JIT-compilable") {
     // inlined at every use, the Albers formula makes the merged frame's loop
     // a 47 KB method, which HotSpot never compiles (Segments.withProjected);
-    // the vector plane's shared cosine and candidate joins are inlined the
-    // same way. q_ann_lsh_topk and q_ann_calibration are left out: their
-    // LSH bucket stage is a 10,524 B method today (ROADMAP item 4).
-    import ops.{PostingLines, Segments, Similarity, Spatial}
+    // the vector plane's shared cosine and candidate joins and the text
+    // plane's shared tokenizer folds, bigram frame and BM25 columns are
+    // inlined the same way. q_ann_lsh_topk and q_ann_calibration are left
+    // out: their LSH bucket stage is a 10,524 B method today (ROADMAP
+    // item 4).
+    import ops.{LM, PostingLines, Retrieval, Segments, Similarity, Spatial,
+      TextOps, Tokenize}
     val overLimit = Set("q_ann_lsh_topk", "q_ann_calibration")
+    val textPlane = Set("q_bm25_topk", "q_bm25_pruned", "q_rrf_fusion",
+      "q_retrieval_full", "q_retrieval_batch", "q_sessionize",
+      "q_session_stats")
     val frames =
       Seq(
         "mergedFrom(fromEvents)" -> PostingLines.mergedFrom(
           Segments.fromEvents(Tables.events(spark, sfDir))),
         "Segments.df" -> Segments.df(spark, sfDir)) ++
       (PostingLines.queries ++ Spatial.queries ++
-        Similarity.queries.filterNot(q => overLimit(q.name)))
+        Similarity.queries.filterNot(q => overLimit(q.name)) ++
+        Tokenize.queries ++ LM.queries ++
+        (Retrieval.queries ++ TextOps.queries).filter(q => textPlane(q.name)))
         .map(q => q.name -> q.build(spark, sfDir))
     frames.foreach { case (name, df) =>
       val bytes = Diag.maxMethodBytes(df)

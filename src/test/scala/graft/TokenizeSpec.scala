@@ -96,6 +96,17 @@ class TokenizeSpec extends SparkSpec {
     assert(subwordChars === corpusChars)
   }
 
+  test("training dictionary fails loudly at its cap and is freq-ordered below it") {
+    // every capped-oracle contract rests on this guard: a dictionary that
+    // fills its cap may have dropped words the engine still encodes
+    assert(freqs.size > 3)
+    Seq(3, freqs.size).foreach { cap =>
+      intercept[IllegalArgumentException](topWords(spark, sfDir, cap))
+    }
+    val all = topWords(spark, sfDir, freqs.size + 1)
+    assert(all.toSeq === freqs.toSeq.sortBy { case (w, f) => (-f, w) })
+  }
+
   // ---- unigram-LM: from-scratch sequential reference ----------------------
 
   private def refScore(c: Long, t: Long, v: Long): Long =
