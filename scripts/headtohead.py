@@ -5,8 +5,9 @@ Usage: python3 scripts/headtohead.py [sfDir] [verifyOut] [benchFull]
 
 Times every oracle SQL (written by graft.Verify into verifyOut/oracle_sql.json)
 in DuckDB at 32 threads over the same parquet tables, pairs each with the
-engine's per-query wall time from BENCH_FULL.json (written by graft.Bench at
-the same sfDir), and writes HEADTOHEAD.json + a README-ready summary to stdout.
+engine's per-query wall time from target/BENCH_FULL.json (written by
+graft.Bench at the same sfDir; pass a committed round file explicitly), and
+writes HEADTOHEAD.json + a README-ready summary to stdout.
 NOT part of the engine — development tooling only (the driver environment
 ships duckdb for the oracle; the Scala engine never depends on it).
 """
@@ -18,7 +19,7 @@ import duckdb
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
-BENCH = sys.argv[3] if len(sys.argv) > 3 else "BENCH_FULL.json"
+BENCH = sys.argv[3] if len(sys.argv) > 3 else "target/BENCH_FULL.json"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 con = duckdb.connect()

@@ -189,7 +189,8 @@ object Bench {
     // full 89-query map (~2.4 KB with names) cannot fit — which is exactly
     // how the timing map vanished from BENCH_r02–r04. So: (1) the COMPLETE
     // record (timings + rows + trace diagnostics) is written to
-    // BENCH_FULL.json in the working directory and echoed on an early line;
+    // target/BENCH_FULL.json (git-ignored, so a local run never overwrites a
+    // committed round artifact) and echoed on an early line;
     // (2) the final line — the one guaranteed to survive the tail — carries
     // the timings SLOWEST-FIRST up to a fixed byte budget, with an explicit
     // count of omitted (fastest) entries and a pointer to the full file.
@@ -229,9 +230,11 @@ object Bench {
     }
     full.put("sf", sfDir)
     val fullJson = json.writeValueAsString(full)
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-      (fullJson + "\n").getBytes("UTF-8"))
-    catch { case e: Exception => System.err.println(s"[bench] BENCH_FULL.json: $e") }
+    val fullPath = java.nio.file.Paths.get("target", "BENCH_FULL.json")
+    try {
+      java.nio.file.Files.createDirectories(fullPath.getParent)
+      java.nio.file.Files.write(fullPath, (fullJson + "\n").getBytes("UTF-8"))
+    } catch { case e: Exception => System.err.println(s"[bench] $fullPath: $e") }
     println(fullJson)
     Memo.clear(spark)
     spark.stop()
@@ -250,7 +253,7 @@ object Bench {
       } else omitted += 1
     }
     tail.put("queries_order", "failures_then_slowest_first").put("omitted_fastest", omitted)
-      .put("reruns", rerunLog.size).put("full", "BENCH_FULL.json").put("sf", sfDir)
+      .put("reruns", rerunLog.size).put("full", fullPath.toString).put("sf", sfDir)
     println(json.writeValueAsString(tail))
   }
 }

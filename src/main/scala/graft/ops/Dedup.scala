@@ -15,6 +15,18 @@ import graft.functions.exprs._
   * Scale shape: signatures are computed per-row (narrow, no shuffle);
   * LSH candidate generation shuffles only (band, key) pairs — the classic
   * shingle→minhash→band→bucket-join layout that survives 1000 executors.
+  *
+  * Each rule of MinHash near-dup detection is written once, and the batch,
+  * incremental, per-doc and calibration pipelines compose them:
+  *  - token-set column: [[tokenSet]] (sorted distinct token hashes `th`);
+  *  - band rows: [[bandRows]] (one row per LSH band of `sig`);
+  *  - size bound: [[sizeBound]] (the integer τ prefilter on set sizes);
+  *  - agreement and Jaccard columns: [[sigAgree]] over `sig1`/`sig2`,
+  *    [[interSize]], [[unionSize]] and [[jaccard]] over `h1`/`h2`;
+  *  - two-phase verify: [[verified]] (signature agreement, then exact
+  *    Jaccard, per candidate cluster pair);
+  *  - oracle prefix: [[minhashCandCtesWhere]] (the DuckDB chain up to the
+  *    token sets, shared by the pair and calibration oracles).
   */
 object Dedup {
 
@@ -59,6 +71,8 @@ object Dedup {
   private[graft] def dtoks: Column = array_distinct(toks)
   /** Per-token 30-bit polynomial hashes (distinct tokens → set semantics). */
   private def tokenHashes: Column = transform(dtoks, t => poly_hash(t))
+  /** Sorted token-hash set `th`: a cluster's key, the merge-walk set input. */
+  private def tokenSet: Column = array_sort(tokenHashes)
 
   /** MinHash signature: sig_i = min over tokens of (h*(2i+1) + (101i+17)) mod P. */
   private[graft] def minhashSigsOf(hashes: Column): Column =
@@ -72,6 +86,54 @@ object Dedup {
     transform(sequence(lit(0), lit(NumBands - 1)), b =>
       concat_ws(",", transform(slice(sig, b * BandRows + 1, lit(BandRows)),
         x => x.cast("string"))))
+
+  /** Band rows: `f`'s `keep` columns once per LSH band of its `sig`, with
+    * the band index and key every band join matches on.
+    */
+  private def bandRows(f: DataFrame, keep: Column*): DataFrame =
+    f.select(keep :+ posexplode(bandKeys(col("sig"))).as(Seq("band", "key")): _*)
+
+  /** The size bound of the τ cut on two set sizes: jac ≥ τ forces
+    * |A∩B| ≤ min and |A∪B| ≥ max, hence min/max ≥ τ, so a band join that
+    * carries it drops most colliding pairs on two ints before any array
+    * work. Integer form (τ = [[TauNum]]/[[TauDen]]): a double
+    * `n ≥ 0.9·n2` would wrongly drop exact-boundary pairs like
+    * |A|=90 ⊂ |B|=100 whose jac is exactly 0.9.
+    */
+  private def sizeBound(n1: Column, n2: Column): Column =
+    least(n1, n2) * TauDen >= greatest(n1, n2) * TauNum
+
+  /** Agreeing components of the signatures `sig1` and `sig2`. */
+  private def sigAgree: Column = count_equal(col("sig1"), col("sig2"))
+  /** Exact intersection, union and Jaccard of the token sets `h1` and `h2`. */
+  private def interSize: Column = intersect_count_sorted(col("h1"), col("h2"))
+  private def unionSize: Column = size(col("h1")) + size(col("h2")) - interSize
+  private def jaccard: Column = interSize / unionSize
+
+  /** Two-phase verify of candidate pairs (`l`, `r`) of the cluster frames
+    * `lf` and `rf`, keyed on their `cid`: the 16-long signatures travel to
+    * EVERY candidate pair (cheap, auto-broadcast-sized) and keep
+    * sig_agree ≥ [[MinSigAgree]]; only the survivors join the full
+    * token-hash arrays and keep jac ≥ [[JaccardTau]] — at scale the wide
+    * arrays never ride along with the raw candidate set. Candidates come
+    * in NOT distinct'ed: a pair collides in at most [[NumBands]] bands,
+    * and re-verifying a duplicate is cheaper than shuffling every
+    * candidate row through a pre-dedup, so the tiny qualifying output is
+    * distinct'ed instead.
+    */
+  private def verified(cand: DataFrame, lf: DataFrame, l: String,
+      rf: DataFrame, r: String): DataFrame = {
+    def side(f: DataFrame, id: String, c: String, as: String) =
+      f.select(col("cid").as(id), col(c).as(as))
+    cand.join(side(lf, l, "sig", "sig1"), l).join(side(rf, r, "sig", "sig2"), r)
+      .select(col(l), col(r), sigAgree.as("sig_agree"))
+      .filter(col("sig_agree") >= MinSigAgree)
+      .join(side(lf, l, "th", "h1"), l).join(side(rf, r, "th", "h2"), r)
+      .select(col(l), col(r), col("sig_agree"),
+        interSize.as("inter"), unionSize.as("uni"), jaccard.as("jac"))
+      .filter(col("jac") >= JaccardTau)
+      .distinct()
+  }
 
   /** Cached per-(session, dir) frames ([[graft.Memo]]). The cluster table
     * feeds 5 branches (members, sizes, bands, both join sides) and is tiny
@@ -104,8 +166,7 @@ object Dedup {
     // which the single-row-group fixture file otherwise serializes onto
     // one task (Tables.spread scaladoc; guide §2.5)
     Tables.spread(docs)
-      .select(col("doc_id"),
-        array_sort(transform(dtoks, t => poly_hash(t))).as("th"))
+      .select(col("doc_id"), tokenSet.as("th"))
       .groupBy(col("th"))
       .agg(collect_list(col("doc_id")).as("ms"))
       .withColumn("sig", minhashSigsOf(col("th")))
@@ -151,43 +212,14 @@ object Dedup {
 
   private def qualifyingClusterPairsPlan(s: SparkSession, dir: String): DataFrame = {
     val clusters = clusterFrame(s, dir)
-    val bandRows = clusters.select(col("cid"), size(col("th")).as("n"),
-      posexplode(bandKeys(col("sig"))).as(Seq("band", "key")))
-    // jac ≥ τ forces |A∩B| ≤ min and |A∪B| ≥ max, hence min/max ≥ τ: push
-    // that size bound into the band join itself so most colliding pairs die
-    // on two ints before any dedup or array work. Integer form (τ = 9/10)
-    // — a double `n ≥ 0.9·n2` would wrongly drop exact-boundary pairs like
-    // |A|=90 ⊂ |B|=100 whose jac is exactly 0.9.
-    val cand = bandRows.join(
-      bandRows.select(col("cid").as("cid2"), col("n").as("n2"),
+    val bands = bandRows(clusters, col("cid"), size(col("th")).as("n"))
+    val cand = bands.join(
+      bands.select(col("cid").as("cid2"), col("n").as("n2"),
         col("band").as("band2"), col("key").as("key2")),
       col("band") === col("band2") && col("key") === col("key2") &&
-        col("cid") < col("cid2") &&
-        least(col("n"), col("n2")) * TauDen >= greatest(col("n"), col("n2")) * TauNum)
+        col("cid") < col("cid2") && sizeBound(col("n"), col("n2")))
       .select("cid", "cid2")
-    // NOT distinct'ed here: a pair collides in at most NumBands (=2) bands,
-    // and re-verifying a duplicate is cheaper than shuffling millions of
-    // candidate rows through a pre-dedup — the tiny qualifying output is
-    // distinct'ed instead.
-    // Two-phase verify: the 16-long signatures travel to EVERY candidate
-    // pair (cheap, auto-broadcast-sized); the full token-hash arrays join
-    // only the pairs that survive the signature-agreement prefilter — at
-    // scale the wide arrays never ride along with the raw candidate set.
-    val sigL = clusters.select(col("cid"), col("sig").as("sig1"))
-    val sigR = clusters.select(col("cid").as("cid2"), col("sig").as("sig2"))
-    val agreed = cand.join(sigL, "cid").join(sigR, "cid2")
-      .select(col("cid"), col("cid2"),
-        graft.functions.exprs.count_equal(col("sig1"), col("sig2")).as("sig_agree"))
-      .filter(col("sig_agree") >= MinSigAgree)
-    val thL = clusters.select(col("cid"), col("th").as("h1"))
-    val thR = clusters.select(col("cid").as("cid2"), col("th").as("h2"))
-    val inter = graft.functions.exprs.intersect_count_sorted(col("h1"), col("h2"))
-    val uni   = size(col("h1")) + size(col("h2")) - inter
-    agreed.join(thL, "cid").join(thR, "cid2")
-      .select(col("cid"), col("cid2"), col("sig_agree"),
-        inter.as("inter"), uni.as("uni"), (inter / uni).as("jac"))
-      .filter(col("jac") >= JaccardTau)
-      .distinct()
+    verified(cand, clusters, "cid", clusters, "cid2")
   }
 
   // ---- incremental near-dup (ingest batch vs existing index) -------------
@@ -210,31 +242,14 @@ object Dedup {
   private[graft] def incrementalNearDup(index: DataFrame,
       newDocs: DataFrame): DataFrame = {
     val nc = clusterFrameOf(newDocs)
-    def bands(cf: DataFrame, side: String) =
-      cf.select(col("cid").as(s"${side}cid"), size(col("th")).as(s"${side}n"),
-        posexplode(bandKeys(col("sig"))).as(Seq("band", "key")))
     // size bound pushed into the band join, exactly as the batch pipeline
-    val cand = bands(nc, "n").join(bands(index, "i"), Seq("band", "key"))
-      .filter(least(col("nn"), col("in")) * TauDen >=
-        greatest(col("nn"), col("in")) * TauNum)
+    val cand = bandRows(nc, col("cid").as("ncid"), size(col("th")).as("nn"))
+      .join(bandRows(index, col("cid").as("icid"), size(col("th")).as("in")),
+        Seq("band", "key"))
+      .filter(sizeBound(col("nn"), col("in")))
       .select("ncid", "icid")
-    val agreed = cand
-      .join(nc.select(col("cid").as("ncid"), col("sig").as("sig1")), "ncid")
-      .join(index.select(col("cid").as("icid"), col("sig").as("sig2")), "icid")
-      .select(col("ncid"), col("icid"),
-        graft.functions.exprs.count_equal(col("sig1"), col("sig2")).as("sig_agree"))
-      .filter(col("sig_agree") >= MinSigAgree)
-    val inter = graft.functions.exprs.intersect_count_sorted(col("h1"), col("h2"))
-    val uni   = size(col("h1")) + size(col("h2")) - inter
-    val qual = agreed
-      .join(nc.select(col("cid").as("ncid"), col("th").as("h1")), "ncid")
-      .join(index.select(col("cid").as("icid"), col("th").as("h2")), "icid")
-      .select(col("ncid"), col("icid"), col("sig_agree"),
-        inter.as("inter"), uni.as("uni"), (inter / uni).as("jac"))
-      .filter(col("jac") >= JaccardTau)
-      .distinct()
     // fan out once per member pair — slim (cid, doc) rows only
-    qual
+    verified(cand, nc, "ncid", index, "icid")
       .join(nc.select(col("cid").as("ncid"), explode(col("ms")).as("new_doc")), "ncid")
       .join(index.select(col("cid").as("icid"), explode(col("ms")).as("dup_of")), "icid")
       .select(col("new_doc"), col("dup_of"), col("sig_agree"),
@@ -286,30 +301,24 @@ object Dedup {
     * streaming-safe variant of [[incrementalNearDup]]: no groupBy on the
     * incoming side (a streaming aggregation before a join would need its
     * own state store and output mode), just narrow per-row signature/band
-    * derivation, a stream-static band join against the index, and the same
-    * two-phase verify. Semantically identical per doc (clustering the new
-    * batch first only dedups the verify work, never changes which docs
-    * match). Returns the distinct new-doc ids with ≥1 qualifying match.
+    * derivation, a stream-static band join against the index, and the
+    * checks of [[verified]] as three filters on that one join.
+    * Semantically identical per doc (clustering the new batch first only
+    * dedups the verify work, never changes which docs match). Returns the
+    * distinct new-doc ids with ≥1 qualifying match.
     */
   private[graft] def nearDupMatchedIds(index: DataFrame,
       newDocs: DataFrame): DataFrame = {
-    val rows = newDocs.select(col("doc_id"),
-      array_sort(transform(dtoks, t => poly_hash(t))).as("th"))
+    val rows = newDocs.select(col("doc_id"), tokenSet.as("th"))
       .withColumn("sig", minhashSigsOf(col("th")))
-    val banded = rows.select(col("doc_id"), size(col("th")).as("nn"),
-      col("sig").as("sig1"), col("th").as("h1"),
-      posexplode(bandKeys(col("sig"))).as(Seq("band", "key")))
-    val idxBands = index.select(col("cid"), size(col("th")).as("in"),
-      col("sig").as("sig2"), col("th").as("h2"),
-      posexplode(bandKeys(col("sig"))).as(Seq("band", "key")))
-    val inter = graft.functions.exprs.intersect_count_sorted(col("h1"), col("h2"))
-    val uni   = size(col("h1")) + size(col("h2")) - inter
+    val banded = bandRows(rows, col("doc_id"), size(col("th")).as("nn"),
+      col("sig").as("sig1"), col("th").as("h1"))
+    val idxBands = bandRows(index, col("cid"), size(col("th")).as("in"),
+      col("sig").as("sig2"), col("th").as("h2"))
     banded.join(idxBands, Seq("band", "key"))
-      .filter(least(col("nn"), col("in")) * TauDen >=
-        greatest(col("nn"), col("in")) * TauNum)
-      .filter(graft.functions.exprs.count_equal(col("sig1"), col("sig2"))
-        >= MinSigAgree)
-      .filter((inter / uni) >= JaccardTau)
+      .filter(sizeBound(col("nn"), col("in")))
+      .filter(sigAgree >= MinSigAgree)
+      .filter(jaccard >= JaccardTau)
       .select("doc_id").distinct()
   }
 
@@ -390,6 +399,22 @@ object Dedup {
     * on a vertex-induced subgraph at a fraction of the cost.
     */
   private[ops] def minhashPairsCtesWhere(where: String): String =
+    s"""${minhashCandCtesWhere(where)}, pairs_t AS (
+       |  SELECT d1, d2, sig_agree,
+       |         CAST(len(list_intersect(a.t, b.t)) AS INTEGER) AS inter,
+       |         CAST(len(list_distinct(list_concat(a.t, b.t))) AS INTEGER) AS uni,
+       |         (len(list_intersect(a.t, b.t)) / len(list_distinct(list_concat(a.t, b.t)))) AS jac
+       |  FROM est JOIN tk a ON a.doc_id = d1 JOIN tk b ON b.doc_id = d2
+       |  WHERE sig_agree >= $MinSigAgree
+       |    AND (len(list_intersect(a.t, b.t)) / len(list_distinct(list_concat(a.t, b.t)))) >= $JaccardTau
+       |)""".stripMargin
+
+  /** The oracle prefix of [[minhashPairsCtesWhere]], before `pairs_t`:
+    * token hashes (hs_t) → signatures (sig_t) → band keys (band_t) →
+    * distinct banded candidates (cand) → their signature agreement (est)
+    * → token sets (tk). q_minhash_calibration reads it unthresholded.
+    */
+  private def minhashCandCtesWhere(where: String): String =
     s"""${hsCteWhere(where)}, sig_t AS (
        |  SELECT doc_id, list_transform(range(0, $NumPerms), i -> $sigExpr) AS sig
        |  FROM hs_t
@@ -407,14 +432,6 @@ object Dedup {
        |  FROM cand JOIN sig_t sa ON sa.doc_id = d1 JOIN sig_t sb ON sb.doc_id = d2
        |), tk AS (
        |  SELECT doc_id, list_distinct(string_split(${normTextSql}, ' ')) AS t FROM documents$where
-       |), pairs_t AS (
-       |  SELECT d1, d2, sig_agree,
-       |         CAST(len(list_intersect(a.t, b.t)) AS INTEGER) AS inter,
-       |         CAST(len(list_distinct(list_concat(a.t, b.t))) AS INTEGER) AS uni,
-       |         (len(list_intersect(a.t, b.t)) / len(list_distinct(list_concat(a.t, b.t)))) AS jac
-       |  FROM est JOIN tk a ON a.doc_id = d1 JOIN tk b ON b.doc_id = d2
-       |  WHERE sig_agree >= $MinSigAgree
-       |    AND (len(list_intersect(a.t, b.t)) / len(list_distinct(list_concat(a.t, b.t)))) >= $JaccardTau
        |)""".stripMargin
 
   /** SimHash signature CTEs (hs_t → sg): the 30-bit occurrence-weighted
@@ -482,16 +499,6 @@ object Dedup {
     */
   private[ops] def simhash128WordsSql: String = s"$simhash128WordsSelect;"
 
-  /** 128-bit fingerprint pair search over an explicit documents frame:
-    * [[graft.functions.Hashing.simHash128]] codes through the sized
-    * parametric MIH engine — the chunk geometry comes from the corpus
-    * count via [[Similarity.mihChunksFor]] (at τ = 8 over 128 bits the
-    * model picks ≥ 9 chunks, which drops the per-chunk radius to 0:
-    * exact-key probes, ONE mask per chunk vs the static 8×16-bit
-    * layout's 17 — pigeonhole still covers because 9 chunks × radius 0
-    * pigeonholes any ≤ 8 flips). Output is chunk-count-invariant (exact
-    * Hamming filter; the brute-force oracles re-prove it).
-    */
   /** [[simhash128PairsFrom]] over the corpus documents table, memoized per
     * (session, dir) like [[minhashPairs]]: two declared queries consume the
     * identical frame (q_simhash_pairs128 and q_ktruss's edge list) and each
@@ -502,6 +509,16 @@ object Dedup {
   private[graft] def simhash128Pairs(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "sh128pairs")(simhash128PairsFrom(Tables.documents(s, dir)))
 
+  /** 128-bit fingerprint pair search over an explicit documents frame:
+    * [[graft.functions.Hashing.simHash128]] codes through the sized
+    * parametric MIH engine — the chunk geometry comes from the corpus
+    * count via [[Similarity.mihChunksFor]] (at τ = 8 over 128 bits the
+    * model picks ≥ 9 chunks, which drops the per-chunk radius to 0:
+    * exact-key probes, ONE mask per chunk vs the static 8×16-bit
+    * layout's 17 — pigeonhole still covers because 9 chunks × radius 0
+    * pigeonholes any ≤ 8 flips). Output is chunk-count-invariant (exact
+    * Hamming filter; the brute-force oracles re-prove it).
+    */
   private[graft] def simhash128PairsFrom(docs: DataFrame): DataFrame = {
     import graft.functions.exprs.sim_hash128
     // spread: normalize + 128-bit SimHash per doc is scan-stage work —
@@ -967,16 +984,17 @@ object Dedup {
 
     // PRODUCTION-WIDTH SimHash pairs: 128-bit fingerprints (the Norouzi
     // MIH evaluation width) probed by the multi-index Hamming engine —
-    // 8×16-bit chunks at radius floor(8/8) = 1, so the per-chunk probe
-    // neighborhood is just 17 masks (vs 697 at radius 3). Pigeonhole:
-    // ham ≤ 8 over 8 chunks leaves some chunk ≤ 1 — the index finds
+    // Similarity.mihChunksFor picks 9 chunks of ≤ 15 bits at radius
+    // floor(8/9) = 0 (at sf0.001, sf0.01 and sf0.1), so each chunk probes
+    // its exact key, one mask. Pigeonhole: ham ≤ 8 over 9 chunks leaves
+    // some chunk untouched — the index finds
     // EVERY qualifying pair, and the oracle IS the brute-force all-pairs
     // scan, so hash-green re-proves completeness at this width (the
     // q_hamming_mih contract, now on the TEXT dedup plane). The 2×-wider
     // code buys output precision: P(Binom(128,½) ≤ 8) ≈ 5e-25 background
     // pairs vs ≈ 2e-5 for 30-bit ham ≤ 2. Scale shape: per doc
-    // 8 chunk keys × 17 probes through one SHUFFLE_HASH-pinned join —
-    // Θ(docs × 136) probe rows, never all-pairs.
+    // 9 chunk keys × 1 probe through one SHUFFLE_HASH-pinned join —
+    // Θ(docs × 9) probe rows, never all-pairs.
     Q("q_simhash_pairs128",
       s"""WITH wd AS (
          |${simhash128WordsSelect}
@@ -1009,25 +1027,7 @@ object Dedup {
     // gram explode is narrow, the single window keys on doc_id (per-doc
     // bounded state), DISTINCT keys on the fingerprint — nothing global.
     Q("q_winnowing",
-      s"""WITH t AS (
-         |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-         |g AS (
-         |  -- comprehension var is gp, NOT i: hashSql's inner lambda binds i
-         |  -- and would capture/shadow it (observed: wrong hashes past pos 4)
-         |  SELECT doc_id,
-         |         unnest([struct_pack(pos := gp,
-         |                  h := ${hashSql("array_to_string(toks[gp:gp+" + (WinK - 1) + "], ' ')")})
-         |                 for gp in range(1, len(toks) - $WinK + 2)]) AS u
-         |  FROM t WHERE len(toks) >= $WinK),
-         |k AS (
-         |  SELECT doc_id, u.pos AS pos, u.h * $WinB - u.pos AS ck,
-         |         row_number() OVER (PARTITION BY doc_id ORDER BY u.pos) AS rn
-         |  FROM g),
-         |w AS (
-         |  SELECT doc_id, rn,
-         |         min(ck) OVER (PARTITION BY doc_id ORDER BY rn
-         |           ROWS BETWEEN ${WinW - 1} PRECEDING AND CURRENT ROW) AS mk
-         |  FROM k)
+      s"""$winnowFpCtes
          |SELECT DISTINCT doc_id,
          |       CAST((mk + $WinB - 1) // $WinB AS BIGINT) AS h,
          |       CAST(((mk + $WinB - 1) // $WinB) * $WinB - mk AS BIGINT) AS pos
@@ -1086,24 +1086,7 @@ object Dedup {
     // band-bounded (Θ(collisions), never all pairs); the aggregate is
     // 17 rows whatever the corpus.
     Q("q_minhash_calibration",
-      s"""$hsCte, sig_t AS (
-         |  SELECT doc_id, list_transform(range(0, $NumPerms), i -> $sigExpr) AS sig
-         |  FROM hs_t
-         |), band_t AS (
-         |  SELECT doc_id, b,
-         |         array_to_string(sig[(b * $BandRows + 1):(b * $BandRows + $BandRows)], ',') AS key
-         |  FROM sig_t, range(0, $NumBands) t(b)
-         |), cand AS (
-         |  SELECT DISTINCT l.doc_id AS d1, r.doc_id AS d2
-         |  FROM band_t l JOIN band_t r ON l.b = r.b AND l.key = r.key AND l.doc_id < r.doc_id
-         |), est AS (
-         |  SELECT d1, d2,
-         |         CAST(len(list_filter(list_transform(range(1, $NumPerms + 1),
-         |           i -> sa.sig[i] = sb.sig[i]), x -> x)) AS INTEGER) AS sig_agree
-         |  FROM cand JOIN sig_t sa ON sa.doc_id = d1 JOIN sig_t sb ON sb.doc_id = d2
-         |), tk AS (
-         |  SELECT doc_id, list_distinct(string_split(${normTextSql}, ' ')) AS t FROM documents
-         |), fullj AS (
+      s"""${minhashCandCtesWhere("")}, fullj AS (
          |  SELECT sig_agree,
          |         CAST(len(list_intersect(a.t, b.t)) AS BIGINT) AS inter,
          |         CAST(len(list_distinct(list_concat(a.t, b.t))) AS BIGINT) AS uni
@@ -1243,10 +1226,9 @@ object Dedup {
     val clusters = clusterFrame(s, dir)
     val sz = clusters.select(col("cid"), col("th"), col("sig"),
       size(col("ms")).cast("long").as("cnt"))
-    val bandRows = sz.select(col("cid"),
-      posexplode(bandKeys(col("sig"))).as(Seq("band", "key")))
-    val cand = bandRows.join(
-        bandRows.select(col("cid").as("cid2"), col("band").as("band2"),
+    val bands = bandRows(sz, col("cid"))
+    val cand = bands.join(
+        bands.select(col("cid").as("cid2"), col("band").as("band2"),
           col("key").as("key2")),
         col("band") === col("band2") && col("key") === col("key2") &&
           col("cid") < col("cid2"))
@@ -1255,12 +1237,9 @@ object Dedup {
       col("cnt").as("c1"))
     val r = sz.select(col("cid").as("cid2"), col("sig").as("sig2"),
       col("th").as("h2"), col("cnt").as("c2"))
-    val inter = graft.functions.exprs.intersect_count_sorted(col("h1"), col("h2"))
     val interC = cand.join(l, "cid").join(r, "cid2")
-      .select(
-        graft.functions.exprs.count_equal(col("sig1"), col("sig2")).as("sig_agree"),
-        inter.cast("long").as("inter"),
-        (size(col("h1")) + size(col("h2")) - inter).cast("long").as("uni"),
+      .select(sigAgree.as("sig_agree"), interSize.cast("long").as("inter"),
+        unionSize.cast("long").as("uni"),
         (col("c1") * col("c2")).as("n_pair"))
     val intraC = sz.filter(col("cnt") >= 2)
       .select(lit(NumPerms).as("sig_agree"),
@@ -1305,6 +1284,8 @@ object Dedup {
     s"""WITH t AS (
        |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        |g AS (
+       |  -- comprehension var is gp, NOT i: hashSql's inner lambda binds i
+       |  -- and would capture/shadow it (observed: wrong hashes past pos 4)
        |  SELECT doc_id,
        |         unnest([struct_pack(pos := gp,
        |                  h := ${hashSql("array_to_string(toks[gp:gp+" + (WinK - 1) + "], ' ')")})

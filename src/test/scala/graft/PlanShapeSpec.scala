@@ -205,11 +205,6 @@ class PlanShapeSpec extends SparkSpec {
       // single-row Heaps-slope fit — the tfidf/unigram + day-series
       // classes combined
       "q_heaps_law",
-      // SHUFFLE_HASH strategy hint only (no broadcast): the tiled band
-      // self-join — both sides stay shuffle-partitioned on
-      // (band, key, tile); the hint steers SMJ→hash to avoid the
-      // buffered equal-key re-scan on skewed de-thresholded buckets
-      "q_minhash_calibration",
       // both hinted sides are the single-row era-total aggregates over
       // the ≤(EdBuckets+overflow)-row bucket grids — the tfidf/unigram
       // single-row class (the grids themselves are bounded by the
@@ -477,16 +472,19 @@ class PlanShapeSpec extends SparkSpec {
     // inlined at every use, the Albers formula makes the merged frame's loop
     // a 47 KB method, which HotSpot never compiles (Segments.withProjected);
     // the vector plane's shared cosine and candidate joins and the text
-    // plane's shared tokenizer folds, bigram frame and BM25 columns are
-    // inlined the same way. q_ann_lsh_topk and q_ann_calibration are left
-    // out: their LSH bucket stage is a 10,524 B method today (ROADMAP
+    // plane's shared tokenizer folds, bigram frame and BM25 columns and the
+    // near-dup plane's shared band, size-bound, agreement and verify rules
+    // are inlined the same way. q_ann_lsh_topk and q_ann_calibration are
+    // left out: their LSH bucket stage is a 10,524 B method today (ROADMAP
     // item 4).
-    import ops.{LM, PostingLines, Retrieval, Segments, Similarity, Spatial,
-      TextOps, Tokenize}
+    import ops.{Corpus, Dedup, LM, PostingLines, Retrieval, Segments,
+      Similarity, Spatial, TextOps, Tokenize}
     val overLimit = Set("q_ann_lsh_topk", "q_ann_calibration")
     val textPlane = Set("q_bm25_topk", "q_bm25_pruned", "q_rrf_fusion",
       "q_retrieval_full", "q_retrieval_batch", "q_sessionize",
       "q_session_stats")
+    val nearDupPlane = Set("q_dedup_components", "q_dedup_cluster_stats",
+      "q_training_corpus")
     val frames =
       Seq(
         "mergedFrom(fromEvents)" -> PostingLines.mergedFrom(
@@ -495,7 +493,8 @@ class PlanShapeSpec extends SparkSpec {
       (PostingLines.queries ++ Spatial.queries ++
         Similarity.queries.filterNot(q => overLimit(q.name)) ++
         Tokenize.queries ++ LM.queries ++
-        (Retrieval.queries ++ TextOps.queries).filter(q => textPlane(q.name)))
+        (Retrieval.queries ++ TextOps.queries).filter(q => textPlane(q.name)) ++
+        Dedup.queries ++ Corpus.queries.filter(q => nearDupPlane(q.name)))
         .map(q => q.name -> q.build(spark, sfDir))
     frames.foreach { case (name, df) =>
       val bytes = Diag.maxMethodBytes(df)

@@ -525,6 +525,37 @@ class QueriesSpec extends SparkSpec {
       kept.count() + perDoc.count() === batch.count())
   }
 
+  test("an exact-τ subset pair survives the integer size bound") {
+    // B has 10 distinct tokens and A is B minus one of them, so
+    // jac(A, B) = 9/10 = τ exactly. The dropped token is no permutation's
+    // argmin, so A's signature equals B's and the pair collides in every
+    // band: only the size bound and the τ cut judge it. The bound must keep
+    // it (9·10 ≥ 10·9), and an 8-token subset (jac 0.8) must find nothing.
+    import spark.implicits._
+    import graft.functions.exprs.poly_hash
+    val vocab = (0 until 40).map(i => s"tok$i")
+    // a one-token set's signature is that token's value under each permutation
+    val perm = vocab.toDF("t")
+      .select(col("t"), ops.Dedup.minhashSigsOf(array(poly_hash(col("t")))))
+      .as[(String, Seq[Long])].collect().toMap
+    def argmins(b: Seq[String]) =
+      (0 until ops.Dedup.NumPerms).map(i => b.minBy(perm(_)(i))).toSet
+    val (b, spare) = vocab.sliding(10).map(b => b -> b.filterNot(argmins(b)))
+      .find(_._2.size >= 2).get
+    def doc(id: Long, toks: Seq[String]) =
+      Seq((id, toks.mkString(" "))).toDF("doc_id", "text")
+    val index = ops.Dedup.clusterFrameOf(doc(1L, b))
+    val a9 = doc(2L, b.filterNot(_ == spare(0)))
+    val a8 = doc(3L, b.filterNot(spare.take(2).contains))
+    val pairs = ops.Dedup.incrementalNearDup(index, a9)
+      .select("new_doc", "dup_of", "sig_agree", "inter", "uni", "jac")
+      .as[(Long, Long, Int, Int, Int, Double)].collect().toSeq
+    assert(pairs === Seq((2L, 1L, ops.Dedup.NumPerms, 9, 10, 0.9)))
+    assert(ops.Dedup.nearDupMatchedIds(index, a9).as[Long].collect().toSeq === Seq(2L))
+    assert(ops.Dedup.incrementalNearDup(index, a8).count() === 0)
+    assert(ops.Dedup.nearDupMatchedIds(index, a8).count() === 0)
+  }
+
   test("retire ∘ index equals a full rebuild on the surviving corpus at arbitrary cutoffs") {
     // the index-maintenance theorem behind q_dedup_retire: folding a
     // tombstone set into the persisted cluster index (member-list
