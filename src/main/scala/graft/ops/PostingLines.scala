@@ -23,22 +23,20 @@ import graft.geo.Albers
   *    ([[Segments.withProjected]]), computed once per pending row: inlined
   *    at every use, the stage's row loop grew past HotSpot's 8000-byte
   *    `HugeMethodLimit` and ran in the bytecode interpreter.
-  *  - [[merged]] (the flagship) computes conditionally in-row
-  *    (`when(geom isNull, recompute)`) — the Spark-native form of the
-  *    reference's UPDATE, with no join at all. [[mergedViaJoin]] keeps the
-  *    reference's staging+update-join shape (R19) for fidelity; on a real
-  *    cluster both sides are partitioned by `segmentid`, and AQE handles
-  *    skew — but the in-row form is strictly better when computed columns
-  *    derive from the same row.
+  *  - [[merged]] (the flagship, and q_merge_update's engine) computes
+  *    conditionally in-row (`when(geom isNull, recompute)`) — the
+  *    Spark-native form of the reference's UPDATE, with no join at all.
+  *    The reference's staging+update-join shape (R19) lives on in the
+  *    tests as `PostingLinesReference.mergedViaJoin`, the form the in-row
+  *    merge is held equal to: the in-row form needs no shuffle because
+  *    the computed columns derive from the same row.
   */
 object PostingLines {
   import Segments.{withProjected, projectedGeom, sogKt, KnotsPerMps, ProjectedCols}
 
-  private def cleaned(spark: SparkSession, sfDir: String): DataFrame =
-    Segments.df(spark, sfDir).filter(col("duration") =!= 0)
-
   private def pending(spark: SparkSession, sfDir: String): DataFrame =
-    cleaned(spark, sfDir).filter(col("geom").isNull)
+    Segments.df(spark, sfDir).filter(col("duration") =!= 0)
+      .filter(col("geom").isNull)
 
   /** Flagship: the full main table after one pipeline run — in-row form. */
   def merged(spark: SparkSession, sfDir: String): DataFrame =
@@ -54,23 +52,6 @@ object PostingLines {
       .withColumn("lenm", coalesce(col("lenm"), col("len")))
       .withColumn("sogkt", coalesce(col("sogkt"), sogKt(col("len"), col("duration"))))
       .drop(ProjectedCols: _*)
-
-  /** Reference-shaped merge: stage pending rows, compute, equi-join back on
-    * `segmentid` (sql_to_line.py:230-234), coalescing computed columns in.
-    */
-  def mergedViaJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val computed = withProjected(pending(spark, sfDir)).select(
-      col("segmentid"),
-      projectedGeom.as("geom_new"),
-      col("len").as("lenm_new"),
-      sogKt(col("len"), col("duration")).as("sogkt_new"))
-    cleaned(spark, sfDir)
-      .join(computed, Seq("segmentid"), "left_outer")
-      .withColumn("geom", coalesce(col("geom"), col("geom_new")))
-      .withColumn("lenm", coalesce(col("lenm"), col("lenm_new")))
-      .withColumn("sogkt", coalesce(col("sogkt"), col("sogkt_new")))
-      .drop("geom_new", "lenm_new", "sogkt_new")
-  }
 
   // ---- declared queries (SURVEY §2.3 block 1) -----------------------------
 
@@ -172,9 +153,9 @@ object PostingLines {
     },
 
     // R19: the full main table after the update-join merge
-    // (sql_to_line.py:230-234). Stored values on already-processed rows were
-    // produced by the identical closed forms, so the oracle recomputes
-    // uniformly.
+    // (sql_to_line.py:230-234), run through the flagship in-row [[merged]].
+    // Stored values on already-processed rows were produced by the
+    // identical closed forms, so the oracle recomputes uniformly.
     Q("q_merge_update",
       Segments.oracle(
         s"""SELECT segmentid, uid, mmsi, epoch_us(starttime) AS starttime_us,
@@ -187,7 +168,7 @@ object PostingLines {
            |       round((($lenSql / duration) * $KnotsPerMps), 4) AS sogkt
            |FROM segments WHERE duration <> 0
            |ORDER BY segmentid""".stripMargin)) { (s, dir) =>
-      mergedViaJoin(s, dir).select(
+      merged(s, dir).select(
         col("segmentid"), col("uid"), col("mmsi"),
         tsUs(col("starttime")).as("starttime_us"), col("duration"),
         col("startlat"), col("startlon"), col("endlat"), col("endlon"),

@@ -234,6 +234,22 @@ object Profile {
         col("c.str"))
   }
 
+  /** [[tallEvents]] in SQL: the (carry…, cname, key, num, str) union of
+    * `from`'s four profiled columns.
+    */
+  private def tallSql(from: String, carry: String*): String = {
+    val c = carry.map(_ + ", ").mkString
+    s"""SELECT ${c}'event_type' AS cname, event_type AS key,
+       |         CAST(NULL AS BIGINT) AS num, event_type AS str FROM $from
+       |  UNION ALL SELECT ${c}'ts', CAST(epoch_us(ts) AS VARCHAR),
+       |         epoch_us(ts), NULL FROM $from
+       |  UNION ALL SELECT ${c}'user_id', CAST(user_id AS VARCHAR),
+       |         user_id, NULL FROM $from
+       |  UNION ALL SELECT ${c}'value',
+       |         CAST(CAST(round(value * 1000000.0) AS BIGINT) AS VARCHAR),
+       |         CAST(round(value * 1000000.0) AS BIGINT), NULL FROM $from""".stripMargin
+  }
+
   /** Per-batch profile STATE, keyed by `half`: the count/min-max partials
     * plus the per-column HLL register matrix (≤ M rows per column). Each
     * batch's state is bounded model state — O(columns · M) rows
@@ -248,13 +264,9 @@ object Profile {
       sum(when(col("key").isNull, 1L).otherwise(0L)).as("n_null"),
       min("num").as("mn_num"), max("num").as("mx_num"),
       min("str").as("mn_str"), max("str").as("mx_str"))
-    val regs = tall.filter(col("key").isNotNull)
-      .select(col("half"), col("cname"), poly_hash(col("key")).as("h"))
-      .select(col("half"), col("cname"),
-        (col("h") % Sketches.M).cast("int").as("bucket"),
-        Sketches.rankCol(expr(s"h div ${Sketches.M}")).cast("int").as("rank"))
-      .groupBy("half", "cname", "bucket")
-      .agg(max("rank").as("register"))
+    val regs = Sketches.registers(tall.filter(col("key").isNotNull)
+        .select(col("half"), col("cname"), poly_hash(col("key")).as("h")),
+      Seq("half", "cname"), "h", Sketches.RankCap)
     (counts, regs)
   }
 
@@ -279,19 +291,23 @@ object Profile {
   private[graft] def finalizeProfile(merged: (DataFrame, DataFrame))
       : DataFrame = {
     val (counts, regs) = merged
-    val hll = regs.groupBy("cname").agg(
-        count(lit(1)).as("present"),
-        sum(expr("shiftleft(1L, 57 - register)")).as("esp"))
-      .select(col("cname"), col("present"),
-        (col("esp") + (lit(Sketches.M.toLong) - col("present")) * (1L << 57))
-          .as("est_scaled"))
-    counts.join(hll, "cname")
+    counts.join(Sketches.scaledDenom(regs, "cname"), "cname")
       .select(col("cname").as("column_name"), col("n_rows"), col("n_null"),
         coalesce(col("mn_num").cast("string"), col("mn_str")).as("min_val"),
         coalesce(col("mx_num").cast("string"), col("mx_str")).as("max_val"),
         col("present"), col("est_scaled"))
       .orderBy("column_name")
   }
+
+  /** The profile drift gate, relative change over 20% by integer
+    * cross-multiplication: |after − before|·5 > max(|before|, 1) — never a
+    * float compare.
+    */
+  private def drifted(before: Column, after: Column): Column =
+    abs(after - before) * 5 > greatest(abs(before), lit(1L))
+
+  private def driftedSql(before: String, after: String): String =
+    s"(abs($after - $before) * 5 > greatest(abs($before), 1))"
 
   /** Drift rows between two MERGED profile states (the
     * [[mergeProfileStates]] shape) — the streaming drift feed's kernel:
@@ -311,12 +327,8 @@ object Profile {
   private[graft] def driftStates(before: (DataFrame, DataFrame),
       current: (DataFrame, DataFrame)): DataFrame = {
     def tall(st: (DataFrame, DataFrame)): DataFrame = {
-      val hll = st._2.groupBy("cname").agg(
-          count(lit(1)).as("present"),
-          sum(expr("shiftleft(1L, 57 - register)")).as("esp"))
-        .select(col("cname"),
-          shiftright(col("esp") + (lit(Sketches.M.toLong) - col("present"))
-            * (1L << 57), 37).as("est"))
+      val hll = Sketches.scaledDenom(st._2, "cname")
+        .select(col("cname"), shiftright(col("est_scaled"), 37).as("est"))
       st._1.join(hll, "cname")
         .select(col("cname"), explode(array(
           struct(lit("n").as("stat"), col("n_rows").as("v")),
@@ -333,8 +345,7 @@ object Profile {
         && col("stat_before").isNull && col("stat_after").isNull))
       .select(col("cname").as("column_name"), col("stat"),
         col("stat_before"), col("stat_after"),
-        (abs(col("stat_after") - col("stat_before")) * 5 >
-          greatest(abs(col("stat_before")), lit(1L))).as("drifted"))
+        drifted(col("stat_before"), col("stat_after")).as("drifted"))
       .orderBy("column_name", "stat")
   }
 
@@ -375,9 +386,7 @@ object Profile {
         col("r.stat_before"), col("r.stat_after"))
       .filter(!(col("column_name") === "event_type" &&
         col("stat").isin("min_num", "max_num")))
-      .withColumn("drifted",
-        abs(col("stat_after") - col("stat_before")) * 5 >
-          greatest(abs(col("stat_before")), lit(1L)))
+      .withColumn("drifted", drifted(col("stat_before"), col("stat_after")))
   }
 
   val queries: Seq[Q] = Seq(
@@ -453,20 +462,7 @@ object Profile {
     // state and folds each arriving batch in O(batch) — the exact
     // pattern StreamingSpec already proves for windowed HLL registers.
     Q("q_profile_incremental",
-      s"""WITH keys AS (
-         |  SELECT 'event_type' AS cname, event_type AS key,
-         |         NULL::BIGINT AS num, event_type AS str FROM events
-         |  UNION ALL
-         |  SELECT 'ts', CAST(epoch_us(ts) AS VARCHAR), epoch_us(ts), NULL
-         |  FROM events
-         |  UNION ALL
-         |  SELECT 'user_id', CAST(user_id AS VARCHAR), user_id, NULL
-         |  FROM events
-         |  UNION ALL
-         |  SELECT 'value',
-         |         CAST(CAST(round(value * 1000000.0) AS BIGINT) AS VARCHAR),
-         |         CAST(round(value * 1000000.0) AS BIGINT), NULL
-         |  FROM events),
+      s"""WITH keys AS (${tallSql("events")}),
          |cnts AS (
          |  SELECT cname, CAST(count(*) AS BIGINT) AS n_rows,
          |         CAST(count(*) - count(key) AS BIGINT) AS n_null,
@@ -476,16 +472,8 @@ object Profile {
          |hashed AS (
          |  SELECT cname, ${Dedup.hashSql("key")} AS h
          |  FROM keys WHERE key IS NOT NULL),
-         |regs AS (
-         |  SELECT cname, CAST(h % ${Sketches.M} AS INTEGER) AS bucket,
-         |         max(${Sketches.rankSql(s"(h // ${Sketches.M})")}) AS register
-         |  FROM hashed GROUP BY cname, bucket),
-         |hll AS (
-         |  SELECT cname, CAST(count(*) AS BIGINT) AS present,
-         |         CAST(sum(CAST(1 AS BIGINT) << (57 - register))
-         |              + (${Sketches.M} - count(*))
-         |                * (CAST(1 AS BIGINT) << 57) AS BIGINT) AS est_scaled
-         |  FROM regs GROUP BY cname)
+         |regs AS (${Sketches.registersSql("hashed", Seq("cname"), "h", Sketches.RankCap)}),
+         |hll AS (${Sketches.scaledDenomSql("regs", "cname")})
          |SELECT cname AS column_name, n_rows, n_null, min_val, max_val,
          |       present, est_scaled
          |FROM cnts JOIN hll USING (cname)
@@ -520,16 +508,7 @@ object Profile {
          |e AS (SELECT CASE WHEN event_id * 4 // (m + 1) = 0 THEN 0 ELSE 1
          |             END AS half, ts, user_id,
          |             event_type, value FROM events, mxr),
-         |t AS (
-         |  SELECT half, 'event_type' AS cname, event_type AS key,
-         |         CAST(NULL AS BIGINT) AS num FROM e
-         |  UNION ALL SELECT half, 'ts', CAST(epoch_us(ts) AS VARCHAR),
-         |            epoch_us(ts) FROM e
-         |  UNION ALL SELECT half, 'user_id', CAST(user_id AS VARCHAR),
-         |            user_id FROM e
-         |  UNION ALL SELECT half, 'value',
-         |            CAST(CAST(round(value * 1000000.0) AS BIGINT) AS VARCHAR),
-         |            CAST(round(value * 1000000.0) AS BIGINT) FROM e),
+         |t AS (${tallSql("e", "half")}),
          |s AS (SELECT half, cname, CAST(count(*) AS BIGINT) AS n,
          |             CAST(count(*) - count(key) AS BIGINT) AS n_null,
          |             CAST(count(DISTINCT key) AS BIGINT) AS n_distinct,
@@ -550,8 +529,7 @@ object Profile {
          |  UNION ALL SELECT cname, 'max_num', bmx, amx FROM j
          |            WHERE cname <> 'event_type')
          |SELECT cname AS column_name, stat, stat_before, stat_after,
-         |       (abs(stat_after - stat_before) * 5
-         |          > greatest(abs(stat_before), 1)) AS drifted
+         |       ${driftedSql("stat_before", "stat_after")} AS drifted
          |FROM st ORDER BY column_name, stat""".stripMargin) { (s, dir) =>
       profileDrift(Tables.events(s, dir)).orderBy("column_name", "stat")
     },

@@ -2,17 +2,31 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.CountMin
 import graft.functions.exprs._
 import graft.{Q, Tables}
 
-/** Distributed-sketch operators beyond the Count–Min family in
-  * [[TextOps]]: HyperLogLog cardinality registers (Flajolet et al. 2007,
-  * "HyperLogLog: the analysis of a near-optimal cardinality estimation
-  * algorithm", AofA) built through the declarative twin — the register
-  * matrix is a pure function of the key set under the deterministic
-  * PolyHash family, so DuckDB rebuilds the IDENTICAL matrix and the
-  * sketch is fully ORACLE-CHECKED cell-for-cell (the CMS mechanism,
-  * `TextOps.scala` q_cms_counts).
+/** Distributed-sketch operators, and the one home of the HyperLogLog and
+  * Count–Min rules every sketch query and fold shares: HyperLogLog
+  * cardinality registers (Flajolet et al. 2007, "HyperLogLog: the
+  * analysis of a near-optimal cardinality estimation algorithm", AofA)
+  * built through the declarative twin — the register matrix is a pure
+  * function of the key set under the deterministic PolyHash family, so
+  * DuckDB rebuilds the IDENTICAL matrix and the sketch is fully
+  * ORACLE-CHECKED cell-for-cell, as the Count–Min grid of q_cms_counts
+  * (`TextOps.scala`, built on [[cmsBuckets]]) is.
+  *
+  * Each rule is written once, as a Column def and its SQL twin:
+  *  - rank: [[rankCol]] / [[rankSql]], at the raw [[RankCap]] or the
+  *    post-[[mix31]] [[MixRankCap]];
+  *  - register build, (keys…, bucket) → max(rank) AS register:
+  *    [[registers]] / [[registersSql]]; the event-type tiers with the '*'
+  *    global tier: [[tiers]] / [[tiersSql]];
+  *  - scaled estimator state, present and
+  *    est_scaled = Σ 2^(57−r) + (M − present)·2^57 per group:
+  *    [[scaledDenom]] / [[scaledDenomSql]];
+  *  - Count–Min cells, the [[CountMin.bucket]] map of a PolyHash value:
+  *    [[cmsBuckets]] / [[cmsBucketSql]].
   *
   * Reference anchor: the reference's per-day COUNT aggregation surface
   * (`/root/reference/sql_to_line.py:91` day batching) is the exact-count
@@ -72,45 +86,90 @@ object Sketches {
   /** Rank cap for the 25-bit post-mix remainder (v = hm div 64, hm < 2³¹). */
   final val MixRankCap = 26
 
-  /** [[rankCol]] under the post-mix [[MixRankCap]] remainder width —
-    * shared by the q_hll_intersect registers and [[hllRegistersOf]].
+  /** Integer HLL rank of a `cap − 1`-bit remainder: position of the
+    * leftmost set bit counted from the top, `cap` for an all-zero
+    * remainder. Both engines derive it from the base-2 digit count —
+    * Spark `length(conv(v, 10, 2))`, DuckDB `length(bin(v))` — which
+    * agree for every v > 0; v = 0 is the explicit cap case.
     */
-  private[graft] def mixRankCol(v: Column): Column =
-    when(v === 0L, lit(MixRankCap))
-      .otherwise(lit(MixRankCap) - length(conv(v.cast("string"), 10, 2)))
+  private def rankCol(v: Column, cap: Int): Column =
+    when(v === 0L, lit(cap))
+      .otherwise(lit(cap) - length(conv(v.cast("string"), 10, 2)))
 
-  /** Integer HLL rank of the 24-bit remainder: position of the leftmost
-    * set bit counted from the top, 25 for an all-zero remainder. Both
-    * engines derive it from the base-2 digit count — Spark
-    * `length(conv(v, 10, 2))`, DuckDB `length(bin(v))` — which agree for
-    * every v > 0; v = 0 is the explicit cap case.
+  private def rankSql(v: String, cap: Int): String =
+    s"CASE WHEN $v = 0 THEN $cap ELSE $cap - length(bin($v)) END"
+
+  /** The register build: per (keys…, bucket = h % M) the max rank of the
+    * remainder h div M under `cap`. Every HLL register matrix (batch,
+    * per-column profile, per-day window, mixed-hash sets) is this one
+    * aggregate over its own keys and hash column.
     */
-  private[graft] def rankCol(v: Column): Column =
-    when(v === 0L, lit(RankCap))
-      .otherwise(lit(RankCap) - length(conv(v.cast("string"), 10, 2)))
+  private[graft] def registers(f: DataFrame, keys: Seq[String], h: String,
+      cap: Int): DataFrame =
+    f.select(keys.map(col) :+ (col(h) % M).cast("int").as("bucket") :+
+        rankCol(expr(s"$h div $M"), cap).cast("int").as("rank"): _*)
+      .groupBy((keys :+ "bucket").map(col): _*)
+      .agg(max("rank").as("register"))
 
-  private[graft] def rankSql(v: String): String =
-    s"CASE WHEN $v = 0 THEN $RankCap ELSE $RankCap - length(bin($v)) END"
+  private[graft] def registersSql(from: String, keys: Seq[String], h: String,
+      cap: Int): String =
+    s"""SELECT ${keys.mkString(", ")}, CAST($h % $M AS INTEGER) AS bucket,
+       |       CAST(max(${rankSql(s"($h // $M)", cap)}) AS INTEGER) AS register
+       |FROM $from GROUP BY ${keys.mkString(", ")}, bucket""".stripMargin
+
+  /** The scaled estimator state per group of a register frame: `present`
+    * buckets and est_scaled = Σ 2^(57−r) + (M − present)·2^57, the
+    * harmonic-mean denominator Σ 2^(−r) over all M buckets (absent ones at
+    * rank 0) scaled by 2^57. Ranks ≥ 1 make every term an exact BIGINT
+    * ≤ 2^56 and the sum < 2^63, so it is cross-engine exact.
+    */
+  private[graft] def scaledDenom(regs: DataFrame, keys: String*): DataFrame =
+    regs.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("present"),
+        sum(expr("shiftleft(1L, 57 - register)")).as("esp"))
+      .select(keys.map(col) :+ col("present") :+
+        (col("esp") + (lit(M.toLong) - col("present")) * (1L << 57))
+          .as("est_scaled"): _*)
+
+  private[graft] def scaledDenomSql(regs: String, keys: String*): String =
+    s"""SELECT ${keys.mkString(", ")}, CAST(count(*) AS BIGINT) AS present,
+       |       CAST(sum(CAST(1 AS BIGINT) << (57 - register))
+       |            + ($M - count(*)) * (CAST(1 AS BIGINT) << 57) AS BIGINT)
+       |         AS est_scaled
+       |FROM $regs GROUP BY ${keys.mkString(", ")}""".stripMargin
+
+  /** The (event_type, h, extra…) rows of an events frame, with every row
+    * repeated under the '*' global tier (a literal-tag UNION, identical in
+    * both engines — the FIXTURES.md augmentation pattern).
+    */
+  private def tiers(events: DataFrame, extra: String*): DataFrame = {
+    val ev = events.select(col("event_type") +:
+      poly_hash(col("user_id").cast("string")).as("h") +: extra.map(col): _*)
+    ev.unionAll(ev.select(lit("*").as("event_type") +: col("h") +: extra.map(col): _*))
+  }
+
+  /** The oracle's `ev` and `tiers` CTEs ([[tiers]] in SQL). */
+  private def tiersSql(extra: String*): String = {
+    val x = extra.map(", " + _).mkString
+    s"""ev AS (
+       |  SELECT event_type,
+       |         ${Dedup.hashSql("CAST(user_id AS VARCHAR)")} AS h$x
+       |  FROM events),
+       |tiers AS (
+       |  SELECT event_type, h$x FROM ev
+       |  UNION ALL SELECT '*' AS event_type, h$x FROM ev)""".stripMargin
+  }
 
   /** The (group, bucket, register) matrix for one keyed frame: group by
-    * event_type plus a '*' global tier (a literal-tag UNION, identical in
-    * both engines — the FIXTURES.md augmentation pattern).
+    * event_type plus the '*' global tier.
     */
   private[graft] def hllRegisters(s: SparkSession, dir: String): DataFrame =
     hllRegistersFrom(Tables(s, dir, "events"))
 
   /** The register build over an explicit events frame. */
-  private[graft] def hllRegistersFrom(events: DataFrame): DataFrame = {
-    val ev = events
-      .select(col("event_type"), poly_hash(col("user_id").cast("string")).as("h"))
-    val tiers = ev.unionAll(ev.select(lit("*").as("event_type"), col("h")))
-    tiers
-      .select(col("event_type"), (col("h") % M).cast("int").as("bucket"),
-        rankCol(expr(s"h div $M")).cast("int").as("rank"))
-      .groupBy("event_type", "bucket")
-      .agg(max("rank").as("register"))
+  private[graft] def hllRegistersFrom(events: DataFrame): DataFrame =
+    registers(tiers(events), Seq("event_type"), "h", RankCap)
       .orderBy("event_type", "bucket")
-  }
 
   /** Single-tier HLL register vector over one id column — the
     * q_hll_registers builder without the event-type tiers; bounded
@@ -126,10 +185,25 @@ object Sketches {
     * (SketchesSpec gates it at 1,000 ids against the 1.5× margin).
     */
   private[graft] def hllRegistersOf(ids: DataFrame, idCol: String): DataFrame =
-    ids.select(mix31(poly_hash(col(idCol).cast("string"))).as("hm"))
-      .select((col("hm") % M).cast("int").as("bucket"),
-        mixRankCol(expr(s"hm div $M")).cast("int").as("rank"))
-      .groupBy("bucket").agg(max("rank").as("register"))
+    registers(ids.select(mix31(poly_hash(col(idCol).cast("string"))).as("hm")),
+      Nil, "hm", MixRankCap)
+
+  /** The Count–Min cells of one PolyHash value: [[CountMin.D]] rows ×
+    * [[CountMin.W]] buckets, row-j bucket [[CountMin.bucket]] =
+    * ((h·(2j+1) + 101j + 17) mod 1e9+7) mod W — shared by q_cms_counts,
+    * q_join_size_est and the streaming per-window grid
+    * (Streams.cmsGridPerWindow), so batch, stream and the typed
+    * CountMinAgg count into IDENTICAL cells by construction.
+    */
+  private[graft] def cmsBuckets(h: Column): Column =
+    array((0 until CountMin.D).map(j =>
+      struct(lit(j).as("j"),
+        ((h * (2 * j + 1) + lit(101L * j + 17)) % CountMin.Mod % CountMin.W)
+          .cast("int").as("b"))): _*)
+
+  /** Row-`j` Count–Min bucket of hash `h` in SQL ([[cmsBuckets]]' cell). */
+  private[graft] def cmsBucketSql(h: String, j: String): String =
+    s"(($h * (2*$j + 1) + 101*$j + 17) % ${CountMin.Mod}) % ${CountMin.W}"
 
   /** HLL estimate from a register matrix for one group, computed the
     * paper's way (alpha_m · m² / Σ 2^-M_j with empty buckets at rank 0,
@@ -188,81 +262,37 @@ object Sketches {
     // rows-only). Estimate accuracy and max-merge re-aggregability are
     // property-gated in SketchesSpec.
     Q("q_hll_registers",
-      s"""WITH ev AS (
-         |  SELECT event_type,
-         |         ${Dedup.hashSql("CAST(user_id AS VARCHAR)")} AS h
-         |  FROM events),
-         |tiers AS (
-         |  SELECT event_type, h FROM ev
-         |  UNION ALL SELECT '*' AS event_type, h FROM ev),
-         |ranked AS (
-         |  SELECT event_type, CAST(h % $M AS INTEGER) AS bucket,
-         |         CAST(${rankSql(s"(h // $M)")} AS INTEGER) AS rank
-         |  FROM tiers)
-         |SELECT event_type, bucket, CAST(max(rank) AS INTEGER) AS register
-         |FROM ranked GROUP BY event_type, bucket
+      s"""WITH ${tiersSql()},
+         |regs AS (${registersSql("tiers", Seq("event_type"), "h", RankCap)})
+         |SELECT event_type, bucket, register FROM regs
          |ORDER BY event_type, bucket""".stripMargin) { (s, dir) =>
       hllRegisters(s, dir)
     },
 
     // The HLL ESTIMATE layer, oracle-checked as exact integers: the
-    // harmonic-mean denominator Σ 2^(−M_j) scaled by 2^57 is a sum of
-    // dyadic rationals with ranks ≥ 1 → every term 2^(57−M_j) ≤ 2^56 is
-    // an exact BIGINT and the 64-term sum < 2^62 never rounds — so the
-    // full estimator state (present buckets, scaled denominator) is
-    // cross-engine exact, with the true distinct count alongside for the
-    // accuracy surface (the float α·m²/denominator step is the consumer's
-    // one multiplication; SketchesSpec gates it). Registers come from the
-    // same one-shuffle build as q_hll_registers.
+    // scaled denominator (scaledDenom) is a sum of dyadic integers
+    // that never rounds — so the full estimator state (present buckets,
+    // scaled denominator) is cross-engine exact, with the true distinct
+    // count alongside for the accuracy surface (the float
+    // α·m²/denominator step is the consumer's one multiplication;
+    // SketchesSpec gates it). Registers come from the same one-shuffle
+    // build as q_hll_registers.
     Q("q_hll_estimate",
-      s"""WITH ev AS (
-         |  SELECT event_type,
-         |         ${Dedup.hashSql("CAST(user_id AS VARCHAR)")} AS h,
-         |         user_id
-         |  FROM events),
-         |tiers AS (
-         |  SELECT event_type, h, user_id FROM ev
-         |  UNION ALL SELECT '*' AS event_type, h, user_id FROM ev),
-         |ranked AS (
-         |  SELECT event_type, CAST(h % $M AS INTEGER) AS bucket,
-         |         CAST(${rankSql(s"(h // $M)")} AS INTEGER) AS rank
-         |  FROM tiers),
-         |regs AS (
-         |  SELECT event_type, bucket, max(rank) AS register
-         |  FROM ranked GROUP BY event_type, bucket),
-         |agg AS (
-         |  SELECT event_type, CAST(count(*) AS BIGINT) AS present,
-         |         CAST(sum(CAST(1 AS BIGINT) << (57 - register)) AS BIGINT)
-         |           AS est_scaled_present
-         |  FROM regs GROUP BY event_type),
+      s"""WITH ${tiersSql("user_id")},
+         |regs AS (${registersSql("tiers", Seq("event_type"), "h", RankCap)}),
+         |agg AS (${scaledDenomSql("regs", "event_type")}),
          |exact AS (
          |  SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS exact
          |  FROM tiers GROUP BY event_type)
-         |SELECT a.event_type, a.present,
-         |       a.est_scaled_present
-         |         + ($M - a.present) * (CAST(1 AS BIGINT) << 57) AS est_scaled,
-         |       e.exact
+         |SELECT a.event_type, a.present, a.est_scaled, e.exact
          |FROM agg a JOIN exact e USING (event_type)
          |ORDER BY a.event_type""".stripMargin) { (s, dir) =>
-      val ev = Tables(s, dir, "events")
-        .select(col("event_type"), poly_hash(col("user_id").cast("string")).as("h"),
-          col("user_id"))
-      val tiers = ev.unionAll(ev.select(lit("*").as("event_type"), col("h"),
-        col("user_id")))
-      val regs = tiers
-        .select(col("event_type"), (col("h") % M).cast("int").as("bucket"),
-          rankCol(expr(s"h div $M")).cast("int").as("rank"))
-        .groupBy("event_type", "bucket").agg(max("rank").as("register"))
-      val agg = regs.groupBy("event_type")
-        .agg(count(lit(1)).as("present"),
-          sum(expr("shiftleft(1L, 57 - register)")).as("esp"))
-      val exact = tiers.groupBy("event_type")
+      val t = tiers(Tables(s, dir, "events"), "user_id")
+      val exact = t.groupBy("event_type")
         .agg(countDistinct("user_id").as("exact"))
-      agg.join(exact, "event_type")
-        .select(col("event_type"), col("present"),
-          (col("esp") + (lit(M.toLong) - col("present")) * (1L << 57))
-            .as("est_scaled"),
-          col("exact"))
+      scaledDenom(registers(t, Seq("event_type"), "h", RankCap), "event_type")
+        .join(exact, "event_type")
+        .select("event_type", "present", "est_scaled", "exact")
         .orderBy("event_type")
     },
 
@@ -295,17 +325,8 @@ object Sketches {
          |x3 AS (SELECT st, o_custkey, xor(x, x >> 13) AS x FROM x2),
          |x4 AS (SELECT st, o_custkey, (x * 3266489909) % 2147483648 AS x FROM x3),
          |mx AS (SELECT st, o_custkey, xor(x, x >> 16) AS hm FROM x4),
-         |regs AS (
-         |  SELECT st, CAST(hm % $M AS INTEGER) AS bucket,
-         |         max(CAST(CASE WHEN hm // $M = 0 THEN $MixRankCap
-         |                  ELSE $MixRankCap - length(bin(hm // $M)) END
-         |             AS INTEGER)) AS register
-         |  FROM mx GROUP BY 1, 2),
-         |d AS (
-         |  SELECT st,
-         |         CAST(sum(CAST(1 AS BIGINT) << (57 - register)) AS BIGINT)
-         |           + ($M - count(*)) * (CAST(1 AS BIGINT) << 57) AS dn
-         |  FROM regs GROUP BY st),
+         |regs AS (${registersSql("mx", Seq("st"), "hm", MixRankCap)}),
+         |d AS (${scaledDenomSql("regs", "st")}),
          |pairs AS (
          |  SELECT a.st AS s1, b.st AS s2
          |  FROM (SELECT DISTINCT st FROM o) a, (SELECT DISTINCT st FROM o) b
@@ -314,11 +335,7 @@ object Sketches {
          |  SELECT p.s1, p.s2, r.bucket, max(r.register) AS register
          |  FROM pairs p JOIN regs r ON r.st = p.s1 OR r.st = p.s2
          |  GROUP BY 1, 2, 3),
-         |du AS (
-         |  SELECT s1, s2,
-         |         CAST(sum(CAST(1 AS BIGINT) << (57 - register)) AS BIGINT)
-         |           + ($M - count(*)) * (CAST(1 AS BIGINT) << 57) AS dn
-         |  FROM mu GROUP BY 1, 2),
+         |du AS (${scaledDenomSql("mu", "s1", "s2")}),
          |nx AS (
          |  SELECT st, CAST(count(DISTINCT o_custkey) AS BIGINT) AS n
          |  FROM o GROUP BY st),
@@ -330,12 +347,12 @@ object Sketches {
          |  GROUP BY 1, 2)
          |SELECT p.s1, p.s2, na.n AS n_a, nb.n AS n_b,
          |       coalesce(ex.exact_inter, 0) AS exact_inter,
-         |       round($HllEstC / CAST(da.dn AS DOUBLE), 6) AS est_a,
-         |       round($HllEstC / CAST(db.dn AS DOUBLE), 6) AS est_b,
-         |       round($HllEstC / CAST(du.dn AS DOUBLE), 6) AS est_u,
-         |       round(($HllEstC / CAST(da.dn AS DOUBLE)
-         |              + $HllEstC / CAST(db.dn AS DOUBLE))
-         |             - $HllEstC / CAST(du.dn AS DOUBLE), 6) AS est_inter
+         |       round($HllEstC / CAST(da.est_scaled AS DOUBLE), 6) AS est_a,
+         |       round($HllEstC / CAST(db.est_scaled AS DOUBLE), 6) AS est_b,
+         |       round($HllEstC / CAST(du.est_scaled AS DOUBLE), 6) AS est_u,
+         |       round(($HllEstC / CAST(da.est_scaled AS DOUBLE)
+         |              + $HllEstC / CAST(db.est_scaled AS DOUBLE))
+         |             - $HllEstC / CAST(du.est_scaled AS DOUBLE), 6) AS est_inter
          |FROM pairs p
          |JOIN d da ON da.st = p.s1 JOIN d db ON db.st = p.s2
          |JOIN du ON du.s1 = p.s1 AND du.s2 = p.s2
@@ -345,20 +362,9 @@ object Sketches {
       val o = Tables(s, dir, "orders")
         .select(col("o_orderstatus").as("st"),
           poly_hash(col("o_custkey").cast("string")).as("h"), col("o_custkey"))
-      val hm = mix31(col("h"))
-      val v  = expr(s"hm div $M")
-      val rk = mixRankCol(v)
-      val regs = o.withColumn("hm", hm)
-        .select(col("st"), (col("hm") % M).cast("int").as("bucket"),
-          rk.cast("int").as("rank"))
-        .groupBy("st", "bucket").agg(max("rank").as("register"))
-      def denom(df: DataFrame, keys: Seq[String]): DataFrame = df
-        .groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("present"),
-          sum(expr("shiftleft(1L, 57 - register)")).as("esp"))
-        .select(keys.map(col) :+
-          (col("esp") + (lit(M.toLong) - col("present")) * (1L << 57)).as("dn"): _*)
-      val d = denom(regs, Seq("st"))
+      val regs = registers(o.withColumn("hm", mix31(col("h"))), Seq("st"), "hm",
+        MixRankCap)
+      val d = scaledDenom(regs, "st")
       // status-taxonomy pair frame: both sides bounded by the distinct
       // o_orderstatus cardinality (3) — broadcast keeps the non-equi pair
       // join out of CartesianProduct (allowlisted, the drift_daily class)
@@ -373,7 +379,7 @@ object Sketches {
             col("register")), Seq("s2"))
           .select(col("s1"), col("s2"), col("bucket"), col("register")))
         .groupBy("s1", "s2", "bucket").agg(max("register").as("register"))
-      val du = denom(mu, Seq("s1", "s2"))
+      val du = scaledDenom(mu, "s1", "s2")
       val nx = o.groupBy("st").agg(countDistinct("o_custkey").as("n"))
       val dk = o.select(col("st"), col("o_custkey")).distinct()
       val ex = dk.as("a")
@@ -383,9 +389,10 @@ object Sketches {
         .agg(count(lit(1)).as("exact_inter"))
       def est(dn: Column): Column = lit(HllEstC) / dn.cast("double")
       pairs
-        .join(d.select(col("st").as("s1"), col("dn").as("dna")), Seq("s1"))
-        .join(d.select(col("st").as("s2"), col("dn").as("dnb")), Seq("s2"))
-        .join(du.select(col("s1"), col("s2"), col("dn").as("dnu")), Seq("s1", "s2"))
+        .join(d.select(col("st").as("s1"), col("est_scaled").as("dna")), Seq("s1"))
+        .join(d.select(col("st").as("s2"), col("est_scaled").as("dnb")), Seq("s2"))
+        .join(du.select(col("s1"), col("s2"), col("est_scaled").as("dnu")),
+          Seq("s1", "s2"))
         .join(nx.select(col("st").as("s1"), col("n").as("n_a")), Seq("s1"))
         .join(nx.select(col("st").as("s2"), col("n").as("n_b")), Seq("s2"))
         // LEFT join: a disjoint pair (zero shared customers) must still
@@ -450,16 +457,13 @@ object Sketches {
          |  SELECT CAST(ts AS DATE) AS d,
          |         ${Dedup.hashSql("CAST(user_id AS VARCHAR)")} AS h
          |  FROM events),
-         |rk AS (
-         |  SELECT d, CAST(h % $M AS INTEGER) AS bucket,
-         |         CAST(${rankSql(s"(h // $M)")} AS INTEGER) AS rank
-         |  FROM ev),
-         |daily AS (SELECT d, bucket, max(rank) AS r FROM rk GROUP BY 1, 2),
+         |daily AS (${registersSql("ev", Seq("d"), "h", RankCap)}),
          |days AS (SELECT DISTINCT d FROM daily),
          |grid AS (SELECT days.d, b.bucket
          |         FROM days CROSS JOIN (SELECT DISTINCT bucket FROM daily) b),
          |win AS (
-         |  SELECT g.d, g.bucket, CAST(coalesce(max(x.r), 0) AS INTEGER) AS register
+         |  SELECT g.d, g.bucket,
+         |         CAST(coalesce(max(x.register), 0) AS INTEGER) AS register
          |  FROM grid g LEFT JOIN daily x
          |    ON x.bucket = g.bucket AND x.d BETWEEN g.d - INTERVAL 6 DAY AND g.d
          |  GROUP BY 1, 2)
@@ -468,10 +472,7 @@ object Sketches {
       val ev = Tables.events(s, dir)
         .select(col("ts").cast("date").as("d"),
           poly_hash(col("user_id").cast("string")).as("h"))
-      val daily = ev
-        .select(col("d"), (col("h") % M).cast("int").as("bucket"),
-          rankCol(expr(s"h div $M")).cast("int").as("rank"))
-        .groupBy("d", "bucket").agg(max("rank").as("r"))
+      val daily   = registers(ev, Seq("d"), "h", RankCap)
       val days    = daily.select("d").distinct()
       val buckets = daily.select("bucket").distinct()
       // ≤64-row register-width frame: the bounded-dimension broadcast
@@ -479,7 +480,7 @@ object Sketches {
       // BroadcastNestedLoopJoin, never a CartesianProduct
       val grid    = days.crossJoin(broadcast(buckets))
       grid.join(daily.select(col("bucket").as("xb"), col("d").as("xd"),
-          col("r")),
+          col("register").as("r")),
           col("xb") === col("bucket") &&
             col("xd").between(date_sub(col("d"), 6), col("d")), "left")
         .groupBy("d", "bucket")
@@ -506,13 +507,11 @@ object Sketches {
          |  SELECT ${Dedup.hashSql("CAST(o_custkey AS VARCHAR)")} AS h
          |  FROM orders),
          |c1 AS (
-         |  SELECT j, ((h * (2*j + 1) + 101*j + 17) % 1000000007) % $JsW AS b,
-         |         CAST(count(*) AS BIGINT) AS n
-         |  FROM h1 CROSS JOIN range(0, $JsD) t(j) GROUP BY 1, 2),
+         |  SELECT j, ${cmsBucketSql("h", "j")} AS b, CAST(count(*) AS BIGINT) AS n
+         |  FROM h1 CROSS JOIN range(0, ${CountMin.D}) t(j) GROUP BY 1, 2),
          |c2 AS (
-         |  SELECT j, ((h * (2*j + 1) + 101*j + 17) % 1000000007) % $JsW AS b,
-         |         CAST(count(*) AS BIGINT) AS n
-         |  FROM h2 CROSS JOIN range(0, $JsD) t(j) GROUP BY 1, 2),
+         |  SELECT j, ${cmsBucketSql("h", "j")} AS b, CAST(count(*) AS BIGINT) AS n
+         |  FROM h2 CROSS JOIN range(0, ${CountMin.D}) t(j) GROUP BY 1, 2),
          |est AS (
          |  SELECT c1.j, CAST(sum(c1.n * c2.n) AS BIGINT) AS est
          |  FROM c1 JOIN c2 ON c2.j = c1.j AND c2.b = c1.b
@@ -527,10 +526,7 @@ object Sketches {
          |ORDER BY j""".stripMargin) { (s, dir) =>
       def cells(keyed: DataFrame): DataFrame = keyed
         .select(poly_hash(col("k").cast("string")).as("h"))
-        .select(explode(array((0 until JsD).map(j =>
-          struct(lit(j).as("j"),
-            ((col("h") * (2 * j + 1) + lit(101L * j + 17)) % 1000000007L % JsW)
-              .cast("int").as("b"))): _*)).as("jb"))
+        .select(explode(cmsBuckets(col("h"))).as("jb"))
         .groupBy(col("jb.j").as("j"), col("jb.b").as("b"))
         .agg(count(lit(1)).as("n"))
       val ev  = Tables.events(s, dir).select(col("user_id").as("k"))
@@ -679,12 +675,6 @@ object Sketches {
   /** Projection width and input embedding width. */
   final val ProjDim = 16
   final val EmbDim  = 64
-
-  /** CMS geometry for the join-size estimator (the q_cms_counts family:
-    * 4 rows × 256 buckets, same pairwise hash).
-    */
-  final val JsD = 4
-  final val JsW = 256
 
   /** Deterministic ±1 sign for matrix cell (i, j): parity of an integer
     * hash — both engines consume the RESULT as literals, so the formula

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.functions.CountMin
 import graft.functions.exprs.poly_hash
 
 /** Text-analysis operators for a training-data pipeline (north star):
@@ -107,35 +108,21 @@ object TextOps {
       .groupBy("doc_id").agg(countDistinct("gram").as("n_shared"))
   }
 
-  /** The CMS cell map for one PolyHash value: 4 rows × 256 buckets,
-    * row-j bucket = ((h·(2j+1) + 101j + 17) mod 1e9+7) mod 256 — shared
-    * by q_cms_counts and the streaming per-window grid
-    * (Streams.cmsGridPerWindow), so batch and stream count into
-    * IDENTICAL cells by construction.
-    */
-  private[graft] def cmsBuckets(hc: Column): Column =
-    array((0 until 4).map(j =>
-      struct(lit(j).as("j"),
-        ((hc * (2 * j + 1) + lit(101L * j + 17)) % 1000000007L % 256)
-          .cast("int").as("b"))): _*)
-
-  /** Oracle for q_cms_counts (same cell map in SQL form). */
+  /** Oracle for q_cms_counts (the same cell map, [[Sketches.cmsBucketSql]]). */
   private def cmsCountsSql: String =
     s"""WITH toks AS (
        |  SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
        |h AS (SELECT tok, ${Dedup.hashSql("tok")} AS h FROM toks),
        |cells AS (
-       |  SELECT j, ((h * (2*j + 1) + 101*j + 17) % 1000000007) % 256 AS b,
-       |         count(*) AS cnt
-       |  FROM h CROSS JOIN range(0, 4) t(j) GROUP BY 1, 2),
+       |  SELECT j, ${Sketches.cmsBucketSql("h", "j")} AS b, count(*) AS cnt
+       |  FROM h CROSS JOIN range(0, ${CountMin.D}) t(j) GROUP BY 1, 2),
        |probes AS (
        |  SELECT tok, h, count(*) AS n_exact FROM h
        |  GROUP BY tok, h HAVING count(*) >= 50),
        |est AS (
        |  SELECT p.tok, p.n_exact, min(c.cnt) AS n_cms
-       |  FROM probes p CROSS JOIN range(0, 4) t(j)
-       |  JOIN cells c ON c.j = t.j
-       |   AND c.b = ((p.h * (2*t.j + 1) + 101*t.j + 17) % 1000000007) % 256
+       |  FROM probes p CROSS JOIN range(0, ${CountMin.D}) t(j)
+       |  JOIN cells c ON c.j = t.j AND c.b = ${Sketches.cmsBucketSql("p.h", "t.j")}
        |  GROUP BY p.tok, p.n_exact)
        |SELECT tok, n_exact, n_cms, n_cms - n_exact AS overcount
        |FROM est ORDER BY tok""".stripMargin
@@ -830,7 +817,7 @@ object TextOps {
     },
 
     // Count–Min sketch point frequencies (functions/CountMin.scala) —
-    // built HERE through the declarative twin (explode rows 0..3 →
+    // built through the Sketches.cmsBuckets cell map (explode rows 0..3 →
     // groupBy (row, bucket) count: a fixed 4×256-cell aggregate with
     // map-side partials, so the shuffle carries O(partitions × 1024)
     // counters regardless of vocabulary), then probed for every token
@@ -846,13 +833,14 @@ object TextOps {
         .select(explode(split(col("text"), " ")).as("tok"))
         .select(col("tok"), poly_hash(col("tok")).as("h"))
       val cells = withH
-        .select(explode(cmsBuckets(col("h"))).as("jb"))
+        .select(explode(Sketches.cmsBuckets(col("h"))).as("jb"))
         .groupBy(col("jb.j").as("j"), col("jb.b").as("b"))
         .agg(count(lit(1)).as("cnt"))
       val probes = withH.groupBy("tok", "h").agg(count(lit(1)).as("n_exact"))
         .filter(col("n_exact") >= 50)
       probes
-        .select(col("tok"), col("n_exact"), explode(cmsBuckets(col("h"))).as("jb"))
+        .select(col("tok"), col("n_exact"),
+          explode(Sketches.cmsBuckets(col("h"))).as("jb"))
         .select(col("tok"), col("n_exact"),
           col("jb.j").as("j"), col("jb.b").as("b"))
         .join(cells, Seq("j", "b"))

@@ -39,18 +39,10 @@ object Streams {
     docs.filter(graft.ops.TextOps.qualityKeep(col("text")))
       .withColumn("text", graft.ops.TextOps.redactPii(col("text")))
 
-  /** Windowed heavy-hitter terms over a document stream: the mergeable
-    * Misra–Gries Aggregator (functions/HeavyHitters) as a streaming
-    * windowed aggregate — per (window) state is the bounded k-entry
-    * summary, NOT the vocabulary, so state size is O(windows × k) at any
-    * ingest rate; the watermark closes windows and evicts their state.
-    * The same sketch the batch q_heavy_hitters runs, now with the
-    * guarantee horizon scoped per window.
-    */
   /** Windowed COUNT-MIN grid over a document stream — the oracle-checked
     * twin of [[hotTermsPerWindow]]'s Misra–Gries summary: per (window, j,
     * b) the exact cell count of the q_cms_counts grid (same PolyHash cell
-    * map, TextOps.cmsBuckets), so any term's windowed frequency estimate
+    * map, Sketches.cmsBuckets), so any term's windowed frequency estimate
     * is min over its 4 cells, with the standard CMS overcount envelope.
     * State per window is the FIXED 4×256 grid whatever the vocabulary or
     * ingest rate; the watermark closes windows and evicts their state.
@@ -68,13 +60,21 @@ object Streams {
       .select(col("ingest_ts"),
         graft.functions.exprs.poly_hash(col("tok")).as("h"))
       .select(col("ingest_ts"),
-        explode(graft.ops.TextOps.cmsBuckets(col("h"))).as("jb"))
+        explode(graft.ops.Sketches.cmsBuckets(col("h"))).as("jb"))
       .groupBy(window(col("ingest_ts"), "1 hour"),
         col("jb.j").as("j"), col("jb.b").as("b"))
       .agg(count(lit(1)).as("cnt"))
       .select(unix_micros(col("window.start")).as("window_us"),
         col("j"), col("b"), col("cnt"))
 
+  /** Windowed heavy-hitter terms over a document stream: the mergeable
+    * Misra–Gries Aggregator (functions/HeavyHitters) as a streaming
+    * windowed aggregate — per (window) state is the bounded k-entry
+    * summary, NOT the vocabulary, so state size is O(windows × k) at any
+    * ingest rate; the watermark closes windows and evicts their state.
+    * The same sketch the batch q_heavy_hitters runs, now with the
+    * guarantee horizon scoped per window.
+    */
   def hotTermsPerWindow(docs: DataFrame, k: Int = 8): DataFrame = {
     val mg = org.apache.spark.sql.functions.udaf(new graft.functions.MisraGries(k))
     maybeWatermarkOn(docs, "ingest_ts")
@@ -1039,7 +1039,8 @@ object Streams {
     * fold cannot know the source's lateness), which grows without bound
     * on an unbounded stream; pass `maxWindows` to enforce a retention
     * cap at fold time ([[windowRetention]]: the newest `maxWindows`
-    * windows survive, bounding state at maxWindows × CmsD × CmsW cells).
+    * windows survive, bounding state at maxWindows × CountMin.D × CountMin.W
+    * cells).
     */
   private[graft] def cmsFold(write: DataFrame => Unit,
       stateDir: Option[String] = None,
@@ -1163,8 +1164,8 @@ object Streams {
     */
   /** Companion state-dir suffixes for [[BoilerFold]]'s tripwire folds.
     * The HLL suffix is VERSIONED: it names the register SCHEME, not just
-    * the fold — hllRegistersOf moved from raw rankCol (cap 25) to
-    * mix31/mixRankCol (cap 26) registers, and max-merging registers from
+    * the fold — hllRegistersOf moved from raw ranks (RankCap 25) to
+    * mix31 ranks (MixRankCap 26) registers, and max-merging registers from
     * two schemes would quietly inflate the estimate (~2×, disarming the
     * 1.5× re-ingest gate). A scheme change bumps the suffix, so an
     * old-scheme state restores as ABSENT and the pre-upgrade migration

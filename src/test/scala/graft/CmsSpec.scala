@@ -18,13 +18,10 @@ class CmsSpec extends SparkSpec {
 
   test("typed aggregator equals the declarative cell build cell-for-cell") {
     val sk = toks.select((new CountMinAgg).toColumn).head()
-    // the q_cms_counts cell shape, rebuilt here
+    // the q_cms_counts cells, through the cell map the queries run
     val declared = toks.toDF("tok")
       .select(graft.functions.exprs.poly_hash(col("tok")).as("h"))
-      .select(explode(array((0 until CountMin.D).map(j =>
-        struct(lit(j).as("j"),
-          ((col("h") * (2 * j + 1) + lit(101L * j + 17)) % 1000000007L % CountMin.W)
-            .cast("int").as("b"))): _*)).as("jb"))
+      .select(explode(ops.Sketches.cmsBuckets(col("h"))).as("jb"))
       .groupBy(col("jb.j").as("j"), col("jb.b").as("b"))
       .agg(count(lit(1)).as("cnt"))
       .as[(Int, Int, Long)].collect()

@@ -472,13 +472,14 @@ class PlanShapeSpec extends SparkSpec {
     // inlined at every use, the Albers formula makes the merged frame's loop
     // a 47 KB method, which HotSpot never compiles (Segments.withProjected);
     // the vector plane's shared cosine and candidate joins and the text
-    // plane's shared tokenizer folds, bigram frame and BM25 columns and the
+    // plane's shared tokenizer folds, bigram frame and BM25 columns, the
     // near-dup plane's shared band, size-bound, agreement and verify rules
-    // are inlined the same way. q_ann_lsh_topk and q_ann_calibration are
-    // left out: their LSH bucket stage is a 10,524 B method today (ROADMAP
-    // item 4).
-    import ops.{Corpus, Dedup, LM, PostingLines, Retrieval, Segments,
-      Similarity, Spatial, TextOps, Tokenize}
+    // and the sketch plane's shared register, estimator and Count–Min cell
+    // rules are inlined the same way. q_ann_lsh_topk and q_ann_calibration
+    // are left out: their LSH bucket stage is a 10,524 B method today
+    // (ROADMAP item 4).
+    import ops.{Corpus, Dedup, LM, PostingLines, Profile, Retrieval, Segments,
+      Similarity, Sketches, Spatial, TextOps, Tokenize}
     val overLimit = Set("q_ann_lsh_topk", "q_ann_calibration")
     val textPlane = Set("q_bm25_topk", "q_bm25_pruned", "q_rrf_fusion",
       "q_retrieval_full", "q_retrieval_batch", "q_sessionize",
@@ -494,7 +495,9 @@ class PlanShapeSpec extends SparkSpec {
         Similarity.queries.filterNot(q => overLimit(q.name)) ++
         Tokenize.queries ++ LM.queries ++
         (Retrieval.queries ++ TextOps.queries).filter(q => textPlane(q.name)) ++
-        Dedup.queries ++ Corpus.queries.filter(q => nearDupPlane(q.name)))
+        Dedup.queries ++ Corpus.queries.filter(q => nearDupPlane(q.name)) ++
+        Sketches.queries ++ Profile.queries ++
+        TextOps.queries.filter(_.name == "q_cms_counts"))
         .map(q => q.name -> q.build(spark, sfDir))
     frames.foreach { case (name, df) =>
       val bytes = Diag.maxMethodBytes(df)

@@ -61,6 +61,20 @@ class ProfileSpec extends SparkSpec {
     }
   }
 
+  test("incremental profile's user_id distinct state equals the q_hll_estimate '*' row") {
+    // both hash CAST(user_id AS STRING) without the mix; with no NULL
+    // user_id the per-column register matrix IS the sketch's global tier
+    Seq(sfDir, "/root/testdata/sf0.01").foreach { dir =>
+      val prof = SparkEntry.queries("q_profile_incremental")(spark, dir).collect()
+        .find(_.getString(0) == "user_id").get
+      val hll = SparkEntry.queries("q_hll_estimate")(spark, dir).collect()
+        .find(_.getString(0) == "*").get
+      assert(prof.getLong(2) === 0L, s"$dir: user_id has NULLs")
+      assert((prof.getLong(5), prof.getLong(6)) === (hll.getLong(1), hll.getLong(2)),
+        s"$dir: profile (present, est_scaled) vs sketch '*' row")
+    }
+  }
+
   test("profile drift: both statuses appear, and the gate is the exact 20% rule") {
     val rows = ops.Profile.queries.find(_.name == "q_profile_drift").get
       .build(spark, sfDir).collect()

@@ -36,7 +36,7 @@ class QueriesSpec extends SparkSpec {
       col("segmentid"), col("geom.sx"), col("geom.sy"), col("geom.ex"),
       col("geom.ey"), col("geom.srid"), col("lenm"), col("sogkt"))
     val a = flat(PostingLines.merged(spark, sfDir))
-    val b = flat(PostingLines.mergedViaJoin(spark, sfDir))
+    val b = flat(PostingLinesReference.mergedViaJoin(spark, sfDir))
     assert(a.except(b).count() === 0 && b.except(a).count() === 0)
   }
 

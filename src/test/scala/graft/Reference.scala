@@ -114,6 +114,31 @@ object SimilarityReference {
   }
 }
 
+object PostingLinesReference {
+  import graft.ops.Segments
+  import Segments.{withProjected, projectedGeom, sogKt}
+
+  /** Reference-shaped merge: stage pending rows, compute, equi-join back on
+    * `segmentid` (sql_to_line.py:230-234), coalescing computed columns in —
+    * the staging+update-join form the in-row `PostingLines.merged` is held
+    * equal to.
+    */
+  def mergedViaJoin(spark: SparkSession, sfDir: String): DataFrame = {
+    val cleaned = Segments.df(spark, sfDir).filter(col("duration") =!= 0)
+    val computed = withProjected(cleaned.filter(col("geom").isNull)).select(
+      col("segmentid"),
+      projectedGeom.as("geom_new"),
+      col("len").as("lenm_new"),
+      sogKt(col("len"), col("duration")).as("sogkt_new"))
+    cleaned
+      .join(computed, Seq("segmentid"), "left_outer")
+      .withColumn("geom", coalesce(col("geom"), col("geom_new")))
+      .withColumn("lenm", coalesce(col("lenm"), col("lenm_new")))
+      .withColumn("sogkt", coalesce(col("sogkt"), col("sogkt_new")))
+      .drop("geom_new", "lenm_new", "sogkt_new")
+  }
+}
+
 object DedupReference {
   import graft.ops.Dedup._
 

@@ -134,7 +134,7 @@ class SketchesSpec extends SparkSpec {
     val exact = rows.head._2
     val n1 = Tables.events(spark, sfDir).count()
     val n2 = Tables(spark, sfDir, "orders").count()
-    val bound = exact + 4L * n1 * n2 / ops.Sketches.JsW
+    val bound = exact + 4L * n1 * n2 / graft.functions.CountMin.W
     assert(rows.map(_._1).min <= bound,
       s"min estimate ${rows.map(_._1).min} above envelope $bound")
   }
