@@ -261,17 +261,7 @@ object Corpus {
     // so a regen that stretches the diameter past the unroll fails
     // loudly rather than silently.
     Q("q_dedup_components",
-      s"""CREATE OR REPLACE TEMP TABLE ccx_pairs AS
-         |${Dedup.minhashPairsCtes}
-         |SELECT d1, d2 FROM pairs_t;
-         |CREATE OR REPLACE TEMP TABLE ccx_e AS
-         |  SELECT d1 AS v, d2 AS w FROM ccx_pairs
-         |  UNION ALL
-         |  SELECT d2 AS v, d1 AS w FROM ccx_pairs;
-         |CREATE OR REPLACE TEMP TABLE ccx_l0 AS
-         |  SELECT doc_id AS v, doc_id AS lbl FROM documents;
-         |${(1 to CcOracleIters).map(i =>
-             ccRoundSql(s"ccx_l${i - 1}", s"ccx_l$i")).mkString("\n")}
+      s"""$keeperLabelsSql
          |SELECT v AS doc_id, lbl AS keeper FROM ccx_l$CcOracleIters
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       nearDupComponents(s, dir).orderBy("doc_id")
@@ -287,17 +277,7 @@ object Corpus {
     // tables are CREATE OR REPLACE, so script composition stays safe) plus
     // one docs join and one label-keyed groupBy.
     Q("q_dedup_cluster_stats",
-      s"""CREATE OR REPLACE TEMP TABLE ccx_pairs AS
-         |${Dedup.minhashPairsCtes}
-         |SELECT d1, d2 FROM pairs_t;
-         |CREATE OR REPLACE TEMP TABLE ccx_e AS
-         |  SELECT d1 AS v, d2 AS w FROM ccx_pairs
-         |  UNION ALL
-         |  SELECT d2 AS v, d1 AS w FROM ccx_pairs;
-         |CREATE OR REPLACE TEMP TABLE ccx_l0 AS
-         |  SELECT doc_id AS v, doc_id AS lbl FROM documents;
-         |${(1 to CcOracleIters).map(i =>
-             ccRoundSql(s"ccx_l${i - 1}", s"ccx_l$i")).mkString("\n")}
+      s"""$keeperLabelsSql
          |SELECT l.lbl AS keeper, CAST(count(*) AS BIGINT) AS n_docs,
          |       CAST(count(DISTINCT d.source) AS BIGINT) AS n_sources,
          |       CAST(sum(d.n_chars) AS BIGINT) AS sum_chars,
@@ -329,17 +309,7 @@ object Corpus {
     // q_dedup_components: each script creates its tables first, so
     // sharing a driver connection is safe (CREATE OR REPLACE).
     Q("q_training_corpus",
-      s"""CREATE OR REPLACE TEMP TABLE ccx_pairs AS
-         |${Dedup.minhashPairsCtes}
-         |SELECT d1, d2 FROM pairs_t;
-         |CREATE OR REPLACE TEMP TABLE ccx_e AS
-         |  SELECT d1 AS v, d2 AS w FROM ccx_pairs
-         |  UNION ALL
-         |  SELECT d2 AS v, d1 AS w FROM ccx_pairs;
-         |CREATE OR REPLACE TEMP TABLE ccx_l0 AS
-         |  SELECT doc_id AS v, doc_id AS lbl FROM documents;
-         |${(1 to CcOracleIters).map(i =>
-             ccRoundSql(s"ccx_l${i - 1}", s"ccx_l$i")).mkString("\n")}
+      s"""$keeperLabelsSql
          |CREATE OR REPLACE TEMP TABLE ccx_filtered AS
          |  SELECT doc_id, lang, text FROM documents
          |  WHERE lang = 'en'
@@ -369,12 +339,11 @@ object Corpus {
     */
   final val CcOracleIters = 10
 
-  /** One unrolled min-label propagation round as a temp-table statement. */
-  private def ccRoundSql(prev: String, k: String): String =
-    s"""CREATE OR REPLACE TEMP TABLE $k AS
-       |  SELECT l.v, least(l.lbl, coalesce(m.nmin, l.lbl)) AS lbl
-       |  FROM $prev l LEFT JOIN (
-       |    SELECT e.w AS v, min(x.lbl) AS nmin
-       |    FROM ccx_e e JOIN $prev x ON x.v = e.v GROUP BY e.w) m
-       |  ON m.v = l.v;""".stripMargin
+  /** The keeper labels of q_dedup_components in the oracle,
+    * `ccx_l<CcOracleIters>` (v, lbl): every document starts as its own
+    * label and [[Graph.labelPropSql]] propagates the minimum over the
+    * near-dup pairs. The three `ccx_` scripts start with it.
+    */
+  private def keeperLabelsSql: String = Graph.labelPropSql("ccx",
+    "SELECT doc_id AS v, doc_id AS lbl FROM documents", CcOracleIters)
 }

@@ -666,18 +666,11 @@ object Dedup {
     // cluster pipeline, so only the enumeration re-runs.
     Q("q_neardup_degree",
       s"""$minhashPairsCtes, deg_t AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS deg FROM (
-         |    SELECT d1 AS doc_id FROM pairs_t
-         |    UNION ALL
-         |    SELECT d2 AS doc_id FROM pairs_t)
-         |  GROUP BY doc_id
+         |  ${Graph.degreeSql(s"(${Graph.bothWaysSql("pairs_t")})")}
          |)
          |SELECT deg, CAST(count(*) AS BIGINT) AS n_docs
          |FROM deg_t GROUP BY deg ORDER BY deg""".stripMargin) { (s, dir) =>
-      val p = minhashPairs(s, dir)
-      p.select(col("d1").as("doc_id"))
-        .union(p.select(col("d2").as("doc_id")))
-        .groupBy("doc_id").agg(count(lit(1)).as("deg"))
+      Graph.degrees(Graph.bothWays(minhashPairs(s, dir)))
         .groupBy("deg").agg(count(lit(1)).as("n_docs"))
         .orderBy("deg")
     },
@@ -693,14 +686,10 @@ object Dedup {
     // an undupped source (Σx = 0) yields NULL via nullif in both engines.
     Q("q_gini_dup_mass",
       s"""$minhashPairsCtes, dg AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS deg FROM (
-         |    SELECT d1 AS doc_id FROM pairs_t
-         |    UNION ALL
-         |    SELECT d2 AS doc_id FROM pairs_t)
-         |  GROUP BY doc_id),
+         |  ${Graph.degreeSql(s"(${Graph.bothWaysSql("pairs_t")})")}),
          |ad AS (
          |  SELECT d.doc_id, d.source, coalesce(dg.deg, 0) AS x
-         |  FROM documents d LEFT JOIN dg ON dg.doc_id = d.doc_id),
+         |  FROM documents d LEFT JOIN dg ON dg.v = d.doc_id),
          |rk AS (
          |  SELECT source, x,
          |         row_number() OVER (PARTITION BY source ORDER BY x, doc_id) AS r
@@ -710,10 +699,8 @@ object Dedup {
          |       CAST((2 * sum(r * x) - (count(*) + 1) * sum(x)) * 1000000
          |            // nullif(count(*) * sum(x), 0) AS BIGINT) AS gini_micro
          |FROM rk GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-      val p = minhashPairs(s, dir)
-      val dg = p.select(col("d1").as("doc_id"))
-        .union(p.select(col("d2").as("doc_id")))
-        .groupBy("doc_id").agg(count(lit(1)).as("deg"))
+      val dg = Graph.degrees(Graph.bothWays(minhashPairs(s, dir)))
+        .withColumnRenamed("v", "doc_id")
       val ad = Tables.documents(s, dir).select("doc_id", "source")
         .join(dg, Seq("doc_id"), "left")
         .select(col("doc_id"), col("source"),

@@ -18,8 +18,10 @@ import graft.{Observed, Q, Tables}
   * rounds are a fixed small constant. No global window, no driver-side
   * graph.
   *
-  * Cross-engine exactness (this is the first ORACLE-CHECKED iterative
-  * operator — connected components is rows-only): ranks live in integer
+  * Cross-engine exactness (PageRank was the first oracle-checked
+  * iterative operator; label propagation, k-core, k-truss and the
+  * connected components of [[Corpus]] — q_dedup_components, oracle-checked
+  * since round 7 — walk unrolled oracle scripts too): ranks live in integer
   * MICRO-units. Each round a node's outgoing share is the floor-divided
   * `pr div deg` (exact), incoming shares sum as integers (exact, order-
   * free), and the damped update rounds back to micro BEFORE the next round
@@ -27,6 +29,19 @@ import graft.{Observed, Q, Tables}
   * oracle (the same recurrence unrolled as CTEs) matches cell-for-cell.
   * The damping product `0.85 * Σ` is one correctly-rounded IEEE op on an
   * exact integer < 2^53, identical in both engines by IEEE-754.
+  *
+  * The graph plane writes each rule once, here; Corpus's component scripts
+  * and Dedup's degree queries call them:
+  *  - edge lists: [[bothWays]] and, in the oracle, [[bothWaysSql]] and
+  *    [[edgesSql]] (the pairs as `<p>_pairs`, both ways as `<p>_e`);
+  *  - degrees: [[degrees]] and [[degreeSql]];
+  *  - the min-label round: [[labelProp]]'s loop and [[labelPropSql]]
+  *    (q_labelprop and Corpus's `ccx_` keeper labels);
+  *  - the rank round: [[rankLoop]] and [[rankSql]] — PageRank is
+  *    personalized PageRank with every vertex a seed (0.15·10⁶/n is the
+  *    seeded base term with ns = n);
+  *  - degree-ordered triangles: [[oriented]] and [[trianglesSql]];
+  *  - unrolled oracle rounds: [[unrolled]].
   */
 object Graph {
 
@@ -37,9 +52,39 @@ object Graph {
   final val LpIters = 4
 
   /** Both directions of an undirected (d1, d2) pair list as (v, w) edges. */
-  private def bothWays(p: DataFrame): DataFrame =
+  private[graft] def bothWays(p: DataFrame): DataFrame =
     p.select(col("d1").as("v"), col("d2").as("w"))
       .union(p.select(col("d2").as("v"), col("d1").as("w")))
+
+  /** Per-vertex degree (v, deg) of a frame holding one `v` row per edge end. */
+  private[graft] def degrees(ends: DataFrame): DataFrame =
+    ends.groupBy("v").agg(count(lit(1)).as("deg"))
+
+  /** [[bothWays]] in the oracle, over a (d1, d2) relation. */
+  private[graft] def bothWaysSql(pairs: String): String =
+    s"""SELECT d1 AS v, d2 AS w FROM $pairs
+       |  UNION ALL
+       |  SELECT d2 AS v, d1 AS w FROM $pairs""".stripMargin
+
+  /** [[degrees]] in the oracle, over a (v, w) edge relation. */
+  private[graft] def degreeSql(edges: String): String =
+    s"SELECT v, CAST(count(*) AS BIGINT) AS deg FROM $edges GROUP BY v"
+
+  /** The oracle's near-dup graph under the table prefix `p`: the MinHash
+    * pairs, materialized once as `<p>_pairs`, and both ways as `<p>_e`.
+    */
+  private def edgesSql(p: String): String =
+    s"""CREATE OR REPLACE TEMP TABLE ${p}_pairs AS
+       |${Dedup.minhashPairsCtes}
+       |SELECT d1, d2 FROM pairs_t;
+       |CREATE OR REPLACE TEMP TABLE ${p}_e AS
+       |  ${bothWaysSql(s"${p}_pairs")};""".stripMargin
+
+  /** `n` unrolled oracle rounds `<p>0` → `<p>1` → … → `<p>n`, one
+    * statement each.
+    */
+  private def unrolled(n: Int, p: String)(round: (String, String) => String): String =
+    (1 to n).map(i => round(s"$p${i - 1}", s"$p$i")).mkString("\n")
 
   /** The round loops' directed edges, checkpointed once, partitioned on the
     * join key v, with their observed count: each round's big join then
@@ -53,13 +98,14 @@ object Graph {
   /** Bounded-hop min-label propagation over an undirected pair list:
     * label₀(v) = v; each round label(v) ← min(label(v), min over
     * neighbors). After R rounds label(v) = min vertex id within graph
-    * distance R — the oracle-checkable bounded form of connected
-    * components (the pointer-jumping CC in [[Corpus]] converges fully but
-    * is rows-only; this walks a FIXED integer trajectory both engines
-    * reproduce cell-for-cell, and GraphSpec shows it converges to the CC
-    * labels once rounds reach the graph diameter). At most `iters` rounds
-    * of [[Observed.fixpoint]], witnessed by the label sum (labels only
-    * fall); per round one keyed join + one groupBy.
+    * distance R — the bounded form of connected components (the
+    * pointer-jumping CC in [[Corpus]] converges fully, and its oracle is
+    * this propagation unrolled past the graph diameter; this walks a FIXED
+    * integer trajectory both engines reproduce cell-for-cell, and GraphSpec
+    * shows it converges to the CC labels once rounds reach the graph
+    * diameter). At most `iters` rounds of [[Observed.fixpoint]], witnessed
+    * by the label sum (labels only fall); per round one keyed join + one
+    * groupBy.
     */
   private[graft] def labelProp(pairs: DataFrame, iters: Int = LpIters): DataFrame = {
     val (edges, _) = loopEdges(pairs)
@@ -75,14 +121,23 @@ object Graph {
     lbl.select(col("v").as("doc_id"), col("lbl"))
   }
 
-  /** One unrolled label-prop oracle round as a temp-table statement. */
-  private def lpRoundSql(prev: String, k: String): String =
-    s"""CREATE OR REPLACE TEMP TABLE $k AS
-       |  SELECT l.v, least(l.lbl, coalesce(m.nmin, l.lbl)) AS lbl
-       |  FROM $prev l LEFT JOIN (
-       |    SELECT e.w AS v, min(r.lbl) AS nmin
-       |    FROM lp_e e JOIN $prev r ON r.v = e.v GROUP BY e.w) m
-       |  ON m.v = l.v;""".stripMargin
+  /** [[labelProp]] in the oracle over the near-dup graph under the prefix
+    * `p` ([[edgesSql]]): start labels `<p>_l0` from `l0`, a SELECT of
+    * (v, lbl), then `iters` min-label rounds ending in `<p>_l<iters>`.
+    */
+  private[graft] def labelPropSql(p: String, l0: String, iters: Int): String = {
+    def step(prev: String, k: String): String =
+      s"""CREATE OR REPLACE TEMP TABLE $k AS
+         |  SELECT l.v, least(l.lbl, coalesce(m.nmin, l.lbl)) AS lbl
+         |  FROM $prev l LEFT JOIN (
+         |    SELECT e.w AS v, min(r.lbl) AS nmin
+         |    FROM ${p}_e e JOIN $prev r ON r.v = e.v GROUP BY e.w) m
+         |  ON m.v = l.v;""".stripMargin
+    s"""${edgesSql(p)}
+       |CREATE OR REPLACE TEMP TABLE ${p}_l0 AS
+       |  $l0;
+       |${unrolled(iters, s"${p}_l")(step)}""".stripMargin
+  }
 
   /** PageRank over an undirected (d1, d2) pair list, as the integer-micro
     * recurrence documented above. Every node in the pair list has deg ≥ 1,
@@ -90,7 +145,7 @@ object Graph {
     */
   private[graft] def pageRank(pairs: DataFrame, iters: Int = PrIters): DataFrame = {
     val (edges, _) = loopEdges(pairs)
-    val deg = edges.groupBy("v").agg(count(lit(1)).as("deg"))
+    val deg = degrees(edges)
     // every vertex a seed (ns = n): the seeded base term is 0.15·10⁶/n
     val base = deg
       .crossJoin(broadcast(deg.agg(count(lit(1)).as("ns")))) // single-row
@@ -111,7 +166,7 @@ object Graph {
   private[graft] def pprSeeded(pairs: DataFrame, docs: DataFrame,
       iters: Int = PrIters): DataFrame = {
     val (edges, _) = loopEdges(pairs)
-    val deg = edges.groupBy("v").agg(count(lit(1)).as("deg"))
+    val deg = degrees(edges)
     // one seed per source: max (deg, lowest id) — |sources|-bounded frame
     val seeds = deg.join(docs.select(col("doc_id").as("v"), col("source")), "v")
       .groupBy("source")
@@ -160,29 +215,34 @@ object Graph {
     r
   }
 
-  /** One unrolled personalized round: pp_r{k-1} → pp_r{k}. */
-  private def pprRoundSql(prev: String, k: String): String =
-    s"""CREATE OR REPLACE TEMP TABLE $k AS
-       |  SELECT d.v, d.deg,
-       |         CAST(round(CASE WHEN sd.v IS NOT NULL THEN 150000.0 / nt.ns
-       |                         ELSE 0.0 END
-       |                    + 0.85 * coalesce(s.c, 0)) AS BIGINT) AS pr
-       |  FROM pp_deg d CROSS JOIN pp_ns nt
-       |  LEFT JOIN pp_seed sd ON sd.v = d.v
-       |  LEFT JOIN (
-       |    SELECT e.w AS v, CAST(sum(r.pr // r.deg) AS BIGINT) AS c
-       |    FROM pp_e e JOIN $prev r ON r.v = e.v GROUP BY e.w) s ON s.v = d.v;""".stripMargin
-
-  /** One unrolled oracle round as a MATERIALIZED temp-table statement:
-    * pr_r{k-1} → pr_r{k}.
+  /** [[rankLoop]] in the oracle over `<p>_e`, `<p>_deg` and a `<p>_seed`
+    * vertex set: `<p>_ns` counts the seeds, `<p>_r0` pays each seed
+    * 10⁶/ns, and [[PrIters]] rounds end in `<p>_r<PrIters>`. PageRank
+    * seeds every vertex.
     */
-  private def roundSql(prev: String, k: String): String =
-    s"""CREATE OR REPLACE TEMP TABLE $k AS
-       |  SELECT d.v, d.deg,
-       |         CAST(round(150000.0 / nt.nn + 0.85 * coalesce(s.c, 0)) AS BIGINT) AS pr
-       |  FROM pr_deg d CROSS JOIN pr_n nt LEFT JOIN (
-       |    SELECT e.w AS v, CAST(sum(r.pr // r.deg) AS BIGINT) AS c
-       |    FROM pr_e e JOIN $prev r ON r.v = e.v GROUP BY e.w) s ON s.v = d.v;""".stripMargin
+  private def rankSql(p: String): String = {
+    def step(prev: String, k: String): String =
+      s"""CREATE OR REPLACE TEMP TABLE $k AS
+         |  SELECT d.v, d.deg,
+         |         CAST(round(CASE WHEN sd.v IS NOT NULL THEN 150000.0 / nt.ns
+         |                         ELSE 0.0 END
+         |                    + 0.85 * coalesce(s.c, 0)) AS BIGINT) AS pr
+         |  FROM ${p}_deg d CROSS JOIN ${p}_ns nt
+         |  LEFT JOIN ${p}_seed sd ON sd.v = d.v
+         |  LEFT JOIN (
+         |    SELECT e.w AS v, CAST(sum(r.pr // r.deg) AS BIGINT) AS c
+         |    FROM ${p}_e e JOIN $prev r ON r.v = e.v GROUP BY e.w) s ON s.v = d.v;""".stripMargin
+    s"""CREATE OR REPLACE TEMP TABLE ${p}_ns AS
+       |  SELECT CAST(count(*) AS BIGINT) AS ns FROM ${p}_seed;
+       |CREATE OR REPLACE TEMP TABLE ${p}_r0 AS
+       |  SELECT g.v, g.deg,
+       |         CASE WHEN sd.v IS NOT NULL
+       |              THEN CAST(round(1000000.0 / nt.ns) AS BIGINT)
+       |              ELSE CAST(0 AS BIGINT) END AS pr
+       |  FROM ${p}_deg g CROSS JOIN ${p}_ns nt
+       |  LEFT JOIN ${p}_seed sd ON sd.v = g.v;
+       |${unrolled(PrIters, s"${p}_r")(step)}""".stripMargin
+  }
 
   val queries: Seq[Q] = Seq(
 
@@ -198,21 +258,12 @@ object Graph {
     // same as the engine. Table names are pr_-prefixed so scripts sharing
     // the driver's connection cannot collide.
     Q("q_pagerank_neardup",
-      s"""CREATE OR REPLACE TEMP TABLE pr_pairs AS
-         |${Dedup.minhashPairsCtes}
-         |SELECT d1, d2 FROM pairs_t;
-         |CREATE OR REPLACE TEMP TABLE pr_e AS
-         |  SELECT d1 AS v, d2 AS w FROM pr_pairs
-         |  UNION ALL
-         |  SELECT d2 AS v, d1 AS w FROM pr_pairs;
+      s"""${edgesSql("pr")}
          |CREATE OR REPLACE TEMP TABLE pr_deg AS
-         |  SELECT v, CAST(count(*) AS BIGINT) AS deg FROM pr_e GROUP BY v;
-         |CREATE OR REPLACE TEMP TABLE pr_n AS
-         |  SELECT CAST(count(*) AS BIGINT) AS nn FROM pr_deg;
-         |CREATE OR REPLACE TEMP TABLE pr_r0 AS
-         |  SELECT v, deg, CAST(round(1000000.0 / nn) AS BIGINT) AS pr
-         |  FROM pr_deg, pr_n;
-         |${(1 to PrIters).map(i => roundSql(s"pr_r${i - 1}", s"pr_r$i")).mkString("\n")}
+         |  ${degreeSql("pr_e")};
+         |CREATE OR REPLACE TEMP TABLE pr_seed AS
+         |  SELECT v FROM pr_deg;
+         |${rankSql("pr")}
          |SELECT v AS doc_id, deg, pr AS pr_micro FROM pr_r$PrIters
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       pageRank(Dedup.minhashPairs(s, dir).select("d1", "d2")).orderBy("doc_id")
@@ -226,31 +277,16 @@ object Graph {
     // DIFFERENT source than the seed it drains from is cross-source
     // contamination (q_neardup_cross_source's ranking twin).
     Q("q_ppr_seeded",
-      s"""CREATE OR REPLACE TEMP TABLE pp_pairs AS
-         |${Dedup.minhashPairsCtes}
-         |SELECT d1, d2 FROM pairs_t;
-         |CREATE OR REPLACE TEMP TABLE pp_e AS
-         |  SELECT d1 AS v, d2 AS w FROM pp_pairs
-         |  UNION ALL
-         |  SELECT d2 AS v, d1 AS w FROM pp_pairs;
+      s"""${edgesSql("pp")}
          |CREATE OR REPLACE TEMP TABLE pp_deg AS
-         |  SELECT v, CAST(count(*) AS BIGINT) AS deg FROM pp_e GROUP BY v;
+         |  ${degreeSql("pp_e")};
          |CREATE OR REPLACE TEMP TABLE pp_seed AS
          |  SELECT v FROM (
          |    SELECT g.v, row_number() OVER (PARTITION BY d.source
          |             ORDER BY g.deg DESC, g.v) AS rn
          |    FROM pp_deg g JOIN documents d ON d.doc_id = g.v)
          |  WHERE rn = 1;
-         |CREATE OR REPLACE TEMP TABLE pp_ns AS
-         |  SELECT CAST(count(*) AS BIGINT) AS ns FROM pp_seed;
-         |CREATE OR REPLACE TEMP TABLE pp_r0 AS
-         |  SELECT g.v, g.deg,
-         |         CASE WHEN sd.v IS NOT NULL
-         |              THEN CAST(round(1000000.0 / nt.ns) AS BIGINT)
-         |              ELSE CAST(0 AS BIGINT) END AS pr
-         |  FROM pp_deg g CROSS JOIN pp_ns nt
-         |  LEFT JOIN pp_seed sd ON sd.v = g.v;
-         |${(1 to PrIters).map(i => pprRoundSql(s"pp_r${i - 1}", s"pp_r$i")).mkString("\n")}
+         |${rankSql("pp")}
          |SELECT r.v AS doc_id, r.deg, (sd.v IS NOT NULL) AS is_seed,
          |       r.pr AS ppr_micro
          |FROM pp_r$PrIters r LEFT JOIN pp_seed sd ON sd.v = r.v
@@ -266,16 +302,7 @@ object Graph {
     // additionally proves convergence to the exact connected-component
     // min-ids once rounds reach the diameter.
     Q("q_labelprop",
-      s"""CREATE OR REPLACE TEMP TABLE lp_pairs AS
-         |${Dedup.minhashPairsCtes}
-         |SELECT d1, d2 FROM pairs_t;
-         |CREATE OR REPLACE TEMP TABLE lp_e AS
-         |  SELECT d1 AS v, d2 AS w FROM lp_pairs
-         |  UNION ALL
-         |  SELECT d2 AS v, d1 AS w FROM lp_pairs;
-         |CREATE OR REPLACE TEMP TABLE lp_l0 AS
-         |  SELECT DISTINCT v, v AS lbl FROM lp_e;
-         |${(1 to LpIters).map(i => lpRoundSql(s"lp_l${i - 1}", s"lp_l$i")).mkString("\n")}
+      s"""${labelPropSql("lp", "SELECT DISTINCT v, v AS lbl FROM lp_e", LpIters)}
          |SELECT v AS doc_id, lbl FROM lp_l$LpIters
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       labelProp(Dedup.minhashPairs(s, dir).select("d1", "d2"))
@@ -293,34 +320,8 @@ object Graph {
     // docs forms dense triangle-rich cores the curation pass drops first.
     // Pure integer plan (degrees, ids, counts) — cell-exact cross-engine.
     Q("q_triangle_count",
-      s"""CREATE OR REPLACE TEMP TABLE tc_pairs AS
-         |${Dedup.minhashPairsCtes}
-         |SELECT d1, d2 FROM pairs_t;
-         |CREATE OR REPLACE TEMP TABLE tc_deg AS
-         |  SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
-         |    SELECT d1 AS v FROM tc_pairs
-         |    UNION ALL SELECT d2 AS v FROM tc_pairs)
-         |  GROUP BY v;
-         |CREATE OR REPLACE TEMP TABLE tc_o AS
-         |  SELECT CASE WHEN (a.deg, p.d1) < (b.deg, p.d2)
-         |              THEN p.d1 ELSE p.d2 END AS src,
-         |         CASE WHEN (a.deg, p.d1) < (b.deg, p.d2)
-         |              THEN p.d2 ELSE p.d1 END AS dst
-         |  FROM tc_pairs p JOIN tc_deg a ON a.v = p.d1
-         |                  JOIN tc_deg b ON b.v = p.d2;
-         |CREATE OR REPLACE TEMP TABLE tc_t AS
-         |  SELECT w1.src AS apex, w1.dst AS x, w2.dst AS y
-         |  FROM tc_o w1 JOIN tc_o w2
-         |    ON w1.src = w2.src AND w1.dst < w2.dst
-         |  JOIN tc_o c
-         |    ON least(c.src, c.dst) = w1.dst
-         |   AND greatest(c.src, c.dst) = w2.dst;
-         |SELECT d.v AS doc_id, d.deg,
-         |       CAST(coalesce(t.n, 0) AS BIGINT) AS n_tri
-         |FROM tc_deg d LEFT JOIN (
-         |  SELECT v, count(*) AS n FROM (
-         |    SELECT unnest([apex, x, y]) AS v FROM tc_t) GROUP BY v) t
-         |ON t.v = d.v
+      s"""${trianglesSql("tc")}
+         |SELECT doc_id, deg, n_tri FROM tc_n
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       triangleCounts(Dedup.minhashPairs(s, dir).select("d1", "d2"))
         .orderBy("doc_id")
@@ -334,37 +335,12 @@ object Graph {
     // exemplar), high degree with LOW coefficient says hub-like template
     // reuse across unrelated docs (drop the template, keep the docs).
     Q("q_clustering_coeff",
-      s"""CREATE OR REPLACE TEMP TABLE cc2_pairs AS
-         |${Dedup.minhashPairsCtes}
-         |SELECT d1, d2 FROM pairs_t;
-         |CREATE OR REPLACE TEMP TABLE cc2_deg AS
-         |  SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
-         |    SELECT d1 AS v FROM cc2_pairs
-         |    UNION ALL SELECT d2 AS v FROM cc2_pairs)
-         |  GROUP BY v;
-         |CREATE OR REPLACE TEMP TABLE cc2_o AS
-         |  SELECT CASE WHEN (a.deg, p.d1) < (b.deg, p.d2)
-         |              THEN p.d1 ELSE p.d2 END AS src,
-         |         CASE WHEN (a.deg, p.d1) < (b.deg, p.d2)
-         |              THEN p.d2 ELSE p.d1 END AS dst
-         |  FROM cc2_pairs p JOIN cc2_deg a ON a.v = p.d1
-         |                   JOIN cc2_deg b ON b.v = p.d2;
-         |CREATE OR REPLACE TEMP TABLE cc2_t AS
-         |  SELECT w1.src AS apex, w1.dst AS x, w2.dst AS y
-         |  FROM cc2_o w1 JOIN cc2_o w2
-         |    ON w1.src = w2.src AND w1.dst < w2.dst
-         |  JOIN cc2_o c
-         |    ON least(c.src, c.dst) = w1.dst
-         |   AND greatest(c.src, c.dst) = w2.dst;
-         |SELECT d.v AS doc_id, d.deg,
-         |       CAST(coalesce(t.n, 0) AS BIGINT) AS n_tri,
-         |       CAST(CASE WHEN d.deg >= 2
-         |            THEN coalesce(t.n, 0) * 2000 // (d.deg * (d.deg - 1))
+      s"""${trianglesSql("cc2")}
+         |SELECT doc_id, deg, n_tri,
+         |       CAST(CASE WHEN deg >= 2
+         |            THEN n_tri * 2000 // (deg * (deg - 1))
          |            ELSE 0 END AS BIGINT) AS coeff_permille
-         |FROM cc2_deg d LEFT JOIN (
-         |  SELECT v, count(*) AS n FROM (
-         |    SELECT unnest([apex, x, y]) AS v FROM cc2_t) GROUP BY v) t
-         |ON t.v = d.v
+         |FROM cc2_n
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       triangleCounts(Dedup.minhashPairs(s, dir).select("d1", "d2"))
         .select(col("doc_id"), col("deg"), col("n_tri"),
@@ -374,22 +350,6 @@ object Graph {
         .orderBy("doc_id")
     },
 
-    // k-CORE of the near-dup graph (Seidman 1983; distributed peel à la
-    // Montresor et al.): repeatedly remove vertices with fewer than K
-    // neighbors among the survivors. The core that remains is the
-    // mutually-duplicated mass — boilerplate cliques a curation pass
-    // should collapse to one exemplar, where peeled fringe vertices are
-    // ordinary pages with a few copies. K is data-derived, half the
-    // average degree (Σdeg div 2V — exact integer both engines). The
-    // declared semantics is a FIXED [[KcIters]]-round peel so the
-    // unrolled temp-table oracle walks the identical trajectory; 8
-    // rounds reaches the true fixpoint at every shipped scale (probed
-    // sf0.001/0.01/0.1 → rounds 2/5/8; GraphSpec asserts round
-    // [[KcIters]] = round [[KcIters]]+1 so a corpus regen that breaks
-    // the bound fails loudly; the engine stops early at the fixpoint). Per
-    // round: one alive-semi-join per endpoint + one degree groupBy, all
-    // keyed on vertex ids; state is the O(V) alive set, checkpointed per
-    // round ([[Observed.fixpoint]]).
     // DEGREE ASSORTATIVITY of the near-dup graph (Newman 2002, "Assortative
     // mixing in networks"; the networkx convention — Pearson correlation
     // of the degrees at either end of each directed edge): positive =
@@ -404,15 +364,9 @@ object Graph {
     // vertex-keyed joins + one 6-column aggregate — no new shape beyond
     // the degree machinery the graph suite already has.
     Q("q_degree_assortativity",
-      s"""CREATE OR REPLACE TEMP TABLE da_pairs AS
-         |${Dedup.minhashPairsCtes}
-         |SELECT d1, d2 FROM pairs_t;
-         |CREATE OR REPLACE TEMP TABLE da_e AS
-         |  SELECT d1 AS v, d2 AS w FROM da_pairs
-         |  UNION ALL
-         |  SELECT d2 AS v, d1 AS w FROM da_pairs;
+      s"""${edgesSql("da")}
          |CREATE OR REPLACE TEMP TABLE da_deg AS
-         |  SELECT v, CAST(count(*) AS BIGINT) AS deg FROM da_e GROUP BY 1;
+         |  ${degreeSql("da_e")};
          |WITH xy AS (
          |  SELECT dv.deg AS x, dw.deg AS y
          |  FROM da_e e JOIN da_deg dv ON dv.v = e.v
@@ -478,20 +432,30 @@ object Graph {
         .orderBy("window_us")
     },
 
+    // k-CORE of the near-dup graph (Seidman 1983; distributed peel à la
+    // Montresor et al.): repeatedly remove vertices with fewer than K
+    // neighbors among the survivors. The core that remains is the
+    // mutually-duplicated mass — boilerplate cliques a curation pass
+    // should collapse to one exemplar, where peeled fringe vertices are
+    // ordinary pages with a few copies. K is data-derived, half the
+    // average degree (Σdeg div 2V — exact integer both engines). The
+    // declared semantics is a FIXED [[KcIters]]-round peel so the
+    // unrolled temp-table oracle walks the identical trajectory; 8
+    // rounds reaches the true fixpoint at every shipped scale (probed
+    // sf0.001/0.01/0.1 → rounds 2/5/8; GraphSpec asserts round
+    // [[KcIters]] = round [[KcIters]]+1 so a corpus regen that breaks
+    // the bound fails loudly; the engine stops early at the fixpoint). Per
+    // round: one alive-semi-join per endpoint + one degree groupBy, all
+    // keyed on vertex ids; state is the O(V) alive set, checkpointed per
+    // round ([[Observed.fixpoint]]).
     Q("q_kcore_neardup",
-      s"""CREATE OR REPLACE TEMP TABLE kc_pairs AS
-         |${Dedup.minhashPairsCtes}
-         |SELECT d1, d2 FROM pairs_t;
-         |CREATE OR REPLACE TEMP TABLE kc_e AS
-         |  SELECT d1 AS v, d2 AS w FROM kc_pairs
-         |  UNION ALL
-         |  SELECT d2 AS v, d1 AS w FROM kc_pairs;
+      s"""${edgesSql("kc")}
          |CREATE OR REPLACE TEMP TABLE kc_k AS
          |  SELECT CAST(count(*) // (2 * greatest(count(DISTINCT v), 1)) AS BIGINT) AS k
          |  FROM kc_e;
          |CREATE OR REPLACE TEMP TABLE kc_a0 AS
          |  SELECT DISTINCT v FROM kc_e;
-         |${(1 to KcIters).map(i => kcRoundSql(s"kc_a${i - 1}", s"kc_a$i")).mkString("\n")}
+         |${unrolled(KcIters, "kc_a")(kcRoundSql)}
          |SELECT a.v AS doc_id, CAST(count(*) AS BIGINT) AS core_deg,
          |       (SELECT k FROM kc_k) AS k
          |FROM kc_a$KcIters a JOIN kc_e e ON e.v = a.v
@@ -532,7 +496,7 @@ object Graph {
          |  WHERE bit_count(xor(a.w0, b.w0)) + bit_count(xor(a.w1, b.w1))
          |        + bit_count(xor(a.w2, b.w2)) + bit_count(xor(a.w3, b.w3))
          |        <= ${Dedup.Sim128Tau};
-         |${(1 to KtIters).map(i => ktRoundSql(s"kt_e${i - 1}", s"kt_e$i")).mkString("\n")}
+         |${unrolled(KtIters, "kt_e")(ktRoundSql)}
          |SELECT v1 AS d1, v2 AS d2, sup FROM kt_e$KtIters
          |ORDER BY d1, d2""".stripMargin) { (s, dir) =>
       kTruss(Dedup.simhash128Pairs(s, dir)
@@ -570,13 +534,7 @@ object Graph {
     * lowest-(deg, id) apex, then attributed to all three canonical edges).
     */
   private def edgeSupports(ec: DataFrame, deg: DataFrame): DataFrame = {
-    val withDeg = ec
-      .join(deg.select(col("v").as("v1"), col("deg").as("deg1")), "v1")
-      .join(deg.select(col("v").as("v2"), col("deg").as("deg2")), "v2")
-    val fwd = struct(col("deg1"), col("v1")) < struct(col("deg2"), col("v2"))
-    val oriented = withDeg.select(
-      when(fwd, col("v1")).otherwise(col("v2")).as("src"),
-      when(fwd, col("v2")).otherwise(col("v1")).as("dst"))
+    val o = oriented(ec, "v1", "v2", deg)
     // SHUFFLE_HASH pins on the wedge self-join and the closing-edge join:
     // clique hubs make both DENSE equal-key joins (runs of ~clique-size on
     // both sides), where SMJ pays its buffered re-scan per OUTPUT row —
@@ -586,8 +544,8 @@ object Graph {
     // declared substrate — see q_ktruss); on the declared fingerprint
     // graph the pins are neutral and AQE (left ON) coalesces the tiny
     // per-round stages (21 s AQE-off → 5 s warm).
-    val tris = oriented.select(col("src"), col("dst").as("x"))
-      .join(oriented.select(col("src"), col("dst").as("y")).hint("SHUFFLE_HASH"),
+    val tris = o.select(col("src"), col("dst").as("x"))
+      .join(o.select(col("src"), col("dst").as("y")).hint("SHUFFLE_HASH"),
         "src")
       .filter(col("x") < col("y"))
       .join(ec.select(col("v1").as("x"), col("v2").as("y")).hint("SHUFFLE_HASH"),
@@ -625,8 +583,8 @@ object Graph {
     // old per-round recompute paid an E-sized union+agg per round purely to
     // rebuild the order; the Σ outdeg² wedge bound only tightens as edges
     // drop (out-neighborhoods shrink monotonically under a fixed order).
-    val deg0 = ec.select(col("v1").as("v")).union(ec.select(col("v2").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("deg")).localCheckpoint()
+    val deg0 = degrees(ec.select(col("v1").as("v")).union(ec.select(col("v2").as("v"))))
+      .localCheckpoint()
     val (out, _) = Observed.fixpoint(ec.withColumn("sup", lit(0L)), n0,
         count(lit(1)), iters) { (cur, _) =>
       edgeSupports(cur.select("v1", "v2"), deg0).filter(col("sup") >= KtK - 2)
@@ -645,7 +603,7 @@ object Graph {
     */
   private[graft] def degreeAssortativity(pairs: DataFrame): DataFrame = {
     val e = bothWays(pairs)
-    val deg = e.groupBy("v").agg(count(lit(1)).as("deg"))
+    val deg = degrees(e)
     // Moment folding (round 15): the straightforward xy formulation joins
     // deg onto the E-sized directed edge list TWICE (x then y — two
     // exchanges + sorts of |E| rows). Grouping each edge's contribution by
@@ -718,6 +676,51 @@ object Graph {
       .select(col("v").as("doc_id"), col("core_deg"), lit(k).as("k"))
   }
 
+  /** Each undirected (a, b) row of `pairs` as (src, dst), pointed from its
+    * lower (deg, id) end to the higher — the degree-ordered orientation
+    * documented on q_triangle_count, with degrees from the (v, deg) `deg`.
+    */
+  private def oriented(pairs: DataFrame, a: String, b: String,
+      deg: DataFrame): DataFrame = {
+    val withDeg = pairs
+      .join(deg.select(col("v").as(a), col("deg").as("deg1")), a)
+      .join(deg.select(col("v").as(b), col("deg").as("deg2")), b)
+    val fwd = struct(col("deg1"), col(a)) < struct(col("deg2"), col(b))
+    withDeg.select(
+      when(fwd, col(a)).otherwise(col(b)).as("src"),
+      when(fwd, col(b)).otherwise(col(a)).as("dst"))
+  }
+
+  /** [[triangleCounts]] in the oracle over the near-dup graph under the
+    * prefix `p` ([[edgesSql]], which it emits): degrees `<p>_deg`, the
+    * oriented pairs `<p>_o`, triangles `<p>_t` (apex, x, y) and the
+    * per-vertex counts `<p>_n` (doc_id, deg, n_tri).
+    */
+  private def trianglesSql(p: String): String =
+    s"""${edgesSql(p)}
+       |CREATE OR REPLACE TEMP TABLE ${p}_deg AS
+       |  ${degreeSql(s"${p}_e")};
+       |CREATE OR REPLACE TEMP TABLE ${p}_o AS
+       |  SELECT CASE WHEN (a.deg, p.d1) < (b.deg, p.d2)
+       |              THEN p.d1 ELSE p.d2 END AS src,
+       |         CASE WHEN (a.deg, p.d1) < (b.deg, p.d2)
+       |              THEN p.d2 ELSE p.d1 END AS dst
+       |  FROM ${p}_pairs p JOIN ${p}_deg a ON a.v = p.d1
+       |                  JOIN ${p}_deg b ON b.v = p.d2;
+       |CREATE OR REPLACE TEMP TABLE ${p}_t AS
+       |  SELECT w1.src AS apex, w1.dst AS x, w2.dst AS y
+       |  FROM ${p}_o w1 JOIN ${p}_o w2
+       |    ON w1.src = w2.src AND w1.dst < w2.dst
+       |  JOIN ${p}_o c
+       |    ON least(c.src, c.dst) = w1.dst
+       |   AND greatest(c.src, c.dst) = w2.dst;
+       |CREATE OR REPLACE TEMP TABLE ${p}_n AS
+       |  SELECT d.v AS doc_id, d.deg, CAST(coalesce(t.n, 0) AS BIGINT) AS n_tri
+       |  FROM ${p}_deg d LEFT JOIN (
+       |    SELECT v, count(*) AS n FROM (
+       |      SELECT unnest([apex, x, y]) AS v FROM ${p}_t) GROUP BY v) t
+       |  ON t.v = d.v;""".stripMargin
+
   /** Per-vertex triangle counts over an undirected (d1, d2) pair list via
     * the degree-ordered orientation documented on q_triangle_count. The
     * pair frame checkpoints once (it is the whole MinHash pipeline); the
@@ -726,20 +729,13 @@ object Graph {
   private[graft] def triangleCounts(pairs: DataFrame): DataFrame =
       Observed.withoutAqe(pairs.sparkSession) {
     val p = pairs.select(col("d1"), col("d2")).localCheckpoint(false)
-    val deg = p.select(col("d1").as("v")).union(p.select(col("d2").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
-    val withDeg = p
-      .join(deg.select(col("v").as("d1"), col("deg").as("deg1")), "d1")
-      .join(deg.select(col("v").as("d2"), col("deg").as("deg2")), "d2")
-    val fwd = struct(col("deg1"), col("d1")) < struct(col("deg2"), col("d2"))
-    val oriented = withDeg.select(
-      when(fwd, col("d1")).otherwise(col("d2")).as("src"),
-      when(fwd, col("d2")).otherwise(col("d1")).as("dst"))
-      .localCheckpoint(false) // reused three times in the wedge + closing joins
-    val tri = oriented.as("w1")
-      .join(oriented.as("w2"),
+    val deg = degrees(bothWays(p))
+    // reused three times in the wedge + closing joins
+    val o = oriented(p, "d1", "d2", deg).localCheckpoint(false)
+    val tri = o.as("w1")
+      .join(o.as("w2"),
         col("w1.src") === col("w2.src") && col("w1.dst") < col("w2.dst"))
-      .join(oriented.as("c"),
+      .join(o.as("c"),
         least(col("c.src"), col("c.dst")) === col("w1.dst") &&
           greatest(col("c.src"), col("c.dst")) === col("w2.dst"))
       .select(col("w1.src").as("apex"), col("w1.dst").as("x"),

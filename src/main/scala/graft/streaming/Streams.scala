@@ -1125,6 +1125,20 @@ object Streams {
     embedDriftFold(mu, v1, lo, width, before,
       rep => write(graft.ops.Clustering.embedDriftAlerts(rep)), stateDir)
 
+  /** Companion state-dir suffixes for [[BoilerFold]]'s tripwire folds.
+    * The HLL suffix is VERSIONED: it names the register SCHEME, not just
+    * the fold — hllRegistersOf moved from raw ranks (RankCap 25) to
+    * mix31 ranks (MixRankCap 26) registers, and max-merging registers from
+    * two schemes would quietly inflate the estimate (~2×, disarming the
+    * 1.5× re-ingest gate). A scheme change bumps the suffix, so an
+    * old-scheme state restores as ABSENT and the pre-upgrade migration
+    * path (populated dfs + missing companion → tripwire
+    * backfill-disables, re-arms next restart) handles it instead of a
+    * silent cross-scheme merge. The orphaned old dir is inert.
+    */
+  private[graft] val DocSumSuffix = "-docsum"
+  private[graft] val DocHllSuffix = "-dochll-mix31"
+
   /** [[boilerStripIngest]] with the frozen index's DECAY measured as it
     * serves: each trigger strips against the frozen template set (the
     * stateless face, unchanged semantics), while a replay-safe fold
@@ -1162,20 +1176,6 @@ object Streams {
     * (factor 1.5 gate). Per-doc accidental duplicates below that stay
     * invisible — this is a contract tripwire, not an exact audit.
     */
-  /** Companion state-dir suffixes for [[BoilerFold]]'s tripwire folds.
-    * The HLL suffix is VERSIONED: it names the register SCHEME, not just
-    * the fold — hllRegistersOf moved from raw ranks (RankCap 25) to
-    * mix31 ranks (MixRankCap 26) registers, and max-merging registers from
-    * two schemes would quietly inflate the estimate (~2×, disarming the
-    * 1.5× re-ingest gate). A scheme change bumps the suffix, so an
-    * old-scheme state restores as ABSENT and the pre-upgrade migration
-    * path (populated dfs + missing companion → tripwire
-    * backfill-disables, re-arms next restart) handles it instead of a
-    * silent cross-scheme merge. The orphaned old dir is inert.
-    */
-  private[graft] val DocSumSuffix = "-docsum"
-  private[graft] val DocHllSuffix = "-dochll-mix31"
-
   private[graft] final class BoilerFold(index: DataFrame,
       write: DataFrame => Unit, stateDir: Option[String] = None,
       sketchK: Option[Int] = None) {

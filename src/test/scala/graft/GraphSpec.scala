@@ -68,6 +68,22 @@ class GraphSpec extends SparkSpec {
     assert(out.join(deg, "doc_id").filter(col("deg") =!= col("want")).count() === 0)
   }
 
+  test("PageRank is personalized PageRank with every vertex its own seed") {
+    // each doc its own source: every vertex of the pair graph is a seed, so
+    // ns = |V| and the seeded base term 0.15·10⁶/ns is PageRank's
+    // 0.15·10⁶/n — the identity the shared oracle rank round rests on
+    val pairs = ops.Dedup.minhashPairs(spark, sfDir).select("d1", "d2")
+    val docs = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("doc_id").cast("string").as("source"))
+    val ppr = ops.Graph.pprSeeded(pairs, docs).cache()
+    assert(ppr.filter(!col("is_seed")).count() === 0)
+    val got = ppr.select("doc_id", "deg", "ppr_micro").collect().toSet
+    val want = ops.Graph.pageRank(pairs).select("doc_id", "deg", "pr_micro")
+      .collect().toSet
+    assert(got.nonEmpty && got === want)
+    ppr.unpersist()
+  }
+
   test("label propagation: sequential equality at LpIters, CC convergence at diameter") {
     // sequential recurrence on the known fixture
     def seqLp(pairs: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {

@@ -473,13 +473,14 @@ class PlanShapeSpec extends SparkSpec {
     // a 47 KB method, which HotSpot never compiles (Segments.withProjected);
     // the vector plane's shared cosine and candidate joins and the text
     // plane's shared tokenizer folds, bigram frame and BM25 columns, the
-    // near-dup plane's shared band, size-bound, agreement and verify rules
-    // and the sketch plane's shared register, estimator and Count–Min cell
+    // near-dup plane's shared band, size-bound, agreement and verify rules,
+    // the sketch plane's shared register, estimator and Count–Min cell
+    // rules and the graph plane's shared degree, rank-round and orientation
     // rules are inlined the same way. q_ann_lsh_topk and q_ann_calibration
     // are left out: their LSH bucket stage is a 10,524 B method today
     // (ROADMAP item 4).
-    import ops.{Corpus, Dedup, LM, PostingLines, Profile, Retrieval, Segments,
-      Similarity, Sketches, Spatial, TextOps, Tokenize}
+    import ops.{Corpus, Dedup, Graph, LM, PostingLines, Profile, Retrieval,
+      Segments, Similarity, Sketches, Spatial, TextOps, Tokenize}
     val overLimit = Set("q_ann_lsh_topk", "q_ann_calibration")
     val textPlane = Set("q_bm25_topk", "q_bm25_pruned", "q_rrf_fusion",
       "q_retrieval_full", "q_retrieval_batch", "q_sessionize",
@@ -496,7 +497,7 @@ class PlanShapeSpec extends SparkSpec {
         Tokenize.queries ++ LM.queries ++
         (Retrieval.queries ++ TextOps.queries).filter(q => textPlane(q.name)) ++
         Dedup.queries ++ Corpus.queries.filter(q => nearDupPlane(q.name)) ++
-        Sketches.queries ++ Profile.queries ++
+        Sketches.queries ++ Profile.queries ++ Graph.queries ++
         TextOps.queries.filter(_.name == "q_cms_counts"))
         .map(q => q.name -> q.build(spark, sfDir))
     frames.foreach { case (name, df) =>
